@@ -191,6 +191,27 @@ class TestTrainVocabCLI:
         assert got == want
 
 
+    def test_batched_strategy_honours_min_count(self, spark, tmp_path):
+        """An explicit --strategy batched applies --min-count like the
+        local path; sequential, which has no floor, refuses one."""
+        import json as _json
+
+        from vcf_pg_loader_spark.cli import main
+
+        corpus = str(tmp_path / "corpus")
+        spark.createDataFrame(
+            list(enumerate(["low low lower", "rare"])),
+            "doc_id bigint, text string",
+        ).write.parquet(corpus)
+        out = str(tmp_path / "merges.json")
+        args = ["train-vocab", "--corpus", corpus, "--out", out,
+                "--n-merges", "6", "--min-count", "2", "--strategy"]
+        assert main([*args, "batched"]) == 0
+        merges = [tuple(m) for m in _json.load(open(out))["merges"]]
+        assert merges == _ref_learn(["low low"], 6)
+        assert main([*args, "sequential"]) == 2
+
+
 class TestBPELearnBatched:
     """Round-12: batched rounds must produce the IDENTICAL merge
     sequence as one-merge-per-round learning (the verdict item-2 pin)."""

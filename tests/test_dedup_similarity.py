@@ -58,6 +58,28 @@ class TestShortDocShingles:
         pairs = {(r.d1, r.d2) for r in out.collect()}
         assert (2, 6) in pairs
 
+    def test_row_local_sets_and_signatures_match_grouped(self, spark):
+        """shingle_sets / minhash_signatures_of_sets (one array row per
+        doc, no shuffle) equal the grouped forms over shingles() rows;
+        a doc with no shingles gets an empty set and no signature."""
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        docs = _docs(spark, self.ROWS + [(6, "a b c d a b c"), (7, None)])
+        sh = shingles(docs, "doc_id", "text", n=3)
+        sets = D.shingle_sets(docs, "doc_id", "text", n=3)
+        grouped = {
+            r.doc_id: (sorted(r.s), r.n)
+            for r in sh.groupBy("doc_id")
+            .agg(F.collect_list("shingle").alias("s"), F.count("*").alias("n"))
+            .collect()
+        }
+        got = {r.doc_id: (list(r._set), r.n_sh) for r in sets.collect()}
+        assert {i: v for i, v in got.items() if v[1]} == grouped
+        assert {i for i, v in got.items() if not v[1]} == {1, 3, 4, 7}
+        assert sorted(D.minhash_signatures_of_sets(sets, 16).collect()) == (
+            sorted(D.minhash_signatures(sh, 16).collect())
+        )
+
     def test_simhash_tolerates_single_token(self, spark):
         out = simhash(_docs(spark, [(1, "one"), (2, "a b")]), "doc_id", "text")
         assert out.count() == 2
@@ -302,6 +324,29 @@ class TestConnectedComponents:
             for r in D.connected_components(sdf, "d1", "d2").collect()
         }
         assert rows == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+    def test_bounded_probe_both_sides_of_threshold(self, spark, monkeypatch):
+        """One limit(SMALL_CC_EDGES + 1) collect decides the path: at
+        the bound the in-process union-find runs, one edge past it the
+        distributed loop does — identical labels, and exact cc_edges /
+        cc_rounds stats on both sides."""
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        edges = [(1, 5), (5, 9), (2, 9), (7, 8), (3, 4), (4, 12), (20, 21)]
+        got = {}
+        for bound in (len(edges), len(edges) - 1):
+            monkeypatch.setattr(D, "SMALL_CC_EDGES", bound)
+            stats: dict = {}
+            got[bound] = self._cc(spark, edges, stats=stats)
+            assert stats["cc_edges"] == len(edges)
+            if bound == len(edges):
+                assert stats["cc_rounds"] == 0
+            else:
+                assert stats["cc_rounds"] >= 1
+        assert got[len(edges)] == got[len(edges) - 1]
+        assert got[len(edges)] == {
+            1: 1, 2: 1, 5: 1, 9: 1, 7: 7, 8: 7, 3: 3, 4: 3, 12: 3, 20: 20, 21: 20,
+        }
 
     def test_duplicate_and_reversed_edges(self, spark):
         got = self._cc(spark, [(2, 1), (1, 2), (2, 1), (3, 2)])

@@ -1719,12 +1719,22 @@ def cmd_train_vocab(args) -> int:
                     max_types=bound,
                     **seg_kw,
                 )
+        elif strategy == "batched":
+            merges = bpe_learn_batched(
+                docs,
+                n_merges=args.n_merges,
+                min_count=args.min_count,
+                **seg_kw,
+            )
         else:
-            trainer = {
-                "batched": bpe_learn_batched,
-                "sequential": bpe_learn,
-            }[strategy]
-            merges = trainer(docs, n_merges=args.n_merges, **seg_kw)
+            if args.min_count > 1:
+                print(
+                    "--strategy sequential has no word-frequency floor; "
+                    "drop --min-count or pick another strategy",
+                    file=sys.stderr,
+                )
+                return 2
+            merges = bpe_learn(docs, n_merges=args.n_merges, **seg_kw)
         from vcf_pg_loader_spark.operators.bpe import word_counts
         from vcf_pg_loader_spark.operators.tokenids import (
             alphabet_from_counts,
@@ -2920,11 +2930,12 @@ def build_parser() -> argparse.ArgumentParser:
                          "state's corpus-epoch identity")
     sp.add_argument("--min-count", type=int, default=1,
                     help="word-frequency floor applied distributed-side "
-                         "BEFORE the trainer's vocabulary collect (local/"
-                         "counts-state strategies) — bounds driver memory "
-                         "on heavy singleton tails. The standard "
-                         "approximation, not exactly merge-preserving at "
-                         "ties; default 1 keeps training exact")
+                         "before training (auto, local, batched and "
+                         "--counts-state; sequential refuses a floor "
+                         "above 1) — bounds the collected vocabulary on "
+                         "heavy singleton tails. The standard approximation, "
+                         "not exactly merge-preserving at ties; default "
+                         "1 keeps training exact")
     sp.add_argument("--out", required=True, help="merges JSON path")
     sp.add_argument("--n-merges", type=int, default=64)
     sp.add_argument("--strategy", default="auto",

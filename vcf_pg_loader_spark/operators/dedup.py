@@ -68,6 +68,31 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     drops the same docs because its out-of-range t[i] makes the || chain
     NULL and list_distinct strips NULLs.
     """
+    return _distinct_grams(df, id_col, text_col, n).select(
+        "doc_id", F.explode("_grams").alias("shingle")
+    )
+
+
+def shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3
+) -> DataFrame:
+    """(doc_id, _set, n_sh): each doc's distinct shingles as ONE sorted
+    array row with its size — the per-doc set that
+    :func:`verify_candidate_jaccard` aggregates out of :func:`shingles`
+    rows, built row-locally instead (no explode, no shuffle).  `df` must
+    hold one row per id; a doc with fewer than n tokens gets an empty
+    set (n_sh 0), where :func:`shingles` gives it no rows."""
+    return _distinct_grams(df, id_col, text_col, n).select(
+        "doc_id",
+        F.sort_array("_grams").alias("_set"),
+        F.size("_grams").alias("n_sh"),
+    )
+
+
+def _distinct_grams(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(doc_id, _grams): the distinct word n-grams of each row's text."""
     # materialize the token array before the gram transform: expression
     # trees have no CSE store, so element_at over the raw split() chain
     # would re-split the text once per gram element
@@ -85,10 +110,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return tokenized.select(
-        "doc_id",
-        F.explode(F.array_distinct(grams)).alias("shingle"),
-    )
+    return tokenized.select("doc_id", F.array_distinct(grams).alias("_grams"))
 
 
 def sql_shingles(n: int = 3, table: str = "documents") -> str:
@@ -364,6 +386,30 @@ def minhash_signatures(sh: DataFrame, k: int = 8) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
+def minhash_signatures_of_sets(sets: DataFrame, k: int = 8) -> DataFrame:
+    """:func:`minhash_signatures` over :func:`shingle_sets` rows: the
+    same (doc_id, mh0..mh{k-1}) values — the min of each permutation
+    over the same distinct shingles — computed row-locally with no
+    groupBy.  Docs with no shingles get no row, as in the grouped form."""
+    hashed = sets.filter(F.col("n_sh") > 0).select(
+        "doc_id",
+        F.transform("_set", lambda s: h60(s, salt="mh:")).alias("_hs"),
+    )
+    return hashed.select(
+        "doc_id",
+        *[
+            F.array_min(F.transform("_hs", _mh_perm(i))).alias(f"mh{i}")
+            for i in range(k)
+        ],
+    )
+
+
+def _mh_perm(i: int):
+    # a one-argument lambda per permutation (F.transform reads a second
+    # parameter as the element index, so `i` cannot be a default arg)
+    return lambda h: _mh_expr(h, i)
+
+
 def lsh_band_table(sig: DataFrame, k: int = 8, bands: int = 4) -> DataFrame:
     """(doc_id, band_id, band_key) bucket rows for a signature frame —
     the persistable LSH index: a NEW doc collides with an EXISTING
@@ -400,18 +446,7 @@ def lsh_candidate_pairs(sig: DataFrame, k: int = 8, bands: int = 4) -> DataFrame
     banded = lsh_band_table(sig, k, bands).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    return lsh_bucket_pairs(banded)[0]
 
 
 def lsh_candidate_pairs_capped(
@@ -448,10 +483,13 @@ def lsh_candidate_pairs_capped(
     Returns ``(pairs, routed)``: pairs is (d1, d2) distinct with
     d1 < d2; routed is (band_id, band_key, sz) for buckets > cap.
 
-    The band table feeds multiple plan branches — persist it or the
-    signature aggregate (a full groupBy over the exploded shingles)
-    re-executes per branch (optimization round 15, guide §2.4/§5;
-    caller owns the cache lifetime).
+    The band table feeds multiple plan branches, so it is persisted
+    here — otherwise the signature aggregate (a full groupBy over the
+    exploded shingles) re-executes per branch (optimization round 15,
+    guide §2.4/§5).  The persist stays cached after the pairs are used;
+    a caller that must release it (a maintenance sink applying batch
+    after batch) builds and persists the band table itself, passes it
+    to :func:`lsh_bucket_pairs` and unpersists it when done.
 
     Memory shape of the row-local pair generation (round-15 advice):
     each small bucket's C(size, 2) pair structs flatten into ONE array
@@ -464,12 +502,22 @@ def lsh_candidate_pairs_capped(
     array form is pinned against it in tests/test_opt_r15.py), which
     streams any bucket size.
     """
-    from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
     banded = lsh_band_table(sig, k, bands).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    return lsh_bucket_pairs(banded, bucket_cap)
+
+
+def lsh_bucket_pairs(
+    banded: DataFrame, bucket_cap: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(pairs, routed) of :func:`lsh_candidate_pairs_capped` from a band
+    table the caller built with :func:`lsh_band_table`.  Nothing is
+    persisted here: the caller owns the band table's cache lifetime."""
+    from pyspark.sql import Window
+
     if bucket_cap is None:
         a = banded.alias("a")
         b = banded.alias("b")
@@ -587,6 +635,15 @@ def verify_candidate_jaccard(
         F.sort_array(F.collect_list("shingle")).alias("_set"),
         F.count(F.lit(1)).alias("n_sh"),
     )
+    return verify_candidate_jaccard_sets(cands, sets, threshold)
+
+
+def verify_candidate_jaccard_sets(
+    cands: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """:func:`verify_candidate_jaccard` over per-doc shingle sets
+    (doc_id, _set, n_sh) — the :func:`shingle_sets` shape — instead of
+    shingle rows."""
     return (
         cands.join(
             sets.select(
@@ -843,31 +900,25 @@ def connected_components(
     """
     from pyspark.storagelevel import StorageLevel
 
-    # Persist the one-direction edge list BEFORE mirroring it: union
-    # evaluates each branch independently, so without this the (often
-    # expensive) upstream pair-generation lineage — e.g. the full
-    # MinHash-LSH pipeline — executes twice to build `und`.
-    half = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    half = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Small-graph fast path (round 14): verified near-dup edge sets are
     # control-plane sized next to the corpus (LSH verification keeps
     # ~0.5-1% of docs even on collision-dense corpora), yet each
     # label-propagation round costs several fixed-overhead Spark stages
-    # — on a few-thousand-edge graph the distributed loop is ~90% jo b
-    # scheduling.  Below the bound, collect the (already persisted)
-    # edge list and run path-compressed union-find on the driver — the
-    # IDENTICAL min-label output (components labeled by their minimum
-    # member; Python min and F.min agree on the numeric and string id
-    # types used here), measured 7-8x faster at fixture scale.  The
-    # bound caps driver memory at a few MB; bigger edge sets take the
-    # distributed loop unchanged.  The one count() materializes the
-    # persist the first round would have paid anyway.
-    n_edges = half.count()
+    # — on a few-thousand-edge graph the distributed loop is ~90% job
+    # scheduling.  Below the bound, run path-compressed union-find on
+    # the collected edge list in Python — the IDENTICAL min-label
+    # output (components labeled by their minimum member; Python min
+    # and F.min agree on the numeric and string id types used here),
+    # measured 7-8x faster at fixture scale.  ONE bounded collect both
+    # decides the path and fetches the edges (the bpe_learn_local
+    # idiom): at most SMALL_CC_EDGES + 1 rows are ever collected,
+    # and a small graph pays no count job and no persist.
+    rows = half.limit(SMALL_CC_EDGES + 1).collect()
     if stats is not None:
-        stats["cc_edges"] = n_edges
+        stats["cc_edges"] = len(rows)
         stats["cc_rounds"] = 0
-    if n_edges <= SMALL_CC_EDGES:
+    if len(rows) <= SMALL_CC_EDGES:
         from pyspark.sql.types import StructField, StructType
 
         parent: dict = {}
@@ -880,8 +931,6 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        rows = half.collect()
-        half.unpersist()
         nodes = set()
         for d1, d2 in rows:
             nodes.add(d1)
@@ -902,6 +951,17 @@ def connected_components(
                 [StructField("node", ty), StructField("comp", ty)]
             ),
         )
+    del rows
+    # Above the bound: persist the one-direction edge list BEFORE
+    # mirroring it — union evaluates each branch independently, so
+    # without this the (often expensive) upstream pair-generation
+    # lineage, e.g. the full MinHash-LSH pipeline, executes twice to
+    # build `und`.  The count materializes that persist (the first
+    # round would pay it anyway) and makes cc_edges exact.
+    half = half.persist(StorageLevel.MEMORY_AND_DISK)
+    n_edges = half.count()
+    if stats is not None:
+        stats["cc_edges"] = n_edges
     und = (
         half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

@@ -46,13 +46,20 @@ the report and its inputs) describing different corpora.
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vcf_pg_loader_spark.operators import dedup as D
 from vcf_pg_loader_spark.operators.ivm import MULT, zset_normalize
 from vcf_pg_loader_spark.operators.text import fingerprint
-from vcf_pg_loader_spark.streaming.sink import ParquetUpsertSink, isin_values
+from vcf_pg_loader_spark.streaming.sink import (
+    ParquetUpsertSink,
+    drop_layout,
+    isin_values,
+)
 
 
 def split_zset(
@@ -71,6 +78,30 @@ def split_zset(
     ins = z.filter(F.col(MULT) > 0).drop(MULT)
     dels = z.filter(F.col(MULT) < 0).select(id_col)
     return ins, dels
+
+
+def zset_delta(
+    batch: DataFrame, id_col: str, cols: list[str]
+) -> DataFrame:
+    """One row per id a Z-set batch touches: (id, *cols, _ins).  `_ins`
+    is true when the consolidated batch inserts the id (its `cols` then
+    come from one inserted row, as `split_zset` + dropDuplicates picks
+    them) and false for a pure retraction (its `cols` are null).  The
+    inserts are `filter("_ins")` and the touched ids — deletions and
+    re-inserts alike — are every row, so a sink that persists this one
+    frame consolidates the batch once for all of its consumers."""
+    if MULT in batch.columns:
+        batch = zset_normalize(batch)
+    else:
+        batch = batch.withColumn(MULT, F.lit(1))
+    ins = F.col(MULT) > 0
+    return batch.groupBy(id_col).agg(
+        *[
+            F.first(F.when(ins, F.col(c)), ignorenulls=True).alias(c)
+            for c in cols
+        ],
+        F.max(ins).alias("_ins"),
+    )
 
 
 def _without(
@@ -98,6 +129,61 @@ def _edges_without(pairs: DataFrame | None, ids: DataFrame) -> DataFrame | None:
         .join(ids.withColumnRenamed(ids.columns[0], "d2"), "d2", "left_anti")
         .select(*pairs.columns)
     )
+
+
+def _has_incident_edge(pairs: DataFrame, ids: DataFrame) -> bool:
+    """Whether any edge of `pairs` (d1, d2) touches an id in `ids`: one
+    limit(1) existence probe, never a full count."""
+    t = ids.columns[0]
+    return (
+        pairs.join(ids.withColumnRenamed(t, "d1"), "d1", "left_semi")
+        .unionByName(
+            pairs.join(ids.withColumnRenamed(t, "d2"), "d2", "left_semi")
+        )
+        .limit(1)
+        .count()
+        > 0
+    )
+
+
+@contextlib.contextmanager
+def _released():
+    """A list for the release callbacks of the frames one apply
+    materializes (`_held`, `_checkpointed`), all of them called when
+    the block exits — so a long-lived streaming process does not keep
+    one batch's caches per micro-batch."""
+    held: list = []
+    try:
+        yield held
+    finally:
+        for release in held:
+            release()
+
+
+def _held(df: DataFrame, held: list) -> DataFrame:
+    """Persist `df` (lazily) for the rest of one apply.  Only for frames
+    that do not end in a shuffle: a cached plan keeps its final
+    shuffle's spark.sql.shuffle.partitions partitions uncoalesced."""
+    from pyspark.storagelevel import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    held.append(df.unpersist)
+    return df
+
+
+def _checkpointed(df: DataFrame, held: list) -> DataFrame:
+    """Materialize `df` now for the rest of one apply.  A local
+    checkpoint runs the plan with AQE's partition coalescing, so a
+    batch-sized frame lands in a partition or two and every later scan
+    of it is that many tasks (a persisted aggregate would keep its 32
+    shuffle partitions).  Its blocks are released through the
+    checkpointed RDD, which the frame's logical plan holds."""
+    cp = df.localCheckpoint(eager=True)
+    # the JVM handle of the checkpointed RDD: no DataFrame-to-RDD
+    # plan translation happens here
+    rdd = cp._jdf.queryExecution().logical().rdd()  # rdd-ok
+    held.append(lambda: rdd.unpersist(False))
+    return cp
 
 
 class DedupClusterMaintSink(ParquetUpsertSink):
@@ -194,89 +280,125 @@ class DedupClusterMaintSink(ParquetUpsertSink):
 
     # -- maintenance -----------------------------------------------------
     def _new_pairs(
-        self, ins: DataFrame, corpus_old: DataFrame | None,
-        bands_old: DataFrame | None,
+        self, ins: DataFrame, corpus: DataFrame | None,
+        bands_old: DataFrame | None, held: list,
     ) -> tuple[DataFrame, DataFrame]:
         """(band rows for `ins`, verified pairs touching `ins`): the
         arriving docs shingle once; cross pairs come from colliding the
-        new band rows with the persisted index, intra-batch pairs from
-        the batch's own LSH — both verified with exact Jaccard over the
-        colliding docs' shingles only."""
-        from pyspark.storagelevel import StorageLevel
+        new band rows with the persisted index `bands_old` (which must
+        hold no id of `ins`), intra-batch pairs from the batch's own
+        LSH — both verified with exact Jaccard over the colliding docs'
+        shingle sets only.  Of `corpus` only the docs that collide with
+        `bands_old` are read, so it may still hold the touched ids.
 
-        sh_new = D.shingles(ins, "doc_id", "text", self.ngram).persist(
-            StorageLevel.MEMORY_AND_DISK
+        The arriving docs' shingle sets and band rows are persisted and
+        appended to `held`; the caller unpersists them once its writes
+        are done.  The band rows feed the intra-batch buckets, the cross
+        probe AND the bands/ write, so shingling and MinHash run once
+        per batch, and both run row-locally: one sorted shingle array
+        per doc, no explode and no groupBy."""
+        sets_new = _held(
+            D.shingle_sets(ins, "doc_id", "text", self.ngram), held
         )
-        try:
-            sig = D.minhash_signatures(sh_new, self.k)
-            bands_new = D.lsh_band_table(sig, self.k, self.bands)
-            cand, routed = D.lsh_candidate_pairs_capped(
-                sig, self.k, self.bands, self.bucket_cap
+        bands_new = _held(
+            D.lsh_band_table(
+                D.minhash_signatures_of_sets(sets_new, self.k),
+                self.k,
+                self.bands,
+            ),
+            held,
+        )
+        cand, routed = D.lsh_bucket_pairs(bands_new, self.bucket_cap)
+        if self.bucket_cap is not None:
+            # no silent truncation: count what the valve routed
+            # (tiny agg — one row per oversized bucket) so the
+            # sync report can log it
+            r = routed.agg(
+                F.count(F.lit(1)).alias("nb"),
+                F.coalesce(F.sum("sz"), F.lit(0)).alias("nr"),
+            ).collect()[0]
+            self.last_cap_routing = {
+                "bucket_cap": self.bucket_cap,
+                "routed_buckets": int(r["nb"]),
+                "routed_rows": int(r["nr"]),
+            }
+        sets = sets_new
+        if bands_old is not None and corpus is not None:
+            cross = (
+                bands_new.alias("n")
+                .join(
+                    bands_old.alias("o"),
+                    (F.col("n.band_id") == F.col("o.band_id"))
+                    & (F.col("n.band_key") == F.col("o.band_key")),
+                )
+                .select(
+                    F.col("o.doc_id").alias("d1"),
+                    F.col("n.doc_id").alias("d2"),
+                )
+                .distinct()
             )
-            if self.bucket_cap is not None:
-                # no silent truncation: count what the valve routed
-                # (tiny agg — one row per oversized bucket) so the
-                # sync report can log it
-                r = routed.agg(
-                    F.count(F.lit(1)).alias("nb"),
-                    F.coalesce(F.sum("sz"), F.lit(0)).alias("nr"),
-                ).collect()[0]
-                self.last_cap_routing = {
-                    "bucket_cap": self.bucket_cap,
-                    "routed_buckets": int(r["nb"]),
-                    "routed_rows": int(r["nr"]),
-                }
-            sh_all = sh_new
-            if bands_old is not None and corpus_old is not None:
-                cross = (
-                    bands_new.alias("n")
-                    .join(
-                        bands_old.alias("o"),
-                        (F.col("n.band_id") == F.col("o.band_id"))
-                        & (F.col("n.band_key") == F.col("o.band_key")),
-                    )
-                    .select(
-                        F.col("o.doc_id").alias("d1"),
-                        F.col("n.doc_id").alias("d2"),
-                    )
-                    .distinct()
-                )
-                old_hit = corpus_old.join(
-                    cross.select(F.col("d1").alias("doc_id")).distinct(),
-                    "doc_id",
-                    "left_semi",
-                )
-                sh_all = sh_new.unionByName(
-                    D.shingles(old_hit, "doc_id", "text", self.ngram)
-                )
-                cand = cand.unionByName(cross)
-            verified = D.verify_candidate_jaccard(
-                cand, sh_all, self.threshold
-            ).select(
-                F.least("d1", "d2").alias("d1"),
-                F.greatest("d1", "d2").alias("d2"),
-            ).distinct()
-            return bands_new, verified
-        finally:
-            sh_new.unpersist()
+            old_hit = corpus.join(
+                cross.select(F.col("d1").alias("doc_id")),
+                "doc_id",
+                "left_semi",
+            )
+            sets = sets_new.unionByName(
+                D.shingle_sets(old_hit, "doc_id", "text", self.ngram)
+            )
+            cand = cand.unionByName(cross)
+        verified = D.verify_candidate_jaccard_sets(
+            cand, sets, self.threshold
+        ).select(
+            F.least("d1", "d2").alias("d1"),
+            F.greatest("d1", "d2").alias("d2"),
+        ).distinct()
+        return bands_new, verified
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+        with _released() as held:
+            n = self._apply_held(batch_df, batch_id, held)
+        self._record(batch_id, n)
+
+    def _apply_held(
+        self, batch_df: DataFrame, batch_id: int, held: list
+    ) -> int:
         spark = batch_df.sparkSession
-        # consolidate BEFORE keyed dedup: an insert and a retraction of
-        # the same doc in one batch must cancel, not race
-        ins, dels = split_zset(batch_df, "doc_id")
-        ins = ins.dropDuplicates(["doc_id"])
+        # consolidate ONCE, before keyed dedup: an insert and a
+        # retraction of the same doc in one batch cancel, not race, and
+        # the arriving docs, the touched ids and the touched id-buckets
+        # all read this one materialized frame
+        delta = _checkpointed(
+            zset_delta(batch_df, "doc_id", ["text"]), held
+        )
+        ins = delta.filter("_ins").select("doc_id", "text")
         # touched ids leave every table first: deletions permanently,
         # re-inserts so their state rebuilds from the arriving text
-        touched = dels.unionByName(ins.select("doc_id")).distinct()
-        pairs_raw = self._table(spark, "pairs")
-        corpus_old = _without(self._table(spark, "corpus"), touched, "doc_id")
-        bands_old = _without(self._table(spark, "bands"), touched, "doc_id")
-        pairs_old = _edges_without(pairs_raw, touched)
-
-        bands_new, pairs_new = self._new_pairs(
-            ins.select("doc_id", "text"), corpus_old, bands_old
+        touched = delta.select("doc_id")
+        # each state table is read ONCE: the raw read keeps the `ib`
+        # layout column for the bucket-pruned write, and the probes use
+        # its ib-less view.  The WRITE side of the id-keyed tables is
+        # bucket-pruned; the probe reads stay full — a new doc must
+        # collide against the whole index, that is the operator's
+        # semantics.
+        corpus_raw = self._table_raw(spark, "corpus")
+        bands_raw = self._table_raw(spark, "bands")
+        pairs_raw = self._table_raw(spark, "pairs")
+        # corpus and bands share one id-bucket layout, so one collect of
+        # the touched buckets serves both merges
+        buckets = (
+            self._touched_buckets(touched)
+            if corpus_raw is not None and "ib" in corpus_raw.columns
+            else None
         )
+        bands_new, pairs_new = self._new_pairs(
+            ins,
+            drop_layout(corpus_raw),
+            _without(drop_layout(bands_raw), touched, "doc_id"),
+            held,
+        )
+        # the verified pairs feed the fast-path test below and the
+        # merged pair set: materialize them once
+        pairs_new = _checkpointed(pairs_new, held)
         # connectivity-unchanged fast path (round 14): the cluster
         # labels are a pure function of the edge set, so when the batch
         # verified NO new edges and no touched id appears in the
@@ -285,53 +407,42 @@ class DedupClusterMaintSink(ParquetUpsertSink):
         # re-running CC and rewriting both tables.  This is the common
         # steady-state shape (a few non-duplicate documents arriving
         # between snapshots); at 100 TB it keeps per-sync cost free of
-        # the cluster-table rewrite entirely.  One small count on the
-        # (checkpointed) verified pairs plus one existence probe on the
-        # edge table decide it.
-        pairs_new = pairs_new.localCheckpoint(eager=True)
-        touched_edges = 0
-        if pairs_raw is not None:
-            t1 = touched.withColumnRenamed("doc_id", "d1")
-            t2 = touched.withColumnRenamed("doc_id", "d2")
-            touched_edges = (
-                pairs_raw.join(t1, "d1", "left_semi")
-                .unionByName(pairs_raw.join(t2, "d2", "left_semi"))
-                .limit(1)
-                .count()
-            )
-        # the fast path requires BOTH tables to already exist on disk:
-        # a first apply must still materialize (possibly empty) pairs/
-        # clusters so readers see a schema-stable state, and keep_tables
-        # can only hard-link directories that are there
+        # the cluster-table rewrite entirely.  The tests run cheapest
+        # first: the directory check, then an emptiness probe of the
+        # checkpointed new pairs; only a batch with no new pairs pays
+        # the existence probe on the edge table.  Both tables must
+        # already exist on disk: a first apply must still materialize
+        # (possibly empty) pairs/ and clusters/ so readers see a
+        # schema-stable state, and keep_tables can only hard-link
+        # directories that are there.
         connectivity_unchanged = (
             pairs_raw is not None
-            and self._table(spark, "clusters") is not None
-            and pairs_new.limit(1).count() == 0
-            and touched_edges == 0
+            and os.path.isdir(os.path.join(self.target, "clusters"))
+            and pairs_new.isEmpty()
+            and not _has_incident_edge(pairs_raw, touched)
         )
-        # WRITE side of the id-keyed tables is bucket-pruned (the probe
-        # reads above stay full — a new doc must collide against the
-        # whole index, that is the operator's semantics); pairs and
-        # clusters rewrite whole when connectivity moved, they are tiny
-        # next to the corpus
         corpus, c_prune = self._merge_id_bucketed(
-            self._table_raw(spark, "corpus"),
-            ins.select("doc_id", "text"),
-            touched,
-            "doc_id",
+            corpus_raw, ins, touched, "doc_id", buckets
         )
         bands, b_prune = self._merge_id_bucketed(
-            self._table_raw(spark, "bands"), bands_new, touched, "doc_id"
+            bands_raw, bands_new, touched, "doc_id", buckets
         )
         frames = {"corpus": corpus, "bands": bands}
         keep: list[str] = []
         if connectivity_unchanged:
             keep = ["pairs", "clusters"]
         else:
-            pairs = (
-                pairs_new if pairs_old is None
-                else pairs_old.unionByName(pairs_new).distinct()
-            )
+            # pairs and clusters rewrite whole when connectivity moved
+            # (they are tiny next to the corpus); the merged pair set
+            # feeds both CC and the pairs/ write, so it runs once
+            pairs = pairs_new
+            if pairs_raw is not None:
+                pairs = _checkpointed(
+                    _edges_without(pairs_raw, touched)
+                    .unionByName(pairs_new)
+                    .distinct(),
+                    held,
+                )
             frames["pairs"] = pairs
             frames["clusters"] = D.connected_components(pairs, "d1", "d2")
         prune = {}
@@ -339,7 +450,7 @@ class DedupClusterMaintSink(ParquetUpsertSink):
             prune["corpus"] = c_prune
         if b_prune is not None:
             prune["bands"] = b_prune
-        n = self._swap_in_frames(
+        return self._swap_in_frames(
             frames,
             batch_id,
             count_table="corpus",
@@ -347,7 +458,6 @@ class DedupClusterMaintSink(ParquetUpsertSink):
             prune=prune or None,
             keep_tables=keep,
         )
-        self._record(batch_id, n)
 
 
 class FunnelReportSink(ParquetUpsertSink):
@@ -429,6 +539,13 @@ class FunnelReportSink(ParquetUpsertSink):
 
     # -- maintenance -----------------------------------------------------
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+        with _released() as held:
+            n = self._apply_held(batch_df, batch_id, held)
+        self._record(batch_id, n)
+
+    def _apply_held(
+        self, batch_df: DataFrame, batch_id: int, held: list
+    ) -> int:
         from vcf_pg_loader_spark.operators.lm import (
             bigram_model,
             doc_nll_frozen,
@@ -475,7 +592,7 @@ class FunnelReportSink(ParquetUpsertSink):
         bands_old = _without(self._table(spark, "bands"), touched, "doc_id")
         pairs_old = _edges_without(self._table(spark, "pairs"), touched)
         bands_new, pairs_new = self._pair_maker._new_pairs(
-            kept_new, corpus_old, bands_old
+            kept_new, corpus_old, bands_old, held
         )
         corpus = (
             kept_new if corpus_old is None
@@ -547,7 +664,7 @@ class FunnelReportSink(ParquetUpsertSink):
         else:
             # the LM is FROZEN after bootstrap: hard-link, never rewrite
             keep = ["lm_c12", "lm_c1", "lm_v"]
-        n = self._swap_in_frames(
+        return self._swap_in_frames(
             frames,
             batch_id,
             count_table="report",
@@ -557,7 +674,6 @@ class FunnelReportSink(ParquetUpsertSink):
             },
             prune=prune or None,
         )
-        self._record(batch_id, n)
 
 
 class DatasetCardSink(ParquetUpsertSink):

@@ -40,7 +40,7 @@ import socket
 import tempfile
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from vcf_pg_loader_spark.operators.merge import merge_upsert
@@ -199,6 +199,32 @@ def id_bucket(col, n: int | None = None) -> "F.Column":
     return F.pmod(
         F.xxhash64(col), F.lit(N_ID_BUCKETS if n is None else n)
     ).cast("int")
+
+
+def drop_layout(df: DataFrame | None) -> DataFrame | None:
+    """A state table without its internal layout column — `ib` is the
+    on-disk partition key of the id-bucketed tables, a pure function of
+    the row's id, and no reader should see it."""
+    if df is not None and "ib" in df.columns:
+        df = df.drop("ib")
+    return df
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with a row-count observation attached: the write that runs
+    the returned frame also reports how many rows it wrote
+    (`_observed_rows`), so no job re-reads the files to count them."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _observed_rows(obs: Observation) -> int | None:
+    """The row count `_counted` observed once its write finished, or
+    None when the write reported no metrics row (an input the optimizer
+    folds to an empty local relation executes no observing operator);
+    the caller then counts the staged files instead."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else None
 
 
 # The engine's hash-bucket layouts, keyed by their parameter-fingerprint
@@ -617,13 +643,18 @@ class ParquetUpsertSink:
         return tempfile.mkdtemp(prefix=self._staging_prefix(), dir=parent)
 
     def _swap_in(self, df: DataFrame, batch_id: int) -> int:
-        """Stage, count from the STAGED files (the merged plan reads the
-        pre-swap target lazily — re-counting it after the swap would scan
-        deleted files), embed the batch marker so data+provenance move as
-        one unit, then swap; returns the staged row count."""
+        """Stage, count the rows AS the staging write runs them (the
+        merged plan reads the pre-swap target lazily — re-counting it
+        after the swap would scan deleted files, and re-reading the
+        staged files costs a schema and a count job), embed the batch
+        marker so data+provenance move as one unit, then swap; returns
+        the staged row count."""
         staging = self._staging_dir()
+        df, obs = _counted(df)
         df.write.mode("overwrite").parquet(staging)
-        n = df.sparkSession.read.parquet(staging).count()
+        n = _observed_rows(obs)
+        if n is None:
+            n = df.sparkSession.read.parquet(staging).count()
         with open(os.path.join(staging, "_applied_batch.json"), "w") as fh:
             json.dump({"batch_id": batch_id, "n_rows": n}, fh)
         self._stamp_params(staging)
@@ -670,6 +701,16 @@ class ParquetUpsertSink:
             src = os.path.join(self.target, name)
             if os.path.isdir(src):
                 _link_tree(src, os.path.join(staging, name))
+        # the count table's row count comes from its write when that
+        # write IS the whole table; when untouched partitions hard-link
+        # in beside it, the staged table is counted after the links
+        obs = None
+        if count_table in frames and not (
+            count_table in (prune or {})
+            and os.path.isdir(os.path.join(self.target, count_table))
+        ):
+            frames = dict(frames)
+            frames[count_table], obs = _counted(frames[count_table])
         spark = None
         for name, df in frames.items():
             spark = df.sparkSession
@@ -692,7 +733,9 @@ class ParquetUpsertSink:
                         os.path.join(src_tbl, entry),
                         os.path.join(dst_tbl, entry),
                     )
-        n = spark.read.parquet(os.path.join(staging, count_table)).count()
+        n = None if obs is None else _observed_rows(obs)
+        if n is None:
+            n = spark.read.parquet(os.path.join(staging, count_table)).count()
         with open(os.path.join(staging, "_applied_batch.json"), "w") as fh:
             json.dump({"batch_id": batch_id, "n_rows": n}, fh)
         self._stamp_params(staging)
@@ -705,13 +748,9 @@ class ParquetUpsertSink:
         return n
 
     def _table(self, spark, name: str) -> DataFrame | None:
-        """Read a state table WITHOUT its internal layout column — `ib`
-        is the on-disk partition key of the id-bucketed tables, a pure
-        function of the row's id, and no reader should see it."""
-        df = self._table_raw(spark, name)
-        if df is not None and "ib" in df.columns:
-            df = df.drop("ib")
-        return df
+        """Read a state table WITHOUT its internal layout column (see
+        `drop_layout`)."""
+        return drop_layout(self._table_raw(spark, name))
 
     def _table_raw(self, spark, name: str) -> DataFrame | None:
         p = os.path.join(self.target, name)
@@ -725,12 +764,26 @@ class ParquetUpsertSink:
                 return spark.read.parquet(p)
         return None
 
+    @staticmethod
+    def _touched_buckets(touched: DataFrame) -> set[int]:
+        """The id buckets (`ib` values) a frame of touched ids falls in
+        — at most N_ID_BUCKETS values, one small collect."""
+        return {
+            r[0]
+            for r in touched.select(
+                id_bucket(F.col(touched.columns[0])).alias("b")
+            )
+            .distinct()
+            .collect()
+        }
+
     def _merge_id_bucketed(
         self,
         old_raw: DataFrame | None,
         new: DataFrame,
         touched: DataFrame,
         id_col: str,
+        buckets: set[int] | None = None,
     ) -> tuple[DataFrame, set[str] | None]:
         """(write_frame, prune_dirs) for an id-keyed state table
         partitioned by ib = id_bucket(id): the write frame holds only
@@ -740,7 +793,10 @@ class ParquetUpsertSink:
         on the partition column itself, so the rewrite plan's read
         prunes on disk too — per-batch maintenance I/O is O(touched
         buckets), never O(state).  Bootstrap (no old table) writes
-        everything with no pruning."""
+        everything with no pruning.  `buckets` is the touched bucket
+        set when the caller already has it (`_touched_buckets`: one
+        collect shared by every table it merges); otherwise it is
+        collected here."""
         new_ib = new.withColumn("ib", id_bucket(F.col(id_col)))
         if old_raw is None:
             return new_ib, None
@@ -754,14 +810,7 @@ class ParquetUpsertSink:
                 "left_anti",
             ).withColumn("ib", id_bucket(F.col(id_col)))
             return old_all.select(*new_ib.columns).unionByName(new_ib), None
-        tb = {
-            r[0]
-            for r in touched.select(
-                id_bucket(F.col(touched.columns[0])).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
+        tb = self._touched_buckets(touched) if buckets is None else buckets
         old_t = (
             old_raw.filter(isin_values(F.col("ib"), tb))
             .join(
