@@ -1,13 +1,11 @@
 """Materialized dedup cluster state (sources/cluster_store.py): the
 served keep-decision equals the inline keep_canonical over the same
-components, the write survives crash-interrupted swaps, and the serve
-plan is one broadcast anti-join (no LSH/CC re-run, no corpus shuffle).
+components, and the serve plan is one broadcast anti-join (no LSH/CC
+re-run, no corpus shuffle).  Crash safety of the write is swept in
+tests/test_durable_sweep.py.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,16 +53,6 @@ class TestDedupClusterStore:
         # a rebuild (e.g. after corpus growth) swaps in the new table
         store.write(components.limit(1))
         assert store.read().count() == 1 != n1
-
-    def test_crash_between_moves_heals(self, spark, components, tmp_path):
-        store = DedupClusterStore(spark, str(tmp_path / "dedup"))
-        store.write(components)
-        n = store.read().count()
-        # simulate the mid-swap crash: clusters moved aside, staging lost
-        parent, base = os.path.split(store.clusters_path)
-        shutil.move(store.clusters_path, os.path.join(parent, f".{base}.old"))
-        assert store.exists()  # heal restored it
-        assert store.read().count() == n
 
     def test_serve_plan_broadcasts_when_small_without_forced_hint(
         self, spark, docs, components, tmp_path
@@ -166,17 +154,3 @@ class TestMaterializedTable:
         tbl.write(df.limit(1))
         assert tbl.read().count() == 1
 
-    def test_crash_between_moves_heals(self, spark, tmp_path):
-        import os
-        import shutil
-
-        from vcf_pg_loader_spark.sources.cluster_store import MaterializedTable
-
-        tbl = MaterializedTable(spark, str(tmp_path / "attr"))
-        tbl.write(
-            spark.createDataFrame([(1, "kept")], "doc_id bigint, stage string")
-        )
-        parent, base = os.path.split(tbl.table_path)
-        shutil.move(tbl.table_path, os.path.join(parent, f".{base}.old"))
-        assert tbl.exists()  # heal restored the moved-aside table
-        assert tbl.read().count() == 1

@@ -348,6 +348,27 @@ class TestConnectedComponents:
             1: 1, 2: 1, 5: 1, 9: 1, 7: 7, 8: 7, 3: 3, 4: 3, 12: 3, 20: 20, 21: 20,
         }
 
+    def test_distributed_rounds_release_their_checkpoints(
+        self, spark, monkeypatch
+    ):
+        """The distributed loop checkpoints every round; each
+        superseded round's checkpoint is released, so a multi-round run
+        leaves at most the returned frame's checkpoint persisted (the
+        edge lists `und`/`half` are unpersisted before it returns)."""
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        monkeypatch.setattr(D, "SMALL_CC_EDGES", 2)
+        edges = [(i, i + 1) for i in range(1, 40)]
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        stats: dict = {}
+        df = spark.createDataFrame(edges, "d1 bigint, d2 bigint")
+        cc = D.connected_components(df, "d1", "d2", stats=stats)
+        assert stats["cc_rounds"] >= 2
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
+        got = {r["node"]: r["comp"] for r in cc.collect()}
+        assert got == {i: 1 for i in range(1, 41)}
+
     def test_duplicate_and_reversed_edges(self, spark):
         got = self._cc(spark, [(2, 1), (1, 2), (2, 1), (3, 2)])
         assert got == {1: 1, 2: 1, 3: 1}

@@ -213,17 +213,3 @@ class TestVectorIndex:
         )
         assert after == before
 
-    def test_crash_between_swap_moves_heals(self, spark, emb, tmp_path):
-        import os
-        import shutil
-
-        from vcf_pg_loader_spark.sources.vector_index import VectorIndex
-
-        idx = VectorIndex(spark, str(tmp_path / "vidx"))
-        idx.build(emb, k_centroids=8, m=M, k_sub=K_SUB, kernel="exact", pq=False)
-        parent, base = os.path.split(idx.root)
-        shutil.move(idx.root, os.path.join(parent, f".{base}.old"))
-        assert idx.exists()  # _heal_dir restored the aside copy
-        assert idx.search_flat(
-            emb.filter(F.col("vec_id") < N_Q), TOP_K, nprobe=2
-        ).count() > 0

@@ -7,7 +7,7 @@ apply_batch — O(|state|) write amplification per sync, which at 100 TB
 means a small delta rewrites a multi-terabyte posting table to update
 two buckets.  `_swap_in_frames(prune=...)` now recomputes only the
 touched partitions and hard-links every untouched partition directory
-from the live state into staging (streaming/sink.py _link_tree), and
+from the live state into staging (durable.link_tree), and
 frozen tables (`keep_tables`: the funnel LM, the semdedup centroids)
 link instead of copying.
 
@@ -448,22 +448,75 @@ class TestVectorIndexPrunedDelta:
 
 
 class TestStagingCleanup:
+    """Staging lives beside the target (same-device hard-links); a
+    crashed writer leaves it there with its lease.  Only the next
+    writer, under the lease, sweeps it — scoped by the target's own
+    name, so a sibling sink's staging is never touched."""
+
+    @staticmethod
+    def _other_writer(target: str, live: bool):
+        """Another process takes the writer lease of `target` and stages
+        its next version, then dies without releasing either (not
+        `live`) or keeps holding both.  Returns it and its staging."""
+        import pathlib
+        import subprocess
+        import sys
+
+        code = (
+            "import os, sys, time\n"
+            "from vcf_pg_loader_spark import durable\n"
+            "lease = durable.writer_lease(sys.argv[1])\n"
+            "lease.__enter__()\n"
+            "print(durable.stage_dir(sys.argv[1]), flush=True)\n"
+            "time.sleep(600) if sys.argv[2] == 'live' else os._exit(1)\n"
+        )
+        repo = str(pathlib.Path(__file__).resolve().parents[1])
+        proc = subprocess.Popen(
+            [sys.executable, "-c", code, target, "live" if live else "die"],
+            stdout=subprocess.PIPE,
+            text=True,
+            env={**os.environ, "PYTHONPATH": repo},
+        )
+        staging = pathlib.Path(proc.stdout.readline().strip())
+        assert staging.is_dir()
+        assert staging.parent == pathlib.Path(target).parent
+        if not live:
+            proc.wait()  # reaped: its pid is dead
+        return proc, staging
+
     def test_crashed_staging_leftovers_are_swept(self, spark, tmp_path):
-        """Staging lives beside the target (same-device hard-links);
-        a crash mid-stage leaves it there, and _recover sweeps it —
-        scoped by the target's own prefix so a sibling sink's staging
-        is never touched."""
+        import pathlib
+
+        from vcf_pg_loader_spark import durable
         from vcf_pg_loader_spark.streaming.retract import WinnowIndexSink
 
         sink = WinnowIndexSink(str(tmp_path / "w"))
-        leftover = tmp_path / f"{sink._staging_prefix()}crashed"
-        leftover.mkdir()
+        _proc, leftover = self._other_writer(sink.target, live=False)
         (leftover / "part-0.parquet").write_bytes(b"junk")
-        sibling = tmp_path / ".stg_other_crashed"
-        sibling.mkdir()
-        sink.apply_batch(_docs(spark, [1, 2]), 0)
+        assert os.path.exists(f"{sink.target}_lease.json")
+        sibling = pathlib.Path(durable.stage_dir(str(tmp_path / "w2")))
+        sink.apply_batch(_docs(spark, [1, 2]), 0)  # takes the lease over
         assert not leftover.exists()
         assert sibling.exists()  # not ours — untouched
+
+    def test_live_writers_staging_is_never_swept(self, spark, tmp_path):
+        import pytest
+
+        from vcf_pg_loader_spark import durable
+        from vcf_pg_loader_spark.streaming.retract import WinnowIndexSink
+
+        sink = WinnowIndexSink(str(tmp_path / "w"))
+        proc, staging = self._other_writer(sink.target, live=True)
+        try:
+            durable.heal_dir(sink.target)  # a reader's heal
+            with pytest.raises(RuntimeError, match="locked by a live"):
+                sink.apply_batch(_docs(spark, [1, 2]), 0)
+            assert staging.is_dir()
+        finally:
+            proc.kill()
+            proc.wait()
+        sink.apply_batch(_docs(spark, [1, 2]), 0)
+        assert not staging.exists()
 
 
 class TestLegacyStateMigration:

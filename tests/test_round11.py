@@ -12,11 +12,12 @@ import time
 
 import pytest
 
+from vcf_pg_loader_spark import durable
+from vcf_pg_loader_spark.durable import writer_lease
 from vcf_pg_loader_spark.streaming import sink as sink_mod
 from vcf_pg_loader_spark.streaming.sink import (
     LEDGER_COMPACT_THRESHOLD,
     ParquetUpsertSink,
-    writer_lease,
 )
 
 
@@ -78,7 +79,7 @@ class TestWriterLease:
                 {
                     "pid": 1,
                     "host": "other-host",
-                    "ts": time.time() - sink_mod.LEASE_STALE_SEC - 10,
+                    "ts": time.time() - durable.LEASE_STALE_SEC - 10,
                 },
                 fh,
             )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from vcf_pg_loader_spark.operators.sketch import (
     kmv_estimate,
@@ -62,6 +63,11 @@ class TestKMV:
             events.filter(F.col("event_id") % 2 == 1),
             ["event_type"], "user_id", K,
         )
+        # a group whose sketches are all empty or null merges to an
+        # empty sketch row: it is kept, not dropped
+        ghost = StructType([StructField(f.name, f.dataType) for f in a.schema])
+        a = a.unionByName(spark.createDataFrame([("ghost", [])], ghost))
+        b = b.unionByName(spark.createDataFrame([("ghost", None)], ghost))
         merged = {
             r.event_type: r.hashes
             for r in kmv_merge(a, b, ["event_type"], K).collect()
@@ -70,6 +76,7 @@ class TestKMV:
             r.event_type: r.hashes
             for r in kmv_sketch(events, ["event_type"], "user_id", K).collect()
         }
+        assert merged.pop("ghost") == []
         assert merged == whole  # sketch(a ∪ b) == merge(sketch(a), sketch(b))
 
 

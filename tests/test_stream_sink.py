@@ -121,73 +121,6 @@ class TestRollupMaintenanceSink:
         assert n1 == n2 == 500
 
 
-class TestCrashRecovery:
-    """The two interruptible windows in the stage-then-swap sink
-    (round-5 ADVICE): a crash between the two moves must not lose the
-    accumulated table, and a crash after the swap but before the ledger
-    write must not double-apply an additive fold on replay."""
-
-    def test_crash_between_moves_restores_old(self, spark, events, tmp_path):
-        import os
-        import shutil
-
-        target = str(tmp_path / "target")
-        sink = ParquetUpsertSink(target, key=["event_id"])
-        b0 = events.filter(F.col("event_id") % 5 == 0)
-        b1 = events.filter(F.col("event_id") % 5 == 1)  # disjoint keys
-        sink.apply_batch(b0, batch_id=0)
-        n0 = sink.read(spark).count()
-
-        # simulate the crash state: target moved aside, staging never
-        # landed, ledger for batch 1 never written
-        shutil.move(target, sink._old_path())
-        assert not os.path.exists(target)
-
-        sink.apply_batch(b1, batch_id=1)
-        got = sink.read(spark)
-        # batch 0's accumulated state was restored BEFORE merging, so
-        # the table holds the union of both batches, not batch 1 alone
-        assert got.count() == n0 + b1.count()
-        assert not os.path.exists(sink._old_path())
-
-    def test_crash_after_swap_before_ledger_no_double_fold(
-        self, spark, events, tmp_path
-    ):
-        import os
-
-        target = str(tmp_path / "rollup")
-        sink = RollupMaintenanceSink(target, bucket="hour")
-        batch = events.limit(500)
-        sink.apply_batch(batch, batch_id=0)
-        sink.apply_batch(batch.limit(200), batch_id=1)
-        n1 = rollup_final(sink.read(spark)).agg(F.sum("n_events")).first()[0]
-        assert n1 == 700  # additive fold: 500 + 200
-
-        # simulate: the swap for batch 1 landed but the ledger write was
-        # lost (the crash window the in-target marker closes)
-        os.remove(sink._ledger_path(1))
-        assert not sink.applied(1)
-        sink.apply_batch(batch.limit(200), batch_id=1)  # replay
-        n2 = rollup_final(sink.read(spark)).agg(F.sum("n_events")).first()[0]
-        assert n2 == n1  # marker detected the applied batch: NO re-fold
-        assert sink.applied(1)  # and the bookkeeping was finished
-
-    def test_stale_old_dir_cleaned(self, spark, events, tmp_path):
-        import os
-        import shutil
-
-        target = str(tmp_path / "target")
-        sink = ParquetUpsertSink(target, key=["event_id"])
-        b0 = events.filter(F.col("event_id") % 5 == 0)
-        b1 = events.filter(F.col("event_id") % 5 == 1)
-        sink.apply_batch(b0, batch_id=0)
-        # crash after swap, before the final cleanup: both dirs exist
-        shutil.copytree(target, sink._old_path())
-        sink.apply_batch(b1, batch_id=1)
-        assert not os.path.exists(sink._old_path())
-        assert sink.read(spark).count() == b0.count() + b1.count()
-
-
 class TestVCFIngestStream:
     def test_watch_dir_loads_new_files_once(self, spark, tmp_path):
         from tests.vcf_fixtures import write_vcf

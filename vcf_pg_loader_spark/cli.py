@@ -37,15 +37,12 @@ def _sink_kwargs_from_state(state_dir: str):
     with hardcoded 16/512 defaults; a key added in one place but not
     the others silently rebuilt sinks with defaults).  Defaults come
     from the shared operators.shards constants, not literals."""
-    import os as _os
-
+    from vcf_pg_loader_spark.durable import read_json
     from vcf_pg_loader_spark.operators.shards import N_SHARDS, SEQ_LEN
 
-    params_path = _os.path.join(state_dir, "_params.json")
-    if not _os.path.exists(params_path):
+    persisted = read_json(os.path.join(state_dir, "_params.json"))
+    if persisted is None:
         return {}, None
-    with open(params_path) as fh:
-        persisted = json.load(fh)
     kw = {
         "n_shards": persisted.get("n_shards", N_SHARDS),
         "seq_len": persisted.get("seq_len", SEQ_LEN),
@@ -2571,12 +2568,7 @@ def cmd_state_stats(args) -> int:
             rows = None
         tables[name] = {"rows": rows, "bytes": nbytes}
 
-    def _load(p):
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return None
-
+    from vcf_pg_loader_spark.durable import read_json
     from vcf_pg_loader_spark.streaming.sink import ParquetUpsertSink
 
     sink = ParquetUpsertSink(root, key=[])
@@ -2586,10 +2578,10 @@ def cmd_state_stats(args) -> int:
             {
                 "state": root,
                 "tables": tables,
-                "applied_batch": _load(
+                "applied_batch": read_json(
                     os.path.join(root, "_applied_batch.json")
                 ),
-                "params": _load(os.path.join(root, "_params.json")),
+                "params": read_json(os.path.join(root, "_params.json")),
                 "ledger_batches": batches,
                 # corpus-epoch stamp (sync-corpus lockstep identity);
                 # None for states maintained outside snapshot syncs

@@ -873,6 +873,13 @@ SELECT (SELECT COUNT(*) FROM sample) AS n_sample_docs,
 SMALL_CC_EDGES = 100_000
 
 
+def release_checkpoint(cp: DataFrame) -> None:
+    """Drop the blocks of a local checkpoint.  The frame's logical plan
+    holds the checkpointed RDD; its JVM handle is used directly, so no
+    DataFrame-to-RDD plan translation happens here."""
+    cp._jdf.queryExecution().logical().rdd().unpersist(False)  # rdd-ok
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "d1",
@@ -1011,6 +1018,9 @@ def connected_components(
             .limit(1)
             .count()
         )
+        # the superseded round's checkpoint: `jumped` holds its own
+        # blocks, and the returned frame keeps only the last round's
+        release_checkpoint(labels)
         labels = jumped
         if stats is not None:
             stats["cc_rounds"] += 1

@@ -77,7 +77,9 @@ def kmv_merge(a: DataFrame, b: DataFrame, group_cols: list[str], k: int = 64) ->
     dedup exchange plus a window sort over the exploded table.  The
     merged sketch is identical: sort(distinct(S_a ∪ S_b))[:k] IS the
     k smallest distinct hashes (pinned against the exploded
-    formulation in tests/test_opt_r16.py)."""
+    formulation in tests/test_opt_r16.py).  A group whose sketch arrays
+    are all empty or null merges to an empty `[]` row: the group is
+    kept, not dropped (pinned in tests/test_sketch.py)."""
     both = a.unionByName(b)
     return both.groupBy(*group_cols).agg(
         F.slice(

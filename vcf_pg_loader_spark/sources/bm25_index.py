@@ -3,7 +3,7 @@ times — the sparse-retrieval sibling of the vector index
 (sources/vector_index.py) and the dedup cluster table
 (sources/cluster_store.py).
 
-Layout (one swap-atomic directory, sources/store.py _swap_dir):
+Layout (one swap-atomic directory, vcf_pg_loader_spark/durable.py):
 
   postings/ (term, doc_id, tf)  — partitioned by a hash bucket of the
                                   term so a query's terms prune to a few
@@ -23,13 +23,12 @@ secondary structure here.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from vcf_pg_loader_spark.sources.store import _heal_dir, _swap_dir
+from vcf_pg_loader_spark import durable
 
 N_TERM_BUCKETS = 64
 
@@ -47,10 +46,11 @@ class BM25Index:
         return f"{self.root}/{name}"
 
     def exists(self) -> bool:
-        _heal_dir(self.root)
+        durable.heal_dir(self.root)
         return os.path.isdir(self._p("stats"))
 
     # -- build ----------------------------------------------------------
+    @durable.leased
     def build(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     ) -> None:
@@ -72,7 +72,7 @@ class BM25Index:
                 ).alias("avgdl")
             )
         )
-        staging = tempfile.mkdtemp(prefix="bm25_index_")
+        staging = durable.stage_dir(self.root)
         (
             tf.withColumn("bucket", _term_bucket(F.col("term")))
             .repartition("bucket")
@@ -82,9 +82,7 @@ class BM25Index:
         )
         dl.write.parquet(os.path.join(staging, "doclens"))
         stats.write.parquet(os.path.join(staging, "stats"))
-        os.makedirs(os.path.dirname(self.root), exist_ok=True)
-        _heal_dir(self.root)
-        _swap_dir(staging, self.root)
+        durable.swap_dir(staging, self.root)
 
     # -- serve ----------------------------------------------------------
     def search(

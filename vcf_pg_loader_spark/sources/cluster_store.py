@@ -20,19 +20,19 @@ Layout:
                              docs), so the serve join broadcasts.
 
 Rebuild after corpus changes, like any secondary structure.  The write
-is stage-then-swap (sources/store.py _swap_dir), so readers never see a
-half-written table and a crash mid-swap is recoverable.
+is the stage → swap → heal protocol of vcf_pg_loader_spark/durable.py,
+so readers never see a half-written table and a crash at any step is
+recoverable.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vcf_pg_loader_spark.sources.store import _heal_dir, _swap_dir
+from vcf_pg_loader_spark import durable
 
 
 class DedupClusterStore:
@@ -42,24 +42,23 @@ class DedupClusterStore:
         self.clusters_path = f"{self.root}/clusters"
 
     def exists(self) -> bool:
-        _heal_dir(self.clusters_path)
+        durable.heal_dir(self.clusters_path)
         return os.path.isdir(self.clusters_path)
 
     # -- build ----------------------------------------------------------
+    @durable.leased
     def write(self, components: DataFrame) -> None:
         """Persist a (node, comp) component labelling — the output of
         operators/dedup.py connected_components — atomically."""
-        os.makedirs(self.root, exist_ok=True)
-        staging = tempfile.mkdtemp(prefix="dedup_clusters_")
+        staging = durable.stage_dir(self.clusters_path)
         components.select("node", "comp").write.mode("overwrite").parquet(
             staging
         )
-        _heal_dir(self.clusters_path)
-        _swap_dir(staging, self.clusters_path)
+        durable.swap_dir(staging, self.clusters_path)
 
     # -- serve ----------------------------------------------------------
     def read(self) -> DataFrame:
-        _heal_dir(self.clusters_path)
+        durable.heal_dir(self.clusters_path)
         return self.spark.read.parquet(self.clusters_path)
 
     def losers(self) -> DataFrame:
@@ -92,8 +91,8 @@ class MaterializedTable:
     observability artifact here shares (funnel reports, drop
     attribution, dataset cards): compute once after a curation run,
     serve every dashboard/debug read from the parquet.  Same crash
-    discipline as the cluster table above: stage into a temp dir, swap
-    in atomically, heal on read after a mid-swap crash."""
+    discipline as the cluster table above: stage beside the table, swap
+    in atomically, heal on read after a crash."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -101,16 +100,15 @@ class MaterializedTable:
         self.table_path = f"{self.root}/table"
 
     def exists(self) -> bool:
-        _heal_dir(self.table_path)
+        durable.heal_dir(self.table_path)
         return os.path.isdir(self.table_path)
 
+    @durable.leased
     def write(self, df: DataFrame) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        staging = tempfile.mkdtemp(prefix="materialized_")
+        staging = durable.stage_dir(self.table_path)
         df.write.mode("overwrite").parquet(staging)
-        _heal_dir(self.table_path)
-        _swap_dir(staging, self.table_path)
+        durable.swap_dir(staging, self.table_path)
 
     def read(self) -> DataFrame:
-        _heal_dir(self.table_path)
+        durable.heal_dir(self.table_path)
         return self.spark.read.parquet(self.table_path)

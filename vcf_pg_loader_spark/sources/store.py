@@ -24,39 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _swap_dir(src: str, dst: str) -> None:
-    """Crash-safe directory swap: move `dst` aside before moving `src`
-    in, so no instant exists where the data is gone.  The aside name is
-    dot-prefixed — Spark/parquet discovery skips hidden dirs, so a
-    reader mid-swap never sees a phantom `chrom=1_old` partition.  A
-    crash between the two moves leaves `.{base}.old` restorable (see
-    `_heal_dir`); a crash after leaves only stale cleanup."""
-    import shutil
-
-    parent, base = os.path.split(dst.rstrip("/"))
-    old = os.path.join(parent, f".{base}.old")
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(dst):
-        shutil.move(dst, old)
-    shutil.move(src, dst)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _heal_dir(dst: str) -> None:
-    """Recover from a crash mid-`_swap_dir`: if `dst` is missing but its
-    aside copy exists, restore it; if both exist the swap completed and
-    the aside is stale — drop it."""
-    import shutil
-
-    parent, base = os.path.split(dst.rstrip("/"))
-    old = os.path.join(parent, f".{base}.old")
-    if not os.path.isdir(old):
-        return
-    if os.path.isdir(dst):
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        shutil.move(old, dst)
+from vcf_pg_loader_spark import durable
 
 
 def compute_file_hash(path: str, chunk_size: int = 1 << 20) -> str:
@@ -99,10 +67,9 @@ class VariantStore:
 
     def _write_audit(self, rec: dict) -> None:
         os.makedirs(self.audit_path, exist_ok=True)
-        with open(
-            os.path.join(self.audit_path, f"{rec['batch_id']}.json"), "w"
-        ) as fh:
-            json.dump(rec, fh)
+        durable.write_json_atomic(
+            os.path.join(self.audit_path, f"{rec['batch_id']}.json"), rec
+        )
 
     def audit_frame(self) -> DataFrame:
         rows = self._read_audit()
@@ -124,6 +91,7 @@ class VariantStore:
         return done[-1] if done else None
 
     # -- load -----------------------------------------------------------
+    @durable.leased
     def load(
         self,
         variants: DataFrame,
@@ -135,18 +103,39 @@ class VariantStore:
 
         Same-content reloads are skipped unless force=True, in which case
         the old batch's rows are replaced (delete-then-append semantics,
-        loader.py:230-252)."""
+        loader.py:230-252).
+
+        The batch is audited as "loading" before its rows are appended
+        and as "completed" after, so a load that crashed in between is
+        recognisable: the next load drops its rows and marks it
+        "aborted" before appending anything (and the temp file of a
+        "loading" record a crash cut is dropped)."""
         t0 = time.time()
+        durable.heal_dir(self.variants_path)
+        durable.drop_tmp(self.audit_path)
         file_hash = compute_file_hash(source_file)
         existing = self.find_existing(file_hash)
         if existing and not force:
             return LoadResult(
                 existing["batch_id"], 0, True, file_hash, time.time() - t0
             )
+        for rec in self._read_audit():
+            if rec["status"] == "loading":
+                self._delete_batch(rec["batch_id"])
+                self._write_audit({**rec, "status": "aborted"})
         if existing and force:
-            self.delete_batch(existing["batch_id"])
+            self._delete_batch(existing["batch_id"])
 
         batch_id = str(uuid.uuid4())
+        rec = {
+            "batch_id": batch_id,
+            "source_file": source_file,
+            "file_hash": file_hash,
+            "n_variants": 0,
+            "status": "loading",
+            "completed_at": time.time(),
+        }
+        self._write_audit(rec)
         df = variants.withColumn("load_batch_id", F.lit(batch_id))
         # sortWithinPartitions(pos): parquet row-group min/max stats then
         # prune range scans — the GiST analogue (SURVEY §4 index strategy)
@@ -160,9 +149,7 @@ class VariantStore:
         n = self.read().filter(F.col("load_batch_id") == batch_id).count()
         self._write_audit(
             {
-                "batch_id": batch_id,
-                "source_file": source_file,
-                "file_hash": file_hash,
+                **rec,
                 "n_variants": n,
                 "status": "completed",
                 "completed_at": time.time(),
@@ -170,19 +157,25 @@ class VariantStore:
         )
         return LoadResult(batch_id, n, False, file_hash, time.time() - t0)
 
+    @durable.leased
     def delete_batch(self, batch_id: str) -> None:
         """Remove one batch (DELETE WHERE load_batch_id=...,
         loader.py:249-252): rewrite only the touched chromosome
-        partitions via stage-to-temp + directory swap.
+        partitions into staging, hard-link the untouched ones beside
+        them, and swap the whole variants directory (durable.py).
 
         NB: dynamic partition overwrite alone is NOT enough — a partition
         whose rows are all deleted produces no output partition and would
         silently survive.  A transactional table format (Delta/Iceberg
         DELETE) is the production-cluster path; this filesystem swap is
         the plain-Parquet equivalent."""
-        import shutil
-        import tempfile
+        self._delete_batch(batch_id)
 
+    def _delete_batch(self, batch_id: str) -> None:
+        """delete_batch under the caller's lease."""
+        durable.heal_dir(self.variants_path)
+        if not os.path.isdir(self.variants_path):
+            return
         df = self.read()
         touched = [
             r.chrom
@@ -196,20 +189,17 @@ class VariantStore:
         keep = df.filter(
             F.col("chrom").isin(touched) & (F.col("load_batch_id") != batch_id)
         )
-        staging = tempfile.mkdtemp(prefix="variant_store_rewrite_")
+        staging = durable.stage_dir(self.variants_path)
         keep.write.mode("overwrite").partitionBy("chrom").parquet(staging)
-        for chrom in touched:
-            dst = os.path.join(self.variants_path, f"chrom={chrom}")
-            src = os.path.join(staging, f"chrom={chrom}")
-            _heal_dir(dst)
-            if os.path.isdir(src):
-                _swap_dir(src, dst)
-            elif os.path.isdir(dst):
-                # every row in this partition belonged to the batch
-                shutil.rmtree(dst)
-        shutil.rmtree(staging, ignore_errors=True)
+        # a touched partition whose rows all belonged to the batch is in
+        # neither the write nor the links, so it vanishes
+        durable.link_partitions(
+            self.variants_path, staging, {f"chrom={c}" for c in touched}
+        )
+        durable.swap_dir(staging, self.variants_path)
 
     def read(self) -> DataFrame:
+        durable.heal_dir(self.variants_path)
         return self.spark.read.parquet(self.variants_path)
 
     # -- bucketed layout (co-located joins) ------------------------------
@@ -254,6 +244,7 @@ class VariantStore:
         return self.read().filter(F.col("load_batch_id").isin(batches))
 
     # -- maintenance ----------------------------------------------------
+    @durable.leased
     def compact(self, target_rows_per_file: int = 1_000_000) -> dict:
         """Rewrite each chromosome partition into ~target-sized, pos-sorted
         files — the small-files compaction every append-heavy parquet
@@ -264,13 +255,11 @@ class VariantStore:
         Row identity is untouched (same rows, same batch ids); only the
         physical layout changes, restoring the pos-sort that gives range
         queries their row-group skipping after interleaved appends.
-        Stage-then-swap per partition, like delete_batch; a transactional
-        format's OPTIMIZE/rewrite_data_files is the cluster-native twin.
+        Stage-then-swap of the variants directory, like delete_batch; a
+        transactional format's OPTIMIZE/rewrite_data_files is the
+        cluster-native twin.
         """
-        import math
-        import shutil
-        import tempfile
-
+        durable.heal_dir(self.variants_path)
         df = self.read()
         counts = {
             r["chrom"]: r["n"]
@@ -278,7 +267,7 @@ class VariantStore:
         }
         if not counts:
             return {"partitions": 0, "rows": 0}
-        staging = tempfile.mkdtemp(prefix="variant_store_compact_")
+        staging = durable.stage_dir(self.variants_path)
         (
             df.repartition("chrom")
             .sortWithinPartitions("pos")
@@ -289,13 +278,7 @@ class VariantStore:
             .partitionBy("chrom")
             .parquet(staging)
         )
-        for chrom in counts:
-            dst = os.path.join(self.variants_path, f"chrom={chrom}")
-            src = os.path.join(staging, f"chrom={chrom}")
-            if os.path.isdir(src):
-                _heal_dir(dst)
-                _swap_dir(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
+        durable.swap_dir(staging, self.variants_path)
         return {"partitions": len(counts), "rows": sum(counts.values())}
 
     def file_count(self) -> int:
@@ -336,6 +319,7 @@ class VariantStore:
     def rsid_index_path(self) -> str:
         return f"{self.root}/variants_by_rsid"
 
+    @durable.leased
     def build_rsid_index(self, files: int = 32) -> None:
         """Materialize the rsid-sorted secondary copy (a "covering
         index": same rows, different sort).  `repartitionByRange` makes
@@ -345,10 +329,7 @@ class VariantStore:
         (loader.py:393-395).  Cost: one range exchange + sort — at
         100 TB run it per-partition-group or move to a transactional
         format's clustering."""
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp(prefix="variant_store_rsid_")
+        staging = durable.stage_dir(self.rsid_index_path)
         (
             self.read()
             .repartitionByRange(files, "rs_id")
@@ -356,8 +337,7 @@ class VariantStore:
             .write.mode("overwrite")
             .parquet(staging)
         )
-        _heal_dir(self.rsid_index_path)
-        _swap_dir(staging, self.rsid_index_path)
+        durable.swap_dir(staging, self.rsid_index_path)
 
     def partition_stats(self) -> DataFrame:
         """Row counts per chromosome partition (reference

@@ -26,33 +26,12 @@ rebuilt index over the same corpus is byte-identical.
 
 from __future__ import annotations
 
-import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vcf_pg_loader_spark import durable
 from vcf_pg_loader_spark.operators.pq import ivf_pq_search, pq_encode, pq_fit
-from vcf_pg_loader_spark.sources.store import _heal_dir, _swap_dir
-
-
-def _leased(fn):
-    """Run the wrapped maintenance method under the index root's writer
-    lease (streaming/sink.py writer_lease): apply_delta's staging sweep
-    assumes one writer per index, and the lease turns that comment into
-    an enforced contract — a second concurrent applier is refused, a
-    dead one's lease is taken over.  reindex and apply_zset inherit the
-    lease through the build/apply_delta they delegate to (no
-    nesting)."""
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        from vcf_pg_loader_spark.streaming.sink import writer_lease
-
-        with writer_lease(self.root):
-            return fn(self, *args, **kwargs)
-
-    return wrapper
 
 
 class VectorIndex:
@@ -67,11 +46,11 @@ class VectorIndex:
         return f"{self.root}/{name}"
 
     def exists(self) -> bool:
-        _heal_dir(self.root)
+        durable.heal_dir(self.root)
         return os.path.isdir(self._p("meta"))
 
     # -- build ----------------------------------------------------------
-    @_leased
+    @durable.leased
     def build(
         self,
         corpus: DataFrame,
@@ -96,11 +75,11 @@ class VectorIndex:
             corpus, k_centroids, n_iter, id_col=id_col, vec_col=vec_col,
             kernel=kernel,
         )
-        # Stage every artifact into a temp dir and swap it in atomically
-        # (same crash discipline as DedupClusterStore / BM25Index): a
+        # Stage every artifact beside the root and swap it in atomically
+        # (durable.py, the protocol of every maintained structure): a
         # crash mid-rebuild must never leave meta/ — the "index is
         # complete" witness — beside a mix of old and new artifacts.
-        staging = tempfile.mkdtemp(prefix="vector_index_")
+        staging = durable.stage_dir(self.root)
         cents.write.parquet(os.path.join(staging, "centroids"))
         if pq:
             books = pq_fit(corpus, m, k_sub, id_col=id_col, vec_col=vec_col)
@@ -126,12 +105,10 @@ class VectorIndex:
             "k_centroids int, m int, k_sub int, kernel string",
         )
         meta.write.json(os.path.join(staging, "meta"))
-        os.makedirs(os.path.dirname(os.path.abspath(self.root)), exist_ok=True)
-        _heal_dir(self.root)
-        _swap_dir(staging, self.root)
+        durable.swap_dir(staging, self.root)
 
     # -- maintenance -----------------------------------------------------
-    @_leased
+    @durable.leased
     def apply_delta(
         self,
         inserts: DataFrame | None = None,
@@ -164,29 +141,13 @@ class VectorIndex:
         delta's write cost is O(touched cells), never O(index).
         The takedown path for the ANN structure, completing the
         retract family (streaming/retract.py)."""
-        import shutil
-
         from pyspark.sql import functions as F
 
         from vcf_pg_loader_spark.operators.similarity import ivf_assign
         from vcf_pg_loader_spark.operators.pq import pq_encode
+        from vcf_pg_loader_spark.streaming.sink import isin_values
 
-        from vcf_pg_loader_spark.streaming.sink import (
-            _link_tree,
-            isin_values,
-        )
-
-        # sweep staging left by a crashed delta (it lives beside the
-        # root so hard-links stay same-device; scoped by this root's
-        # basename — single writer per index)
-        parent = os.path.dirname(self.root) or "."
-        if os.path.isdir(parent):
-            for entry in os.listdir(parent):
-                if entry.startswith(f".stg_{os.path.basename(self.root)}_"):
-                    shutil.rmtree(
-                        os.path.join(parent, entry), ignore_errors=True
-                    )
-
+        durable.heal_dir(self.root)
         meta = self.spark.read.json(self._p("meta")).first()
         has_pq = os.path.isdir(self._p("codes"))
         vectors_full = self.spark.read.parquet(self._p("vectors"))
@@ -261,15 +222,11 @@ class VectorIndex:
             if codes is not None:
                 codes = codes.join(dels, "vid", "left_anti")
 
-        # staging beside the root: hard-links stay same-device and the
-        # final swap is a rename
-        staging = tempfile.mkdtemp(
-            prefix=f".stg_{os.path.basename(self.root)}_", dir=parent
-        )
+        staging = durable.stage_dir(self.root)
         for frozen in ("centroids", "codebooks", "meta"):
             src = self._p(frozen)
             if os.path.isdir(src):
-                _link_tree(src, os.path.join(staging, frozen))
+                durable.link_tree(src, os.path.join(staging, frozen))
         (
             vectors.repartition("cid")
             .sortWithinPartitions("vid")
@@ -284,19 +241,12 @@ class VectorIndex:
                 .parquet(os.path.join(staging, "codes"))
             )
         for table in ("vectors",) + (("codes",) if codes is not None else ()):
-            src_tbl = self._p(table)
-            dst_tbl = os.path.join(staging, table)
-            os.makedirs(dst_tbl, exist_ok=True)
-            for entry in os.listdir(src_tbl):
-                if "=" in entry and entry not in touched_dirs:
-                    _link_tree(
-                        os.path.join(src_tbl, entry),
-                        os.path.join(dst_tbl, entry),
-                    )
+            durable.link_partitions(
+                self._p(table), os.path.join(staging, table), touched_dirs
+            )
         if assigned is not None:
             assigned.unpersist()
-        _heal_dir(self.root)
-        _swap_dir(staging, self.root)
+        durable.swap_dir(staging, self.root)
 
     def apply_zset(
         self,

@@ -176,13 +176,9 @@ def _checkpointed(df: DataFrame, held: list) -> DataFrame:
     checkpoint runs the plan with AQE's partition coalescing, so a
     batch-sized frame lands in a partition or two and every later scan
     of it is that many tasks (a persisted aggregate would keep its 32
-    shuffle partitions).  Its blocks are released through the
-    checkpointed RDD, which the frame's logical plan holds."""
+    shuffle partitions).  Its blocks are released with the apply."""
     cp = df.localCheckpoint(eager=True)
-    # the JVM handle of the checkpointed RDD: no DataFrame-to-RDD
-    # plan translation happens here
-    rdd = cp._jdf.queryExecution().logical().rdd()  # rdd-ok
-    held.append(lambda: rdd.unpersist(False))
+    held.append(lambda: D.release_checkpoint(cp))
     return cp
 
 

@@ -40,13 +40,13 @@ incrementally maintained layout.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vcf_pg_loader_spark import durable
 from vcf_pg_loader_spark.operators.shards import (
     N_SHARDS,
     SEQ_LEN,
@@ -57,10 +57,10 @@ from vcf_pg_loader_spark.operators.shards import (
 )
 from vcf_pg_loader_spark.streaming.retract import split_zset
 from vcf_pg_loader_spark.streaming.sink import (
+    PARAMS,
     ParquetUpsertSink,
-    _link_tree,
     isin_values,
-    writer_lease,
+    migrate_state,
 )
 
 _LAYOUT_COLS = ["doc_id", "shard", "okey", "n_tokens", "dfp"]
@@ -123,17 +123,11 @@ def reshard_state(
         raise ValueError("reshard needs --n-shards and/or --seq-len")
     target = target.rstrip("/")
     sink = ParquetUpsertSink(target, key=["doc_id"])
-    with writer_lease(target):
-        sink._recover()
-        if not os.path.isdir(target):
-            raise FileNotFoundError(f"no maintained state at {target}")
-        fp_path = os.path.join(target, "_params.json")
-        on_disk = {}
-        if os.path.exists(fp_path):
-            with open(fp_path) as fh:
-                on_disk = json.load(fh)
-        old_shards = on_disk.get("n_shards", N_SHARDS)
-        old_seq = on_disk.get("seq_len", SEQ_LEN)
+    report = {}
+
+    def plan(params: dict) -> dict:
+        old_shards = params.get("n_shards", N_SHARDS)
+        old_seq = params.get("seq_len", SEQ_LEN)
         new_shards = n_shards if n_shards is not None else old_shards
         new_seq = seq_len if seq_len is not None else old_seq
         if (new_shards, new_seq) == (old_shards, old_seq):
@@ -152,45 +146,21 @@ def reshard_state(
             "dfp",
         )
         layout = shard_layout_from_lengths(base, new_seq)
-        man = shard_manifest(layout, new_seq)
-        staging = sink._staging_dir()
-        (
-            layout.repartition(F.col("shard"))
-            .write.partitionBy("shard")
-            .parquet(os.path.join(staging, "layout"))
+        params["n_shards"] = new_shards
+        params["seq_len"] = new_seq
+        report.update(
+            n_shards_old=old_shards,
+            n_shards_new=new_shards,
+            seq_len_old=old_seq,
+            seq_len_new=new_seq,
         )
-        (
-            man.repartition(F.col("shard"))
-            .write.partitionBy("shard")
-            .parquet(os.path.join(staging, "manifest"))
-        )
-        for name in sorted(os.listdir(target)):
-            full = os.path.join(target, name)
-            if os.path.isdir(full) and name not in ("layout", "manifest"):
-                _link_tree(full, os.path.join(staging, name))
-        # the ledger ({target}_ledger) and epoch stamp
-        # ({target}_epoch.json) live BESIDE the root and survive the
-        # swap; only the in-root replay marker needs carrying
-        marker = os.path.join(target, "_applied_batch.json")
-        if os.path.exists(marker):
-            shutil.copy2(
-                marker, os.path.join(staging, "_applied_batch.json")
-            )
-        on_disk["n_shards"] = new_shards
-        on_disk["seq_len"] = new_seq
-        with open(os.path.join(staging, "_params.json"), "w") as fh:
-            json.dump(on_disk, fh, sort_keys=True)
-        old = f"{target}_old"
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(target, old)
-        shutil.move(staging, target)
-        shutil.rmtree(old, ignore_errors=True)
         return {
-            "n_shards_old": old_shards,
-            "n_shards_new": new_shards,
-            "seq_len_old": old_seq,
-            "seq_len_new": new_seq,
+            "layout": (layout, "shard"),
+            "manifest": (shard_manifest(layout, new_seq), "shard"),
         }
+
+    migrate_state(target, plan)
+    return report
 
 
 def repack_merges(
@@ -228,16 +198,10 @@ def repack_merges(
 
     target = target.rstrip("/")
     sink = ParquetUpsertSink(target, key=["doc_id"])
-    with writer_lease(target):
-        sink._recover()
-        if not os.path.isdir(target):
-            raise FileNotFoundError(f"no maintained state at {target}")
-        fp_path = os.path.join(target, "_params.json")
-        on_disk = {}
-        if os.path.exists(fp_path):
-            with open(fp_path) as fh:
-                on_disk = json.load(fh)
-        old_fp = on_disk.get("vocab_fp")
+    report = {}
+
+    def plan(params: dict) -> dict:
+        old_fp = params.get("vocab_fp")
         # vocab_fp is TOKENIZER identity (operators/bpe.py
         # tokenizer_fingerprint: merges + mode + max_chars), so equality
         # alone is the no-op condition: retraining the same corpus with
@@ -250,10 +214,10 @@ def repack_merges(
                 f"state at {target} is already packed under tokenizer "
                 f"fingerprint {vocab_fp} — repack would be a no-op"
             )
-        n_shards = on_disk.get("n_shards", N_SHARDS)
-        seq_len = on_disk.get("seq_len", SEQ_LEN)
-        doc_sep = int(on_disk.get("doc_sep", 0) or 0)
-        max_doc_tokens = on_disk.get("max_doc_tokens")
+        n_shards = params.get("n_shards", N_SHARDS)
+        seq_len = params.get("seq_len", SEQ_LEN)
+        doc_sep = int(params.get("doc_sep", 0) or 0)
+        max_doc_tokens = params.get("max_doc_tokens")
         old_layout = sink._table_raw(spark, "layout")
         if old_layout is None:
             raise FileNotFoundError(f"no layout table under {target}")
@@ -297,7 +261,7 @@ def repack_merges(
             ),
             "doc_id",
         ).select(*_LAYOUT_COLS)
-        cur = _parse_curriculum(on_disk.get("curriculum"))
+        cur = _parse_curriculum(params.get("curriculum"))
         if cur is not None and cur[0] == "length":
             # a length curriculum's okeys embed OLD-vocab length
             # buckets; carrying them verbatim would diverge the
@@ -329,52 +293,29 @@ def repack_merges(
             )
         layout = shard_layout_from_lengths(base, seq_len)
         man = shard_manifest(layout, seq_len)
-        staging = sink._staging_dir()
-        (
-            layout.repartition(F.col("shard"))
-            .write.partitionBy("shard")
-            .parquet(os.path.join(staging, "layout"))
-        )
-        (
-            man.repartition(F.col("shard"))
-            .write.partitionBy("shard")
-            .parquet(os.path.join(staging, "manifest"))
-        )
-        for name in sorted(os.listdir(target)):
-            full = os.path.join(target, name)
-            if os.path.isdir(full) and name not in ("layout", "manifest"):
-                _link_tree(full, os.path.join(staging, name))
-        marker = os.path.join(target, "_applied_batch.json")
-        if os.path.exists(marker):
-            shutil.copy2(
-                marker, os.path.join(staging, "_applied_batch.json")
-            )
-        on_disk["token_space"] = "bpe"
-        on_disk["vocab_fp"] = vocab_fp
+        params["token_space"] = "bpe"
+        params["vocab_fp"] = vocab_fp
         if token_mode != "words":
             from vcf_pg_loader_spark.operators.bpe import MAX_CHARS
 
-            on_disk["token_mode"] = token_mode
-            on_disk["max_chars"] = (
+            params["token_mode"] = token_mode
+            params["max_chars"] = (
                 int(max_chars) if max_chars is not None else MAX_CHARS
             )
         else:
-            on_disk.pop("token_mode", None)
-            on_disk.pop("max_chars", None)
-        with open(os.path.join(staging, "_params.json"), "w") as fh:
-            json.dump(on_disk, fh, sort_keys=True)
-        old = f"{target}_old"
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(target, old)
-        shutil.move(staging, target)
-        shutil.rmtree(old, ignore_errors=True)
-        return {
-            "vocab_fp_old": old_fp,
-            "vocab_fp_new": vocab_fp,
-            "token_mode": token_mode,
-            "n_shards": n_shards,
-            "seq_len": seq_len,
-        }
+            params.pop("token_mode", None)
+            params.pop("max_chars", None)
+        report.update(
+            vocab_fp_old=old_fp,
+            vocab_fp_new=vocab_fp,
+            token_mode=token_mode,
+            n_shards=n_shards,
+            seq_len=seq_len,
+        )
+        return {"layout": (layout, "shard"), "manifest": (man, "shard")}
+
+    migrate_state(target, plan)
+    return report
 
 
 class TrainingShardSink(ParquetUpsertSink):
@@ -518,15 +459,10 @@ class TrainingShardSink(ParquetUpsertSink):
             return
         except ValueError:
             fp = self._params_fingerprint()
-            p = os.path.join(self.target, "_params.json")
-            if (
-                fp is None
-                or self.legacy_vocab_fp is None
-                or not os.path.exists(p)
-            ):
+            p = os.path.join(self.target, PARAMS)
+            on_disk = durable.read_json(p)
+            if fp is None or self.legacy_vocab_fp is None or on_disk is None:
                 raise
-            with open(p) as fh:
-                on_disk = json.load(fh)
             if not (
                 on_disk.get("vocab_fp") == self.legacy_vocab_fp
                 and "vocab_fp" in fp
@@ -544,10 +480,7 @@ class TrainingShardSink(ParquetUpsertSink):
                 f"semantics moved in round 14)",
                 stacklevel=3,
             )
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(fp, fh, sort_keys=True)
-            os.replace(tmp, p)
+            durable.write_json_atomic(p, fp)
 
     def _apply_curriculum(self, base: DataFrame) -> DataFrame:
         """Overwrite okey with the curriculum order key — bucket from
@@ -643,25 +576,29 @@ class TrainingShardSink(ParquetUpsertSink):
         key = str(epoch["epoch_fp"])
         root = self._epochs_dir()
         snap = os.path.join(root, key)
-        if not os.path.exists(snap):
-            os.makedirs(root, exist_ok=True)
-            tmp = snap + ".tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            for name in ("layout", "manifest"):
-                src = os.path.join(self.target, name)
-                if os.path.isdir(src):
-                    _link_tree(src, os.path.join(tmp, name))
-            params = os.path.join(self.target, "_params.json")
-            if os.path.exists(params):
-                os.makedirs(tmp, exist_ok=True)
-                shutil.copy2(params, os.path.join(tmp, "_params.json"))
-            os.replace(tmp, snap)
+        with durable.writer_lease(self.target):
+            durable.heal_dir(snap)
+            if not os.path.exists(snap):
+                staging = durable.stage_dir(snap)
+                for name in ("layout", "manifest"):
+                    src = os.path.join(self.target, name)
+                    if os.path.isdir(src):
+                        durable.link_tree(src, os.path.join(staging, name))
+                params = durable.read_json(os.path.join(self.target, PARAMS))
+                if params is not None:
+                    durable.write_json_atomic(
+                        os.path.join(staging, PARAMS), params
+                    )
+                durable.swap_dir(staging, snap)
         # bounded retention: newest RETAIN_EPOCHS snapshots survive
+        # (dot-prefixed entries are staging and asides, `.tmp` ones
+        # staging of states written before the durable module)
         snaps = sorted(
             (
                 p
                 for p in os.listdir(root)
                 if os.path.isdir(os.path.join(root, p))
+                and not p.startswith(".")
                 and not p.endswith(".tmp")
             ),
             key=lambda p: os.path.getmtime(os.path.join(root, p)),

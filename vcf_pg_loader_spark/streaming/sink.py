@@ -5,7 +5,7 @@ rollup maintenance need `foreachBatch`, which hands each micro-batch to
 ordinary batch code together with a monotonically increasing batch id.
 The batch id is the exactly-once hook: after a crash the engine REPLAYS
 the last uncommitted batch (at-least-once), so the sink must make
-re-applying a batch a no-op.  Two layers of protection here:
+re-applying a batch a no-op.  Three layers of protection here:
 
   1. a batch ledger — applied batch ids are recorded after the swap
      completes; a replayed id short-circuits before any work;
@@ -15,15 +15,18 @@ re-applying a batch a no-op.  Two layers of protection here:
      is detected on replay (marker == batch_id) and finished without
      re-merging — load-bearing for the ADDITIVE folds (rollup, KMV)
      where a re-fold would double-count;
-  3. crash recovery for the two-move swap — if a crash lands between
-     "move target aside" and "move staging in", the target is missing
-     and `<target>_old` holds the accumulated state; apply_batch
-     restores it before doing any work.
+  3. crash recovery for the swap itself — every apply starts, under
+     the writer lease, with `durable.heal_sink(target)`, which restores
+     the moved-aside state if a crash landed between "target aside"
+     and "staging in" and drops a stale aside (also the `<target>_old`
+     aside of the older swap code); the apply's `durable.stage_dir`
+     drops staging a crashed apply left behind.
 
-The target is a plain-Parquet table maintained by stage-then-swap, the
-same pattern as VariantStore.delete_batch (sources/store.py:139-174); on
-a production cluster the swap is replaced by a transactional format's
-MERGE (Delta/Iceberg) with no change to the streaming topology.
+The target is a plain-Parquet table maintained by the stage → swap →
+heal protocol of `vcf_pg_loader_spark/durable.py`, shared with every
+other maintained structure; on a production cluster the swap is
+replaced by a transactional format's MERGE (Delta/Iceberg) with no
+change to the streaming topology.
 
 Reference parity: the reference's ON CONFLICT upserts are batch-only
 (gwas/loader.py:467-491); this module is the engine's extension that
@@ -32,134 +35,18 @@ serves the same semantics from a live source.
 
 from __future__ import annotations
 
-import contextlib
-import json
 import os
-import shutil
-import socket
-import tempfile
-import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from vcf_pg_loader_spark import durable
 from vcf_pg_loader_spark.operators.merge import merge_upsert
 from vcf_pg_loader_spark.operators.rollup import (
     event_rollup_partial,
     merge_rollup,
 )
 from vcf_pg_loader_spark.operators.sketch import kmv_merge, kmv_sketch
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Populate dst with hard-links to every file under src (copy2 on
-    cross-device).  Parquet files are immutable once written — the
-    engine never appends or rewrites a part file in place — so target
-    and staging sharing inodes is safe: the post-swap rmtree of the old
-    directory only drops link counts.  This is the local-filesystem
-    analogue of a metadata-only rename on an object store / HDFS."""
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        out = dst if rel == "." else os.path.join(dst, rel)
-        os.makedirs(out, exist_ok=True)
-        for f in files:
-            s, d = os.path.join(root, f), os.path.join(out, f)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-
-
-def _lease_is_stale(holder: dict) -> bool:
-    """A lease is stale when its pid is dead on THIS host, or — when the
-    holder is another host, where pid-liveness cannot be checked — when
-    it is older than LEASE_STALE_SEC.  An applier expected to run longer
-    than that on a remote host must refresh its lease (rewriting the ts);
-    locally the pid check makes takeover immediate and exact."""
-    pid = holder.get("pid")
-    if holder.get("host") == socket.gethostname() and isinstance(pid, int):
-        try:
-            os.kill(pid, 0)
-            return False
-        except ProcessLookupError:
-            return True
-        except PermissionError:
-            return False  # exists, owned by another user
-    return (time.time() - holder.get("ts", 0)) > LEASE_STALE_SEC
-
-
-@contextlib.contextmanager
-def writer_lease(target: str):
-    """Enforce the one-writer-per-target contract that the staging
-    sweeps in ParquetUpsertSink._recover and VectorIndex.apply_delta
-    assume.  Without it, two concurrent appliers (a double-fired
-    scheduler; an operator running sync-corpus while a streaming query
-    holds the same root) would sweep each other's live staging
-    mid-apply — state stayed consistent (the swap is atomic) but the
-    loser failed confusingly and late.  O_EXCL create on
-    `<target>_lease.json` (beside the target — the target directory is
-    replaced wholesale by the swap) is the atomic acquire; a stale
-    lease (dead pid on this host, or an expired heartbeat from another
-    host) is taken over via rename-then-unlink so two contenders can
-    never both think they cleared it: only one rename succeeds, the
-    loser loops and sees the winner's fresh lease.  A LIVE holder
-    raises — refusal, never a silent sweep."""
-    path = f"{target.rstrip('/')}_lease.json"
-    parent = os.path.dirname(target.rstrip("/")) or "."
-    os.makedirs(parent, exist_ok=True)
-    acquired = False
-    for _ in range(5):
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            with os.fdopen(fd, "w") as fh:
-                json.dump(
-                    {
-                        "pid": os.getpid(),
-                        "host": socket.gethostname(),
-                        "ts": time.time(),
-                    },
-                    fh,
-                )
-            acquired = True
-            break
-        except FileExistsError:
-            try:
-                with open(path) as fh:
-                    holder = json.load(fh)
-            except (OSError, ValueError):
-                # holder vanished between the open attempts or is
-                # mid-write: retry the create
-                time.sleep(0.05)
-                continue
-            if _lease_is_stale(holder):
-                stale = f"{path}.stale"
-                try:
-                    os.replace(path, stale)
-                    os.unlink(stale)
-                except OSError:
-                    pass  # another contender won the takeover race
-                continue
-            raise RuntimeError(
-                f"maintained state at {target} is locked by a live "
-                f"applier (pid {holder.get('pid')} on "
-                f"{holder.get('host')}, lease {path}); refusing the "
-                f"concurrent apply — one writer per target. If that "
-                f"process is truly gone the lease will be taken over "
-                f"automatically (dead pid, or {LEASE_STALE_SEC:.0f}s "
-                f"cross-host)."
-            )
-    if not acquired:
-        raise RuntimeError(
-            f"could not acquire the writer lease at {path} after "
-            f"repeated takeover attempts"
-        )
-    try:
-        yield
-    finally:
-        try:
-            os.unlink(path)
-        except OSError:
-            pass
 
 
 def isin_values(col, values) -> "F.Column":
@@ -170,13 +57,6 @@ def isin_values(col, values) -> "F.Column":
         return F.lit(False)
     return col.isin(list(values))
 
-
-# A writer lease held by another process is considered abandoned after
-# this many seconds without its pid being verifiable (cross-host case:
-# pid-liveness can only be checked on the lease-holder's own host, so
-# takeover falls back to lease age).  Same-host dead pids are taken
-# over immediately.
-LEASE_STALE_SEC = 3600.0
 
 # Auto-compaction threshold: apply_batch rolls the per-batch ledger
 # files into _compacted.json once their count passes this, so the
@@ -252,6 +132,50 @@ BUCKET_LAYOUTS = {
 }
 
 
+# the replay marker and the parameter fingerprint, both inside the
+# swapped state directory so they move with the data
+MARKER = "_applied_batch.json"
+PARAMS = "_params.json"
+
+
+def migrate_state(target: str, plan) -> list[str]:
+    """The shared body of the in-place migration verbs (`rebucket_state`
+    here, `reshard_state` and `repack_merges` in streaming/shards.py).
+    Under the writer lease it heals the state and reads its parameter
+    fingerprint; `plan(params)` validates, updates `params` in place
+    and returns the tables to rewrite as {name: (frame, partition
+    column)}.  Those are written into fresh staging, every other table
+    hard-links through, the replay marker carries over, the parameters
+    restamp (when there are any) and the staging swaps in.  The ledger
+    and epoch stamp live beside the target and survive the swap.
+    Returns the names of the linked tables."""
+    target = target.rstrip("/")
+    with durable.writer_lease(target):
+        durable.heal_sink(target)
+        if not os.path.isdir(target):
+            raise FileNotFoundError(f"no maintained state at {target}")
+        params = durable.read_json(os.path.join(target, PARAMS)) or {}
+        tables = plan(params)
+        staging = durable.stage_dir(target)
+        for name, (df, col) in tables.items():
+            df.repartition(col).write.partitionBy(col).parquet(
+                os.path.join(staging, name)
+            )
+        linked = []
+        for name in sorted(os.listdir(target)):
+            full = os.path.join(target, name)
+            if os.path.isdir(full) and name not in tables:
+                durable.link_tree(full, os.path.join(staging, name))
+                linked.append(name)
+        marker = durable.read_json(os.path.join(target, MARKER))
+        if marker is not None:
+            durable.write_json_atomic(os.path.join(staging, MARKER), marker)
+        if params:
+            durable.write_json_atomic(os.path.join(staging, PARAMS), params)
+        durable.swap_dir(staging, target)
+    return linked
+
+
 def rebucket_state(
     spark,
     target: str,
@@ -267,8 +191,9 @@ def rebucket_state(
     config, run `rebucket` on each state (the CLI verb), and applies
     resume under the new fingerprint — without this verb the only path
     was a from-scratch rebuild via a version bump.  Runs under the
-    writer lease; the replay marker (`_applied_batch.json`) carries
-    through, so exactly-once bookkeeping is unaffected."""
+    writer lease (`migrate_state`); the replay marker
+    (`_applied_batch.json`) carries through, so exactly-once
+    bookkeeping is unaffected."""
     layout = BUCKET_LAYOUTS.get(fp_key)
     if layout is None:
         raise ValueError(
@@ -277,68 +202,37 @@ def rebucket_state(
         )
     target = target.rstrip("/")
     sink = ParquetUpsertSink(target, key=[id_col])
-    with writer_lease(target):
-        sink._recover()
-        if not os.path.isdir(target):
-            raise FileNotFoundError(f"no maintained state at {target}")
-        fp_path = os.path.join(target, "_params.json")
-        on_disk = {}
-        if os.path.exists(fp_path):
-            with open(fp_path) as fh:
-                on_disk = json.load(fh)
-        n_old = on_disk.get(fp_key)
-        if n_old == n_new:
+    col = layout["col"]
+    report = {"key": fp_key, "n_old": None, "n_new": n_new}
+
+    def plan(params: dict) -> dict:
+        report["n_old"] = params.get(fp_key)
+        if report["n_old"] == n_new:
             raise ValueError(
                 f"state at {target} is already at {fp_key}={n_new}"
             )
-        staging = sink._staging_dir()
-        rewritten: list[str] = []
-        linked: list[str] = []
+        tables = {}
         for name in sorted(os.listdir(target)):
-            full = os.path.join(target, name)
-            if not os.path.isdir(full):
+            if not os.path.isdir(os.path.join(target, name)):
                 continue
             df = sink._table_raw(spark, name)
-            if df is not None and layout["col"] in df.columns:
-                out = df.drop(layout["col"]).withColumn(
-                    layout["col"], layout["expr"](n_new, id_col)
+            if df is not None and col in df.columns:
+                tables[name] = (
+                    df.drop(col).withColumn(col, layout["expr"](n_new, id_col)),
+                    col,
                 )
-                (
-                    out.repartition(layout["col"])
-                    .write.partitionBy(layout["col"])
-                    .parquet(os.path.join(staging, name))
-                )
-                rewritten.append(name)
-            else:
-                _link_tree(full, os.path.join(staging, name))
-                linked.append(name)
-        if not rewritten:
-            shutil.rmtree(staging, ignore_errors=True)
+        if not tables:
             raise ValueError(
-                f"no table under {target} carries the "
-                f"{layout['col']!r} layout column for {fp_key}"
+                f"no table under {target} carries the {col!r} layout "
+                f"column for {fp_key}"
             )
-        marker = os.path.join(target, "_applied_batch.json")
-        if os.path.exists(marker):
-            shutil.copy2(
-                marker, os.path.join(staging, "_applied_batch.json")
-            )
-        if os.path.exists(fp_path):
-            on_disk[fp_key] = n_new
-            with open(os.path.join(staging, "_params.json"), "w") as fh:
-                json.dump(on_disk, fh, sort_keys=True)
-        old = f"{target}_old"
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(target, old)
-        shutil.move(staging, target)
-        shutil.rmtree(old, ignore_errors=True)
-        return {
-            "key": fp_key,
-            "n_old": n_old,
-            "n_new": n_new,
-            "rewritten": rewritten,
-            "linked": linked,
-        }
+        if params:
+            params[fp_key] = n_new
+        report["rewritten"] = sorted(tables)
+        return tables
+
+    report["linked"] = migrate_state(target, plan)
+    return report
 
 
 class ParquetUpsertSink:
@@ -364,11 +258,8 @@ class ParquetUpsertSink:
         return os.path.join(self.ledger_dir, "_compacted.json")
 
     def _compacted_ids(self) -> set[int]:
-        p = self._compacted_path()
-        if not os.path.exists(p):
-            return set()
-        with open(p) as fh:
-            return set(json.load(fh)["batch_ids"])
+        compacted = durable.read_json(self._compacted_path())
+        return set() if compacted is None else set(compacted["batch_ids"])
 
     def applied(self, batch_id: int) -> bool:
         return (
@@ -393,13 +284,13 @@ class ParquetUpsertSink:
         year per structure.  Runs under the writer lease, so it cannot
         interleave with a live applier on the same target.  Crash-safe
         and idempotent (see _compact_ledger_locked)."""
-        with self._lease():
+        with durable.writer_lease(self.target):
             return self._compact_ledger_locked()
 
     def _compact_ledger_locked(self) -> dict:
         """Compaction body; caller holds the writer lease.  The set of
         per-batch filenames is captured ONCE, the compacted file is
-        written from exactly that set and os.replace'd, and only the
+        written atomically from exactly that set, and only the
         CAPTURED filenames are unlinked — a ledger file recorded after
         the snapshot (possible only if the lease contract is violated)
         survives in per-batch form rather than being silently dropped
@@ -413,10 +304,9 @@ class ParquetUpsertSink:
             if f.endswith(".json") and not f.startswith("_")
         ]
         ids = self._compacted_ids() | {int(f[: -len(".json")]) for f in files}
-        tmp = self._compacted_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_ids": sorted(ids)}, fh)
-        os.replace(tmp, self._compacted_path())
+        durable.write_json_atomic(
+            self._compacted_path(), {"batch_ids": sorted(ids)}
+        )
         for f in files:
             os.unlink(os.path.join(self.ledger_dir, f))
         return {"batch_ids": len(ids), "files_removed": len(files)}
@@ -438,12 +328,10 @@ class ParquetUpsertSink:
 
     def _record(self, batch_id: int, n_rows: int) -> None:
         os.makedirs(self.ledger_dir, exist_ok=True)
-        with open(self._ledger_path(batch_id), "w") as fh:
-            json.dump({"batch_id": batch_id, "n_rows": n_rows}, fh)
-
-    # -- single-writer lease ---------------------------------------------
-    def _lease(self):
-        return writer_lease(self.target)
+        durable.write_json_atomic(
+            self._ledger_path(batch_id),
+            {"batch_id": batch_id, "n_rows": n_rows},
+        )
 
     # -- corpus-epoch stamp ----------------------------------------------
     # Lockstep multi-sink syncs (cli.py sync-corpus) need an auditable
@@ -458,51 +346,13 @@ class ParquetUpsertSink:
         return f"{self.target}_epoch.json"
 
     def stamp_epoch(self, epoch: dict) -> None:
-        tmp = self._epoch_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(epoch, fh, sort_keys=True)
-        os.replace(tmp, self._epoch_path())
+        durable.write_json_atomic(self._epoch_path(), epoch)
 
     def read_epoch(self) -> dict | None:
-        p = self._epoch_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
-
-    # -- crash recovery --------------------------------------------------
-    def _old_path(self) -> str:
-        return f"{self.target}_old"
-
-    def _recover(self) -> None:
-        """Heal the two interruptible swap states before touching data:
-        target missing + _old present (crash between the two moves) →
-        restore the accumulated state; both present (crash before the
-        final cleanup) → the swap completed, drop the stale _old."""
-        parent = os.path.dirname(self.target) or "."
-        if os.path.isdir(parent):
-            # staging from a crashed apply (it lives beside the target
-            # so hard-links stay same-device): incomplete by
-            # construction — the swap had not started — so drop it
-            for entry in os.listdir(parent):
-                if entry.startswith(self._staging_prefix()):
-                    shutil.rmtree(
-                        os.path.join(parent, entry), ignore_errors=True
-                    )
-        old = self._old_path()
-        if not os.path.exists(old):
-            return
-        if os.path.exists(self.target):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            shutil.move(old, self.target)
+        return durable.read_json(self._epoch_path())
 
     def _read_marker(self) -> dict | None:
-        p = os.path.join(self.target, "_applied_batch.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
+        return durable.read_json(os.path.join(self.target, MARKER))
 
     # -- parameter fingerprint -------------------------------------------
     # Fingerprint keys that describe the ON-DISK LAYOUT rather than the
@@ -525,8 +375,8 @@ class ParquetUpsertSink:
         fp = self._params_fingerprint()
         if fp is None:
             return
-        p = os.path.join(self.target, "_params.json")
-        if not os.path.exists(p):
+        on_disk = durable.read_json(os.path.join(self.target, PARAMS))
+        if on_disk is None:
             if os.path.exists(self.target):
                 # EXISTING state with no fingerprint (built before this
                 # sink recorded one): the apply about to happen cannot be
@@ -545,8 +395,6 @@ class ParquetUpsertSink:
                     stacklevel=3,
                 )
             return  # no state yet: first batch stamps the fingerprint
-        with open(p) as fh:
-            on_disk = json.load(fh)
         if on_disk != fp:
             # Legacy layout acceptance: a state fingerprinted BEFORE a
             # layout-only key existed (n_id_buckets landed in round 10)
@@ -585,11 +433,17 @@ class ParquetUpsertSink:
                 f"verb instead of rebuilding"
             )
 
-    def _stamp_params(self, staging: str) -> None:
+    def _commit(self, staging: str, batch_id: int, n: int) -> None:
+        """Embed the batch marker and the parameter fingerprint in the
+        staged state, so data and provenance move as one unit, then
+        swap it in."""
+        durable.write_json_atomic(
+            os.path.join(staging, MARKER), {"batch_id": batch_id, "n_rows": n}
+        )
         fp = self._params_fingerprint()
         if fp is not None:
-            with open(os.path.join(staging, "_params.json"), "w") as fh:
-                json.dump(fp, fh, sort_keys=True)
+            durable.write_json_atomic(os.path.join(staging, PARAMS), fp)
+        durable.swap_dir(staging, self.target)
 
     # -- merge ----------------------------------------------------------
     def _merge(self, spark, batch_df: DataFrame) -> DataFrame:
@@ -608,8 +462,8 @@ class ParquetUpsertSink:
         exactly-once and single-writer machinery lives here once."""
         if self.applied(batch_id):
             return  # replayed batch after recovery — already visible
-        with self._lease():
-            self._recover()
+        with durable.writer_lease(self.target):
+            durable.heal_sink(self.target)
             self._validate_params()
             marker = self._read_marker()
             if marker is not None and marker["batch_id"] == batch_id:
@@ -628,42 +482,19 @@ class ParquetUpsertSink:
         n = self._swap_in(merged, batch_id)
         self._record(batch_id, n)
 
-    def _staging_prefix(self) -> str:
-        # scoped to THIS target (one writer per target), so crash
-        # cleanup in _recover can never touch a sibling sink's staging;
-        # the leading dot keeps parquet directory listings blind to it
-        return f".stg_{os.path.basename(self.target)}_"
-
-    def _staging_dir(self) -> str:
-        """Staging lives BESIDE the target (same filesystem), so the
-        final move is a rename and untouched-partition hard-links never
-        cross a device boundary."""
-        parent = os.path.dirname(self.target) or "."
-        os.makedirs(parent, exist_ok=True)
-        return tempfile.mkdtemp(prefix=self._staging_prefix(), dir=parent)
-
     def _swap_in(self, df: DataFrame, batch_id: int) -> int:
         """Stage, count the rows AS the staging write runs them (the
         merged plan reads the pre-swap target lazily — re-counting it
         after the swap would scan deleted files, and re-reading the
-        staged files costs a schema and a count job), embed the batch
-        marker so data+provenance move as one unit, then swap; returns
-        the staged row count."""
-        staging = self._staging_dir()
+        staged files costs a schema and a count job), then commit;
+        returns the staged row count."""
+        staging = durable.stage_dir(self.target)
         df, obs = _counted(df)
         df.write.mode("overwrite").parquet(staging)
         n = _observed_rows(obs)
         if n is None:
             n = df.sparkSession.read.parquet(staging).count()
-        with open(os.path.join(staging, "_applied_batch.json"), "w") as fh:
-            json.dump({"batch_id": batch_id, "n_rows": n}, fh)
-        self._stamp_params(staging)
-        old = self._old_path()
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(self.target):
-            shutil.move(self.target, old)
-        shutil.move(staging, self.target)
-        shutil.rmtree(old, ignore_errors=True)
+        self._commit(staging, batch_id, n)
         return n
 
     def _swap_in_frames(
@@ -676,7 +507,7 @@ class ParquetUpsertSink:
         prune: dict[str, set[str]] | None = None,
     ) -> int:
         """Multi-table variant of _swap_in: stage every frame under one
-        directory, embed the batch marker, swap the whole directory —
+        directory, then commit the whole directory —
         sibling tables (a corpus and its index, postings and their
         stats) can never diverge across a crash.  `partition_by` keeps a
         table's on-disk partitioning (e.g. postings by term bucket)
@@ -696,11 +527,11 @@ class ParquetUpsertSink:
         partition whose rows all disappeared is simply absent from both
         the write and the links, so it vanishes — correct for a
         fully-retracted bucket."""
-        staging = self._staging_dir()
+        staging = durable.stage_dir(self.target)
         for name in keep_tables or []:
             src = os.path.join(self.target, name)
             if os.path.isdir(src):
-                _link_tree(src, os.path.join(staging, name))
+                durable.link_tree(src, os.path.join(staging, name))
         # the count table's row count comes from its write when that
         # write IS the whole table; when untouched partitions hard-link
         # in beside it, the staged table is counted after the links
@@ -723,28 +554,14 @@ class ParquetUpsertSink:
             writer.parquet(os.path.join(staging, name))
         for name, touched in (prune or {}).items():
             src_tbl = os.path.join(self.target, name)
-            if not os.path.isdir(src_tbl):
-                continue
-            dst_tbl = os.path.join(staging, name)
-            os.makedirs(dst_tbl, exist_ok=True)
-            for entry in os.listdir(src_tbl):
-                if "=" in entry and entry not in touched:
-                    _link_tree(
-                        os.path.join(src_tbl, entry),
-                        os.path.join(dst_tbl, entry),
-                    )
+            if os.path.isdir(src_tbl):
+                durable.link_partitions(
+                    src_tbl, os.path.join(staging, name), touched
+                )
         n = None if obs is None else _observed_rows(obs)
         if n is None:
             n = spark.read.parquet(os.path.join(staging, count_table)).count()
-        with open(os.path.join(staging, "_applied_batch.json"), "w") as fh:
-            json.dump({"batch_id": batch_id, "n_rows": n}, fh)
-        self._stamp_params(staging)
-        old = self._old_path()
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(self.target):
-            shutil.move(self.target, old)
-        shutil.move(staging, self.target)
-        shutil.rmtree(old, ignore_errors=True)
+        self._commit(staging, batch_id, n)
         return n
 
     def _table(self, spark, name: str) -> DataFrame | None:
