@@ -5,7 +5,12 @@ After every batch the served keep-set must equal DuckDB's from-scratch
 Q_DEDUP_KEEP_SQL over the retained rows, and the maintained clusters/
 table must equal a from-scratch minhash_lsh_dedup + connected_components
 run.  Two guards pin the apply's cost shape: the Spark jobs one small
-batch fires onto existing state, and the caches it leaves behind."""
+batch fires onto existing state (here and for FunnelReportSink, which
+shares its pair maintenance), and the caches it leaves behind — the
+latter for every maintained sink, since all of them apply through the
+one release scope of `ParquetUpsertSink.apply_batch`.  The Z-set
+consolidation every apply runs once (`zset_delta`) is pinned here
+too."""
 
 from __future__ import annotations
 
@@ -32,6 +37,7 @@ WORDS = [f"w{i}" for i in range(400)]
 # Spark jobs one small apply onto existing state may fire (see
 # test_jobs_per_apply_bound)
 JOBS_PER_APPLY_MAX = 56
+FUNNEL_JOBS_PER_APPLY_MAX = 86
 
 
 def _filler(rng: random.Random) -> str:
@@ -143,6 +149,19 @@ class TestDedupClusterMaintSequence:
         assert {1, 3} <= got
 
 
+def _jobs_of(spark, fn) -> int:
+    """The Spark jobs `fn` fires, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-per-apply-{id(fn)}"
+    sc.setJobGroup(group, "jobs-per-apply guard")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _cache_state(spark):
     sc = spark.sparkContext
     return (
@@ -171,15 +190,9 @@ class TestDedupClusterMaintCost:
         re-derived its sub-plans per consumer fired 75; the bound is
         the measured count plus 20% headroom for AQE plan variation."""
         sink, seq = state
-        sc = spark.sparkContext
-        group = f"dedup-maint-apply-{id(sink)}"
-        sc.setJobGroup(group, "jobs-per-apply guard")
-        try:
-            sink.apply_batch(_batch(spark, seq[1][1]), 1)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        n_jobs = _jobs_of(
+            spark, lambda: sink.apply_batch(_batch(spark, seq[1][1]), 1)
+        )
         assert 0 < n_jobs <= JOBS_PER_APPLY_MAX, n_jobs
 
     def test_apply_releases_every_cache(self, spark, state):
@@ -189,3 +202,233 @@ class TestDedupClusterMaintCost:
         for batch_id, (label, ins, dels) in enumerate(seq[2:4], start=2):
             sink.apply_batch(_batch(spark, ins, dels), batch_id)
             assert _cache_state(spark) == (True, rdds), label
+
+
+class TestFunnelReportCost:
+    def test_jobs_per_apply_bound(self, spark, tmp_path):
+        """Two colliding inserts and a retraction onto a bootstrapped
+        funnel state.  Each state table is read once and the touched id
+        buckets are collected once for all five id-bucketed tables.
+        Measured 72 jobs under the test session's 4 shuffle partitions,
+        where the apply that read every table twice and collected the
+        buckets per table fired 88; the bound is the measured count
+        plus 20% headroom for AQE plan variation."""
+        from vcf_pg_loader_spark.queries.pipeline import NLL_MAX
+        from vcf_pg_loader_spark.streaming.retract import FunnelReportSink
+
+        seq = _sequence(9)
+        sink = FunnelReportSink(str(tmp_path / "funnel"), NLL_MAX)
+        sink.apply_batch(_batch(spark, seq[0][1]), 0)
+        n_jobs = _jobs_of(
+            spark,
+            lambda: sink.apply_batch(
+                _batch(spark, seq[1][1], [(2, NEAR)]), 1
+            ),
+        )
+        assert 0 < n_jobs <= FUNNEL_JOBS_PER_APPLY_MAX, n_jobs
+
+
+# -- every sink releases what its apply held ------------------------------
+def _docs_case(make):
+    """A document sink: bootstrap on the seeded sequence's first batch,
+    then two colliding inserts and the retraction of a cut vertex."""
+
+    def case(spark, root):
+        seq = _sequence(9)
+        return (
+            make(root),
+            _batch(spark, seq[0][1]),
+            _batch(spark, seq[1][1], [(2, NEAR)]),
+        )
+
+    return case
+
+
+def _near_dup_case(spark, root):
+    # insert-only sink: plain batches, the second one colliding
+    from vcf_pg_loader_spark.streaming.dedup_ingest import NearDupIngestSink
+
+    seq = _sequence(9)
+    schema = "doc_id bigint, text string"
+    return (
+        NearDupIngestSink(root),
+        spark.createDataFrame(seq[0][1], schema),
+        spark.createDataFrame(seq[1][1], schema),
+    )
+
+
+def _card_case(spark, root):
+    from vcf_pg_loader_spark.streaming.retract import DatasetCardSink
+
+    seq = _sequence(9)
+
+    def batch(ins, dels=()):
+        rows = [(i, "web" if i % 2 else "books", t, m)
+                for m, docs in ((1, ins), (-1, dels)) for i, t in docs]
+        return spark.createDataFrame(
+            rows, f"doc_id bigint, source string, text string, {MULT} bigint"
+        )
+
+    return (
+        DatasetCardSink(root),
+        batch(seq[0][1]),
+        batch(seq[1][1], [(2, NEAR)]),
+    )
+
+
+def _semdedup_case(spark, root):
+    from vcf_pg_loader_spark.streaming.dedup_ingest import SemDeDupIngestSink
+
+    rng = random.Random(3)
+    vec = {i: [rng.uniform(-1, 1) for _ in range(4)] for i in range(16)}
+    vec[13] = [x * 1.5 for x in vec[1]]  # a semantic dup of vector 1
+
+    def batch(ins, dels=()):
+        rows = [(i, vec[i], m) for m, ids in ((1, ins), (-1, dels)) for i in ids]
+        return spark.createDataFrame(
+            rows, f"vec_id bigint, embedding array<double>, {MULT} bigint"
+        )
+
+    return (
+        SemDeDupIngestSink(root, k_centroids=3, n_iter=2, tau=0.9),
+        batch(range(12)),
+        batch([12, 13], [3]),
+    )
+
+
+def _rollup_case(spark, root):
+    import datetime
+
+    from vcf_pg_loader_spark.streaming.sink import CountedRollupSink
+
+    def ev(i, t, h):
+        return (i, t, datetime.datetime(2024, 1, 1, h), float(i))
+
+    def batch(ins, dels=()):
+        rows = [(*e, m) for m, evs in ((1, ins), (-1, dels)) for e in evs]
+        return spark.createDataFrame(
+            rows,
+            "event_id bigint, event_type string, ts timestamp, "
+            f"value double, {MULT} bigint",
+        )
+
+    boot = [ev(i, "view" if i % 2 else "click", i % 3) for i in range(12)]
+    return (
+        CountedRollupSink(root),
+        batch(boot),
+        batch([ev(20, "view", 0), ev(21, "buy", 5)], [boot[1]]),
+    )
+
+
+def _sink_cases():
+    from vcf_pg_loader_spark.queries.pipeline import NLL_MAX
+    from vcf_pg_loader_spark.streaming.dedup_ingest import BM25IndexSink
+    from vcf_pg_loader_spark.streaming.retract import (
+        DecontamIndexSink,
+        FunnelReportSink,
+        WinnowIndexSink,
+    )
+    from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
+    from vcf_pg_loader_spark.streaming.vocab import VocabSink
+
+    return {
+        "NearDup": _near_dup_case,
+        "BM25": _docs_case(BM25IndexSink),
+        "SemDeDup": _semdedup_case,
+        "FunnelReport": _docs_case(lambda r: FunnelReportSink(r, NLL_MAX)),
+        "DatasetCard": _card_case,
+        "Winnow": _docs_case(WinnowIndexSink),
+        "Decontam": _docs_case(DecontamIndexSink),
+        "TrainingShard": _docs_case(TrainingShardSink),
+        "Vocab": _docs_case(VocabSink),
+        "CountedRollup": _rollup_case,
+    }
+
+
+def _pin_cached_frames(spark, monkeypatch) -> list:
+    """Keep a reference to every frame persisted or checkpointed from
+    here on.  An unreleased local checkpoint otherwise vanishes from
+    getPersistentRDDs whenever a JVM GC lets the ContextCleaner drop
+    it, so whether a leak shows would depend on GC timing."""
+    frame_cls = type(spark.range(1))  # the concrete DataFrame class
+    pinned: list = []
+    for name in ("persist", "cache", "localCheckpoint"):
+        orig = getattr(frame_cls, name)
+
+        def pin(self, *a, _orig=orig, **k):
+            df = _orig(self, *a, **k)
+            pinned.append(df)
+            return df
+
+        monkeypatch.setattr(frame_cls, name, pin)
+    return pinned
+
+
+@pytest.mark.parametrize("name", list(_sink_cases()))
+def test_apply_releases_every_cache(spark, tmp_path, monkeypatch, name):
+    """A bootstrap, then one insert+retract batch: once apply_batch
+    returns, nothing the apply cached or checkpointed is left behind
+    (a long-lived stream would otherwise keep one batch's blocks per
+    micro-batch)."""
+    sink, boot, batch = _sink_cases()[name](spark, str(tmp_path / name))
+    sink.apply_batch(boot, 0)
+    spark.catalog.clearCache()
+    _empty, rdds = _cache_state(spark)
+    _pin_cached_frames(spark, monkeypatch)
+    sink.apply_batch(batch, 1)
+    assert sink.applied(1)
+    # nothing new is cached or persisted (a block the bootstrap left
+    # may have been cleaned meanwhile)
+    empty, after = _cache_state(spark)
+    assert empty and after <= rdds, after - rdds
+
+
+class TestZsetDelta:
+    """The one consolidation every maintained sink's apply runs."""
+
+    def _ins_touched(self, spark, batch):
+        from vcf_pg_loader_spark.streaming.sink import (
+            ParquetUpsertSink,
+            _released,
+        )
+
+        with _released() as held:
+            ins, touched = ParquetUpsertSink._consolidate(
+                batch, "doc_id", held
+            )
+            return ins.dtypes, touched.dtypes, ins.collect(), touched.collect()
+
+    def test_string_id_type_survives(self, spark):
+        batch = spark.createDataFrame(
+            [("doc-a", "x"), ("doc-b", "y")], "doc_id string, text string"
+        )
+        ins_t, touched_t, ins, touched = self._ins_touched(spark, batch)
+        assert dict(ins_t)["doc_id"] == "string"
+        assert touched_t == [("doc_id", "string")]
+        assert sorted(map(tuple, ins)) == [("doc-a", "x"), ("doc-b", "y")]
+        assert {r.doc_id for r in touched} == {"doc-a", "doc-b"}
+
+    def test_plus_minus_tuples_cancel(self, spark):
+        batch = spark.createDataFrame(
+            [("doc-a", "x", 1), ("doc-b", "y", 1), ("doc-a", "x", -1)],
+            f"doc_id string, text string, {MULT} bigint",
+        )
+        _ins_t, _t, ins, touched = self._ins_touched(spark, batch)
+        # +1/-1 of one tuple cancel: doc-a is neither inserted nor
+        # touched
+        assert [tuple(r) for r in ins] == [("doc-b", "y")]
+        assert {r.doc_id for r in touched} == {"doc-b"}
+
+    def test_two_insert_tuples_yield_one_whole_tuple(self, spark):
+        """Two distinct +1 tuples of one id, each with a null column: the
+        inserted row is one of them, never a row stitched from both
+        (per-column first-non-null would give ("x", "s") whatever the
+        row order)."""
+        tuples = [(1, "x", None), (1, None, "s")]
+        batch = spark.createDataFrame(
+            [(*t, 1) for t in tuples],
+            f"doc_id bigint, text string, source string, {MULT} bigint",
+        )
+        _ins_t, _t, ins, touched = self._ins_touched(spark, batch)
+        assert len(ins) == 1 and tuple(ins[0]) in tuples
+        assert [r.doc_id for r in touched] == [1]

@@ -276,7 +276,7 @@ class TestVectorIndexApplyZset:
 
     def test_apply_zset_consolidates_before_splitting(self, spark, tmp_path):
         """An insert and a retraction of the IDENTICAL tuple in one
-        batch cancel to a no-op (the split_zset rule), so the index is
+        batch cancel to a no-op (the zset_delta rule), so the index is
         untouched."""
         from vcf_pg_loader_spark.operators.ivm import MULT
         from vcf_pg_loader_spark.sources.vector_index import VectorIndex

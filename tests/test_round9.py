@@ -3,8 +3,9 @@
 1. VectorIndex.apply_delta is DELETE-WINS for an id named by both the
    insert and delete frames of one delta (was insert-wins, silently
    diverging from the recompute-over-retained oracle).
-2. split_zset's empty deleted-ids frame inherits the batch's id type
-   (was hardcoded long, breaking string-keyed sinks).
+2. Z-set consolidation keeps the batch's own id type (was hardcoded
+   long, breaking string-keyed sinks) — now pinned on `zset_delta` in
+   tests/test_dedup_maint.py.
 3. Maintained sinks persist their parameter fingerprint and refuse a
    batch applied under different LSH/gate parameters (was silent state
    corruption); CLI defaults are pinned to the pipeline constants.
@@ -67,33 +68,6 @@ class TestVectorIndexDeleteWins:
             for r in idx.search_flat(_vecs(spark, [10]), k=31).collect()
         }
         assert 5 not in got and 7 not in got
-
-
-class TestSplitZsetSchema:
-    def test_empty_dels_frame_inherits_string_id_type(self, spark):
-        from vcf_pg_loader_spark.streaming.retract import split_zset
-
-        batch = spark.createDataFrame(
-            [("doc-a", "x"), ("doc-b", "y")], "doc_id string, text string"
-        )
-        ins, dels = split_zset(batch, "doc_id")
-        assert dict(dels.dtypes)["doc_id"] == "string"
-        assert dels.count() == 0
-        # the downstream union the sinks perform must not throw or cast
-        merged = dels.unionByName(ins.select("doc_id"))
-        assert dict(merged.dtypes)["doc_id"] == "string"
-
-    def test_string_keyed_zset_batch_round_trips(self, spark):
-        from vcf_pg_loader_spark.operators.ivm import MULT
-        from vcf_pg_loader_spark.streaming.retract import split_zset
-
-        batch = spark.createDataFrame(
-            [("doc-a", "x", 1), ("doc-b", "y", 1), ("doc-a", "x", -1)],
-            f"doc_id string, text string, {MULT} bigint",
-        )
-        ins, dels = split_zset(batch, "doc_id")
-        assert {r.doc_id for r in ins.collect()} == {"doc-b"}
-        assert dels.count() == 0  # +1/-1 cancelled, nothing net-deleted
 
 
 class TestSinkParamsFingerprint:

@@ -219,8 +219,8 @@ def zset_snapshot_delta(
     fresh bootstrap on `new` — pinned by tests/test_round10.py for
     DedupClusterMaintSink and VectorIndex, and oracled end-to-end by
     q_cdc_snapshot (queries/pipeline.py) at every SF.  Consumers:
-    the retract sinks take the batch as-is (their split_zset applies
-    update semantics per touched id); VectorIndex must take it through
+    the retract sinks take the batch as-is (their one consolidated
+    `zset_delta` applies update semantics per touched id); VectorIndex must take it through
     `apply_zset`, NOT apply_delta, whose id-level delete-wins rule
     would drop the changed rows' +1 tuples.  CLI: `sync-corpus`.
 

@@ -126,8 +126,8 @@ class VectorIndex:
 
         NOTE this is delete-wins at ID granularity — STRICTER than the
         retract sinks' tuple-level Z-set cancellation (streaming/
-        retract.py split_zset cancels only IDENTICAL ± tuples; an id
-        whose -1 and +1 tuples differ is an UPDATE there).  A caller
+        sink.py zset_delta cancels only IDENTICAL ± tuples; an id whose
+        -1 and +1 tuples differ is an UPDATE there).  A caller
         performing an update must therefore NOT list the id in
         `delete_ids` (the insert path already evicts the old row) — or
         use `apply_zset`, which applies the sinks' consolidation rule
@@ -268,17 +268,15 @@ class VectorIndex:
         """
         from pyspark.sql import functions as F
 
-        from vcf_pg_loader_spark.streaming.retract import split_zset
+        from vcf_pg_loader_spark.streaming.sink import zset_delta
 
-        ins, dels = split_zset(batch, id_col)
-        ins = ins.dropDuplicates([id_col]).select(id_col, vec_col)
+        delta = zset_delta(batch, id_col, [vec_col])
         # pure deletions only: an id that re-arrives in this batch is an
         # update — apply_delta's insert path already evicts its old row
-        pure_dels = dels.join(
-            ins.select(F.col(id_col)), id_col, "left_anti"
-        )
         self.apply_delta(
-            inserts=ins, delete_ids=pure_dels, id_col=id_col,
+            inserts=delta.filter("_ins").select(id_col, vec_col),
+            delete_ids=delta.filter(~F.col("_ins")).select(id_col),
+            id_col=id_col,
             vec_col=vec_col,
         )
 

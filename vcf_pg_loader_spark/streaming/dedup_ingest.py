@@ -35,14 +35,21 @@ min-id canonical is the offline analogue).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vcf_pg_loader_spark.operators import dedup as D
+from vcf_pg_loader_spark.operators.ivm import MULT
 from vcf_pg_loader_spark.operators.text import fingerprint
-from vcf_pg_loader_spark.streaming.sink import ParquetUpsertSink
+from vcf_pg_loader_spark.streaming.sink import (
+    ParquetUpsertSink,
+    _checkpointed,
+    _held,
+    distinct_values,
+    drop_layout,
+    isin_values,
+    zset_delta,
+)
 
 
 class NearDupIngestSink(ParquetUpsertSink):
@@ -89,33 +96,41 @@ class NearDupIngestSink(ParquetUpsertSink):
         return self.read_corpus(spark)
 
     # -- admission ------------------------------------------------------
-    def _admit(self, spark, batch: DataFrame) -> DataFrame:
-        """The subset of `batch` that survives all three gates, with its
-        doc_fp column attached."""
+    def _admit(
+        self,
+        batch: DataFrame,
+        corpus_old: DataFrame | None,
+        bands_old: DataFrame | None,
+        held: list,
+    ) -> tuple[DataFrame, DataFrame]:
+        """(admitted, bands_new): the subset of `batch` that survives all
+        three gates against the admitted `corpus_old` and its band index
+        `bands_old`, with its doc_fp column attached, and the band rows
+        of every doc that reached the near-dup gates.  Each such doc
+        shingles and bands once: its shingles and band rows are held
+        for the whole apply, and the admitted docs' band rows are a
+        semi-join of `bands_new`, never a re-banding."""
         fp = fingerprint(batch.dropDuplicates(["doc_id"]))
 
         # intra-batch exact: min doc_id per fingerprint
         canon = fp.groupBy("doc_fp").agg(F.min("doc_id").alias("doc_id"))
         fp = fp.join(canon, ["doc_fp", "doc_id"], "left_semi")
 
-        corpus_old = self._table(spark, "corpus")
         if corpus_old is not None:
             fp = fp.join(
                 corpus_old.select("doc_fp").distinct(), "doc_fp", "left_anti"
             )
 
-        from pyspark.storagelevel import StorageLevel
-
-        sh_new = D.shingles(fp, "doc_id", "text", self.ngram).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        bands_new = D.lsh_band_table(
-            D.minhash_signatures(sh_new, self.k), self.k, self.bands
+        sh_new = _held(D.shingles(fp, "doc_id", "text", self.ngram), held)
+        bands_new = _held(
+            D.lsh_band_table(
+                D.minhash_signatures(sh_new, self.k), self.k, self.bands
+            ),
+            held,
         )
 
         # near-dup vs EXISTING: collide against the persisted index,
         # verify only colliding (new, old) pairs with exact Jaccard
-        bands_old = self._table(spark, "bands")
         if bands_old is not None and corpus_old is not None:
             cand = (
                 bands_new.alias("n")
@@ -147,11 +162,7 @@ class NearDupIngestSink(ParquetUpsertSink):
 
         # near-dup within the batch: LSH + CC, keep min-id per cluster
         pairs = D.verify_candidate_jaccard(
-            D.lsh_candidate_pairs(
-                D.minhash_signatures(sh_new, self.k), self.k, self.bands
-            ),
-            sh_new,
-            self.threshold,
+            D.lsh_bucket_pairs(bands_new)[0], sh_new, self.threshold
         )
         # restrict to pairs still alive after the gates above
         alive = fp.select("doc_id")
@@ -161,54 +172,42 @@ class NearDupIngestSink(ParquetUpsertSink):
             ).join(alive.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
         )
         cc = D.connected_components(pairs.select("d1", "d2"), "d1", "d2")
-        admitted = D.keep_canonical(fp, cc, "doc_id")
-        sh_new.unpersist()
-        return admitted
+        return D.keep_canonical(fp, cc, "doc_id"), bands_new
 
     # -- exactly-once apply --------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         spark = batch_df.sparkSession
-        from pyspark.storagelevel import StorageLevel
-
-        # the admitted set feeds the corpus write, the band build, and
-        # the touched-bucket lookup — run the admission gates once
-        admitted = self._admit(spark, batch_df).persist(
-            StorageLevel.MEMORY_AND_DISK
+        # each state table is read once: the gates probe its ib-less
+        # view, the bucket-pruned write keeps the `ib` layout column
+        corpus_raw = self._table_raw(spark, "corpus")
+        bands_raw = self._table_raw(spark, "bands")
+        admitted, bands_new = self._admit(
+            batch_df, drop_layout(corpus_raw), drop_layout(bands_raw), held
         )
-        try:
-            add_bands = D.lsh_band_table(
-                D.minhash_signatures(
-                    D.shingles(admitted, "doc_id", "text", self.ngram),
-                    self.k,
-                ),
-                self.k,
-                self.bands,
-            )
-            # insert-only sink: the touched partitions are exactly the
-            # admitted ids' buckets; every other corpus/bands dir
-            # hard-links through the swap
-            touched = admitted.select("doc_id")
-            new_corpus, c_prune = self._merge_id_bucketed(
-                self._table_raw(spark, "corpus"), admitted, touched, "doc_id"
-            )
-            new_bands, b_prune = self._merge_id_bucketed(
-                self._table_raw(spark, "bands"), add_bands, touched, "doc_id"
-            )
-            prune = {}
-            if c_prune is not None:
-                prune["corpus"] = c_prune
-            if b_prune is not None:
-                prune["bands"] = b_prune
-            n = self._swap_in_frames(
-                {"corpus": new_corpus, "bands": new_bands},
-                batch_id,
-                count_table="corpus",
-                partition_by={"corpus": ["ib"], "bands": ["ib"]},
-                prune=prune or None,
-            )
-        finally:
-            admitted.unpersist()
-        self._record(batch_id, n)
+        # the admitted set feeds the corpus write, the band semi-join,
+        # and the touched-bucket lookup — run the admission gates once
+        admitted = _held(admitted, held)
+        add_bands = bands_new.join(
+            admitted.select("doc_id"), "doc_id", "left_semi"
+        )
+        # insert-only sink: the touched partitions are exactly the
+        # admitted ids' buckets; every other corpus/bands dir
+        # hard-links through the swap
+        touched = admitted.select("doc_id")
+        buckets = self._touched_buckets(touched, corpus_raw, bands_raw)
+        new_corpus, c_prune = self._merge_id_bucketed(
+            corpus_raw, admitted, touched, "doc_id", buckets
+        )
+        new_bands, b_prune = self._merge_id_bucketed(
+            bands_raw, add_bands, touched, "doc_id", buckets
+        )
+        return self._swap_in_frames(
+            {"corpus": new_corpus, "bands": new_bands},
+            batch_id,
+            count_table="corpus",
+            partition_by={"corpus": ["ib"], "bands": ["ib"]},
+            prune={"corpus": c_prune, "bands": b_prune},
+        )
 
 
 class BM25IndexSink(ParquetUpsertSink):
@@ -260,21 +259,25 @@ class BM25IndexSink(ParquetUpsertSink):
 
         return BM25Index(spark, self.target)
 
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.sources.bm25_index import _term_bucket
 
         spark = batch_df.sparkSession
-        from vcf_pg_loader_spark.streaming.retract import split_zset
-
-        batch, dels = split_zset(batch_df, self.id_col)
-        batch = batch.dropDuplicates([self.id_col])
+        # one consolidated delta; the idempotence gate needs the
+        # retractions apart from the re-sends, so it reads `_del`
+        delta = _checkpointed(
+            zset_delta(batch_df, self.id_col, [self.text_col]), held
+        )
+        batch = delta.filter("_ins")
+        del_ids = delta.filter("_del").select(
+            F.col(self.id_col).alias("doc_id")
+        )
         tf_full = self._table(spark, "postings")
-        old_dl = self._table(spark, "doclens")
-        del_ids = dels.select(F.col(self.id_col).alias("doc_id"))
+        dl_raw = self._table_raw(spark, "doclens")
+        old_dl = drop_layout(dl_raw)
         if old_dl is not None:
             # retraction = consolidation: the doc's rows cancel out
             old_dl = old_dl.join(del_ids, "doc_id", "left_anti")
-        if old_dl is not None:
             batch = batch.join(
                 old_dl.select(F.col("doc_id").alias(self.id_col)),
                 self.id_col,
@@ -293,47 +296,41 @@ class BM25IndexSink(ParquetUpsertSink):
         # toward n_docs (BM25Index.build counts ALL documents for idf —
         # the round-6 advisory fix) AND be seen by the idempotence gate
         # above, or an empty doc would be re-admitted every batch.
-        dl = batch.select(F.col(self.id_col).alias("doc_id")).join(
-            toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
-            "doc_id",
-            "left",
-        ).select("doc_id", F.coalesce("dl", F.lit(0).cast("bigint")).alias("dl"))
-        from pyspark.storagelevel import StorageLevel
-
         # dl feeds the touched-bucket lookup, the pruned write, and the
         # stats fold — compute the arriving doclens once
-        dl = dl.persist(StorageLevel.MEMORY_AND_DISK)
-        prune: dict[str, set[str]] = {}
-        if tf_full is None:
-            new_tf = tf
-        else:
+        dl = _held(
+            batch.select(F.col(self.id_col).alias("doc_id"))
+            .join(
+                toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
+                "doc_id",
+                "left",
+            )
+            .select(
+                "doc_id", F.coalesce("dl", F.lit(0).cast("bigint")).alias("dl")
+            ),
+            held,
+        )
+        new_tf, tf_prune = tf, None
+        if tf_full is not None:
             # arriving postings feed both the touched-bucket lookup and
             # the write below — compute them once
-            tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
+            tf = _held(tf, held)
             # bucket-pruned rewrite of the posting table: only the term
             # buckets where arriving postings land or where a deleted
             # doc's postings live recompute; every other bucket dir
             # hard-links through the swap unchanged (re-sent live ids
             # were dropped by the idempotence gate above, so deletions
-            # are the only removals).  Both lookups are control-plane
+            # are the only removals).  The lookup is control-plane
             # tiny (<= N_TERM_BUCKETS values).
-            from vcf_pg_loader_spark.streaming.sink import isin_values
-
-            tb = {
-                r[0] for r in tf.select("bucket").distinct().collect()
-            } | {
-                r[0]
-                for r in tf_full.join(del_ids, "doc_id", "left_semi")
-                .select("bucket")
-                .distinct()
-                .collect()
-            }
+            tb = distinct_values(
+                "bucket", tf, tf_full.join(del_ids, "doc_id", "left_semi")
+            )
             new_tf = (
                 tf_full.filter(isin_values(F.col("bucket"), tb))
                 .join(del_ids, "doc_id", "left_anti")
                 .unionByName(tf)
             )
-            prune["postings"] = {f"bucket={b}" for b in tb}
+            tf_prune = {f"bucket={b}" for b in tb}
         new_dl = dl if old_dl is None else old_dl.unionByName(dl)
         # doclens WRITE is id-bucket-pruned (the stats aggregation below
         # still folds the FULL doclens — idf needs every doc)
@@ -341,10 +338,12 @@ class BM25IndexSink(ParquetUpsertSink):
             dl.select(F.col("doc_id"))
         ).distinct()
         dl_write, dl_prune = self._merge_id_bucketed(
-            self._table_raw(spark, "doclens"), dl, touched_dl, "doc_id"
+            dl_raw,
+            dl,
+            touched_dl,
+            "doc_id",
+            self._touched_buckets(touched_dl, dl_raw),
         )
-        if dl_prune is not None:
-            prune["doclens"] = dl_prune
         # n_docs over every doc; avgdl over tokenized docs only — the
         # exact aggregation shape of BM25Index.build
         stats = new_dl.agg(
@@ -354,18 +353,13 @@ class BM25IndexSink(ParquetUpsertSink):
                 / F.count(F.when(F.col("dl") > 0, F.lit(1)))
             ).alias("avgdl"),
         )
-        try:
-            n = self._swap_in_frames(
-                {"postings": new_tf, "doclens": dl_write, "stats": stats},
-                batch_id,
-                count_table="doclens",
-                partition_by={"postings": ["bucket"], "doclens": ["ib"]},
-                prune=prune or None,
-            )
-        finally:
-            tf.unpersist()
-            dl.unpersist()
-        self._record(batch_id, n)
+        return self._swap_in_frames(
+            {"postings": new_tf, "doclens": dl_write, "stats": stats},
+            batch_id,
+            count_table="doclens",
+            partition_by={"postings": ["bucket"], "doclens": ["ib"]},
+            prune={"postings": tf_prune, "doclens": dl_prune},
+        )
 
 
 class SemDeDupIngestSink(ParquetUpsertSink):
@@ -499,40 +493,31 @@ class SemDeDupIngestSink(ParquetUpsertSink):
         )
 
     # -- exactly-once apply ------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.storagelevel import StorageLevel
-
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.operators import similarity as S
-
-        spark = batch_df.sparkSession
-        from vcf_pg_loader_spark.operators.ivm import MULT
         from vcf_pg_loader_spark.streaming.retract import (
             _edges_without,
             _without,
-            split_zset,
         )
 
+        spark = batch_df.sparkSession
         old_vec_full = self._table(spark, "vectors")
-        old_pairs = self._table(spark, "pairs")
-        touched = None
+        pairs_old = self._table(spark, "pairs")
+        batch, touched = self._consolidate(batch_df, self.id_col, held)
         if MULT in batch_df.columns:
-            batch, dels = split_zset(batch_df, self.id_col)
-            batch = batch.dropDuplicates([self.id_col])
             # touched ids leave the state first: deletions permanently,
             # re-inserts so their vector and pairs rebuild from the
             # arriving row (Z-set batches carry upsert semantics)
-            touched = dels.unionByName(batch.select(self.id_col)).distinct()
-            old_pairs = _edges_without(old_pairs, touched)
+            pairs_old = _edges_without(pairs_old, touched)
         else:
             # plain insert batch: first arrival wins (ingest idempotence)
-            batch = batch_df.dropDuplicates([self.id_col])
+            touched = None
             if old_vec_full is not None:
                 batch = batch.join(
                     old_vec_full.select(F.col("vid").alias(self.id_col)),
                     self.id_col,
                     "left_anti",
                 )
-        self._old_pairs = old_pairs
         cents = self._table(spark, "centroids")
         bootstrap = cents is None
         if bootstrap:
@@ -549,51 +534,28 @@ class SemDeDupIngestSink(ParquetUpsertSink):
             assigned = S.ivf_assign(
                 batch, cents, self.id_col, self.vec_col, kernel="exact"
             )
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        assigned = _held(assigned, held)
+        new_pairs = self._sem_pairs(assigned, assigned, same=True)
+        old_vec, prune = None, None
+        if old_vec_full is not None:
             # cell-pruned rewrite: only the cells where arriving vectors
             # land or where a touched id's old vector lives recompute;
             # every other cid dir hard-links through the swap unchanged.
             # The candidate probes below only ever read landing cells,
             # which the touched set contains by construction.
-            if old_vec_full is None:
-                old_vec, prune = None, None
-            else:
-                from vcf_pg_loader_spark.streaming.sink import isin_values
-
-                tc = {
-                    r[0]
-                    for r in assigned.select("cid").distinct().collect()
-                }
-                if touched is not None:
-                    tc |= {
-                        r[0]
-                        for r in old_vec_full.join(
-                            touched.withColumnRenamed(self.id_col, "vid"),
-                            "vid",
-                            "left_semi",
-                        )
-                        .select("cid")
-                        .distinct()
-                        .collect()
-                    }
-                old_vec = old_vec_full.filter(
-                    isin_values(F.col("cid"), tc)
-                )
-                if touched is not None:
-                    old_vec = _without(old_vec, touched, "vid")
-                prune = {"vectors": {f"cid={c}" for c in tc}}
-            self._apply_assigned(
-                spark, batch_id, assigned, cents, old_vec, prune, bootstrap
+            tc = distinct_values(
+                "cid",
+                assigned,
+                None if touched is None else old_vec_full.join(
+                    touched.withColumnRenamed(self.id_col, "vid"),
+                    "vid",
+                    "left_semi",
+                ),
             )
-        finally:
-            assigned.unpersist()
-
-    def _apply_assigned(
-        self, spark, batch_id, assigned, cents, old_vec, prune, bootstrap
-    ):
-        new_pairs = self._sem_pairs(assigned, assigned, same=True)
-        if old_vec is not None:
+            old_vec = old_vec_full.filter(isin_values(F.col("cid"), tc))
+            if touched is not None:
+                old_vec = _without(old_vec, touched, "vid")
+            prune = {f"cid={c}" for c in tc}
             # only the landing cells' existing vectors are candidates —
             # the cid partitioning makes this a pruned scan, not a
             # corpus re-read
@@ -607,7 +569,6 @@ class SemDeDupIngestSink(ParquetUpsertSink):
             F.least("d1", "d2").alias("d1"),
             F.greatest("d1", "d2").alias("d2"),
         ).distinct()
-        pairs_old = self._old_pairs
         if pairs_old is None:
             old_cc = self._table(spark, "clusters")
             if old_cc is not None:
@@ -637,12 +598,11 @@ class SemDeDupIngestSink(ParquetUpsertSink):
             # the routing table is FROZEN after bootstrap: hard-link,
             # never rewrite
             keep = ["centroids"]
-        n = self._swap_in_frames(
+        return self._swap_in_frames(
             frames,
             batch_id,
             count_table="vectors",
             partition_by={"vectors": ["cid"]},
-            prune=prune,
+            prune={"vectors": prune},
             keep_tables=keep,
         )
-        self._record(batch_id, n)

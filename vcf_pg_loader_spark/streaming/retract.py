@@ -6,10 +6,15 @@ expensive stages (shingling, MinHash banding, Jaccard verification,
 LM training).
 
 Batches are Z-sets: document rows carrying ivm.MULT (+1 insert, -1
-retraction).  `split_zset` consolidates a batch (duplicate +/- rows for
-the same tuple cancel) and splits it into the insert frame and the
-deleted-id frame; a plain frame without MULT is an insert-only batch,
-so every sink here is a drop-in upgrade of its insert-only sibling.
+retraction).  Each apply consolidates its batch ONCE into
+`sink.zset_delta` (duplicate +/- rows for the same tuple cancel; one
+row per touched id, carrying one whole inserted tuple when the id is
+inserted) and reads both the arriving documents and the touched ids
+from that one checkpointed frame (`ParquetUpsertSink._consolidate`);
+a plain frame without MULT is an insert-only batch, so every sink here
+is a drop-in upgrade of its insert-only sibling.  Touched ids leave
+every state table first — deletions permanently, re-inserts so their
+state rebuilds from the arriving tuple (an update).
 
 Why deletions are cheap here and not in the original stores:
 
@@ -46,62 +51,21 @@ the report and its inputs) describing different corpora.
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vcf_pg_loader_spark.operators import dedup as D
-from vcf_pg_loader_spark.operators.ivm import MULT, zset_normalize
 from vcf_pg_loader_spark.operators.text import fingerprint
 from vcf_pg_loader_spark.streaming.sink import (
     ParquetUpsertSink,
+    _checkpointed,
+    _held,
+    distinct_values,
     drop_layout,
     isin_values,
 )
-
-
-def split_zset(
-    batch: DataFrame, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(inserts-without-MULT, deleted-ids) from a Z-set batch.  The
-    batch is consolidated first, so an insert and a retraction of the
-    same tuple within one batch cancel to a no-op.  A batch without a
-    MULT column is all inserts.  The empty deleted-ids frame inherits
-    the batch's own id type (a string-keyed sink must not get a long
-    frame that later unions/anti-joins would reject or silently
-    cast)."""
-    if MULT not in batch.columns:
-        return batch, batch.select(id_col).limit(0)
-    z = zset_normalize(batch)
-    ins = z.filter(F.col(MULT) > 0).drop(MULT)
-    dels = z.filter(F.col(MULT) < 0).select(id_col)
-    return ins, dels
-
-
-def zset_delta(
-    batch: DataFrame, id_col: str, cols: list[str]
-) -> DataFrame:
-    """One row per id a Z-set batch touches: (id, *cols, _ins).  `_ins`
-    is true when the consolidated batch inserts the id (its `cols` then
-    come from one inserted row, as `split_zset` + dropDuplicates picks
-    them) and false for a pure retraction (its `cols` are null).  The
-    inserts are `filter("_ins")` and the touched ids — deletions and
-    re-inserts alike — are every row, so a sink that persists this one
-    frame consolidates the batch once for all of its consumers."""
-    if MULT in batch.columns:
-        batch = zset_normalize(batch)
-    else:
-        batch = batch.withColumn(MULT, F.lit(1))
-    ins = F.col(MULT) > 0
-    return batch.groupBy(id_col).agg(
-        *[
-            F.first(F.when(ins, F.col(c)), ignorenulls=True).alias(c)
-            for c in cols
-        ],
-        F.max(ins).alias("_ins"),
-    )
 
 
 def _without(
@@ -144,42 +108,6 @@ def _has_incident_edge(pairs: DataFrame, ids: DataFrame) -> bool:
         .count()
         > 0
     )
-
-
-@contextlib.contextmanager
-def _released():
-    """A list for the release callbacks of the frames one apply
-    materializes (`_held`, `_checkpointed`), all of them called when
-    the block exits — so a long-lived streaming process does not keep
-    one batch's caches per micro-batch."""
-    held: list = []
-    try:
-        yield held
-    finally:
-        for release in held:
-            release()
-
-
-def _held(df: DataFrame, held: list) -> DataFrame:
-    """Persist `df` (lazily) for the rest of one apply.  Only for frames
-    that do not end in a shuffle: a cached plan keeps its final
-    shuffle's spark.sql.shuffle.partitions partitions uncoalesced."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    held.append(df.unpersist)
-    return df
-
-
-def _checkpointed(df: DataFrame, held: list) -> DataFrame:
-    """Materialize `df` now for the rest of one apply.  A local
-    checkpoint runs the plan with AQE's partition coalescing, so a
-    batch-sized frame lands in a partition or two and every later scan
-    of it is that many tasks (a persisted aggregate would keep its 32
-    shuffle partitions).  Its blocks are released with the apply."""
-    cp = df.localCheckpoint(eager=True)
-    held.append(lambda: D.release_checkpoint(cp))
-    return cp
 
 
 class DedupClusterMaintSink(ParquetUpsertSink):
@@ -287,12 +215,11 @@ class DedupClusterMaintSink(ParquetUpsertSink):
         shingle sets only.  Of `corpus` only the docs that collide with
         `bands_old` are read, so it may still hold the touched ids.
 
-        The arriving docs' shingle sets and band rows are persisted and
-        appended to `held`; the caller unpersists them once its writes
-        are done.  The band rows feed the intra-batch buckets, the cross
-        probe AND the bands/ write, so shingling and MinHash run once
-        per batch, and both run row-locally: one sorted shingle array
-        per doc, no explode and no groupBy."""
+        The arriving docs' shingle sets and band rows are held for the
+        rest of the apply (`held`).  The band rows feed the intra-batch
+        buckets, the cross probe AND the bands/ write, so shingling and
+        MinHash run once per batch, and both run row-locally: one
+        sorted shingle array per doc, no explode and no groupBy."""
         sets_new = _held(
             D.shingle_sets(ins, "doc_id", "text", self.ngram), held
         )
@@ -350,26 +277,11 @@ class DedupClusterMaintSink(ParquetUpsertSink):
         ).distinct()
         return bands_new, verified
 
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        with _released() as held:
-            n = self._apply_held(batch_df, batch_id, held)
-        self._record(batch_id, n)
-
-    def _apply_held(
-        self, batch_df: DataFrame, batch_id: int, held: list
-    ) -> int:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         spark = batch_df.sparkSession
         # consolidate ONCE, before keyed dedup: an insert and a
-        # retraction of the same doc in one batch cancel, not race, and
-        # the arriving docs, the touched ids and the touched id-buckets
-        # all read this one materialized frame
-        delta = _checkpointed(
-            zset_delta(batch_df, "doc_id", ["text"]), held
-        )
-        ins = delta.filter("_ins").select("doc_id", "text")
-        # touched ids leave every table first: deletions permanently,
-        # re-inserts so their state rebuilds from the arriving text
-        touched = delta.select("doc_id")
+        # retraction of the same doc in one batch cancel, not race
+        ins, touched = self._consolidate(batch_df, "doc_id", held, ["text"])
         # each state table is read ONCE: the raw read keeps the `ib`
         # layout column for the bucket-pruned write, and the probes use
         # its ib-less view.  The WRITE side of the id-keyed tables is
@@ -381,11 +293,7 @@ class DedupClusterMaintSink(ParquetUpsertSink):
         pairs_raw = self._table_raw(spark, "pairs")
         # corpus and bands share one id-bucket layout, so one collect of
         # the touched buckets serves both merges
-        buckets = (
-            self._touched_buckets(touched)
-            if corpus_raw is not None and "ib" in corpus_raw.columns
-            else None
-        )
+        buckets = self._touched_buckets(touched, corpus_raw, bands_raw)
         bands_new, pairs_new = self._new_pairs(
             ins,
             drop_layout(corpus_raw),
@@ -441,17 +349,12 @@ class DedupClusterMaintSink(ParquetUpsertSink):
                 )
             frames["pairs"] = pairs
             frames["clusters"] = D.connected_components(pairs, "d1", "d2")
-        prune = {}
-        if c_prune is not None:
-            prune["corpus"] = c_prune
-        if b_prune is not None:
-            prune["bands"] = b_prune
         return self._swap_in_frames(
             frames,
             batch_id,
             count_table="corpus",
             partition_by={"corpus": ["ib"], "bands": ["ib"]},
-            prune=prune or None,
+            prune={"corpus": c_prune, "bands": b_prune},
             keep_tables=keep,
         )
 
@@ -534,14 +437,7 @@ class FunnelReportSink(ParquetUpsertSink):
         return rep
 
     # -- maintenance -----------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        with _released() as held:
-            n = self._apply_held(batch_df, batch_id, held)
-        self._record(batch_id, n)
-
-    def _apply_held(
-        self, batch_df: DataFrame, batch_id: int, held: list
-    ) -> int:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.operators.lm import (
             bigram_model,
             doc_nll_frozen,
@@ -551,9 +447,7 @@ class FunnelReportSink(ParquetUpsertSink):
         spark = batch_df.sparkSession
         # consolidate BEFORE keyed dedup: an insert and a retraction of
         # the same doc in one batch must cancel, not race
-        ins, dels = split_zset(batch_df, "doc_id")
-        ins = ins.dropDuplicates(["doc_id"])
-        touched = dels.unionByName(ins.select("doc_id")).distinct()
+        ins, touched = self._consolidate(batch_df, "doc_id", held)
 
         c12 = self._table(spark, "lm_c12")
         bootstrap = c12 is None
@@ -563,6 +457,18 @@ class FunnelReportSink(ParquetUpsertSink):
         else:
             c1 = self._table(spark, "lm_c1")
             vocab = self._table(spark, "lm_v")
+        # each state table is read ONCE: the raw read keeps the `ib`
+        # layout column for the bucket-pruned write, the derivation
+        # below uses its ib-less view, and one collect of the touched
+        # buckets serves every id-bucketed merge
+        bucketed = ("qual", "lml", "corpus", "fp", "bands")
+        raw = {n_: self._table_raw(spark, n_) for n_ in (*bucketed, "pairs")}
+        buckets = self._touched_buckets(
+            touched, *(raw[n_] for n_ in bucketed)
+        )
+
+        def old(name):
+            return _without(drop_layout(raw[name]), touched, "doc_id")
 
         qual_new = quality_verdict(ins)
         kept_q_new = ins.join(
@@ -579,31 +485,21 @@ class FunnelReportSink(ParquetUpsertSink):
             "doc_id", "text"
         )
 
-        qual = _without(self._table(spark, "qual"), touched, "doc_id")
+        qual = old("qual")
         qual = qual_new if qual is None else qual.unionByName(qual_new)
-        lml = _without(self._table(spark, "lml"), touched, "doc_id")
+        lml = old("lml")
         lml = lml_new if lml is None else lml.unionByName(lml_new)
 
-        corpus_old = _without(self._table(spark, "corpus"), touched, "doc_id")
-        bands_old = _without(self._table(spark, "bands"), touched, "doc_id")
-        pairs_old = _edges_without(self._table(spark, "pairs"), touched)
+        pairs_old = _edges_without(raw["pairs"], touched)
         bands_new, pairs_new = self._pair_maker._new_pairs(
-            kept_new, corpus_old, bands_old, held
-        )
-        corpus = (
-            kept_new if corpus_old is None
-            else corpus_old.unionByName(kept_new)
-        )
-        bands = (
-            bands_new if bands_old is None
-            else bands_old.unionByName(bands_new)
+            kept_new, old("corpus"), old("bands"), held
         )
         pairs = (
             pairs_new if pairs_old is None
             else pairs_old.unionByName(pairs_new).distinct()
         )
         fp_new = fingerprint(kept_new).select("doc_id", "doc_fp")
-        fp = _without(self._table(spark, "fp"), touched, "doc_id")
+        fp = old("fp")
         fp = fp_new if fp is None else fp.unionByName(fp_new)
 
         # -- re-derive the stage labels from state (joins + aggs only) --
@@ -640,20 +536,14 @@ class FunnelReportSink(ParquetUpsertSink):
         # tables are bucket-pruned — only touched partitions recompute,
         # the rest hard-link.  The report itself rewrites whole: a
         # changed doc can flip another doc's stage anywhere.
-        prune: dict[str, set[str]] = {}
+        prune = {}
         frames = {"pairs": pairs, "report": report}
-        for name, new_rows in (
-            ("qual", qual_new),
-            ("lml", lml_new),
-            ("corpus", kept_new),
-            ("fp", fp_new),
-            ("bands", bands_new),
+        for name, new_rows in zip(
+            bucketed, (qual_new, lml_new, kept_new, fp_new, bands_new)
         ):
-            frames[name], p = self._merge_id_bucketed(
-                self._table_raw(spark, name), new_rows, touched, "doc_id"
+            frames[name], prune[name] = self._merge_id_bucketed(
+                raw[name], new_rows, touched, "doc_id", buckets
             )
-            if p is not None:
-                prune[name] = p
         keep: list[str] = []
         if bootstrap:
             frames.update({"lm_c12": c12, "lm_c1": c1, "lm_v": vocab})
@@ -665,10 +555,8 @@ class FunnelReportSink(ParquetUpsertSink):
             batch_id,
             count_table="report",
             keep_tables=keep,
-            partition_by={
-                n_: ["ib"] for n_ in ("qual", "lml", "corpus", "fp", "bands")
-            },
-            prune=prune or None,
+            partition_by={n_: ["ib"] for n_ in bucketed},
+            prune=prune,
         )
 
 
@@ -728,7 +616,7 @@ class DatasetCardSink(ParquetUpsertSink):
         return dataset_card_aggregate(stats.join(losers, "doc_id", "left"))
 
     # -- maintenance -----------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.operators.lm import (
             bigram_model,
             doc_nll_frozen,
@@ -737,9 +625,7 @@ class DatasetCardSink(ParquetUpsertSink):
         from vcf_pg_loader_spark.queries.pipeline import quality_verdict
 
         spark = batch_df.sparkSession
-        ins, dels = split_zset(batch_df, "doc_id")
-        ins = ins.dropDuplicates(["doc_id"])
-        touched = dels.unionByName(ins.select("doc_id")).distinct()
+        ins, touched = self._consolidate(batch_df, "doc_id", held)
 
         c12 = self._table(spark, "lm_c12")
         bootstrap = c12 is None
@@ -766,17 +652,15 @@ class DatasetCardSink(ParquetUpsertSink):
 
         # id-bucket-pruned writes: per-doc facts are pure functions of
         # the doc, so untouched buckets hard-link through the swap
+        stats_raw = self._table_raw(spark, "stats")
+        fp_raw = self._table_raw(spark, "fp")
+        buckets = self._touched_buckets(touched, stats_raw, fp_raw)
         stats, s_prune = self._merge_id_bucketed(
-            self._table_raw(spark, "stats"), stats_new, touched, "doc_id"
+            stats_raw, stats_new, touched, "doc_id", buckets
         )
         fp, f_prune = self._merge_id_bucketed(
-            self._table_raw(spark, "fp"), fp_new, touched, "doc_id"
+            fp_raw, fp_new, touched, "doc_id", buckets
         )
-        prune = {}
-        if s_prune is not None:
-            prune["stats"] = s_prune
-        if f_prune is not None:
-            prune["fp"] = f_prune
 
         frames = {"stats": stats, "fp": fp}
         keep: list[str] = []
@@ -785,15 +669,14 @@ class DatasetCardSink(ParquetUpsertSink):
         else:
             # the LM is FROZEN after bootstrap: hard-link, never rewrite
             keep = ["lm_c12", "lm_c1", "lm_v"]
-        n = self._swap_in_frames(
+        return self._swap_in_frames(
             frames,
             batch_id,
             count_table="stats",
             keep_tables=keep,
             partition_by={"stats": ["ib"], "fp": ["ib"]},
-            prune=prune or None,
+            prune={"stats": s_prune, "fp": f_prune},
         )
-        self._record(batch_id, n)
 
 
 class WinnowIndexSink(ParquetUpsertSink):
@@ -845,55 +728,39 @@ class WinnowIndexSink(ParquetUpsertSink):
             fps.select("doc_id", "fp"), max_df, min_shared
         )
 
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.operators.text import winnow_fingerprints
 
         spark = batch_df.sparkSession
-        ins, dels = split_zset(batch_df, "doc_id")
-        ins = ins.dropDuplicates(["doc_id"])
-        touched = dels.unionByName(ins.select("doc_id")).distinct()
-        from pyspark.storagelevel import StorageLevel
-
+        ins, touched = self._consolidate(batch_df, "doc_id", held)
         old_full = self._table(spark, "fps")
         new = winnow_fingerprints(ins.select("doc_id", "text")).withColumn(
             "bucket", F.pmod(F.col("fp"), F.lit(self.N_FP_BUCKETS))
         )
-        if old_full is None:
-            fps, prune = new, None
-        else:
+        fps, prune = new, None
+        if old_full is not None:
             # the arriving fps feed both the touched-bucket lookup and
             # the write below — compute them once
-            new = new.persist(StorageLevel.MEMORY_AND_DISK)
+            new = _held(new, held)
             # bucket-pruned rewrite: only the partitions where arriving
             # fingerprints land or where a touched doc's old rows live
             # are recomputed; every other bucket dir hard-links through
-            # the swap unchanged.  Both lookups are control-plane tiny
-            # (<= N_FP_BUCKETS values); the old-side probe reads two
-            # columns of the posting table, never the fingerprints.
-            tb = {
-                r[0]
-                for r in new.select("bucket").distinct().collect()
-            } | {
-                r[0]
-                for r in old_full.join(touched, "doc_id", "left_semi")
-                .select("bucket")
-                .distinct()
-                .collect()
-            }
+            # the swap unchanged.  The lookup is control-plane tiny
+            # (<= N_FP_BUCKETS values); its old side reads two columns
+            # of the posting table, never the fingerprints.
+            tb = distinct_values(
+                "bucket", new, old_full.join(touched, "doc_id", "left_semi")
+            )
             old_t = old_full.filter(isin_values(F.col("bucket"), tb))
             fps = _without(old_t, touched, "doc_id").unionByName(new)
-            prune = {"fps": {f"bucket={b}" for b in tb}}
-        try:
-            n = self._swap_in_frames(
-                {"fps": fps},
-                batch_id,
-                count_table="fps",
-                partition_by={"fps": ["bucket"]},
-                prune=prune,
-            )
-        finally:
-            new.unpersist()
-        self._record(batch_id, n)
+            prune = {f"bucket={b}" for b in tb}
+        return self._swap_in_frames(
+            {"fps": fps},
+            batch_id,
+            count_table="fps",
+            partition_by={"fps": ["bucket"]},
+            prune={"fps": prune},
+        )
 
 
 class DecontamIndexSink(ParquetUpsertSink):
@@ -973,13 +840,11 @@ class DecontamIndexSink(ParquetUpsertSink):
         return pairs.select("eval_id", "train_id", "n_shared")
 
     # -- maintenance -----------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.operators.sampling import assign_split
 
         spark = batch_df.sparkSession
-        ins, dels = split_zset(batch_df, "doc_id")
-        ins = ins.dropDuplicates(["doc_id"])
-        touched = dels.unionByName(ins.select("doc_id")).distinct()
+        ins, touched = self._consolidate(batch_df, "doc_id", held)
 
         sh_full = self._table(spark, "sh")
         sh_old = _without(sh_full, touched, "doc_id")
@@ -1002,44 +867,34 @@ class DecontamIndexSink(ParquetUpsertSink):
             )
 
         ins_split = assign_split(ins, "doc_id", self.weights)
-        sh_new = (
+        # arriving shingles feed the touched-bucket lookup, the write,
+        # and both overlap probes — compute them once
+        sh_new = _held(
             D.shingles(ins_split, "doc_id", "text", self.ngram)
             .join(ins_split.select("doc_id", "split"), "doc_id")
             .withColumn(
                 "bucket",
                 F.pmod(F.xxhash64("shingle"), F.lit(self.N_SH_BUCKETS)),
             )
-            .select("doc_id", "split", "shingle", "bucket")
+            .select("doc_id", "split", "shingle", "bucket"),
+            held,
         )
-        from pyspark.storagelevel import StorageLevel
-
-        # arriving shingles feed the touched-bucket lookup, the write,
-        # and both overlap probes — compute them once
-        sh_new = sh_new.persist(StorageLevel.MEMORY_AND_DISK)
         # WRITE side is bucket-pruned (only partitions holding arriving
         # or touched-doc postings recompute; the rest hard-link through
         # the swap); the PROBE side below stays the full retained
         # posting table — an arriving doc must see every shingle of the
         # other split, that read is the operator's semantics.
-        if sh_full is None:
-            sh, prune = sh_new, None
-        else:
-            tb = {
-                r[0]
-                for r in sh_new.select("bucket").distinct().collect()
-            } | {
-                r[0]
-                for r in sh_full.join(touched, "doc_id", "left_semi")
-                .select("bucket")
-                .distinct()
-                .collect()
-            }
+        sh, prune = sh_new, None
+        if sh_full is not None:
+            tb = distinct_values(
+                "bucket", sh_new, sh_full.join(touched, "doc_id", "left_semi")
+            )
             sh = _without(
                 sh_full.filter(isin_values(F.col("bucket"), tb)),
                 touched,
                 "doc_id",
             ).unionByName(sh_new)
-            prune = {"sh": {f"bucket={b}" for b in tb}}
+            prune = {f"bucket={b}" for b in tb}
 
         is_train = F.col("split") == "train"
         tr_new = sh_new.filter(is_train).select(
@@ -1074,14 +929,10 @@ class DecontamIndexSink(ParquetUpsertSink):
             if pairs_old is None
             else pairs_old.unionByName(pairs_new)
         )
-        try:
-            n = self._swap_in_frames(
-                {"sh": sh, "pairs": pairs},
-                batch_id,
-                count_table="pairs",
-                partition_by={"sh": ["bucket"]},
-                prune=prune,
-            )
-        finally:
-            sh_new.unpersist()
-        self._record(batch_id, n)
+        return self._swap_in_frames(
+            {"sh": sh, "pairs": pairs},
+            batch_id,
+            count_table="pairs",
+            partition_by={"sh": ["bucket"]},
+            prune={"sh": prune},
+        )

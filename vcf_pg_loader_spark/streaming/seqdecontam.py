@@ -168,7 +168,7 @@ class SeqShingleIndexSink(ParquetUpsertSink):
             "crosses",
         )
 
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         spark = batch_df.sparkSession
         shard_sink, corpus, shards = self._ctx
         if self._table_raw(spark, "post") is None:
@@ -180,15 +180,14 @@ class SeqShingleIndexSink(ParquetUpsertSink):
             # hard-links through the swap — a shard's postings are a
             # pure function of its packed stream, which only moves when
             # the layout delta touched it
-            prune = {"post": {f"shard={s}" for s in shards}}
-        n = self._swap_in_frames(
+            prune = {f"shard={s}" for s in shards}
+        return self._swap_in_frames(
             {"post": post},
             batch_id,
             count_table="post",
             partition_by={"post": ["shard"]},
-            prune=prune,
+            prune={"post": prune},
         )
-        self._record(batch_id, n)
 
     # -- serving -----------------------------------------------------------
     def postings(self, spark) -> DataFrame:

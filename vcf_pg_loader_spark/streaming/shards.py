@@ -55,10 +55,10 @@ from vcf_pg_loader_spark.operators.shards import (
     shard_manifest,
     shard_of,
 )
-from vcf_pg_loader_spark.streaming.retract import split_zset
 from vcf_pg_loader_spark.streaming.sink import (
     PARAMS,
     ParquetUpsertSink,
+    distinct_values,
     isin_values,
     migrate_state,
 )
@@ -767,11 +767,9 @@ class TrainingShardSink(ParquetUpsertSink):
         return sequence_stream(spans, enc)
 
     # -- maintenance -----------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         spark = batch_df.sparkSession
-        ins, dels = split_zset(batch_df, "doc_id")
-        ins = ins.dropDuplicates(["doc_id"])
-        touched = dels.unionByName(ins.select("doc_id")).distinct()
+        ins, touched = self._consolidate(batch_df, "doc_id", held)
 
         new_base = shard_base(
             ins,
@@ -790,14 +788,9 @@ class TrainingShardSink(ParquetUpsertSink):
             prune = None
         else:
             # touched shard set: bounded by n_shards — control-plane
-            tb = {
-                r[0]
-                for r in touched.select(
-                    shard_of(F.col("doc_id"), self.n_shards).alias("b")
-                )
-                .distinct()
-                .collect()
-            }
+            tb = distinct_values(
+                shard_of(F.col("doc_id"), self.n_shards), touched
+            )
             surviving = (
                 old.filter(isin_values(F.col("shard"), tb))
                 .join(touched, "doc_id", "left_anti")
@@ -808,15 +801,10 @@ class TrainingShardSink(ParquetUpsertSink):
 
         layout = shard_layout_from_lengths(base, self.seq_len)
         man = shard_manifest(layout, self.seq_len)
-        n = self._swap_in_frames(
+        return self._swap_in_frames(
             {"layout": layout, "manifest": man},
             batch_id,
             count_table="layout",
             partition_by={"layout": ["shard"], "manifest": ["shard"]},
-            prune=(
-                {"layout": prune, "manifest": prune}
-                if prune is not None
-                else None
-            ),
+            prune={"layout": prune, "manifest": prune},
         )
-        self._record(batch_id, n)

@@ -35,12 +35,15 @@ serves the same semantics from a live source.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from vcf_pg_loader_spark import durable
+from vcf_pg_loader_spark.operators.dedup import release_checkpoint
+from vcf_pg_loader_spark.operators.ivm import MULT, zset_normalize
 from vcf_pg_loader_spark.operators.merge import merge_upsert
 from vcf_pg_loader_spark.operators.rollup import (
     event_rollup_partial,
@@ -56,6 +59,88 @@ def isin_values(col, values) -> "F.Column":
     if not values:
         return F.lit(False)
     return col.isin(list(values))
+
+
+def distinct_values(col, *frames: DataFrame | None) -> set:
+    """The distinct values of one column (a name or an expression over
+    the frames' columns) across the union of `frames`, `None` entries
+    skipped — one collect.  Every touched-partition probe of an apply
+    is this call: its values are partition keys, so the set is bounded
+    by the table's partition count."""
+    c = F.col(col) if isinstance(col, str) else col
+    parts = [f.select(c.alias("v")) for f in frames if f is not None]
+    u = parts[0]
+    for p in parts[1:]:
+        u = u.unionByName(p)
+    return {r[0] for r in u.distinct().collect()}
+
+
+def zset_delta(
+    batch: DataFrame, id_col: str, cols: list[str] | None = None
+) -> DataFrame:
+    """One row per id a Z-set batch touches: (id, *cols, _ins, _del).
+    The batch consolidates first (an insert and a retraction of the
+    same tuple cancel); a batch without MULT is all inserts.  `cols`
+    defaults to every non-MULT column.  `_ins` is true when the
+    consolidated batch inserts the id, and its `cols` are then one
+    whole inserted tuple — never columns stitched from two — and null
+    for a pure retraction.  `_del` is true when it retracts one of the
+    id's tuples (a pure deletion, or the old side of an update).  The
+    inserts are `filter("_ins")` and the touched ids — deletions and
+    re-inserts alike — are every row."""
+    if cols is None:
+        cols = [c for c in batch.columns if c not in (id_col, MULT)]
+    if MULT in batch.columns:
+        batch = zset_normalize(batch)
+    else:
+        batch = batch.withColumn(MULT, F.lit(1))
+    m = F.col(MULT)
+    return batch.groupBy(id_col).agg(
+        F.first(F.when(m > 0, F.struct(*cols)), ignorenulls=True).alias(
+            "_row"
+        ),
+        F.max(m > 0).alias("_ins"),
+        F.max(m < 0).alias("_del"),
+    ).select(id_col, "_row.*", "_ins", "_del")
+
+
+# -- the release scope of one apply ----------------------------------------
+# apply_batch opens it and hands the list to `_apply`; these helpers are
+# the only place under streaming/ that caches or checkpoints a frame.
+@contextlib.contextmanager
+def _released():
+    """A list for the release callbacks of the frames one apply
+    materializes (`_held`, `_checkpointed`), all of them called when
+    the block exits — so a long-lived streaming process does not keep
+    one batch's caches per micro-batch."""
+    held: list = []
+    try:
+        yield held
+    finally:
+        for release in held:
+            release()
+
+
+def _held(df: DataFrame, held: list) -> DataFrame:
+    """Persist `df` (lazily) for the rest of one apply.  Only for frames
+    that do not end in a shuffle: a cached plan keeps its final
+    shuffle's spark.sql.shuffle.partitions partitions uncoalesced."""
+    from pyspark.storagelevel import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    held.append(df.unpersist)
+    return df
+
+
+def _checkpointed(df: DataFrame, held: list) -> DataFrame:
+    """Materialize `df` now for the rest of one apply.  A local
+    checkpoint runs the plan with AQE's partition coalescing, so a
+    batch-sized frame lands in a partition or two and every later scan
+    of it is that many tasks (a persisted aggregate would keep its 32
+    shuffle partitions).  Its blocks are released with the apply."""
+    cp = df.localCheckpoint(eager=True)
+    held.append(lambda: release_checkpoint(cp))
+    return cp
 
 
 # Auto-compaction threshold: apply_batch rolls the per-batch ledger
@@ -457,9 +542,12 @@ class ParquetUpsertSink:
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body — the template every sink shares: replay
         guard, writer lease, crash recovery, parameter fingerprint,
-        marker finish, then the subclass `_apply` hook, then ledger
-        auto-compaction.  Subclasses override `_apply` only; the
-        exactly-once and single-writer machinery lives here once."""
+        marker finish, then the subclass `_apply` hook inside a release
+        scope, then the ledger record and its auto-compaction.
+        Subclasses override `_apply` only: it returns the staged row
+        count, and every frame it held or checkpointed is released
+        here once it returns; the exactly-once and single-writer
+        machinery lives here once."""
         if self.applied(batch_id):
             return  # replayed batch after recovery — already visible
         with durable.writer_lease(self.target):
@@ -470,17 +558,36 @@ class ParquetUpsertSink:
                 # Swap landed but the crash beat the ledger write: the
                 # data already contains this batch — just finish the
                 # bookkeeping.
-                self._record(batch_id, marker["n_rows"])
+                n = marker["n_rows"]
             else:
-                self._apply(batch_df, batch_id)
+                with _released() as held:
+                    n = self._apply(batch_df, batch_id, held)
+            self._record(batch_id, n)
             self._autocompact()
 
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Merge one micro-batch into the target; caller (apply_batch)
-        holds the lease and has run recovery + replay guards."""
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
+        """Merge one micro-batch into the target and return the staged
+        row count; caller (apply_batch) holds the lease, has run
+        recovery + replay guards, releases what `_apply` appended to
+        `held` and records the batch."""
         merged = self._merge(batch_df.sparkSession, batch_df)
-        n = self._swap_in(merged, batch_id)
-        self._record(batch_id, n)
+        return self._swap_in(merged, batch_id)
+
+    @staticmethod
+    def _consolidate(
+        batch: DataFrame, id_col: str, held: list,
+        cols: list[str] | None = None,
+    ) -> tuple[DataFrame, DataFrame]:
+        """(inserts, touched ids) of a Z-set batch, both read from ONE
+        checkpointed `zset_delta`: the batch consolidates once for
+        every consumer of an apply.  The inserts carry one whole tuple
+        per id; the touched ids — deletions and re-inserts alike —
+        leave every state table before the inserts rebuild theirs."""
+        delta = _checkpointed(zset_delta(batch, id_col, cols), held)
+        return (
+            delta.filter("_ins").drop("_ins", "_del"),
+            delta.select(id_col),
+        )
 
     def _swap_in(self, df: DataFrame, batch_id: int) -> int:
         """Stage, count the rows AS the staging write runs them (the
@@ -504,7 +611,7 @@ class ParquetUpsertSink:
         count_table: str,
         partition_by: dict[str, list[str]] | None = None,
         keep_tables: list[str] | None = None,
-        prune: dict[str, set[str]] | None = None,
+        prune: dict[str, set[str] | None] | None = None,
     ) -> int:
         """Multi-table variant of _swap_in: stage every frame under one
         directory, then commit the whole directory —
@@ -520,13 +627,16 @@ class ParquetUpsertSink:
         partition directory names (e.g. {"bucket=3", "bucket=17"}): the
         frame passed for that table must contain ONLY the touched
         partitions' rows, and every existing partition directory NOT in
-        the set hard-links from the live state unchanged.  This is what
+        the set hard-links from the live state unchanged.  A `None`
+        entry means the table rewrites whole (a bootstrap, a legacy
+        layout).  This is what
         keeps maintenance writes O(|touched partitions|) instead of
         O(|state|) — at 100 TB a small delta must not rewrite a
         multi-terabyte posting table to update two buckets.  A touched
         partition whose rows all disappeared is simply absent from both
         the write and the links, so it vanishes — correct for a
         fully-retracted bucket."""
+        prune = {k: v for k, v in (prune or {}).items() if v is not None}
         staging = durable.stage_dir(self.target)
         for name in keep_tables or []:
             src = os.path.join(self.target, name)
@@ -537,7 +647,7 @@ class ParquetUpsertSink:
         # in beside it, the staged table is counted after the links
         obs = None
         if count_table in frames and not (
-            count_table in (prune or {})
+            count_table in prune
             and os.path.isdir(os.path.join(self.target, count_table))
         ):
             frames = dict(frames)
@@ -552,7 +662,7 @@ class ParquetUpsertSink:
                     "overwrite"
                 ).partitionBy(*cols)
             writer.parquet(os.path.join(staging, name))
-        for name, touched in (prune or {}).items():
+        for name, touched in prune.items():
             src_tbl = os.path.join(self.target, name)
             if os.path.isdir(src_tbl):
                 durable.link_partitions(
@@ -582,17 +692,17 @@ class ParquetUpsertSink:
         return None
 
     @staticmethod
-    def _touched_buckets(touched: DataFrame) -> set[int]:
+    def _touched_buckets(
+        touched: DataFrame, *tables: DataFrame | None
+    ) -> set[int] | None:
         """The id buckets (`ib` values) a frame of touched ids falls in
-        — at most N_ID_BUCKETS values, one small collect."""
-        return {
-            r[0]
-            for r in touched.select(
-                id_bucket(F.col(touched.columns[0])).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
+        — at most N_ID_BUCKETS values, one small collect shared by every
+        id-bucketed table an apply merges.  None, with no collect, when
+        none of `tables` (the raw state tables the apply merges) carries
+        the `ib` layout yet."""
+        if not any(t is not None and "ib" in t.columns for t in tables):
+            return None
+        return distinct_values(id_bucket(F.col(touched.columns[0])), touched)
 
     def _merge_id_bucketed(
         self,
@@ -600,7 +710,7 @@ class ParquetUpsertSink:
         new: DataFrame,
         touched: DataFrame,
         id_col: str,
-        buckets: set[int] | None = None,
+        buckets: set[int] | None,
     ) -> tuple[DataFrame, set[str] | None]:
         """(write_frame, prune_dirs) for an id-keyed state table
         partitioned by ib = id_bucket(id): the write frame holds only
@@ -610,10 +720,9 @@ class ParquetUpsertSink:
         on the partition column itself, so the rewrite plan's read
         prunes on disk too — per-batch maintenance I/O is O(touched
         buckets), never O(state).  Bootstrap (no old table) writes
-        everything with no pruning.  `buckets` is the touched bucket
-        set when the caller already has it (`_touched_buckets`: one
-        collect shared by every table it merges); otherwise it is
-        collected here."""
+        everything with no pruning.  `buckets` is `_touched_buckets` of
+        `touched` and every table the apply merges, collected once per
+        apply by the caller."""
         new_ib = new.withColumn("ib", id_bucket(F.col(id_col)))
         if old_raw is None:
             return new_ib, None
@@ -627,9 +736,8 @@ class ParquetUpsertSink:
                 "left_anti",
             ).withColumn("ib", id_bucket(F.col(id_col)))
             return old_all.select(*new_ib.columns).unionByName(new_ib), None
-        tb = self._touched_buckets(touched) if buckets is None else buckets
         old_t = (
-            old_raw.filter(isin_values(F.col("ib"), tb))
+            old_raw.filter(isin_values(F.col("ib"), buckets))
             .join(
                 touched.withColumnRenamed(touched.columns[0], id_col),
                 id_col,
@@ -637,7 +745,7 @@ class ParquetUpsertSink:
             )
             .select(*new_ib.columns)
         )
-        return old_t.unionByName(new_ib), {f"ib={b}" for b in tb}
+        return old_t.unionByName(new_ib), {f"ib={b}" for b in buckets}
 
     def read(self, spark) -> DataFrame:
         return spark.read.parquet(self.target)

@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from vcf_pg_loader_spark.operators.ivm import MULT
 from vcf_pg_loader_spark.streaming.sink import (
     ParquetUpsertSink,
+    _checkpointed,
+    distinct_values,
     id_bucket,
     isin_values,
 )
@@ -87,13 +89,16 @@ class VocabSink(ParquetUpsertSink):
         return voc.select(F.col("word").alias("w"), "n")
 
     # -- maintenance -----------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         spark = batch_df.sparkSession
         # per-word count deltas: one explode + one keyed sum — the same
         # tokenization as word_counts (mode-selected unit, drop empties)
         from vcf_pg_loader_spark.operators.bpe import _units
 
-        deltas = (
+        # consumed twice (touched-bucket collect + the merge union):
+        # materialize once so a 100 TB delta's explode+sum doesn't run
+        # twice; distributed, never lands on the driver
+        deltas = _checkpointed(
             batch_df.select(
                 F.explode(
                     _units(F.col("text"), self.mode, self.max_chars)
@@ -103,11 +108,8 @@ class VocabSink(ParquetUpsertSink):
             .filter(F.col("word") != "")
             .groupBy("word")
             .agg(F.sum(MULT).alias("dn"))
-            .filter(F.col("dn") != 0)
-            # consumed twice (touched-bucket collect + the merge union):
-            # materialize once so a 100 TB delta's explode+sum doesn't
-            # run twice; distributed, never lands on the driver
-            .localCheckpoint(eager=True)
+            .filter(F.col("dn") != 0),
+            held,
         )
         old = self._table_raw(spark, "vocab")
         if old is None:
@@ -119,17 +121,9 @@ class VocabSink(ParquetUpsertSink):
             prune = None
         else:
             # touched buckets: bounded by the bucket count — control-plane
-            tb = {
-                r[0]
-                for r in deltas.select(
-                    id_bucket(F.col("word")).alias("b")
-                )
-                .distinct()
-                .collect()
-            }
+            tb = distinct_values(id_bucket(F.col("word")), deltas)
             if not tb:  # a delta that touches no word (e.g. all-empty)
-                self._record(batch_id, 0)
-                return
+                return 0
             surviving = old.filter(isin_values(F.col("ib"), tb)).select(
                 "word", "n"
             )
@@ -143,11 +137,10 @@ class VocabSink(ParquetUpsertSink):
                 .select("word", "n", id_bucket(F.col("word")).alias("ib"))
             )
             prune = {f"ib={b}" for b in tb}
-        n = self._swap_in_frames(
+        return self._swap_in_frames(
             {"vocab": vocab},
             batch_id,
             count_table="vocab",
             partition_by={"vocab": ["ib"]},
-            prune={"vocab": prune} if prune is not None else None,
+            prune={"vocab": prune},
         )
-        self._record(batch_id, n)
