@@ -627,13 +627,14 @@ def bpe_encode_throughput(spark, sf_dir: str) -> dict:
 
     from vcf_pg_loader_spark.operators.bpe import (
         bpe_encode_doc_arrow,
-        bpe_learn_local,
+        bpe_train,
+        word_counts,
     )
     from vcf_pg_loader_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     t0 = time.perf_counter()
-    merges = bpe_learn_local(docs, n_merges=64)
+    merges, _ = bpe_train(word_counts(docs), 64)
     learn_sec = time.perf_counter() - t0
     enc = bpe_encode_doc_arrow(docs, merges)
     agg = enc.agg(

@@ -1,7 +1,8 @@
 """BPE merge learning (operators/bpe.py) against a plain-Python
 reference implementation of Sennrich-style BPE: identical merge
-sequences on planted corpora, greedy left-to-right application, and
-determinism across partitionings.
+sequences on planted corpora from both trainer paths (in memory, and
+the batched rounds forced by lowering LOCAL_MAX_TYPES), greedy
+left-to-right application, and determinism across partitionings.
 """
 
 from __future__ import annotations
@@ -37,9 +38,12 @@ def _ref_apply(syms: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]:
     return tuple(out)
 
 
-def _ref_learn(texts: list[str], n_merges: int) -> list[tuple[str, str]]:
-    words = Counter(w for t in texts for w in t.split(" ") if w)
-    vocab = {_ref_word_syms(w): n for w, n in words.items()}
+def _ref_learn_units(
+    units: Counter, tail: list[str], n_merges: int, min_count: int
+) -> list[tuple[str, str]]:
+    vocab = {
+        tuple(list(u) + tail): n for u, n in units.items() if n >= min_count
+    }
     merges = []
     for _ in range(n_merges):
         pc = _ref_pair_counts(vocab)
@@ -50,8 +54,33 @@ def _ref_learn(texts: list[str], n_merges: int) -> list[tuple[str, str]]:
         if best[1] < 2:
             break
         merges.append(best[0])
-        vocab = {_ref_apply(s, best[0]): n for s, n in vocab.items()}
+        merged: dict = {}
+        for s, n in vocab.items():
+            k = _ref_apply(s, best[0])
+            merged[k] = merged.get(k, 0) + n
+        vocab = merged
     return merges
+
+
+def _ref_learn(
+    texts: list[str], n_merges: int, min_count: int = 1
+) -> list[tuple[str, str]]:
+    words = Counter(w for t in texts for w in t.split(" ") if w)
+    return _ref_learn_units(words, [B.END], n_merges, min_count)
+
+
+def _train(docs, n_merges, mode="words", max_chars=B.MAX_CHARS):
+    """The corpus source: bpe_train over word_counts(docs)."""
+    merges, _path = B.bpe_train(
+        B.word_counts(docs, mode=mode, max_chars=max_chars), n_merges, mode
+    )
+    return merges
+
+
+def _docs(spark, texts):
+    return spark.createDataFrame(
+        list(enumerate(texts)), "doc_id bigint, text string"
+    )
 
 
 TEXTS = [
@@ -64,28 +93,25 @@ TEXTS = [
 
 class TestBPELearn:
     def test_merges_match_reference(self, spark):
-        docs = spark.createDataFrame(
-            list(enumerate(TEXTS)), "doc_id bigint, text string"
-        )
-        got = B.bpe_learn(docs, n_merges=10)
+        got, path = B.bpe_train(B.word_counts(_docs(spark, TEXTS)), 10)
         want = _ref_learn(TEXTS, 10)
+        assert path == "local"
         assert got == want and len(got) == 10
 
-    def test_deterministic_across_partitionings(self, spark):
-        docs = spark.createDataFrame(
-            list(enumerate(TEXTS)), "doc_id bigint, text string"
-        )
-        a = B.bpe_learn(docs.repartition(16), n_merges=6)
-        b = B.bpe_learn(docs.coalesce(1), n_merges=6)
-        assert a == b
+    def test_deterministic_across_partitionings(self, spark, monkeypatch):
+        docs = _docs(spark, TEXTS)
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 0)  # batched rounds
+        a = _train(docs.repartition(16), 6)
+        b = _train(docs.coalesce(1), 6)
+        assert a == b == _ref_learn(TEXTS, 6)
 
-    def test_stops_when_no_repeating_pair(self, spark):
-        docs = spark.createDataFrame(
-            [(0, "ab cd ef")], "doc_id bigint, text string"
-        )
-        got = B.bpe_learn(docs, n_merges=10)
-        # every pair occurs once -> below the min-count-2 cutoff
-        assert got == []
+    def test_stops_when_no_repeating_pair(self, spark, monkeypatch):
+        counts = B.word_counts(_docs(spark, ["ab cd ef"]))
+        # every pair occurs once -> below the min-count-2 cutoff, on
+        # either path
+        assert B.bpe_train(counts, 10) == ([], "local")
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 0)
+        assert B.bpe_train(counts, 10) == ([], "batched")
 
 
 class TestBPEEncode:
@@ -93,7 +119,7 @@ class TestBPEEncode:
         docs = spark.createDataFrame(
             list(enumerate(TEXTS)), "doc_id bigint, text string"
         )
-        merges = B.bpe_learn(docs, n_merges=8)
+        merges = _ref_learn(TEXTS, 8)
         enc = {
             (r.doc_id, r.w): tuple(r.pieces)
             for r in B.bpe_encode(docs, merges).collect()
@@ -121,7 +147,7 @@ class TestBPEEncodeArrow:
             .select("doc_id", "text")
             .limit(200)
         )
-        merges = B.bpe_learn(docs, n_merges=20)
+        merges = _train(docs, 20)
         assert len(merges) >= 10
         expr = {
             (r.doc_id, r.w, i): tuple(r.pieces)
@@ -191,25 +217,43 @@ class TestTrainVocabCLI:
         assert got == want
 
 
-    def test_batched_strategy_honours_min_count(self, spark, tmp_path):
-        """An explicit --strategy batched applies --min-count like the
-        local path; sequential, which has no floor, refuses one."""
+    def test_batched_strategy_honours_min_count(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """--min-count floors the type table on the batched path as on
+        the in-memory one, and the artifact records the path taken."""
         import json as _json
 
         from vcf_pg_loader_spark.cli import main
 
         corpus = str(tmp_path / "corpus")
-        spark.createDataFrame(
-            list(enumerate(["low low lower", "rare"])),
-            "doc_id bigint, text string",
-        ).write.parquet(corpus)
+        _docs(spark, ["low low lower", "rare"]).write.parquet(corpus)
         out = str(tmp_path / "merges.json")
         args = ["train-vocab", "--corpus", corpus, "--out", out,
-                "--n-merges", "6", "--min-count", "2", "--strategy"]
-        assert main([*args, "batched"]) == 0
-        merges = [tuple(m) for m in _json.load(open(out))["merges"]]
-        assert merges == _ref_learn(["low low"], 6)
-        assert main([*args, "sequential"]) == 2
+                "--n-merges", "6", "--min-count", "2"]
+        for bound, path in ((10_000, "local"), (0, "batched")):
+            monkeypatch.setattr(B, "LOCAL_MAX_TYPES", bound)
+            assert main(args) == 0
+            art = _json.load(open(out))
+            assert art["strategy"] == path
+            merges = [tuple(m) for m in art["merges"]]
+            assert merges == _ref_learn(["low low"], 6)
+
+
+def _pin_checkpoints(spark, monkeypatch) -> list:
+    """Keep every frame localCheckpointed from here on referenced, so
+    a JVM GC cannot drop an unreleased checkpoint and hide a leak."""
+    frame_cls = type(spark.range(1))
+    pinned: list = []
+    orig = frame_cls.localCheckpoint
+
+    def pin(self, *a, **k):
+        df = orig(self, *a, **k)
+        pinned.append(df)
+        return df
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", pin)
+    return pinned
 
 
 class TestBPELearnBatched:
@@ -217,13 +261,11 @@ class TestBPELearnBatched:
     sequence as one-merge-per-round learning (the verdict item-2 pin)."""
 
     def test_batched_equals_sequential_on_fixture(self, spark):
-        docs = spark.createDataFrame(
-            list(enumerate(TEXTS)), "doc_id bigint, text string"
-        )
+        counts = B.word_counts(_docs(spark, TEXTS))
         want = _ref_learn(TEXTS, 10)
         for cand, mb in ((256, 64), (8, 4), (4, 2)):
-            got = B.bpe_learn_batched(
-                docs, n_merges=10, candidates=cand, max_batch=mb
+            got = B._learn_batched(
+                counts, 10, candidates=cand, max_batch=mb
             )
             assert got == want, (cand, mb)
 
@@ -233,11 +275,9 @@ class TestBPELearnBatched:
         top-K-disjoint batcher would accept (x,y) in round 1 and
         diverge.  The safe batcher must match sequential exactly."""
         texts = ["cab"] * 100 + ["xy"] * 99
-        docs = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id bigint, text string"
-        )
+        counts = B.word_counts(_docs(spark, texts))
         want = _ref_learn(texts, 6)
-        got = B.bpe_learn_batched(docs, n_merges=6, candidates=8, max_batch=8)
+        got = B._learn_batched(counts, 6, candidates=8, max_batch=8)
         assert got == want
 
     def test_tie_truncation_at_equal_counts(self, spark):
@@ -245,11 +285,9 @@ class TestBPELearnBatched:
         first merge can tie the second's count and win the lexicographic
         tie-break, so ties at the batch boundary must be truncated."""
         texts = ["ab"] * 50 + ["cd"] * 50 + ["ce"] * 50
-        docs = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id bigint, text string"
-        )
+        counts = B.word_counts(_docs(spark, texts))
         want = _ref_learn(texts, 8)
-        got = B.bpe_learn_batched(docs, n_merges=8, candidates=6, max_batch=6)
+        got = B._learn_batched(counts, 8, candidates=6, max_batch=6)
         assert got == want
 
     def test_randomized_corpora_pin(self, spark):
@@ -270,35 +308,38 @@ class TestBPELearnBatched:
                 )
                 for _ in range(12)
             ]
-            docs = spark.createDataFrame(
-                list(enumerate(texts)), "doc_id bigint, text string"
-            )
+            counts = B.word_counts(_docs(spark, texts))
             want = _ref_learn(texts, 12)
-            got_b = B.bpe_learn_batched(
-                docs, n_merges=12, candidates=8, max_batch=4
-            )
-            wc = [
-                (r["w"], r["n"])
-                for r in B.word_counts(docs).collect()
-            ]
+            got_b = B._learn_batched(counts, 12, candidates=8, max_batch=4)
+            wc = [(r["w"], r["n"]) for r in counts.collect()]
             got_l = B.bpe_learn_from_counts(wc, 12)
             assert got_b == want, (trial, texts)
             assert got_l == want, (trial, texts)
 
     def test_runs_merge_greedily_in_batch(self, spark):
-        docs = spark.createDataFrame(
-            [(0, "aaa aaa aaa")], "doc_id bigint, text string"
-        )
-        got = B.bpe_learn_batched(docs, n_merges=2, max_batch=4)
+        counts = B.word_counts(_docs(spark, ["aaa aaa aaa"]))
+        got = B._learn_batched(counts, 2, max_batch=4)
         assert got == _ref_learn(["aaa aaa aaa"], 2)
+
+    def test_releases_superseded_checkpoints(self, spark, monkeypatch):
+        """Each round's checkpoint is released once the next supersedes
+        it: over a ten-round run the persistent RDDs grow by at most
+        one, not one per round."""
+        counts = B.word_counts(_docs(spark, TEXTS))
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        pinned = _pin_checkpoints(spark, monkeypatch)
+        got = B._learn_batched(counts, 10, max_batch=1)
+        assert got == _ref_learn(TEXTS, 10)
+        assert len(pinned) == 11  # the initial state + one per round
+        grown = set(jsc.getPersistentRDDs().keySet()) - before
+        assert len(grown) <= 1, grown
 
 
 class TestBPELearnLocal:
     def test_local_equals_sequential_on_fixture(self, spark):
-        docs = spark.createDataFrame(
-            list(enumerate(TEXTS)), "doc_id bigint, text string"
-        )
-        assert B.bpe_learn_local(docs, n_merges=10) == _ref_learn(TEXTS, 10)
+        got, path = B.bpe_train(B.word_counts(_docs(spark, TEXTS)), 10)
+        assert (got, path) == (_ref_learn(TEXTS, 10), "local")
 
     def test_production_vocab_size_32k_merges_bounded_time(self):
         """The round-11 gap: a real tokenizer is ~32k merges.  The
@@ -331,111 +372,137 @@ class TestBPELearnLocal:
         )
 
 
-class TestLocalMaxTypesGuard:
-    """Optimization round 16, verdict item 1: bpe_learn_local must never
-    collect an unbounded type table to the driver — the collect is
-    limit(max_types + 1)-bounded, and overflowing the bound falls back
-    to the distributed batched trainer with IDENTICAL merges."""
+def _collect_sizes(monkeypatch) -> list:
+    """Record the row count of every DataFrame.collect from here on."""
+    # Spark 4: the concrete class (with its own collect override)
+    # lives in pyspark.sql.classic; patching the abstract base
+    # would not intercept anything.
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:  # pragma: no cover - older Spark
+        from pyspark.sql import DataFrame
 
-    def _docs(self, spark):
-        return spark.createDataFrame(
-            list(enumerate(TEXTS)), "doc_id bigint, text string"
-        )
+    real_collect = DataFrame.collect
+    sizes: list = []
+
+    def spy(self):
+        rows = real_collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    return sizes
+
+
+class TestLocalMaxTypesGuard:
+    """Optimization round 16, verdict item 1: the trainer must never
+    collect an unbounded type table to the driver — its probe is
+    limit(LOCAL_MAX_TYPES + 1)-bounded, and a table past the bound
+    trains in batched rounds with IDENTICAL merges."""
 
     def test_fallback_engages_and_merges_identical(self, spark, monkeypatch):
-        docs = self._docs(spark)
-        unguarded = B.bpe_learn_local(docs, n_merges=10, max_types=0)
-        called = {}
-        real_batched = B.bpe_learn_batched
-
-        def spy(*a, **kw):
-            called["yes"] = True
-            return real_batched(*a, **kw)
-
-        monkeypatch.setattr(B, "bpe_learn_batched", spy)
-        # the fixture corpus has ~17 word types; max_types=3 must overflow
-        guarded = B.bpe_learn_local(docs, n_merges=10, max_types=3)
-        assert called.get("yes"), "fallback did not engage"
-        assert guarded == unguarded
+        counts = B.word_counts(_docs(spark, TEXTS))
+        # the fixture corpus has ~17 word types; a bound of 3 overflows
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 3)
+        merges, path = B.bpe_train(counts, 10)
+        assert path == "batched", "fallback did not engage"
+        assert merges == _ref_learn(TEXTS, 10)
 
     def test_under_bound_stays_local(self, spark, monkeypatch):
-        docs = self._docs(spark)
-
         def boom(*a, **kw):  # pragma: no cover - must not run
             raise AssertionError("batched fallback ran below the bound")
 
-        monkeypatch.setattr(B, "bpe_learn_batched", boom)
-        merges = B.bpe_learn_local(docs, n_merges=10, max_types=10_000)
-        assert merges == _ref_learn(TEXTS, 10)
+        monkeypatch.setattr(B, "_learn_batched", boom)
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 10_000)
+        merges, path = B.bpe_train(B.word_counts(_docs(spark, TEXTS)), 10)
+        assert (merges, path) == (_ref_learn(TEXTS, 10), "local")
 
-    def test_env_knob_bounds_default(self, spark, monkeypatch):
-        docs = self._docs(spark)
-        monkeypatch.setenv("SPARK_GRAFT_BPE_LOCAL_MAX_TYPES", "2")
-        called = {}
-        real_batched = B.bpe_learn_batched
-
-        def spy(*a, **kw):
-            called["yes"] = True
-            return real_batched(*a, **kw)
-
-        monkeypatch.setattr(B, "bpe_learn_batched", spy)
-        merges = B.bpe_learn_local(docs, n_merges=10)  # max_types=None -> env
-        assert called.get("yes")
-        assert merges == _ref_learn(TEXTS, 10)
-
-    def test_fallback_preserves_min_count_floor(self, spark):
+    def test_fallback_preserves_min_count_floor(self, spark, monkeypatch):
         texts = ["low low lower", "rare"]
-        docs = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id bigint, text string"
-        )
-        floored_local = B.bpe_learn_local(
-            docs, n_merges=6, min_count=2, max_types=0
-        )
-        floored_fallback = B.bpe_learn_local(
-            docs, n_merges=6, min_count=2, max_types=1
-        )
-        assert floored_fallback == floored_local
+        floored = B.word_counts(_docs(spark, texts)).filter(F.col("n") >= 2)
+        local = B.bpe_train(floored, 6)
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 0)
+        fallback = B.bpe_train(floored, 6)
+        assert local == (_ref_learn(texts, 6, min_count=2), "local")
+        assert fallback == (local[0], "batched")
 
     def test_driver_collect_is_bounded(self, spark, monkeypatch):
-        """The overflow probe itself must be limit-bounded: patch
-        DataFrame.collect to record the plan's limit and assert no
-        unbounded collect happens on the word-count frame."""
-        # Spark 4: the concrete class (with its own collect override)
-        # lives in pyspark.sql.classic; patching the abstract base
-        # would not intercept anything.
-        try:
-            from pyspark.sql.classic.dataframe import DataFrame
-        except ImportError:  # pragma: no cover - older Spark
-            from pyspark.sql import DataFrame
-
-        docs = self._docs(spark)
-        real_collect = DataFrame.collect
-        sizes = []
-
-        def spy(self):
-            rows = real_collect(self)
-            sizes.append(len(rows))
-            return rows
-
-        monkeypatch.setattr(DataFrame, "collect", spy)
-        B.bpe_learn_local(docs, n_merges=4, max_types=3)
-        # first collect is the guarded probe: exactly max_types+1 rows
+        """The probe itself must be limit-bounded: record every collect
+        and assert the first — the probe on the word-count frame — is
+        exactly LOCAL_MAX_TYPES + 1 rows."""
+        counts = B.word_counts(_docs(spark, TEXTS))
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 3)
+        sizes = _collect_sizes(monkeypatch)
+        B.bpe_train(counts, 4)
         assert sizes[0] == 4
+
+
+# Both trainer sources, both modes, with and without a floor, on both
+# paths: the corpus's word_counts and a maintained VocabSink's counts
+# (the train-vocab --counts-state source), each floored the way
+# train-vocab floors it.  TEXTS twice makes every word and every chunk
+# of those lines repeat; the two extra lines are the singleton tail a
+# floor of 2 drops.
+PATH_TEXTS = TEXTS * 2 + ["zebra quartz", "jumpy fox"]
+
+
+@pytest.fixture(scope="module")
+def vocab_counts(spark, tmp_path_factory):
+    """mode -> a VocabSink state maintained over PATH_TEXTS."""
+    from vcf_pg_loader_spark.operators.ivm import MULT
+    from vcf_pg_loader_spark.streaming.vocab import VocabSink
+
+    batch = _docs(spark, PATH_TEXTS).withColumn(
+        MULT, F.lit(1).cast("bigint")
+    )
+    sinks = {}
+    for mode in ("words", "chars"):
+        root = tmp_path_factory.mktemp(f"vocab_{mode}") / "state"
+        sink = VocabSink(str(root), mode=mode, max_chars=4)
+        sink.apply_batch(batch, 0)
+        sinks[mode] = sink
+    return sinks
+
+
+class TestTrainerPaths:
+    @pytest.mark.parametrize("min_count", [1, 2])
+    @pytest.mark.parametrize("mode", ["words", "chars"])
+    @pytest.mark.parametrize("source", ["corpus", "counts_state"])
+    def test_paths_match_reference(
+        self, spark, monkeypatch, vocab_counts, source, mode, min_count
+    ):
+        if source == "corpus":
+            counts = B.word_counts(
+                _docs(spark, PATH_TEXTS), mode=mode, max_chars=4
+            )
+        else:
+            counts = vocab_counts[mode].counts(spark)
+        if min_count > 1:
+            counts = counts.filter(F.col("n") >= min_count)
+        if mode == "words":
+            want = _ref_learn(PATH_TEXTS, 12, min_count)
+        else:
+            want = _ref_learn_chars(PATH_TEXTS, 12, 4, min_count)
+        assert len(want) == 12
+        sizes = _collect_sizes(monkeypatch)
+        for bound, path in ((10_000, "local"), (3, "batched")):
+            monkeypatch.setattr(B, "LOCAL_MAX_TYPES", bound)
+            probe = len(sizes)  # the probe is the call's first collect
+            assert B.bpe_train(counts, 12, mode) == (want, path)
+            assert sizes[probe] <= bound + 1
 
 
 class TestMinCountFloor:
     def test_floor_drops_singletons_before_collect(self, spark):
         texts = ["low low lower", "rare"]  # 'rare' is a singleton type
-        docs = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id bigint, text string"
-        )
-        with_floor = B.bpe_learn_local(docs, n_merges=6, min_count=2)
+        counts = B.word_counts(_docs(spark, texts))
+        with_floor, _ = B.bpe_train(counts.filter(F.col("n") >= 2), 6)
         # only 'low' (count 2) survives the floor; 'lower' and 'rare'
         # are singleton types and drop distributed-side
         want = _ref_learn(["low low"], 6)
         assert with_floor == want
-        # default floor of 1 keeps training exact over everything
-        assert B.bpe_learn_local(docs, n_merges=6) == _ref_learn(texts, 6)
+        # no floor keeps training exact over everything
+        assert B.bpe_train(counts, 6)[0] == _ref_learn(texts, 6)
 
 
 # -- chars mode (round-12 verdict item 1) -----------------------------------
@@ -444,27 +511,12 @@ def _ref_chunks(text: str, c: int) -> list[str]:
 
 
 def _ref_learn_chars(
-    texts: list[str], n_merges: int, c: int
+    texts: list[str], n_merges: int, c: int, min_count: int = 1
 ) -> list[tuple[str, str]]:
     """Plain-Python chars-mode reference: bounded raw-text chunks, no
     END marker, otherwise identical count/tie-break/apply semantics."""
     units = Counter(u for t in texts for u in _ref_chunks(t, c))
-    vocab = {tuple(u): n for u, n in units.items()}
-    merges = []
-    for _ in range(n_merges):
-        pc = _ref_pair_counts(vocab)
-        if not pc:
-            break
-        best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < 2:
-            break
-        merges.append(best[0])
-        vocab_new: dict = {}
-        for s, n in vocab.items():
-            k = _ref_apply(s, best[0])
-            vocab_new[k] = vocab_new.get(k, 0) + n
-        vocab = vocab_new
-    return merges
+    return _ref_learn_units(units, [], n_merges, min_count)
 
 
 # a no-space "CJK-like" corpus: real CJK codepoints so character (not
@@ -483,23 +535,17 @@ def _nospace_texts() -> list[str]:
 
 
 class TestCharsMode:
-    def test_three_strategies_pin_identical_on_nospace(self, spark):
+    def test_three_strategies_pin_identical_on_nospace(
+        self, spark, monkeypatch
+    ):
+        """The in-memory path, the batched path and the reference."""
         texts = _nospace_texts()
-        docs = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id bigint, text string"
-        )
+        counts = B.word_counts(_docs(spark, texts), mode="chars", max_chars=8)
         want = _ref_learn_chars(texts, 12, 8)
         assert want, "fixture must actually produce merges"
-        got_seq = B.bpe_learn(docs, n_merges=12, mode="chars", max_chars=8)
-        got_bat = B.bpe_learn_batched(
-            docs, n_merges=12, mode="chars", max_chars=8
-        )
-        got_loc = B.bpe_learn_local(
-            docs, n_merges=12, mode="chars", max_chars=8
-        )
-        assert got_seq == want
-        assert got_bat == want
-        assert got_loc == want
+        assert B.bpe_train(counts, 12, "chars") == (want, "local")
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 0)
+        assert B.bpe_train(counts, 12, "chars") == (want, "batched")
 
     def test_merged_pieces_bounded_by_chunk(self, spark):
         # merges cannot cross chunk boundaries, so no learned piece can
@@ -509,9 +555,7 @@ class TestCharsMode:
         docs = spark.createDataFrame(
             list(enumerate(texts)), "doc_id bigint, text string"
         )
-        merges = B.bpe_learn_local(
-            docs, n_merges=20, mode="chars", max_chars=8
-        )
+        merges = _train(docs, 20, mode="chars", max_chars=8)
         assert merges
         assert all(len(l) + len(r) <= 8 for l, r in merges)
 
@@ -520,9 +564,7 @@ class TestCharsMode:
         docs = spark.createDataFrame(
             list(enumerate(texts)), "doc_id bigint, text string"
         )
-        merges = B.bpe_learn_local(
-            docs, n_merges=12, mode="chars", max_chars=8
-        )
+        merges = _train(docs, 12, mode="chars", max_chars=8)
         enc = B.bpe_encode_doc_arrow(
             docs, merges, mode="chars", max_chars=8
         )
@@ -554,9 +596,7 @@ class TestCharsMode:
         docs = spark.createDataFrame(
             [(0, "ab ab ab ab")], "doc_id bigint, text string"
         )
-        merges = B.bpe_learn_local(
-            docs, n_merges=4, mode="chars", max_chars=4
-        )
+        merges = _train(docs, 4, mode="chars", max_chars=4)
         enc = B.bpe_encode_doc_arrow(docs, merges, mode="chars", max_chars=4)
         pieces = enc.collect()[0]["pieces"]
         assert "".join(pieces) == "ab ab ab ab"
@@ -573,7 +613,5 @@ class TestCharsMode:
         wc = B.word_counts(docs, mode="chars", max_chars=16)
         rows = wc.collect()
         assert rows and all(len(r["w"]) <= 16 for r in rows)
-        merges = B.bpe_learn_local(
-            docs, n_merges=8, mode="chars", max_chars=16
-        )
+        merges = _train(docs, 8, mode="chars", max_chars=16)
         assert merges == _ref_learn_chars([line], 8, 16)

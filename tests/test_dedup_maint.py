@@ -383,6 +383,20 @@ def test_apply_releases_every_cache(spark, tmp_path, monkeypatch, name):
     assert empty and after <= rdds, after - rdds
 
 
+def test_semdedup_bootstrap_releases_every_cache(spark, tmp_path, monkeypatch):
+    """The bootstrap apply fits SemDeDup's IVF routing table — a cached
+    vector prep and a centroid checkpoint — and releases both: the
+    baseline is taken before it, not after."""
+    sink, boot, _batch = _semdedup_case(spark, str(tmp_path / "SemDeDup"))
+    spark.catalog.clearCache()
+    _empty, rdds = _cache_state(spark)
+    _pin_cached_frames(spark, monkeypatch)
+    sink.apply_batch(boot, 0)
+    assert sink.applied(0)
+    empty, after = _cache_state(spark)
+    assert empty and after <= rdds, after - rdds
+
+
 class TestZsetDelta:
     """The one consolidation every maintained sink's apply runs."""
 

@@ -251,9 +251,9 @@ class TestVocabSink:
         assert len(linked) >= len(after) // 2
 
     def test_trainer_consumes_served_counts(self, spark, tmp_path):
-        """bpe_learn_from_counts over the MAINTAINED vocab equals
-        learning from the corpus — vocab refresh is O(|delta|), train
-        reads the state."""
+        """The trainer over the MAINTAINED vocab equals learning from
+        the corpus — vocab refresh is O(|delta|), train reads the
+        state."""
         from vcf_pg_loader_spark.operators import bpe as B
         from vcf_pg_loader_spark.operators.ivm import MULT
         from vcf_pg_loader_spark.streaming.vocab import VocabSink
@@ -262,12 +262,8 @@ class TestVocabSink:
         t = str(tmp_path / "state")
         sink = VocabSink(t)
         sink.apply_batch(docs.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        served = [
-            (r.w, r.n) for r in sink.counts(spark).collect()
-        ]
-        assert (
-            B.bpe_learn_from_counts(served, 12)
-            == B.bpe_learn_local(docs, 12)
+        assert B.bpe_train(sink.counts(spark), 12) == B.bpe_train(
+            B.word_counts(docs), 12
         )
 
 
@@ -280,7 +276,7 @@ class TestVocabStateCLI:
         merges a corpus pass would, and the artifact carries the
         state's corpus-epoch identity."""
         from vcf_pg_loader_spark.cli import main
-        from vcf_pg_loader_spark.operators.bpe import bpe_learn_local
+        from vcf_pg_loader_spark.operators.bpe import bpe_train, word_counts
 
         rows = [
             (i, "shared head " + " ".join(f"w{i}x{j}" for j in range(3)))
@@ -308,7 +304,7 @@ class TestVocabStateCLI:
         art = json.load(open(out))
         assert art["strategy"] == "counts-state"
         # identical merges to a corpus pass
-        want = bpe_learn_local(docs, 10)
+        want = bpe_train(word_counts(docs), 10)[0]
         assert [tuple(m) for m in art["merges"]] == want
         # artifact identity == the state's corpus-epoch stamp
         assert art["corpus_fp"] == sync_rep["epoch_fp"]
@@ -360,7 +356,7 @@ class TestRound12EndToEnd:
         shards, reshard the layout from its own facts, re-export, and
         retrain from the maintained counts — every handoff checked."""
         from vcf_pg_loader_spark.cli import main
-        from vcf_pg_loader_spark.operators.bpe import bpe_learn_local
+        from vcf_pg_loader_spark.operators.bpe import bpe_train, word_counts
 
         rows = [
             (
@@ -430,9 +426,9 @@ class TestRound12EndToEnd:
              "--n-merges", "16"]
         ) == 0
         art2 = json.load(open(vocab2))
-        assert [tuple(m) for m in art2["merges"]] == bpe_learn_local(
-            docs, 16
-        )
+        assert [tuple(m) for m in art2["merges"]] == bpe_train(
+            word_counts(docs), 16
+        )[0]
         assert art2["corpus_fp"] == sync_rep["epoch_fp"]
 
 

@@ -159,7 +159,7 @@ class TestExportSequencesIds:
         from vcf_pg_loader_spark.cli import main
         from vcf_pg_loader_spark.operators import tokenids as T
         from vcf_pg_loader_spark.operators.bpe import (
-            bpe_learn_local,
+            bpe_train,
             word_counts,
         )
         from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
@@ -171,7 +171,7 @@ class TestExportSequencesIds:
         docs = spark.createDataFrame(rows, "doc_id bigint, text string")
         corpus = str(tmp_path / "corpus")
         docs.write.parquet(corpus)
-        merges = bpe_learn_local(docs, 6)
+        merges = bpe_train(word_counts(docs), 6)[0]
         alphabet = T.alphabet_from_counts(word_counts(docs), "words")
         vocab = str(tmp_path / "vocab.json")
         json.dump(
@@ -295,14 +295,17 @@ class TestShardSinkCharsMode:
         exactly (no END sentinel), and a words-mode sink refuses the
         chars-packed state."""
         from vcf_pg_loader_spark.operators.bpe import (
-            bpe_learn_local,
+            bpe_train,
+            word_counts,
             bpe_token_lengths,
         )
         from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
 
         rows = [(i, "xyzw" * (2 + i % 5)) for i in range(30)]
         docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-        merges = bpe_learn_local(docs, 6, mode="chars", max_chars=4)
+        merges, _ = bpe_train(
+            word_counts(docs, mode="chars", max_chars=4), 6, "chars"
+        )
         t = str(tmp_path / "state")
         sink = TrainingShardSink(
             t, merges=merges, vocab_fp=7, n_shards=4, seq_len=8,
@@ -343,7 +346,7 @@ class TestRepackMerges:
         old artifact refuses afterwards; delta maintenance resumes
         under the new fingerprint and stays equal to scratch."""
         from vcf_pg_loader_spark.cli import main
-        from vcf_pg_loader_spark.operators.bpe import bpe_learn_local
+        from vcf_pg_loader_spark.operators.bpe import bpe_train, word_counts
         from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
 
         from vcf_pg_loader_spark.operators.bpe import tokenizer_fingerprint
@@ -355,8 +358,8 @@ class TestRepackMerges:
         # merges — corpus_fp is identical, only the tokenizer changes.
         # The no-op refusal must key on tokenizer identity, so this
         # repack proceeds (under corpus_fp keying it falsely refused).
-        m1 = bpe_learn_local(docs, 4)
-        m2 = bpe_learn_local(docs, 12)
+        m1 = bpe_train(word_counts(docs), 4)[0]
+        m2 = bpe_train(word_counts(docs), 12)[0]
         assert m1 != m2
         tfp1 = tokenizer_fingerprint(m1)
         tfp2 = tokenizer_fingerprint(m2)
@@ -438,14 +441,14 @@ class TestRepackMerges:
         assert got == want
 
     def test_repack_refuses_drifted_corpus(self, spark, tmp_path):
-        from vcf_pg_loader_spark.operators.bpe import bpe_learn_local
+        from vcf_pg_loader_spark.operators.bpe import bpe_train, word_counts
         from vcf_pg_loader_spark.streaming.shards import (
             TrainingShardSink,
             repack_merges,
         )
 
         docs = self._docs(spark, n=10)
-        m1 = bpe_learn_local(docs, 4)
+        m1 = bpe_train(word_counts(docs), 4)[0]
         t = str(tmp_path / "state")
         TrainingShardSink(
             t, merges=m1, vocab_fp=1, n_shards=2, seq_len=8
@@ -459,14 +462,14 @@ class TestRepackMerges:
     def test_repack_whitespace_state_into_bpe_space(self, spark, tmp_path):
         """A whitespace-packed state migrates INTO tokenizer space:
         same verb, params gain token_space/vocab_fp."""
-        from vcf_pg_loader_spark.operators.bpe import bpe_learn_local
+        from vcf_pg_loader_spark.operators.bpe import bpe_train, word_counts
         from vcf_pg_loader_spark.streaming.shards import (
             TrainingShardSink,
             repack_merges,
         )
 
         docs = self._docs(spark, n=12)
-        m = bpe_learn_local(docs, 6)
+        m = bpe_train(word_counts(docs), 6)[0]
         t = str(tmp_path / "state")
         TrainingShardSink(t, n_shards=2, seq_len=8).apply_batch(
             docs.withColumn(MULT, F.lit(1).cast("bigint")), 0
@@ -710,12 +713,14 @@ class TestQualityCurriculum:
 
 class TestTrainVocabAutoStrategy:
     def test_fallback_forces_batched_and_pins_merges(
-        self, spark, tmp_path, capsys
+        self, spark, tmp_path, capsys, monkeypatch
     ):
-        """round-12 verdict item 6: auto/local pre-count the type
-        table and HARD-fall back to batched past --local-max-types;
-        the merge sequences pin identical across the boundary."""
+        """round-12 verdict item 6: a type table past the trainer's
+        driver bound (operators/bpe.py LOCAL_MAX_TYPES) trains in
+        batched rounds; the artifact records the path and the merge
+        sequences pin identical across the boundary."""
         from vcf_pg_loader_spark.cli import main
+        from vcf_pg_loader_spark.operators import bpe as B
 
         rows = [
             (i, " ".join(f"w{j % 9}" for j in range(5 + i % 4)))
@@ -734,33 +739,17 @@ class TestTrainVocabAutoStrategy:
         a_local = json.load(open(v_local))
         assert a_local["strategy"] == "local"  # under the bound
 
+        monkeypatch.setattr(B, "LOCAL_MAX_TYPES", 2)  # 9 word types
         v_fb = str(tmp_path / "fallback.json")
         assert main(
             ["train-vocab", "--corpus", corpus, "--out", v_fb,
-             "--n-merges", "8", "--local-max-types", "2"]
+             "--n-merges", "8"]
         ) == 0
         capsys.readouterr()
         a_fb = json.load(open(v_fb))
         assert a_fb["strategy"] == "batched"  # the forced fallback
         assert a_fb["merges"] == a_local["merges"]
         assert a_fb["corpus_fp"] == a_local["corpus_fp"]
-
-    def test_explicit_local_also_bounded(self, spark, tmp_path, capsys):
-        """--strategy local is not a bypass: the hard bound applies."""
-        from vcf_pg_loader_spark.cli import main
-
-        docs = spark.createDataFrame(
-            [(0, "p q r p q r p q")], "doc_id bigint, text string"
-        )
-        corpus = str(tmp_path / "corpus")
-        docs.write.parquet(corpus)
-        v = str(tmp_path / "v.json")
-        assert main(
-            ["train-vocab", "--corpus", corpus, "--out", v,
-             "--n-merges", "4", "--strategy", "local",
-             "--local-max-types", "1"]
-        ) == 0
-        assert json.load(open(v))["strategy"] == "batched"
 
 
 class TestExportVocab:
@@ -806,7 +795,7 @@ class TestIdsAndMaskTogether:
         from vcf_pg_loader_spark.cli import main
         from vcf_pg_loader_spark.operators import tokenids as T
         from vcf_pg_loader_spark.operators.bpe import (
-            bpe_learn_local,
+            bpe_train,
             word_counts,
         )
         from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
@@ -818,7 +807,7 @@ class TestIdsAndMaskTogether:
         docs = spark.createDataFrame(rows, "doc_id bigint, text string")
         corpus = str(tmp_path / "corpus")
         docs.write.parquet(corpus)
-        merges = bpe_learn_local(docs, 4)
+        merges = bpe_train(word_counts(docs), 4)[0]
         alphabet = T.alphabet_from_counts(word_counts(docs), "words")
         vocab = str(tmp_path / "vocab.json")
         json.dump(
@@ -855,7 +844,7 @@ class TestSeqDecontamTokenSpace:
         streams; a planted eval doc that shares a piece trigram with
         the train corpus is found."""
         from vcf_pg_loader_spark.cli import main
-        from vcf_pg_loader_spark.operators.bpe import bpe_learn_local
+        from vcf_pg_loader_spark.operators.bpe import bpe_train, word_counts
 
         rows = [
             (i, " ".join(f"tok{j % 6}" for j in range(8)))
@@ -864,7 +853,7 @@ class TestSeqDecontamTokenSpace:
         docs = spark.createDataFrame(rows, "doc_id bigint, text string")
         corpus = str(tmp_path / "corpus")
         docs.write.parquet(corpus)
-        merges = bpe_learn_local(docs, 6)
+        merges = bpe_train(word_counts(docs), 6)[0]
         vocab = str(tmp_path / "vocab.json")
         json.dump(
             {"merges": [list(m) for m in merges], "corpus_fp": 42,

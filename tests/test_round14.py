@@ -97,14 +97,15 @@ class TestTokenizerFingerprint:
         counts tokenize differently — a layout packed under one must
         refuse maintenance under the other."""
         from vcf_pg_loader_spark.operators.bpe import (
-            bpe_learn_local,
+            bpe_train,
+            word_counts,
             tokenizer_fingerprint,
         )
         from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
 
         docs = _docs(spark, 20)
-        m1 = bpe_learn_local(docs, 4)
-        m2 = bpe_learn_local(docs, 10)
+        m1 = bpe_train(word_counts(docs), 4)[0]
+        m2 = bpe_train(word_counts(docs), 10)[0]
         t = str(tmp_path / "state")
         TrainingShardSink(
             t, merges=m1, vocab_fp=tokenizer_fingerprint(m1),
@@ -172,7 +173,8 @@ class TestRepackLengthCurriculum:
         them from the NEW lengths so the migrated state tuple-equals a
         scratch build under the identical fingerprint."""
         from vcf_pg_loader_spark.operators.bpe import (
-            bpe_learn_local,
+            bpe_train,
+            word_counts,
             tokenizer_fingerprint,
         )
         from vcf_pg_loader_spark.streaming.shards import (
@@ -181,8 +183,8 @@ class TestRepackLengthCurriculum:
         )
 
         docs = _docs(spark, 30)
-        m1 = bpe_learn_local(docs, 2)
-        m2 = bpe_learn_local(docs, 12)
+        m1 = bpe_train(word_counts(docs), 2)[0]
+        m2 = bpe_train(word_counts(docs), 12)[0]
         assert m1 != m2
         kw = dict(
             n_shards=2, seq_len=16, curriculum="length:4:8",
@@ -217,7 +219,8 @@ class TestRepackLengthCurriculum:
         carries their okeys verbatim and the migrated state still
         equals a scratch build given the same quality frame."""
         from vcf_pg_loader_spark.operators.bpe import (
-            bpe_learn_local,
+            bpe_train,
+            word_counts,
             tokenizer_fingerprint,
         )
         from vcf_pg_loader_spark.streaming.shards import (
@@ -229,8 +232,8 @@ class TestRepackLengthCurriculum:
         quality = docs.select(
             "doc_id", (F.col("doc_id") % 3).cast("double").alias("score")
         )
-        m1 = bpe_learn_local(docs, 2)
-        m2 = bpe_learn_local(docs, 8)
+        m1 = bpe_train(word_counts(docs), 2)[0]
+        m2 = bpe_train(word_counts(docs), 8)[0]
         kw = dict(n_shards=2, seq_len=16, curriculum="quality:3:1.0")
         t = str(tmp_path / "state")
         s1 = TrainingShardSink(

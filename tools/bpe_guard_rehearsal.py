@@ -1,18 +1,19 @@
-"""Scale rehearsal for the bpe_learn_local driver-collect guard
-(optimization round 16, verdict item 1).
+"""Scale rehearsal for bpe_train's driver bound (operators/bpe.py
+LOCAL_MAX_TYPES; optimization round 16, verdict item 1).
 
 Builds an ADVERSARIALLY WIDE type table — a synthetic corpus whose
-word-type count far exceeds the guard bound (every word unique, the
-100 TB singleton-tail shape) — and calls bpe_learn_local with a bound
+word-type count far exceeds the bound (every word unique, the
+100 TB singleton-tail shape) — and trains with LOCAL_MAX_TYPES set
 well below it.  Records:
 
-  - that the guard's overflow probe collected at most bound+1 rows
-    (DataFrame.collect instrumented),
-  - that the fallback engaged (bpe_learn_batched ran),
+  - that the probe collected at most bound+1 rows (DataFrame.collect
+    instrumented),
+  - that the trainer took its batched path,
   - driver peak RSS before/after (the collect must not scale with the
     type table),
-  - the merges equal the batched trainer's on the same corpus
-    (identical-model pin at rehearsal scale),
+  - that the merges equal the in-memory path's on the same table
+    (identical-model pin at rehearsal scale; that run collects the
+    whole type table, after the RSS reading),
   - wall times for both paths.
 
 Writes one JSON blob (default SCALE_r16_bpe_guard.json).
@@ -41,7 +42,8 @@ def main() -> None:
     ap.add_argument("--types", type=int, default=2_000_000,
                     help="distinct word types in the adversarial corpus")
     ap.add_argument("--bound", type=int, default=100_000,
-                    help="max_types guard bound (must be << --types)")
+                    help="LOCAL_MAX_TYPES for the bounded run "
+                         "(must be << --types)")
     ap.add_argument("--n-merges", type=int, default=8)
     ap.add_argument("--out", default="SCALE_r16_bpe_guard.json")
     args = ap.parse_args()
@@ -106,37 +108,31 @@ def main() -> None:
         collect_sizes.append(len(rows))
         return rows
 
-    fallback = {"ran": False}
-    real_batched = B.bpe_learn_batched
-
-    def batched_spy(*a, **kw):
-        fallback["ran"] = True
-        return real_batched(*a, **kw)
-
+    B.LOCAL_MAX_TYPES = args.bound
     DataFrame.collect = spy
-    B.bpe_learn_batched = batched_spy
     rss_before = peak_rss_mb()
     t0 = time.monotonic()
     try:
-        merges_guarded = B.bpe_learn_local(
-            docs, n_merges=args.n_merges, max_types=args.bound
+        merges_guarded, path = B.bpe_train(
+            B.word_counts(docs), args.n_merges
         )
     finally:
         DataFrame.collect = real_collect
-        B.bpe_learn_batched = real_batched
     report["guarded_wall_sec"] = round(time.monotonic() - t0, 2)
-    report["fallback_engaged"] = fallback["ran"]
+    report["fallback_engaged"] = path == "batched"
     report["probe_collect_rows"] = collect_sizes[0] if collect_sizes else None
     report["max_collect_rows"] = max(collect_sizes) if collect_sizes else None
     report["driver_peak_rss_mb_before"] = round(rss_before, 1)
     report["driver_peak_rss_mb_after"] = round(peak_rss_mb(), 1)
     report["merges_guarded"] = [list(m) for m in merges_guarded]
 
-    # pin: the pure batched trainer learns the identical model
+    # pin: the in-memory path learns the identical model
+    B.LOCAL_MAX_TYPES = n_types
     t0 = time.monotonic()
-    merges_batched = real_batched(docs, n_merges=args.n_merges)
-    report["batched_wall_sec"] = round(time.monotonic() - t0, 2)
-    report["merges_identical_to_batched"] = merges_guarded == merges_batched
+    merges_local, path = B.bpe_train(B.word_counts(docs), args.n_merges)
+    assert path == "local"
+    report["local_wall_sec"] = round(time.monotonic() - t0, 2)
+    report["merges_identical_to_local"] = merges_guarded == merges_local
 
     with open(args.out, "w") as fh:
         json.dump(report, fh, indent=1, sort_keys=True)

@@ -17,6 +17,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -39,45 +40,25 @@ DEFAULT_QUERIES = [
     "q_token_topk",
 ]
 
-WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from vcf_pg_loader_spark.session import get_spark
-from vcf_pg_loader_spark.sources.tables import FIXTURE_TABLES, load_table
-from vcf_pg_loader_spark.queries import all_queries
-
-sf = %(sf)r
-spark = get_spark(app_name="scale-cpu-ab")
-for t in FIXTURE_TABLES:
-    load_table(spark, sf, t).count()
-registry = all_queries()
-out = {}
-for name in %(queries)r:
-    fn = registry[name]
-    reps = []
-    for i in range(%(reps)d):
-        spark.sparkContext.setJobDescription(f"{name} rep{i}")
-        t0 = time.perf_counter()
-        fn(spark, sf).write.format("noop").mode("overwrite").save()
-        reps.append(round(time.perf_counter() - t0, 3))
-        spark.catalog.clearCache()
-    out[name] = reps
-print("RESULT " + json.dumps(out))
-"""
-
-
 def run_at(cpus: int, sf: str, queries: list[str], reps: int) -> dict:
+    """One process at `cpus` cores: tools/qbench.py's noop-sink reps of
+    every query, read back as {query: [rep seconds]}."""
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf)
-    code = WORKER % {"repo": REPO, "sf": sf, "queries": queries, "reps": reps}
-    proc = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True
-    )
-    for line in proc.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(
-        f"worker cpus={cpus} failed:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
-    )
+    with tempfile.TemporaryDirectory() as tmp:
+        out = os.path.join(tmp, "reps.jsonl")
+        proc = subprocess.run(
+            [sys.executable, os.path.join(REPO, "tools", "qbench.py"),
+             "--reps", str(reps), "--sf", sf, "--json", out, *queries],
+            env=env, capture_output=True, text=True,
+        )
+        if proc.returncode != 0 or not os.path.exists(out):
+            raise RuntimeError(
+                f"qbench cpus={cpus} failed:\n{proc.stdout[-2000:]}\n"
+                f"{proc.stderr[-2000:]}"
+            )
+        with open(out) as fh:
+            results = json.loads(fh.readline())["results"]
+    return {name: results[name]["reps"] for name in queries}
 
 
 def med(xs: list[float]) -> float:

@@ -9,7 +9,8 @@ then runs the EXACT trainer-facing loop the engine advertises:
   1. sync-corpus        — cluster state bootstrap + BPE-packed shard
                           layout + maintained vocabulary, one epoch
                           stamp over all states
-  2. train-vocab        — corpus-pass BPE training (auto strategy)
+  2. train-vocab        — corpus-pass BPE training (in memory, or
+                          batched rounds past the driver bound)
   3. train-vocab --counts-state
                         — the no-corpus-pass retrain off the
                           maintained vocabulary

@@ -1571,27 +1571,23 @@ def cmd_sync_serve(args) -> int:
 
 
 def cmd_train_vocab(args) -> int:
-    """Learn a BPE merge table from a corpus parquet (operators/bpe.py
-    bpe_learn — word-frequency table only after the first pass) and
-    write it as a JSON artifact: the merge list in application order
-    plus a fingerprint of the training inputs, so an encode job can
-    refuse a merges file from a different corpus/parameters the same
-    way maintained state refuses mismatched fingerprints.  With
-    --encode-out, also materialize the tokenized corpus via the
-    Arrow rank-priority encoder (one pass, O(unique words)).
+    """Learn a BPE merge table (operators/bpe.py bpe_train) and write
+    it as a JSON artifact: the merge list in application order plus a
+    fingerprint of the training inputs, so an encode job can refuse a
+    merges file from a different corpus/parameters the same way
+    maintained state refuses mismatched fingerprints.  With
+    --encode-out, also materialize the tokenized corpus via the Arrow
+    rank-priority encoder (one pass, O(unique words)).
 
-    --strategy picks the trainer (all three sequences are pinned
-    identical in tests/test_bpe.py): `local` (default) collapses the
-    corpus to (word, count) distributed — the only corpus-scale step —
-    and learns the merges in-memory on the vocabulary-sized table
-    (production vocab sizes: 32k merges in seconds); `batched` keeps
-    every round on Spark but merges a provably-safe disjoint batch per
-    round; `sequential` is the one-merge-per-round shape.
+    --corpus collapses the corpus to (word, count) distributed — the
+    only corpus-scale step — and the trainer learns the merges in
+    memory on that vocabulary-sized table, or in batched Spark rounds
+    past its driver bound; the artifact's `strategy` records which
+    (`local` or `batched`; the merges are identical either way).
 
     --counts-state trains from a MAINTAINED vocabulary (streaming/
     vocab.py VocabSink, kept current by sync-corpus --vocab-state)
-    instead of a corpus pass: the collect is the vocabulary-sized
-    (word, n) table, the trainer is the in-memory exact path, and the
+    instead of a corpus pass, under the same driver bound, and the
     artifact's identity is the state's corpus-epoch stamp — so a merges
     file trained this way still refuses a mismatched corpus downstream.
     Vocab refresh + retrain after a snapshot sync is then O(|delta| +
@@ -1601,11 +1597,11 @@ def cmd_train_vocab(args) -> int:
     from vcf_pg_loader_spark.functions.hashing import h60
     from vcf_pg_loader_spark.operators.bpe import (
         bpe_encode_arrow,
-        bpe_learn,
-        bpe_learn_batched,
-        bpe_learn_from_counts,
-        bpe_learn_local,
+        bpe_train,
+        tokenizer_fingerprint,
+        word_counts,
     )
+    from vcf_pg_loader_spark.operators.tokenids import alphabet_from_counts
 
     counts_state = getattr(args, "counts_state", None)
     if not counts_state and not args.corpus:
@@ -1617,7 +1613,6 @@ def cmd_train_vocab(args) -> int:
               file=sys.stderr)
         return 2
     spark = _spark()
-    strategy = getattr(args, "strategy", "local")
     mode = getattr(args, "mode", "words") or "words"
     max_chars = getattr(args, "max_chars", None)
     seg_kw = {"mode": mode}
@@ -1634,20 +1629,7 @@ def cmd_train_vocab(args) -> int:
         # artifact (round-13 advice item 1)
         sink._validate_params()
         counts_df = sink.counts(spark)
-        if args.min_count > 1:
-            counts_df = counts_df.filter(F.col("n") >= args.min_count)
-        wc = [(r.w, r.n) for r in counts_df.collect()]
-        merges = bpe_learn_from_counts(wc, args.n_merges, mode)
-        from vcf_pg_loader_spark.operators.tokenids import (
-            alphabet_from_counts,
-        )
-
-        # alphabet from the UNFILTERED maintained counts: min_count
-        # bounds the trainer's collect, not the id space — a character
-        # that only occurs in rare types still needs an id
-        alphabet = alphabet_from_counts(sink.counts(spark), mode)
         stamp = sink.read_epoch() or {}
-        strategy = "counts-state"
         fp_val = stamp.get("epoch_fp")
         n_docs = stamp.get("n_docs")
         if fp_val is None:
@@ -1655,8 +1637,7 @@ def cmd_train_vocab(args) -> int:
             # the counts table itself so the artifact still has an
             # identity a downstream consumer can refuse on
             fp_val = int(
-                sink.counts(spark)
-                .agg(
+                counts_df.agg(
                     F.coalesce(
                         F.bit_xor(
                             h60(
@@ -1675,69 +1656,7 @@ def cmd_train_vocab(args) -> int:
             )
     else:
         docs = spark.read.parquet(args.corpus).select("doc_id", "text")
-        if strategy in ("local", "auto"):
-            # HARD driver bound (round-12 verdict item 6): the local
-            # trainer collects the full type table, so count it first
-            # (one cheap distributed agg) and fall back to the
-            # fully-distributed exact `batched` trainer past the bound
-            # instead of trusting min_count to have been set.  All
-            # three strategies produce the identical merge sequence,
-            # so the fallback changes cost, never the model.
-            from vcf_pg_loader_spark.operators.bpe import word_counts
-
-            wc_probe = word_counts(docs, **seg_kw)
-            if args.min_count > 1:
-                wc_probe = wc_probe.filter(F.col("n") >= args.min_count)
-            n_types = wc_probe.count()
-            bound = args.local_max_types
-            if n_types > bound:
-                print(
-                    f"type table has {n_types} rows > --local-max-types "
-                    f"{bound}; falling back to the distributed exact "
-                    f"'batched' trainer (identical merges)",
-                    file=sys.stderr,
-                )
-                strategy = "batched"
-                merges = bpe_learn_batched(
-                    docs,
-                    n_merges=args.n_merges,
-                    min_count=args.min_count,
-                    **seg_kw,
-                )
-            else:
-                strategy = "local"
-                merges = bpe_learn_local(
-                    docs,
-                    n_merges=args.n_merges,
-                    min_count=args.min_count,
-                    # the CLI already counted the type table against
-                    # --local-max-types; align the in-function guard
-                    # with that bound instead of the env default
-                    max_types=bound,
-                    **seg_kw,
-                )
-        elif strategy == "batched":
-            merges = bpe_learn_batched(
-                docs,
-                n_merges=args.n_merges,
-                min_count=args.min_count,
-                **seg_kw,
-            )
-        else:
-            if args.min_count > 1:
-                print(
-                    "--strategy sequential has no word-frequency floor; "
-                    "drop --min-count or pick another strategy",
-                    file=sys.stderr,
-                )
-                return 2
-            merges = bpe_learn(docs, n_merges=args.n_merges, **seg_kw)
-        from vcf_pg_loader_spark.operators.bpe import word_counts
-        from vcf_pg_loader_spark.operators.tokenids import (
-            alphabet_from_counts,
-        )
-
-        alphabet = alphabet_from_counts(word_counts(docs, **seg_kw), mode)
+        counts_df = word_counts(docs, **seg_kw)
         fp = docs.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.coalesce(
@@ -1754,7 +1673,15 @@ def cmd_train_vocab(args) -> int:
             ).alias("fp"),
         ).collect()[0]
         fp_val, n_docs = int(fp.fp), int(fp.n_docs)
-    from vcf_pg_loader_spark.operators.bpe import tokenizer_fingerprint
+    # alphabet from the UNFILTERED counts: min_count bounds the
+    # trainer's table, not the id space — a character that only occurs
+    # in rare types still needs an id
+    alphabet = alphabet_from_counts(counts_df, mode)
+    if args.min_count > 1:
+        counts_df = counts_df.filter(F.col("n") >= args.min_count)
+    merges, strategy = bpe_train(counts_df, args.n_merges, mode)
+    if counts_state:
+        strategy = "counts-state"
 
     artifact = {
         "merges": [list(m) for m in merges],
@@ -2922,31 +2849,13 @@ def build_parser() -> argparse.ArgumentParser:
                          "state's corpus-epoch identity")
     sp.add_argument("--min-count", type=int, default=1,
                     help="word-frequency floor applied distributed-side "
-                         "before training (auto, local, batched and "
-                         "--counts-state; sequential refuses a floor "
-                         "above 1) — bounds the collected vocabulary on "
-                         "heavy singleton tails. The standard approximation, "
+                         "before training (--corpus and --counts-state) "
+                         "— bounds the trained vocabulary on heavy "
+                         "singleton tails. The standard approximation, "
                          "not exactly merge-preserving at ties; default "
                          "1 keeps training exact")
     sp.add_argument("--out", required=True, help="merges JSON path")
     sp.add_argument("--n-merges", type=int, default=64)
-    sp.add_argument("--strategy", default="auto",
-                    choices=("auto", "local", "batched", "sequential"),
-                    help="auto (default) and local both pre-count the "
-                         "type table and HARD-fall back to batched "
-                         "past --local-max-types (the driver-memory "
-                         "bound); local: distributed word-count "
-                         "collapse + in-memory exact trainer "
-                         "(production vocab sizes, 32k+ merges); "
-                         "batched: distributed rounds merging a "
-                         "provably-safe batch per round; sequential: "
-                         "one Spark round per merge. All strategies "
-                         "produce the IDENTICAL merge sequence.")
-    sp.add_argument("--local-max-types", type=int, default=2_000_000,
-                    help="type-table row bound above which auto/local "
-                         "fall back to the distributed batched "
-                         "trainer (driver-memory guard; ~100 bytes/"
-                         "row -> default ~200 MB)")
     sp.add_argument("--encode-out",
                     help="also write the tokenized corpus (Arrow "
                          "rank-priority encode) here")

@@ -918,7 +918,7 @@ def connected_components(
     # output (components labeled by their minimum member; Python min
     # and F.min agree on the numeric and string id types used here),
     # measured 7-8x faster at fixture scale.  ONE bounded collect both
-    # decides the path and fetches the edges (the bpe_learn_local
+    # decides the path and fetches the edges (the bpe_train
     # idiom): at most SMALL_CC_EDGES + 1 rows are ever collected,
     # and a small graph pays no count job and no persist.
     rows = half.limit(SMALL_CC_EDGES + 1).collect()

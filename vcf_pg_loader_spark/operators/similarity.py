@@ -453,17 +453,27 @@ def ivf_fit(
     drops out), matching the SQL twin.  The corpus prep (double cast +
     norm) is persisted so the checkpoint actions and the final search
     scan it once; the caller owns the cache lifetime (bench.py
-    clearCache()s per query).
+    clearCache()s per query).  A caller that must release what the fit
+    holds persists the prep itself and calls :func:`_ivf_fit_prepped`.
     """
     from pyspark.storagelevel import StorageLevel
 
     from vcf_pg_loader_spark.operators._parallel import ensure_min_parallelism
 
-    if n_iter < 1:
-        raise ValueError("ivf_fit needs n_iter >= 1 (assignment rounds)")
     vecs = _prep_vectors(
         ensure_min_parallelism(corpus), id_col, vec_col, kernel
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    return _ivf_fit_prepped(vecs, k_centroids, n_iter, kernel)
+
+
+def _ivf_fit_prepped(
+    vecs: DataFrame, k_centroids: int, n_iter: int, kernel: str
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`ivf_fit` over prepped (vid, vec, vv) vectors the caller
+    has cached.  With n_iter > 1 the returned centroids are a local
+    checkpoint, whose blocks the caller releases."""
+    if n_iter < 1:
+        raise ValueError("ivf_fit needs n_iter >= 1 (assignment rounds)")
     cents = (
         vecs.orderBy("vid")
         .limit(k_centroids)

@@ -4162,12 +4162,10 @@ SHARD_BPE_MERGES = 4
 
 def q_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard manifest with per-doc lengths in TOKENIZER space: learn
-    SHARD_BPE_MERGES merges (bpe_learn_local — the default
-    `train-vocab` trainer; merges pinned identical to the sequential
-    and batched strategies in tests/test_bpe.py, and the cheaper
-    equal-output path per the round-14 chars-query precedent —
-    q_bpe_pairs_roundk keeps the batched trainer oracled),
-    count each document's BPE tokens via the Arrow encoder, and pack
+    SHARD_BPE_MERGES merges (bpe_train, the `train-vocab` trainer:
+    at this table size its in-memory path, pinned merge-identical to
+    its batched fallback and to the Python reference in
+    tests/test_bpe.py), count each document's BPE tokens via the Arrow encoder, and pack
     through the same shard_layout_from_lengths seam the maintenance
     sink uses.  The DuckDB twin re-derives the identical merges with
     chained argmax CTEs, so the oracle covers learner + encoder +
@@ -4176,7 +4174,7 @@ def q_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vcf_pg_loader_spark.operators import shards as SHD
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs), SHARD_BPE_MERGES)
     lengths = B.bpe_token_lengths(docs, merges)
     base = SHD.shard_base(docs, lengths=lengths)
     return SHD.shard_manifest(SHD.shard_layout_from_lengths(base))
@@ -4269,7 +4267,7 @@ def q_train_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vcf_pg_loader_spark.operators import shards as SHD
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs), SHARD_BPE_MERGES)
     # enc feeds TWO sequential consumers (the lengths->layout->spans
     # chain, then the stream-assembly join): persist it or the Arrow
     # encode — the Python-boundary pass, the dominant cost here — runs
@@ -4357,8 +4355,9 @@ def q_train_sequence_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
-    alphabet = alphabet_from_counts(B.word_counts(docs), "words")
+    wc = B.word_counts(docs)
+    merges, _ = B.bpe_train(wc, SHARD_BPE_MERGES)
+    alphabet = alphabet_from_counts(wc, "words")
     # persist: two sequential consumers of the Arrow encode — see
     # q_train_sequences (optimization round 15, guide §4.1/§5)
     enc = B.bpe_encode_doc_arrow(docs, merges).persist(
@@ -4452,7 +4451,7 @@ def q_train_sequences_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs), SHARD_BPE_MERGES)
     # persist: two sequential consumers of the Arrow encode — see
     # q_train_sequences (optimization round 15, guide §4.1/§5)
     enc = B.bpe_encode_doc_arrow(docs, merges).persist(
@@ -4529,7 +4528,7 @@ def q_seq_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs), SHARD_BPE_MERGES)
     # persist: two sequential consumers of the Arrow encode — see
     # q_train_sequences (optimization round 15, guide §4.1/§5)
     enc = B.bpe_encode_doc_arrow(docs, merges).persist(
@@ -4640,7 +4639,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vcf_pg_loader_spark.operators import bpe as B
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs), SHARD_BPE_MERGES)
     enc = B.bpe_encode_doc_arrow(docs, merges)
     return enc.select(
         "doc_id",
@@ -4687,7 +4686,7 @@ FROM documents d LEFT JOIN flat ON flat.doc_id = d.doc_id"""
 # get right, because chunks cross word boundaries and spaces are
 # ordinary symbols; the DuckDB twin must agree on every chunk cut and
 # every merge anyway.  CJK behavior itself (bounded encode on a
-# space-free corpus, strategy pinning) is pytest-pinned in
+# space-free corpus, trainer-path pinning) is pytest-pinned in
 # tests/test_bpe.py on a synthetic no-space fixture.
 CHARS_BPE_MERGES = 4
 CHARS_MAX = 12
@@ -4702,22 +4701,21 @@ def q_bpe_encode_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces_fp) with pieces_fp the md5 of the unit-separator-joined
     stream — so the twin must match the token stream byte-for-byte.
 
-    Trainer choice (round 14, verdict item 5): `bpe_learn_local` — the
-    distributed (chunk, count) collapse plus the in-memory exact
-    trainer — produces the IDENTICAL merge sequence (all strategies
-    pinned equal in tests/test_bpe.py) at ~1/3 the wall of the
-    per-round `batched` trainer here: the chars chunk type table at
-    sf0.1 is 57k types over 126k chunk occurrences (55% global
-    duplication but only ~9.5% per-task encode-cache hits —
-    duplication lives ACROSS tasks, so the count collapse is the
-    right place to exploit it, not the per-task encode cache).  This
-    is also what `train-vocab --strategy auto` picks for a table this
-    size."""
+    Trainer (round 14, verdict item 5): bpe_train over the distributed
+    (chunk, count) collapse; the chars chunk type table at sf0.1 is 57k
+    types over 126k chunk occurrences, well inside its in-memory bound,
+    where the in-memory path learns the identical merges at ~1/3 the
+    wall of batched rounds (55% global duplication but only ~9.5%
+    per-task encode-cache hits — duplication lives ACROSS tasks, so
+    the count collapse is the right place to exploit it, not the
+    per-task encode cache)."""
     from vcf_pg_loader_spark.operators import bpe as B
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(
-        docs, n_merges=CHARS_BPE_MERGES, mode="chars", max_chars=CHARS_MAX
+    merges, _ = B.bpe_train(
+        B.word_counts(docs, mode="chars", max_chars=CHARS_MAX),
+        CHARS_BPE_MERGES,
+        "chars",
     )
     enc = B.bpe_encode_doc_arrow(
         docs, merges, mode="chars", max_chars=CHARS_MAX
@@ -4737,15 +4735,15 @@ def q_training_shards_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard_layout_from_lengths seam the maintenance sink uses with
     TrainingShardSink(token_mode="chars").  The DuckDB twin
     re-chunks, re-derives the merges, folds per chunk, and sums per
-    document in SQL.  Trainer: `bpe_learn_local`, identical merges at
-    ~1/3 the wall of the batched trainer on the chars type table —
-    see q_bpe_encode_chars (round 14, verdict item 5)."""
+    document in SQL.  Trainer: bpe_train, as in q_bpe_encode_chars."""
     from vcf_pg_loader_spark.operators import bpe as B
     from vcf_pg_loader_spark.operators import shards as SHD
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(
-        docs, n_merges=CHARS_BPE_MERGES, mode="chars", max_chars=CHARS_MAX
+    merges, _ = B.bpe_train(
+        B.word_counts(docs, mode="chars", max_chars=CHARS_MAX),
+        CHARS_BPE_MERGES,
+        "chars",
     )
     lengths = B.bpe_token_lengths(
         docs, merges, mode="chars", max_chars=CHARS_MAX
@@ -4839,8 +4837,9 @@ def q_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
-    alphabet = alphabet_from_counts(B.word_counts(docs), "words")
+    wc = B.word_counts(docs)
+    merges, _ = B.bpe_train(wc, SHARD_BPE_MERGES)
+    alphabet = alphabet_from_counts(wc, "words")
     pieces = vocab_pieces(alphabet, merges)
     ids = piece_ids(alphabet, merges)
     rows = [
@@ -5621,7 +5620,7 @@ def q_seq_decontam_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     docs_all = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs_all, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs_all), SHARD_BPE_MERGES)
     split = SP.assign_split(docs_all, "doc_id", SPLIT_WEIGHTS)
     train = split.filter(F.col("split") == "train").select(
         "doc_id", "text"
@@ -6180,7 +6179,7 @@ def q_vocab_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vcf_pg_loader_spark.operators import bpe as B
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_local(docs, n_merges=SHARD_BPE_MERGES)
+    merges, _ = B.bpe_train(B.word_counts(docs), SHARD_BPE_MERGES)
     lengths = B.bpe_token_lengths(docs, merges)
     chars = docs.select(
         "doc_id",
@@ -6225,14 +6224,14 @@ GROUP BY ch.source
 # trainer's iterated argmax is pytest-pinned against a pure-Python BPE
 # (tests/test_bpe.py) — the documented weaker check.  Round 11 adds the
 # oracled surface AROUND the trainer: the pair statistics the first
-# merge consumes (end-of-word marker included, exactly bpe_learn's
+# merge consumes (end-of-word marker included, exactly the trainer's
 # iteration-0 frame) and the coverage curve a vocab-size decision reads.
 # --------------------------------------------------------------------------
 BPE_PAIRS_TOP = 20
 
 
 def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bpe_learn's iteration-0 pair counts: adjacent symbol pairs over
+    """The trainer's iteration-0 pair counts: adjacent symbol pairs over
     (chars + '</w>') weighted by word frequency — the exact frame whose
     argmax becomes the first merge.  Alphabet²-sized; the orderBy/limit
     compiles to TakeOrderedAndProject."""
@@ -6277,18 +6276,18 @@ BPE_ROUNDK = 2  # merges applied before the pinned mid-training recount
 
 
 def q_bpe_pairs_roundk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bpe_learn's pair counts AFTER the first BPE_ROUNDK merges — the
+    """The trainer's pair counts AFTER the first BPE_ROUNDK merges — the
     mid-training pin (round-11 verdict item 2): it validates the whole
     loop invariant end-to-end (argmax selection incl. tie-breaks,
     greedy left-to-right application, recount) where q_bpe_pairs only
-    pins round 0.  The merges come from bpe_learn_batched (pinned ==
-    sequential in tests/test_bpe.py); the DuckDB twin re-derives the
-    same merges with chained argmax CTEs and list_reduce folds."""
+    pins round 0.  The merges come from bpe_train; the DuckDB twin
+    re-derives the same merges with chained argmax CTEs and list_reduce
+    folds."""
     from vcf_pg_loader_spark.operators import bpe as B
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = B.bpe_learn_batched(docs, n_merges=BPE_ROUNDK)
     wc = B.word_counts(docs)
+    merges, _ = B.bpe_train(wc, BPE_ROUNDK)
     sym = B._initial_symbols(F.col("w"))
     for left, right in merges:
         sym = B._apply_merge(sym, left, right)

@@ -495,6 +495,9 @@ class SemDeDupIngestSink(ParquetUpsertSink):
     # -- exactly-once apply ------------------------------------------------
     def _apply(self, batch_df: DataFrame, batch_id: int, held: list) -> int:
         from vcf_pg_loader_spark.operators import similarity as S
+        from vcf_pg_loader_spark.operators._parallel import (
+            ensure_min_parallelism,
+        )
         from vcf_pg_loader_spark.streaming.retract import (
             _edges_without,
             _without,
@@ -521,15 +524,23 @@ class SemDeDupIngestSink(ParquetUpsertSink):
         cents = self._table(spark, "centroids")
         bootstrap = cents is None
         if bootstrap:
-            # bootstrap: first batch fits the (frozen) routing table
-            cents, assigned = S.ivf_fit(
-                batch,
-                self.k_centroids,
-                self.n_iter,
-                id_col=self.id_col,
-                vec_col=self.vec_col,
-                kernel="exact",
+            # bootstrap: first batch fits the (frozen) routing table;
+            # the prepped vectors and the fitted centroids' checkpoint
+            # are released with the apply
+            vecs = _held(
+                S._prep_vectors(
+                    ensure_min_parallelism(batch),
+                    self.id_col,
+                    self.vec_col,
+                    "exact",
+                ),
+                held,
             )
+            cents, assigned = S._ivf_fit_prepped(
+                vecs, self.k_centroids, self.n_iter, "exact"
+            )
+            if self.n_iter > 1:
+                held.append(lambda: D.release_checkpoint(cents))
         else:
             assigned = S.ivf_assign(
                 batch, cents, self.id_col, self.vec_col, kernel="exact"
