@@ -8,6 +8,9 @@ the driver stores only a bounded tail of stdout and failed to parse
 round 4's 87-query line (`parsed: null` despite rc=0).  The full
 per-query timing map, per-query errors, parse-throughput detail, and the
 skew-join rehearsal metrics are written to BENCH_DETAIL.json instead.
+Every timed frame is a run of the query runner (vcf_pg_loader_spark/
+runner.py); each query's cold run record, build and execute apart with
+their jobs and stages, is `queries.<name>.cold_run` there.
 """
 
 from __future__ import annotations
@@ -19,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from vcf_pg_loader_spark import runner  # noqa: E402
 
 _TOP_N_IN_CONTRACT_LINE = 8
 
@@ -106,12 +111,14 @@ def skew_rehearsal(spark, sf_dir: str) -> dict:
             "salted": lambda: salted_join(big, small, ["k"]),
         }
         for name, build in variants.items():
-            t0 = time.perf_counter()
-            build().agg(F.sum("l_quantity"), F.sum("w")).collect()
-            wall = time.perf_counter() - t0
+            rec, _ = runner.run(
+                spark,
+                lambda: build().agg(F.sum("l_quantity"), F.sum("w")),
+                lambda df: df.collect(),
+            )
             max_sec, max_rows = _drain_task_metrics(build().select("k"))
             out[name] = {
-                "wall_sec": round(wall, 3),
+                "wall_sec": round(runner.seconds(rec), 3),
                 "max_task_drain_sec": round(max_sec, 3),
                 "max_task_rows": max_rows,
             }
@@ -139,7 +146,9 @@ def scaling_curve(spark, sf_dir: str, factors=(1, 2)) -> dict:
     """
     import shutil
     import tempfile
+    from functools import reduce
 
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from vcf_pg_loader_spark.queries import core as QC
@@ -220,24 +229,17 @@ def scaling_curve(spark, sf_dir: str, factors=(1, 2)) -> dict:
                         "props",
                     )
                 )
-            du, eu = d_parts[0], e_parts[0]
-            for p in d_parts[1:]:
-                du = du.unionByName(p)
-            for p in e_parts[1:]:
-                eu = eu.unionByName(p)
-            du.write.parquet(os.path.join(d, "documents.parquet"))
-            eu.write.parquet(os.path.join(d, "events.parquet"))
+            for table, parts in (("documents", d_parts), ("events", e_parts)):
+                reduce(DataFrame.unionByName, parts).write.parquet(
+                    os.path.join(d, f"{table}.parquet")
+                )
             dirs[f] = d
         for name, fn in headline:
             times: dict[str, float] = {}
             for f in factors:
-                best = None
-                for _ in range(2):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    fn(spark, dirs[f]).count()
-                    dt = time.perf_counter() - t0
-                    best = dt if best is None or dt < best else best
+                best, _ = runner.best_of_two(
+                    spark, lambda: fn(spark, dirs[f]), runner.count
+                )
                 times[str(f)] = round(best, 3)
             lo, hi = times[str(factors[0])], times[str(factors[-1])]
             entry = {
@@ -315,15 +317,9 @@ def served_paths(spark, sf_dir: str) -> dict:
         "q_dataset_card_retract",
     ):
         try:
-            fn = registry[name]
-            fn(spark, sf_dir).count()  # ensure built + warm
-            best = None
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
+            build = lambda: registry[name](spark, sf_dir)  # noqa: E731
+            runner.run(spark, build, runner.count)  # ensure built + warm
+            best, _ = runner.best_of_two(spark, build, runner.count)
             out[name] = {"serve_sec": round(best, 3)}
         except Exception as exc:  # pragma: no cover - defensive bench path
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
@@ -354,16 +350,14 @@ def ivf_kernel_compare(spark, sf_dir: str) -> dict:
     out: dict = {}
     try:
         for kernel in ("exact", "fast"):
-            best = None
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                S.ivf_topk(
+            best, _ = runner.best_of_two(
+                spark,
+                lambda: S.ivf_topk(
                     emb, queries, TOP_K, IVF_CENTROIDS, IVF_ITER, IVF_NPROBE,
                     kernel=kernel,
-                ).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
+                ),
+                runner.count,
+            )
             out[kernel] = round(best, 3)
         if out.get("fast"):
             out["exact_over_fast"] = round(out["exact"] / out["fast"], 2)
@@ -410,38 +404,46 @@ def ann_aging_evidence(spark, sf_dir: str) -> dict:
 
 
 def _inode_size_map(table_dir: str) -> dict:
+    """partition dir -> {data file: (inode, size)}"""
     m = {}
     for d in os.listdir(table_dir):
         p = os.path.join(table_dir, d)
         if "=" in d and os.path.isdir(p):
-            m[d] = {
-                f: (
-                    os.stat(os.path.join(p, f)).st_ino,
-                    os.stat(os.path.join(p, f)).st_size,
-                )
-                for f in os.listdir(p)
-                if not f.startswith(("_", "."))
-            }
+            files = [f for f in os.listdir(p) if not f.startswith(("_", "."))]
+            stats = {f: os.stat(os.path.join(p, f)) for f in files}
+            m[d] = {f: (st.st_ino, st.st_size) for f, st in stats.items()}
     return m
 
 
-def _pruned_split(before: dict, after: dict, wall: float) -> dict:
-    linked_b = rewritten_b = 0
-    linked_d = rewritten_d = 0
-    for d, files in after.items():
-        if before.get(d) == files:
-            linked_d += 1
-            linked_b += sum(sz for _, sz in files.values())
-        else:
-            rewritten_d += 1
-            rewritten_b += sum(sz for _, sz in files.values())
-    return {
-        "dirs_linked": linked_d,
-        "dirs_rewritten": rewritten_d,
-        "bytes_linked": linked_b,
-        "bytes_rewritten": rewritten_b,
-        "delta_wall_sec": round(wall, 3),
-    }
+def _revised(rows, col: str, value):
+    """The Z-set delta that sets `col` of `rows` to `value`: the revised
+    rows inserted, the current ones retracted."""
+    from pyspark.sql import functions as F
+
+    from vcf_pg_loader_spark.operators.ivm import MULT
+
+    return rows.withColumn(col, value).withColumn(
+        MULT, F.lit(1).cast("bigint")
+    ).unionByName(rows.withColumn(MULT, F.lit(-1).cast("bigint")))
+
+
+def _pruned_split(apply, delta, table_dir: str) -> dict:
+    """Apply one maintenance delta and split the table's partition
+    directories into those the swap linked unchanged and those it
+    rewrote, with their bytes and the apply's wall seconds."""
+    before = _inode_size_map(table_dir)
+    t0 = time.perf_counter()
+    apply(delta)
+    wall = time.perf_counter() - t0
+    split = dict.fromkeys(
+        ("dirs_linked", "dirs_rewritten", "bytes_linked", "bytes_rewritten"), 0
+    )
+    for d, files in _inode_size_map(table_dir).items():
+        kind = "linked" if before.get(d) == files else "rewritten"
+        split[f"dirs_{kind}"] += 1
+        split[f"bytes_{kind}"] += sum(sz for _, sz in files.values())
+    split["delta_wall_sec"] = round(wall, 3)
+    return split
 
 
 def pruned_maintenance_evidence(spark, sf_dir: str) -> dict:
@@ -463,34 +465,52 @@ def pruned_maintenance_evidence(spark, sf_dir: str) -> dict:
     try:
         from pyspark.sql import functions as F
 
-        from vcf_pg_loader_spark.operators.ivm import MULT
         from vcf_pg_loader_spark.sources.tables import load_table
+        from vcf_pg_loader_spark.sources.vector_index import VectorIndex
         from vcf_pg_loader_spark.streaming.dedup_ingest import (
             SemDeDupIngestSink,
         )
-        from vcf_pg_loader_spark.streaming.retract import WinnowIndexSink
+        from vcf_pg_loader_spark.streaming.retract import (
+            DedupClusterMaintSink,
+            WinnowIndexSink,
+        )
+        from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
 
-        # -- cell-partitioned vectors --------------------------------
+        def sink_delta(sink, boot, delta, table: str) -> dict:
+            sink.apply_batch(boot, 0)
+            return _pruned_split(
+                lambda d: sink.apply_batch(d, 1),
+                delta,
+                os.path.join(sink.target, table),
+            )
+
         vecs = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        vsink = SemDeDupIngestSink(os.path.join(root, "v"), k_centroids=64)
-        vsink.apply_batch(vecs, 0)
-        vdir = os.path.join(vsink.target, "vectors")
-        before = _inode_size_map(vdir)
-        victims = vecs.limit(5)
-        vdelta = victims.withColumn(
-            "embedding", F.reverse(F.col("embedding"))
-        ).withColumn(MULT, F.lit(1).cast("bigint")).unionByName(
-            victims.withColumn(MULT, F.lit(-1).cast("bigint"))
+        vec_delta = _revised(
+            vecs.limit(5), "embedding", F.reverse(F.col("embedding"))
         )
-        t0 = time.perf_counter()
-        vsink.apply_batch(vdelta, 1)
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .limit(2000)
+        )
+        revised_text = F.concat(F.col("text"), F.lit(" revised"))
+        # orderBy before limit: an unordered limit(1) is evaluated
+        # independently in the two union branches of the delta and can
+        # pick two DIFFERENT documents, turning the claimed 1-doc delta
+        # into an update+delete pair (round-11 advice item 5)
+        doc_delta = _revised(
+            docs.orderBy("doc_id").limit(1), "text", revised_text
+        )
+
+        # -- cell-partitioned vectors --------------------------------
         out["vectors_cell_partitioned"] = {
             "delta_vecs": 5,
             "cells": 64,
-            **_pruned_split(
-                before, _inode_size_map(vdir), time.perf_counter() - t0
+            **sink_delta(
+                SemDeDupIngestSink(os.path.join(root, "v"), k_centroids=64),
+                vecs, vec_delta, "vectors",
             ),
         }
 
@@ -498,105 +518,45 @@ def pruned_maintenance_evidence(spark, sf_dir: str) -> dict:
         class WideWinnow(WinnowIndexSink):
             N_FP_BUCKETS = 1024
 
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .limit(2000)
-        )
-        wsink = WideWinnow(os.path.join(root, "w"))
-        wsink.apply_batch(docs, 0)
-        wdir = os.path.join(wsink.target, "fps")
-        before = _inode_size_map(wdir)
-        # orderBy before limit: an unordered limit(1) is evaluated
-        # independently in the two union branches below and can pick
-        # two DIFFERENT documents, turning the claimed 1-doc delta into
-        # an update+delete pair (round-11 advice item 5)
-        victim = docs.orderBy("doc_id").limit(1)
-        wdelta = victim.withColumn(
-            "text", F.concat(F.col("text"), F.lit(" revised"))
-        ).withColumn(MULT, F.lit(1).cast("bigint")).unionByName(
-            victim.withColumn(MULT, F.lit(-1).cast("bigint"))
-        )
-        t0 = time.perf_counter()
-        wsink.apply_batch(wdelta, 1)
         out["postings_bucket_partitioned"] = {
             "delta_docs": 1,
             "buckets": 1024,
-            **_pruned_split(
-                before, _inode_size_map(wdir), time.perf_counter() - t0
+            **sink_delta(
+                WideWinnow(os.path.join(root, "w")), docs, doc_delta, "fps"
             ),
         }
 
         # -- id-bucketed corpus (the headline: document TEXT no longer
         # rewrites whole per batch) ------------------------------------
-        from vcf_pg_loader_spark.streaming.retract import (
-            DedupClusterMaintSink,
-        )
-
-        csink = DedupClusterMaintSink(os.path.join(root, "c"))
-        csink.apply_batch(docs, 0)
-        cdir = os.path.join(csink.target, "corpus")
-        before = _inode_size_map(cdir)
-        victims = docs.limit(5)
-        cdelta = victims.withColumn(
-            "text", F.concat(F.col("text"), F.lit(" revised"))
-        ).withColumn(MULT, F.lit(1).cast("bigint")).unionByName(
-            victims.withColumn(MULT, F.lit(-1).cast("bigint"))
-        )
-        t0 = time.perf_counter()
-        csink.apply_batch(cdelta, 1)
         out["corpus_id_bucketed"] = {
             "delta_docs": 5,
             "buckets": 64,
-            **_pruned_split(
-                before, _inode_size_map(cdir), time.perf_counter() - t0
+            **sink_delta(
+                DedupClusterMaintSink(os.path.join(root, "c")),
+                docs,
+                _revised(docs.limit(5), "text", revised_text),
+                "corpus",
             ),
         }
 
         # -- shard-partitioned training layout -------------------------
-        from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
-
-        ssink = TrainingShardSink(os.path.join(root, "s"))
-        ssink.apply_batch(docs, 0)
-        sdir = os.path.join(ssink.target, "layout")
-        before = _inode_size_map(sdir)
-        victim = docs.orderBy("doc_id").limit(1)  # deterministic (see above)
-        sdelta = victim.withColumn(
-            "text", F.concat(F.col("text"), F.lit(" revised"))
-        ).withColumn(MULT, F.lit(1).cast("bigint")).unionByName(
-            victim.withColumn(MULT, F.lit(-1).cast("bigint"))
-        )
-        t0 = time.perf_counter()
-        ssink.apply_batch(sdelta, 1)
         out["shards_layout_partitioned"] = {
             "delta_docs": 1,
             "shards": 16,
-            **_pruned_split(
-                before, _inode_size_map(sdir), time.perf_counter() - t0
+            **sink_delta(
+                TrainingShardSink(os.path.join(root, "s")),
+                docs, doc_delta, "layout",
             ),
         }
 
         # -- cell-pruned VectorIndex delta (apply_zset) -----------------
-        from vcf_pg_loader_spark.operators.ivm import MULT as _M
-        from vcf_pg_loader_spark.sources.vector_index import VectorIndex
-
         idx = VectorIndex(spark, os.path.join(root, "ix"))
         idx.build(vecs, k_centroids=64, m=4)
-        ixdir = os.path.join(idx.root, "vectors")
-        before = _inode_size_map(ixdir)
-        vv = vecs.limit(5)
-        ixdelta = vv.withColumn(
-            "embedding", F.reverse(F.col("embedding"))
-        ).withColumn(_M, F.lit(1).cast("bigint")).unionByName(
-            vv.withColumn(_M, F.lit(-1).cast("bigint"))
-        )
-        t0 = time.perf_counter()
-        idx.apply_zset(ixdelta)
         out["index_cell_pruned"] = {
             "delta_vecs": 5,
             "cells": 64,
             **_pruned_split(
-                before, _inode_size_map(ixdir), time.perf_counter() - t0
+                idx.apply_zset, vec_delta, os.path.join(idx.root, "vectors")
             ),
         }
     except Exception as exc:  # pragma: no cover - defensive bench path
@@ -633,21 +593,24 @@ def bpe_encode_throughput(spark, sf_dir: str) -> dict:
     from vcf_pg_loader_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t0 = time.perf_counter()
-    merges, _ = bpe_train(word_counts(docs), 64)
-    learn_sec = time.perf_counter() - t0
-    enc = bpe_encode_doc_arrow(docs, merges)
-    agg = enc.agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum(F.size("pieces")).alias("tokens"),
-    )
-    agg.collect()  # worker bring-up
-    t0 = time.perf_counter()
-    row = agg.collect()[0]
-    wall = time.perf_counter() - t0
+    with runner.phase(spark, "bpe_learn") as learn:
+        merges, _ = bpe_train(word_counts(docs), 64)
+
+    def encode():
+        return bpe_encode_doc_arrow(docs, merges).agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.sum(F.size("pieces")).alias("tokens"),
+        )
+
+    def collect(df):
+        return df.collect()
+
+    runner.run(spark, encode, collect)  # worker bring-up
+    rec, rows = runner.run(spark, encode, collect)
+    row, wall = rows[0], rec["exec_sec"]
     return {
         "merges_learned": len(merges),
-        "learn_sec": round(learn_sec, 3),
+        "learn_sec": round(learn["sec"], 3),
         "docs": int(row["docs"]),
         "tokens": int(row["tokens"]),
         "encode_sec": round(wall, 3),
@@ -758,14 +721,13 @@ def drifter_remeasures(
     for name, prev_warm, warm, ratio, excess in selected.values():
         reps = []
         for _ in range(DRIFT_REPS):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
             try:
-                registry[name](spark, sf_dir).count()
+                rec, _ = runner.run(
+                    spark, lambda: registry[name](spark, sf_dir), runner.count
+                )
             except Exception:
                 break
-            reps.append(round(time.perf_counter() - t0, 3))
-        spark.catalog.clearCache()
+            reps.append(round(runner.seconds(rec), 3))
         med = sorted(reps)[len(reps) // 2] if reps else None
         adj_prev = prev_warm * norm if prev_warm else None
         out[name] = {
@@ -795,11 +757,13 @@ def bench_control(spark, sf_dir: str, reps: int = 5) -> dict:
     q = all_queries()
     walls = []
     for _ in range(reps):
-        t0 = time.perf_counter()
+        wall = 0.0
         for name in _CONTROL_QUERIES:
-            q[name](spark, sf_dir).count()
-        walls.append(time.perf_counter() - t0)
-        spark.catalog.clearCache()
+            rec, _ = runner.run(
+                spark, lambda: q[name](spark, sf_dir), runner.count
+            )
+            wall += runner.seconds(rec)
+        walls.append(wall)
     walls.sort()
     return {
         "queries": list(_CONTROL_QUERIES),
@@ -822,121 +786,105 @@ def main() -> None:
     # capture the last committed detail BEFORE this run overwrites it
     prev_detail = _previous_detail()
 
-    # Warm the JVM + parquet footers once so per-query numbers measure the
-    # query, not session bring-up.
-    from vcf_pg_loader_spark.sources.tables import FIXTURE_TABLES, load_table
-
-    for t in FIXTURE_TABLES:
-        load_table(spark, sf_dir, t).count()
+    runner.warm(spark, sf_dir)
 
     # Each query is timed twice: `cold_sec` (first run — carries JIT /
     # codegen / compile-order noise that masquerades as regression in
-    # round-over-round diffs) and `warm_sec` (second run, caches cleared
-    # in between so it measures warm-JVM execution, not cached data).
+    # round-over-round diffs) and `warm_sec` (second run; the runner
+    # released the first run's caches, so it measures warm-JVM
+    # execution, not cached data).  Each is the run's build + execute.
     # Warm is the number doc claims should cite (tools/sync_docs.py
     # guards this); cold is what a fresh container pays and still sums
     # into the contract line's total for continuity with prior rounds.
+    # The count executes the full plan; result sizes vary, and a count
+    # avoids driver-collect skew for the large window outputs.
     timings: dict[str, dict] = {}
     errors: dict[str, str] = {}
     total = 0.0
     for name, fn in all_queries().items():
-        t0 = time.perf_counter()
+        build = lambda: fn(spark, sf_dir)  # noqa: E731
         try:
-            df = fn(spark, sf_dir)
-            n = df.count()  # full execution; result sizes vary, count
-            # avoids driver-collect skew for the large window outputs
+            cold_run, n = runner.run(spark, build, runner.count)
         except Exception as exc:  # one bad query must not zero the round
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
-        cold = time.perf_counter() - t0
+        cold = runner.seconds(cold_run)
         total += cold
-        # some operators persist multiply-consumed intermediates (LSH
-        # shingles, winnow fingerprints); drop them so cached blocks from
-        # query N never crowd executor memory for query N+1, the warm
-        # re-run, or the parse benchmarks below (round-4 parse-rate
-        # regression).
-        spark.catalog.clearCache()
         try:
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            warm = round(time.perf_counter() - t0, 3)
+            warm_run, _ = runner.run(spark, build, runner.count)
+            warm = round(runner.seconds(warm_run), 3)
         except Exception:  # warm timing is best-effort
             warm = None
-        spark.catalog.clearCache()
-        timings[name] = {"cold_sec": round(cold, 3), "warm_sec": warm}
+        timings[name] = {
+            "cold_sec": round(cold, 3),
+            "warm_sec": warm,
+            "cold_run": {
+                k: round(v, 3) if isinstance(v, float) else v
+                for k, v in cold_run.items()
+            },
+        }
         print(
             f"# {name}: {cold:.3f}s cold / {warm}s warm ({n} rows)",
             file=sys.stderr,
         )
 
+    def guarded(key: str, error_key: str, measure, fallback: dict) -> dict:
+        try:
+            out = measure()
+        except Exception as exc:
+            errors[error_key] = f"{type(exc).__name__}: {exc}"[:500]
+            out = fallback
+        print(f"# {key}: {out}", file=sys.stderr)
+        return out
+
+    from vcf_pg_loader_spark import parse_bench as PB
+
+    parse_n = int(os.environ.get("SPARK_GRAFT_PARSE_N", "2000000"))
     # VCF parse throughput (BASELINE.md row 1: reference claims 106k/s
     # single-process) — measured every round so the one directly
     # comparable reference number is tracked.  Reports the default
     # ("auto"-feature) scan and the full-featured scan separately.
-    from vcf_pg_loader_spark.parse_bench import (
-        parse_throughput,
-        parse_throughput_bgzf,
+    parse = guarded(
+        "vcf_parse", "_vcf_parse",
+        lambda: PB.parse_throughput(spark, parse_n),
+        {"variants_per_sec": None, "variants": None,
+         "rows_after_decomposition": None,
+         "full_features_variants_per_sec": None},
     )
-
-    try:
-        parse = parse_throughput(
-            spark, int(os.environ.get("SPARK_GRAFT_PARSE_N", "2000000"))
-        )
-    except Exception as exc:
-        errors["_vcf_parse"] = f"{type(exc).__name__}: {exc}"[:500]
-        parse = {"variants_per_sec": None, "variants": None,
-                 "rows_after_decomposition": None,
-                 "full_features_variants_per_sec": None}
-    print(f"# vcf_parse: {parse}", file=sys.stderr)
-
     # Same parse over ONE monolithic bgzipped file — the shape that is a
     # one-core scan on vanilla Spark; the BGZF range reader keeps it wide.
-    try:
-        parse_gz = parse_throughput_bgzf(
-            spark, int(os.environ.get("SPARK_GRAFT_PARSE_N", "2000000"))
-        )
-    except Exception as exc:
-        errors["_vcf_parse_bgzf"] = f"{type(exc).__name__}: {exc}"[:500]
-        parse_gz = {"variants_per_sec": None, "scan_tasks": None}
-    print(f"# vcf_parse_bgzf: {parse_gz}", file=sys.stderr)
-
+    parse_gz = guarded(
+        "vcf_parse_bgzf", "_vcf_parse_bgzf",
+        lambda: PB.parse_throughput_bgzf(spark, parse_n),
+        {"variants_per_sec": None, "scan_tasks": None},
+    )
     # GIAB-shaped parse (reference benchmark.py:379-447 benchmarks on a
     # GIAB v4.2.1-distribution generator): 83/16/1 SNP/indel/multiallelic
     # mix with long callset INFO strings — the shape that stresses the
     # normalizer and INFO tokenizer, reported beside the uniform rate.
-    from vcf_pg_loader_spark.parse_bench import parse_throughput_giab
+    parse_giab = guarded(
+        "vcf_parse_giab_shape", "_vcf_parse_giab",
+        lambda: PB.parse_throughput_giab(
+            spark, int(os.environ.get("SPARK_GRAFT_PARSE_GIAB_N", "1000000"))
+        ),
+        {"variants_per_sec": None},
+    )
 
-    try:
-        parse_giab = parse_throughput_giab(
-            spark,
-            int(os.environ.get("SPARK_GRAFT_PARSE_GIAB_N", "1000000")),
-        )
-    except Exception as exc:
-        errors["_vcf_parse_giab"] = f"{type(exc).__name__}: {exc}"[:500]
-        parse_giab = {"variants_per_sec": None}
-    print(f"# vcf_parse_giab_shape: {parse_giab}", file=sys.stderr)
-
-    skew = skew_rehearsal(spark, sf_dir)
-    print(f"# skew_join: {skew}", file=sys.stderr)
-
-    curve = scaling_curve(spark, sf_dir)
-    print(f"# scaling_curve: {curve}", file=sys.stderr)
-
-    kernels = ivf_kernel_compare(spark, sf_dir)
-    print(f"# ivf_kernels: {kernels}", file=sys.stderr)
-
-    aging = ann_aging_evidence(spark, sf_dir)
-    print(f"# ann_aging: {aging}", file=sys.stderr)
-
-    pruned = pruned_maintenance_evidence(spark, sf_dir)
-    print(f"# pruned_maintenance: {pruned}", file=sys.stderr)
-
-    served = served_paths(spark, sf_dir)
-    print(f"# served_paths: {served}", file=sys.stderr)
-
-    bpe_tp = bpe_encode_throughput(spark, sf_dir)
-    print(f"# bpe_encode: {bpe_tp}", file=sys.stderr)
+    evidence = {}
+    for key, measure in {
+        "skew_rehearsal": skew_rehearsal,
+        "scaling_curve": scaling_curve,
+        "ivf_kernel_compare": ivf_kernel_compare,
+        "ann_aging": ann_aging_evidence,
+        "pruned_maintenance": pruned_maintenance_evidence,
+        "served_paths": served_paths,
+        "bpe_encode": bpe_encode_throughput,
+    }.items():
+        evidence[key] = measure(spark, sf_dir)
+        print(f"# {key}: {evidence[key]}", file=sys.stderr)
+    skew, curve = evidence["skew_rehearsal"], evidence["scaling_curve"]
+    kernels = evidence["ivf_kernel_compare"]
 
     # control BEFORE the drifter pass: its ratio vs last round's
     # committed control normalizes drift selection (box-speed changes
@@ -971,14 +919,8 @@ def main() -> None:
         "vcf_parse": parse,
         "vcf_parse_bgzf": parse_gz,
         "vcf_parse_giab_shape": parse_giab,
-        "skew_rehearsal": skew,
-        "scaling_curve": curve,
-        "ivf_kernel_compare": kernels,
-        "ann_aging": aging,
-        "pruned_maintenance": pruned,
-        "served_paths": served,
         "drifter_remeasures": drifters,
-        "bpe_encode": bpe_tp,
+        **evidence,
     }
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"

@@ -21,6 +21,7 @@ import duckdb
 import pytest
 
 from vcf_pg_loader_spark.operators.ivm import MULT
+from vcf_pg_loader_spark.runner import phase
 
 # a near-dup chain: BASE~NEAR and NEAR~NEAR2 collide and verify,
 # BASE~NEAR2 does not, so NEAR is a cut vertex
@@ -149,19 +150,6 @@ class TestDedupClusterMaintSequence:
         assert {1, 3} <= got
 
 
-def _jobs_of(spark, fn) -> int:
-    """The Spark jobs `fn` fires, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"jobs-per-apply-{id(fn)}"
-    sc.setJobGroup(group, "jobs-per-apply guard")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _cache_state(spark):
     sc = spark.sparkContext
     return (
@@ -190,18 +178,22 @@ class TestDedupClusterMaintCost:
         re-derived its sub-plans per consumer fired 75; the bound is
         the measured count plus 20% headroom for AQE plan variation."""
         sink, seq = state
-        n_jobs = _jobs_of(
-            spark, lambda: sink.apply_batch(_batch(spark, seq[1][1]), 1)
-        )
-        assert 0 < n_jobs <= JOBS_PER_APPLY_MAX, n_jobs
+        with phase(spark, "apply") as applied:
+            sink.apply_batch(_batch(spark, seq[1][1]), 1)
+        assert 0 < applied["jobs"] <= JOBS_PER_APPLY_MAX, applied
 
-    def test_apply_releases_every_cache(self, spark, state):
+    def test_apply_releases_every_cache(self, spark, state, monkeypatch):
+        """Two more batches onto the state: nothing an apply cached or
+        checkpointed is left (a block an earlier test left may be
+        cleaned meanwhile, so the set may only shrink)."""
         sink, seq = state
         spark.catalog.clearCache()
         _empty, rdds = _cache_state(spark)
+        _pin_cached_frames(spark, monkeypatch)
         for batch_id, (label, ins, dels) in enumerate(seq[2:4], start=2):
             sink.apply_batch(_batch(spark, ins, dels), batch_id)
-            assert _cache_state(spark) == (True, rdds), label
+            empty, after = _cache_state(spark)
+            assert empty and after <= rdds, (label, after - rdds)
 
 
 class TestFunnelReportCost:
@@ -219,13 +211,9 @@ class TestFunnelReportCost:
         seq = _sequence(9)
         sink = FunnelReportSink(str(tmp_path / "funnel"), NLL_MAX)
         sink.apply_batch(_batch(spark, seq[0][1]), 0)
-        n_jobs = _jobs_of(
-            spark,
-            lambda: sink.apply_batch(
-                _batch(spark, seq[1][1], [(2, NEAR)]), 1
-            ),
-        )
-        assert 0 < n_jobs <= FUNNEL_JOBS_PER_APPLY_MAX, n_jobs
+        with phase(spark, "apply") as applied:
+            sink.apply_batch(_batch(spark, seq[1][1], [(2, NEAR)]), 1)
+        assert 0 < applied["jobs"] <= FUNNEL_JOBS_PER_APPLY_MAX, applied
 
 
 # -- every sink releases what its apply held ------------------------------

@@ -528,6 +528,27 @@ class TestIvfAnn:
         assert len(rows) == emb.count()
         assert {r.cid for r in rows} <= set(a)
 
+    def test_fit_releases_superseded_rounds(self, spark):
+        """Each Lloyd round checkpoints its centroids; the round a
+        later one supersedes is released, so a five-round fit leaves
+        the prep the caller cached and the returned checkpoint."""
+        from pyspark.storagelevel import StorageLevel
+
+        from vcf_pg_loader_spark.operators.similarity import (
+            _ivf_fit_prepped,
+            _prep_vectors,
+        )
+
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        vecs = _prep_vectors(
+            self._emb(spark), "vec_id", "embedding", "fast"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        cents, _assigned = _ivf_fit_prepped(vecs, 8, 5, "fast")
+        assert len(cents.collect()) == 8
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 2
+        vecs.unpersist()
+
     def test_fast_kernel_matches_exact_candidates(self, spark):
         """kernel="fast" (native-double dot products) must produce the
         same neighbor SETS as the oracle-exact decimal kernel on the

@@ -146,6 +146,23 @@ class TestVectorIndex:
         }
         assert served == direct  # deterministic build: byte-equal artifacts
 
+    def test_build_releases_its_fits(self, spark, emb, tmp_path, monkeypatch):
+        """Once build swaps the index in, nothing its fits cached is
+        left: not the IVF fit's vector prep or its centroid checkpoints
+        (three rounds, so one is superseded), nor the PQ subspace fits'
+        preps and checkpoints, nor the codebooks' checkpoint."""
+        from tests.test_dedup_maint import _cache_state, _pin_cached_frames
+        from vcf_pg_loader_spark.sources.vector_index import VectorIndex
+
+        spark.catalog.clearCache()
+        _empty, rdds = _cache_state(spark)
+        _pin_cached_frames(spark, monkeypatch)
+        idx = VectorIndex(spark, str(tmp_path / "vidx"))
+        idx.build(emb, k_centroids=8, m=M, k_sub=K_SUB, n_iter=3, pq=True)
+        empty, after = _cache_state(spark)
+        assert empty and after <= rdds, after - rdds
+        assert idx.search(emb.filter(F.col("vec_id") < N_Q), TOP_K).count()
+
     def test_codes_partitioned_by_cell(self, spark, emb, tmp_path):
         import glob as g
 

@@ -50,6 +50,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from vcf_pg_loader_spark import runner
     from vcf_pg_loader_spark.operators import bpe as B
     from vcf_pg_loader_spark.session import get_spark
 
@@ -88,10 +89,11 @@ def main() -> None:
         "n_merges": args.n_merges,
     }
 
-    t0 = time.monotonic()
-    n_types = B.word_counts(docs).count()
+    counted, n_types = runner.run(
+        spark, lambda: B.word_counts(docs), runner.count
+    )
     report["n_types_actual"] = n_types
-    report["type_count_sec"] = round(time.monotonic() - t0, 2)
+    report["type_count_sec"] = round(runner.seconds(counted), 2)
     assert n_types > args.bound, "corpus not adversarial enough"
 
     # instrument the collect path

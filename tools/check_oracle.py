@@ -11,6 +11,9 @@ because that is the path the driver hashes: dtype-representation bugs
 like DuckDB SUM(BIGINT) -> HUGEINT -> float64 ("5.0" vs "5") only
 surface there, never in Python-tuple fetches (round-1 lesson).
 
+Each Spark fetch is a run of the query runner: the seconds printed are
+its build + execute, and what the query cached is released.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -19,7 +22,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 import duckdb
 
@@ -83,6 +85,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from vcf_pg_loader_spark import runner
     from vcf_pg_loader_spark.session import get_spark
 
     spark = get_spark(shuffle_partitions=8)
@@ -101,10 +104,11 @@ def main() -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            spdf = sdf.toPandas()
+            rec, spdf = runner.run(
+                spark, lambda: fn(spark, sf_dir), lambda df: df.toPandas()
+            )
+            sec = runner.seconds(rec)
             scols = list(spdf.columns)
             srows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
         except Exception as e:
@@ -113,7 +117,7 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows-only): {len(srows)} rows "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"[{sec:.1f}s]")
             continue
         try:
             dpdf = con.execute(oracles[name]).df()
@@ -147,7 +151,7 @@ def main() -> int:
             print(f"  spark: {bad[0][0]}")
             print(f"  duck : {bad[0][1]}")
             continue
-        print(f"OK   {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+        print(f"OK   {name}: {len(srows)} rows [{sec:.1f}s]")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -3,7 +3,8 @@
 For each query, alternate reps between the baseline conf value (arm A)
 and the candidate value (arm B) INSIDE one session — same JVM warmth,
 same box state, so session drift cancels (the methodology the round-15
-per-operator A/Bs use).  Timing action is the noop sink (guide §1.4).
+per-operator A/Bs use).  Each rep is a query-runner run (build +
+execute) with the noop sink as its action (guide §1.4).
 
 Usage:
   python tools/confab.py --conf spark.sql.join.preferSortMergeJoin \
@@ -19,7 +20,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,33 +37,25 @@ def main() -> None:
     ap.add_argument("--json", help="append results to this JSON-lines file")
     args = ap.parse_args()
 
+    from vcf_pg_loader_spark import runner
     from vcf_pg_loader_spark.queries import all_queries
     from vcf_pg_loader_spark.session import get_spark
-    from vcf_pg_loader_spark.sources.tables import FIXTURE_TABLES, load_table
 
     spark = get_spark(app_name="confab")
     registry = all_queries()
     names = args.queries or list(registry)
-    for t in FIXTURE_TABLES:
-        load_table(spark, args.sf, t).count()
-
-    def run_once(fn, label):
-        spark.sparkContext.setJobDescription(label)
-        t0 = time.perf_counter()
-        fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-        sec = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return round(sec, 3)
+    runner.warm(spark, args.sf)
 
     med = lambda xs: sorted(xs)[len(xs) // 2]
     out, tot_a, tot_b = {}, 0.0, 0.0
     for name in names:
-        fn = registry[name]
+        build = lambda: registry[name](spark, args.sf)  # noqa: E731
         a_reps, b_reps = [], []
-        for c in range(args.cycles):
+        for _c in range(args.cycles):
             for val, reps in ((args.a, a_reps), (args.b, b_reps)):
                 spark.conf.set(args.conf, val)
-                reps.append(run_once(fn, f"{name} {args.conf}={val} c{c}"))
+                rec, _ = runner.run(spark, build, runner.noop)
+                reps.append(round(runner.seconds(rec), 3))
         spark.conf.set(args.conf, args.a)
         ma, mb = med(a_reps), med(b_reps)
         tot_a += ma

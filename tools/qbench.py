@@ -5,8 +5,9 @@ optionally dump .explain("formatted") to plans/<tag>/<query>_<suffix>.txt.
 Usage:
   python tools/qbench.py [--reps 3] [--sf DIR] [--plans TAG SUFFIX] q1 q2 ...
 
-Prints one line per query: name, per-rep wall seconds, median.  Jobs are
-labelled (setJobDescription) so the UI/event log attributes them.
+Prints one line per query: name, per-rep seconds, median.  Each rep is
+a run of the query runner (build + execute; what it cached released);
+--json also carries each rep's run record with its jobs and stages.
 """
 
 from __future__ import annotations
@@ -16,7 +17,6 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,44 +33,36 @@ def main() -> None:
     ap.add_argument("--json", help="append results to this JSON-lines file")
     args = ap.parse_args()
 
+    from vcf_pg_loader_spark import runner
     from vcf_pg_loader_spark.queries import all_queries
     from vcf_pg_loader_spark.session import get_spark
-    from vcf_pg_loader_spark.sources.tables import FIXTURE_TABLES, load_table
 
     spark = get_spark(app_name="qbench")
     registry = all_queries()
-    names = list(args.queries)
-    if names == ["ALL"]:
-        names = list(registry)
-    # warm JVM + parquet footers like bench.py does
-    for t in FIXTURE_TABLES:
-        load_table(spark, args.sf, t).count()
+    names = list(registry) if args.queries == ["ALL"] else args.queries
+    runner.warm(spark, args.sf)
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = {}
     for name in names:
-        fn = registry[name]
+        build = lambda: registry[name](spark, args.sf)  # noqa: E731
         if args.plans:
             tag, suffix = args.plans
             pdir = os.path.join(repo, "plans", tag)
             os.makedirs(pdir, exist_ok=True)
             buf = io.StringIO()
             with redirect_stdout(buf):
-                fn(spark, args.sf).explain(mode="formatted")
+                runner.run(
+                    spark, build, lambda df: df.explain(mode="formatted")
+                )
             with open(os.path.join(pdir, f"{name}_{suffix}.txt"), "w") as fh:
                 fh.write(buf.getvalue())
-            spark.catalog.clearCache()
-        reps = []
-        for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"{name} rep{i}")
-            t0 = time.perf_counter()
-            (fn(spark, args.sf).write.format("noop")
-             .mode("overwrite").save())
-            reps.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(None)
+        runs = [
+            runner.run(spark, build, runner.noop)[0] for _ in range(args.reps)
+        ]
+        reps = [round(runner.seconds(r), 3) for r in runs]
         med = sorted(reps)[len(reps) // 2] if reps else None
-        out[name] = {"reps": reps, "median": med}
+        out[name] = {"reps": reps, "median": med, "runs": runs}
         print(f"{name}: {reps} median={med}", flush=True)
     if args.json:
         with open(args.json, "a") as fh:

@@ -1592,6 +1592,7 @@ def cmd_train_vocab(args) -> int:
     file trained this way still refuses a mismatched corpus downstream.
     Vocab refresh + retrain after a snapshot sync is then O(|delta| +
     vocab), with no document text read at all."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from vcf_pg_loader_spark.functions.hashing import h60
@@ -1601,6 +1602,7 @@ def cmd_train_vocab(args) -> int:
         tokenizer_fingerprint,
         word_counts,
     )
+    from vcf_pg_loader_spark.operators.dedup import release_checkpoint
     from vcf_pg_loader_spark.operators.tokenids import alphabet_from_counts
 
     counts_state = getattr(args, "counts_state", None)
@@ -1656,30 +1658,43 @@ def cmd_train_vocab(args) -> int:
             )
     else:
         docs = spark.read.parquet(args.corpus).select("doc_id", "text")
-        counts_df = word_counts(docs, **seg_kw)
-        fp = docs.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(
-                F.bit_xor(
-                    h60(
-                        F.concat_ws(
-                            ":", F.col("doc_id").cast("string"),
-                            F.md5("text"),
-                        ),
-                        "vocab:",
-                    )
-                ),
-                F.lit(0),
-            ).alias("fp"),
-        ).collect()[0]
-        fp_val, n_docs = int(fp.fp), int(fp.n_docs)
-    # alphabet from the UNFILTERED counts: min_count bounds the
-    # trainer's table, not the id space — a character that only occurs
-    # in rare types still needs an id
-    alphabet = alphabet_from_counts(counts_df, mode)
-    if args.min_count > 1:
-        counts_df = counts_df.filter(F.col("n") >= args.min_count)
-    merges, strategy = bpe_train(counts_df, args.n_merges, mode)
+        # one pass over the corpus: the fingerprint is observed on the
+        # scan that counts its words, and the counts are materialized
+        # once for the alphabet, the trainer's probe and (past the
+        # driver bound) its batched rounds
+        fp = Observation()
+        counts_df = word_counts(
+            docs.observe(
+                fp,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.coalesce(
+                    F.bit_xor(
+                        h60(
+                            F.concat_ws(
+                                ":", F.col("doc_id").cast("string"),
+                                F.md5("text"),
+                            ),
+                            "vocab:",
+                        )
+                    ),
+                    F.lit(0),
+                ).alias("fp"),
+            ),
+            **seg_kw,
+        ).localCheckpoint(eager=True)
+        fp_val, n_docs = int(fp.get["fp"]), int(fp.get["n_docs"])
+    try:
+        # alphabet from the UNFILTERED counts: min_count bounds the
+        # trainer's table, not the id space — a character that only
+        # occurs in rare types still needs an id
+        alphabet = alphabet_from_counts(counts_df, mode)
+        trained = counts_df
+        if args.min_count > 1:
+            trained = counts_df.filter(F.col("n") >= args.min_count)
+        merges, strategy = bpe_train(trained, args.n_merges, mode)
+    finally:
+        if not counts_state:
+            release_checkpoint(counts_df)
     if counts_state:
         strategy = "counts-state"
 

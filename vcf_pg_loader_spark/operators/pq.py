@@ -54,32 +54,54 @@ def pq_fit(
     subspace over the m-way sliced corpus — the slicing is a narrow
     projection, so the m fits scan the corpus m times but never
     shuffle it (assignment is a broadcast argmin; means group on
-    (cid, dim), a k_sub×d/m keyspace)."""
-    from vcf_pg_loader_spark.operators.similarity import ivf_fit
+    (cid, dim), a k_sub×d/m keyspace).
 
-    books = []
-    for sub in range(m):
-        sliced = corpus.select(
-            F.col(id_col).alias("vid"),
-            _subvector(
-                F.transform(F.col(vec_col), lambda x: x.cast("double")), m, sub
-            ).alias("svec"),
-        )
-        cents, _assign = ivf_fit(
-            sliced, k_sub, n_iter, id_col="vid", vec_col="svec", kernel="fast"
-        )
-        # re-key centroid ids to dense [0, k_sub) in cid order so codes
-        # are stable small ints regardless of which seed ids survived
-        w = Window.orderBy("cid")
-        books.append(
-            cents.withColumn("code", F.row_number().over(w) - 1).select(
-                F.lit(sub).alias("sub"), "code", "cvec"
+    The codebooks come back as one local checkpoint (m × k_sub rows),
+    whose blocks the caller releases; each subspace fit's cached prep
+    and centroid checkpoint are released before this returns."""
+    from pyspark.storagelevel import StorageLevel
+
+    from vcf_pg_loader_spark.operators._parallel import ensure_min_parallelism
+    from vcf_pg_loader_spark.operators.dedup import release_checkpoint
+    from vcf_pg_loader_spark.operators.similarity import (
+        _ivf_fit_prepped,
+        _prep_vectors,
+    )
+
+    books, held = [], []
+    try:
+        for sub in range(m):
+            sliced = corpus.select(
+                F.col(id_col).alias("vid"),
+                _subvector(
+                    F.transform(F.col(vec_col), lambda x: x.cast("double")),
+                    m,
+                    sub,
+                ).alias("svec"),
             )
-        )
-    out = books[0]
-    for b in books[1:]:
-        out = out.unionByName(b)
-    return out
+            vecs = _prep_vectors(
+                ensure_min_parallelism(sliced), "vid", "svec", "fast"
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            held.append(vecs.unpersist)
+            cents, _assign = _ivf_fit_prepped(vecs, k_sub, n_iter, "fast")
+            if n_iter > 1:
+                held.append(lambda c=cents: release_checkpoint(c))
+            # re-key centroid ids to dense [0, k_sub) in cid order so
+            # codes are stable small ints regardless of which seed ids
+            # survived
+            w = Window.orderBy("cid")
+            books.append(
+                cents.withColumn("code", F.row_number().over(w) - 1).select(
+                    F.lit(sub).alias("sub"), "code", "cvec"
+                )
+            )
+        out = books[0]
+        for b in books[1:]:
+            out = out.unionByName(b)
+        return out.localCheckpoint(eager=True)
+    finally:
+        for release in held:
+            release()
 
 
 def pq_encode(

@@ -452,9 +452,10 @@ def ivf_fit(
     route through the driver.  Empty cells keep no centroid (their cid
     drops out), matching the SQL twin.  The corpus prep (double cast +
     norm) is persisted so the checkpoint actions and the final search
-    scan it once; the caller owns the cache lifetime (bench.py
-    clearCache()s per query).  A caller that must release what the fit
-    holds persists the prep itself and calls :func:`_ivf_fit_prepped`.
+    scan it once; the caller owns the cache lifetime (the query runner,
+    vcf_pg_loader_spark/runner.py, releases it after each run).  A
+    caller that must release what the fit holds persists the prep
+    itself and calls :func:`_ivf_fit_prepped`.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -471,7 +472,10 @@ def _ivf_fit_prepped(
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`ivf_fit` over prepped (vid, vec, vv) vectors the caller
     has cached.  With n_iter > 1 the returned centroids are a local
-    checkpoint, whose blocks the caller releases."""
+    checkpoint, whose blocks the caller releases; each round's
+    checkpoint is released once the next one supersedes it."""
+    from vcf_pg_loader_spark.operators.dedup import release_checkpoint
+
     if n_iter < 1:
         raise ValueError("ivf_fit needs n_iter >= 1 (assignment rounds)")
     cents = (
@@ -496,6 +500,7 @@ def _ivf_fit_prepped(
                 / F.count(F.lit(1))
             ).alias("m")
         )
+        superseded = cents if it > 1 else None
         cents = (
             means.groupBy("cid")
             .agg(
@@ -507,6 +512,8 @@ def _ivf_fit_prepped(
             .withColumn("cc", dot(F.col("cvec"), F.col("cvec")))
             .localCheckpoint(eager=True)
         )
+        if superseded is not None:
+            release_checkpoint(superseded)
     return cents, assigned
 
 

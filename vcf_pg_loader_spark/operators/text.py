@@ -204,8 +204,8 @@ def winnow_overlap_pairs(
 
     Cache lifetime: the persisted blocks back the RETURNED (lazy) plan,
     so this function cannot unpersist them itself — the caller owns the
-    lifetime (`spark.catalog.clearCache()` after materializing, as
-    bench.py does per query, or rely on the ContextCleaner once the
+    lifetime (the query runner, vcf_pg_loader_spark/runner.py, releases
+    it after each run; otherwise the ContextCleaner drops it once the
     frame is unreachable).
     """
     from pyspark.storagelevel import StorageLevel

@@ -8,13 +8,18 @@ multiallelics and indels), written as multiple shards so the scan
 parallelizes the way any real multi-file load does, then
 read_vcf(normalize=True) with a count() to force full parsing.
 
-Shared by `cli.py benchmark` and the per-round `bench.py` line.
+Shared by `cli.py benchmark` and the per-round `bench.py` line.  Every
+timed pass is one query-runner run (vcf_pg_loader_spark/runner.py):
+its seconds are the read_vcf build plus the count.
 """
 
 from __future__ import annotations
 
+import glob
 import os
-import time
+import tempfile
+
+from vcf_pg_loader_spark import runner
 
 _HEADER = (
     "##fileformat=VCFv4.2\n"
@@ -25,54 +30,83 @@ _HEADER = (
 _BASES = ["A", "C", "G", "T"]
 
 
-def write_synthetic_vcf(dirpath: str, n_variants: int, shards: int = 16) -> str:
-    """Write n_variants across `shards` header-bearing files; returns a
-    glob matching them."""
+def _uniform_line(i: int) -> str:
+    """One variant line of the reference generator's shape: sprinkled
+    multiallelics (every 20th) and indels (every 6th)."""
+    ref = _BASES[i % 4]
+    alt = _BASES[(i + 1) % 4]
+    if i % 20 == 0:
+        alt = f"{alt},{_BASES[(i + 2) % 4]}"
+    if i % 6 == 5:
+        ref = ref + "TT"
+    return (
+        f"chr{(i % 22) + 1}\t{1000 + i}\trs{i}\t{ref}\t{alt}\t50.0"
+        f"\tPASS\tDP={i % 100};AF=0.{i % 9 + 1}\n"
+    )
+
+
+def _write_shards(
+    dirpath: str, prefix: str, header: str, line, n_variants: int, shards: int
+) -> str:
+    """Write `line(i)` for i < n_variants across `shards` header-bearing
+    files; returns a glob matching them."""
+    os.makedirs(dirpath, exist_ok=True)
     per = max(1, n_variants // shards)
     written = 0
     for s in range(shards):
         take = min(per, n_variants - written) if s < shards - 1 else n_variants - written
         if take <= 0:
             break
-        with open(os.path.join(dirpath, f"bench_{s:04d}.vcf"), "w") as fh:
-            fh.write(_HEADER)
-            for j in range(take):
-                i = written + j
-                ref = _BASES[i % 4]
-                alt = _BASES[(i + 1) % 4]
-                if i % 20 == 0:
-                    alt = f"{alt},{_BASES[(i + 2) % 4]}"
-                if i % 6 == 5:
-                    ref = ref + "TT"
-                fh.write(
-                    f"chr{(i % 22) + 1}\t{1000 + i}\trs{i}\t{ref}\t{alt}\t50.0"
-                    f"\tPASS\tDP={i % 100};AF=0.{i % 9 + 1}\n"
-                )
+        with open(os.path.join(dirpath, f"{prefix}_{s:04d}.vcf"), "w") as fh:
+            fh.write(header)
+            fh.writelines(line(i) for i in range(written, written + take))
         written += take
-    return os.path.join(dirpath, "bench_*.vcf")
+    return os.path.join(dirpath, f"{prefix}_*.vcf")
+
+
+def write_synthetic_vcf(dirpath: str, n_variants: int, shards: int = 16) -> str:
+    """Write n_variants across `shards` header-bearing files; returns a
+    glob matching them."""
+    return _write_shards(
+        dirpath, "bench", _HEADER, _uniform_line, n_variants, shards
+    )
 
 
 def write_synthetic_vcf_bgzf(path: str, n_variants: int) -> None:
     """ONE bgzipped VCF file with n_variants — the monolithic-`.vcf.gz`
     shape that defeats vanilla Spark's gzip handling (one task)."""
-    import io
-
     from vcf_pg_loader_spark.sources.bgzf import write_bgzf
 
-    buf = io.StringIO()
-    buf.write(_HEADER)
-    for i in range(n_variants):
-        ref = _BASES[i % 4]
-        alt = _BASES[(i + 1) % 4]
-        if i % 20 == 0:
-            alt = f"{alt},{_BASES[(i + 2) % 4]}"
-        if i % 6 == 5:
-            ref = ref + "TT"
-        buf.write(
-            f"chr{(i % 22) + 1}\t{1000 + i}\trs{i}\t{ref}\t{alt}\t50.0"
-            f"\tPASS\tDP={i % 100};AF=0.{i % 9 + 1}\n"
-        )
-    write_bgzf(path, buf.getvalue().encode())
+    text = _HEADER + "".join(_uniform_line(i) for i in range(n_variants))
+    write_bgzf(path, text.encode())
+
+
+def _steady_parse(spark, path: str, warm: str) -> tuple[float, int, float]:
+    """The protocol every rate here shares; returns (best seconds, rows,
+    first full-size pass seconds).
+
+    - Warm up on the same-shape input `warm`: the one-time codegen/JIT
+      compile and the Python workers' cold pandas/pyarrow imports stay
+      out of the window.
+    - Prewarm the OS page cache over `path`, so the window measures
+      parse throughput, not first-touch disk I/O (the reference's
+      106k/s number is likewise CPU-bound).
+    - One full-size pass: the warm input compiles the plan, but JIT of
+      the parse/explode path only stabilizes after a full-volume pass
+      (observed ramp 175k -> 360k -> 555k v/s across identical passes).
+    - Best-of-two timed passes: the steady state per the docs/SCALE.md
+      methodology note; the ramp tail can still eat the first."""
+    from vcf_pg_loader_spark.sources.vcf import read_vcf
+
+    read_vcf(spark, warm, normalize=True).count()
+    for f in glob.glob(path):
+        with open(f, "rb") as fh:
+            while fh.read(1 << 22):
+                pass
+    build = lambda: read_vcf(spark, path, normalize=True)  # noqa: E731
+    first, _ = runner.run(spark, build, runner.count)
+    sec, rows = runner.best_of_two(spark, build, runner.count)
+    return sec, rows, runner.seconds(first)
 
 
 def parse_throughput_bgzf(spark, n_variants: int = 2_000_000) -> dict:
@@ -83,45 +117,21 @@ def parse_throughput_bgzf(spark, n_variants: int = 2_000_000) -> dict:
     one-core-ness.  The BGZF range reader instead scans with
     default-parallelism tasks, so this number should track the multi-file
     rate, not the single-core rate."""
-    import tempfile
-
     from vcf_pg_loader_spark.sources.bgzf import bgzf_text
-    from vcf_pg_loader_spark.sources.vcf import read_vcf
 
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "bench.vcf.gz")
         write_synthetic_vcf_bgzf(path, n_variants)
         scan_tasks = bgzf_text(spark, path).rdd.getNumPartitions()  # rdd-ok (bench introspection)
         mb = round(os.path.getsize(path) / 1e6, 1)
-        # Warm up on a same-shape input big enough to span EVERY core's
-        # range: besides the one-time codegen/JIT compile, each of the
-        # 32 Python workers pays a cold pandas/pyarrow import on its
-        # first mapInPandas task — a tiny warmup file (1-2 ranges) warms
-        # only 2 workers and the timed run still eats ~30 cold starts.
+        # The warm input must span EVERY core's range: each of the 32
+        # Python workers pays a cold import on its first mapInPandas
+        # task, and a tiny file (1-2 ranges) warms only 2 of them.
         # 300k variants -> ~2.4 MB compressed -> >32 of the 64 KiB
         # minimum ranges, so every worker is hot before the clock runs.
         warm = os.path.join(d, "warm.vcf.gz")
         write_synthetic_vcf_bgzf(warm, 300_000)
-        read_vcf(spark, warm, normalize=True).count()
-        with open(path, "rb") as fh:  # page-cache prewarm (see above)
-            while fh.read(1 << 22):
-                pass
-        # one full-size untimed pass: the small warm file compiles the
-        # plan, but JIT of the chunk-split/explode path only stabilizes
-        # after a full-volume pass (observed ramp 175k -> 360k -> 555k
-        # v/s across identical passes); throughput benches report steady
-        # state per the docs/SCALE.md methodology note
-        first = time.perf_counter()
-        read_vcf(spark, path, normalize=True).count()
-        first_sec = time.perf_counter() - first
-        # best-of-two timed passes (steady state; the JIT ramp can still
-        # eat the first — same policy as parse_throughput)
-        dt = float("inf")
-        rows = 0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            rows = read_vcf(spark, path, normalize=True).count()
-            dt = min(dt, time.perf_counter() - t0)
+        dt, rows, first_sec = _steady_parse(spark, path, warm)
     return {
         "variants": n_variants,
         "rows_after_decomposition": rows,
@@ -213,49 +223,18 @@ def write_synthetic_vcf_giab(
 ) -> str:
     """GIAB-shaped shards (same sharding contract as write_synthetic_vcf);
     returns a glob matching them."""
-    per = max(1, n_variants // shards)
-    written = 0
-    for s in range(shards):
-        take = (
-            min(per, n_variants - written)
-            if s < shards - 1
-            else n_variants - written
-        )
-        if take <= 0:
-            break
-        with open(os.path.join(dirpath, f"giab_{s:04d}.vcf"), "w") as fh:
-            fh.write(_GIAB_HEADER)
-            for j in range(take):
-                fh.write(_giab_line(written + j))
-        written += take
-    return os.path.join(dirpath, "giab_*.vcf")
+    return _write_shards(
+        dirpath, "giab", _GIAB_HEADER, _giab_line, n_variants, shards
+    )
 
 
 def parse_throughput_giab(spark, n_variants: int = 1_000_000) -> dict:
-    """Parse rate on the GIAB-shaped corpus (same methodology as
-    parse_throughput: warmup pass, page-cache prewarm, one untimed
-    full-volume pass, best-of-two timed passes)."""
-    import glob as _glob
-    import tempfile
-
-    from vcf_pg_loader_spark.sources.vcf import read_vcf
-
+    """Parse rate on the GIAB-shaped corpus (the `_steady_parse`
+    protocol, like parse_throughput)."""
     with tempfile.TemporaryDirectory() as d:
-        glob = write_synthetic_vcf_giab(d, n_variants)
-        with tempfile.TemporaryDirectory() as wd:
-            warm_glob = write_synthetic_vcf_giab(wd, 10_000, 2)
-            read_vcf(spark, warm_glob, normalize=True).count()
-        for f in _glob.glob(glob):
-            with open(f, "rb") as fh:
-                while fh.read(1 << 22):
-                    pass
-        read_vcf(spark, glob, normalize=True).count()  # JIT steady state
-        dt = float("inf")
-        rows = 0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            rows = read_vcf(spark, glob, normalize=True).count()
-            dt = min(dt, time.perf_counter() - t0)
+        path = write_synthetic_vcf_giab(d, n_variants)
+        warm = write_synthetic_vcf_giab(os.path.join(d, "warm"), 10_000, 2)
+        dt, rows, _first = _steady_parse(spark, path, warm)
     return {
         "variants": n_variants,
         "rows_after_decomposition": rows,
@@ -276,53 +255,28 @@ def parse_throughput(
     is outside the window (the reference number times parsing, not I/O
     of its generator either).
     """
-    import tempfile
-
     from vcf_pg_loader_spark.sources.vcf import read_vcf
 
     with tempfile.TemporaryDirectory() as d:
-        glob = write_synthetic_vcf(d, n_variants, shards)
-        # Same-shape warmup run: exclude one-time codegen/JIT compilation
-        # of the parse plan from the throughput window (see
-        # parse_throughput_bgzf).
-        import tempfile as _tf
-
-        with _tf.TemporaryDirectory() as wd:
-            warm_glob = write_synthetic_vcf(wd, 10_000, 2)
-            read_vcf(spark, warm_glob, normalize=True).count()
-            read_vcf(spark, warm_glob, normalize=True, features="all").count()
-        # prewarm the OS page cache over the just-written shards so the
-        # timed windows measure parse throughput, not first-touch disk
-        # I/O (the reference's 106k/s number is likewise CPU-bound)
-        import glob as _glob
-
-        for f in _glob.glob(glob):
-            with open(f, "rb") as fh:
-                while fh.read(1 << 22):
-                    pass
-        # one full-size untimed pass: the 10k warmup compiles the plan but
-        # JIT of the parse/explode path only stabilizes across FULL-volume
-        # passes (observed ramp spans 2-3 of them; without this the
-        # "minimal" window reads slower than the full-features window that
-        # runs after it, purely from JIT ordering)
-        read_vcf(spark, glob, normalize=True).count()
+        path = write_synthetic_vcf(d, n_variants, shards)
+        warm = write_synthetic_vcf(os.path.join(d, "warm"), 10_000, 2)
+        read_vcf(spark, warm, normalize=True, features="all").count()
         # default ("auto") load: the bench header declares only DP and AF,
         # so annotation/imputation/ClinVar projections are skipped — the
-        # rate a real load of an unannotated VCF pays.  Two timed passes,
-        # best-of (the steady-state number per the docs/SCALE.md
-        # methodology note; the ramp tail can still eat the first one).
-        dt = float("inf")
-        rows = 0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            rows = read_vcf(spark, glob, normalize=True).count()
-            dt = min(dt, time.perf_counter() - t0)
+        # rate a real load of an unannotated VCF pays.  The full-size
+        # pass also keeps the "minimal" window from reading slower than
+        # the full-features window that runs after it, purely from JIT
+        # ordering.
+        dt, rows, _first = _steady_parse(spark, path, warm)
         # features="all": every derived-column group computed whether or
         # not the header declares its fields — the round-3/4 regression
         # shape, reported alongside so the feature tax stays visible
-        t0 = time.perf_counter()
-        read_vcf(spark, glob, normalize=True, features="all").count()
-        dt_full = time.perf_counter() - t0
+        full, _ = runner.run(
+            spark,
+            lambda: read_vcf(spark, path, normalize=True, features="all"),
+            runner.count,
+        )
+        dt_full = runner.seconds(full)
     # rate is per INPUT variant (the reference's unit); decomposition
     # makes output rows a superset, reported separately.
     return {

@@ -556,7 +556,7 @@ def q_gx_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here the raw frame shuffles once, and both countDistincts collapse
     # to cheap counts over the already-distinct persisted pairs.
     # Cache lifetime: the persist backs the returned lazy plan, so the
-    # caller owns it (bench.py clearCache()s after each query).
+    # caller owns it (the query runner releases it after each run).
     #
     # The single corpus shuffle is KEYED on pos, not round-robin
     # (optimization round 16, guide §2.4 "share one exchange"):

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from vcf_pg_loader_spark import durable
+from vcf_pg_loader_spark.operators.dedup import release_checkpoint
 from vcf_pg_loader_spark.operators.pq import ivf_pq_search, pq_encode, pq_fit
 
 
@@ -68,44 +69,66 @@ class VectorIndex:
         every search served from it — bit-identical to the DuckDB
         oracle, which is how q_ann_ivf_served is verified.  pq=False
         skips the PQ codebook/codes artifacts for an IVF-Flat-only
-        index (halves the build when only search_flat will serve)."""
-        from vcf_pg_loader_spark.operators.similarity import ivf_fit
+        index (halves the build when only search_flat will serve).
 
-        cents, assign = ivf_fit(
-            corpus, k_centroids, n_iter, id_col=id_col, vec_col=vec_col,
-            kernel=kernel,
+        The fits' cached vector preps and checkpoints are released once
+        the new index is swapped in (or the build fails)."""
+        from vcf_pg_loader_spark.operators._parallel import (
+            ensure_min_parallelism,
         )
-        # Stage every artifact beside the root and swap it in atomically
-        # (durable.py, the protocol of every maintained structure): a
-        # crash mid-rebuild must never leave meta/ — the "index is
-        # complete" witness — beside a mix of old and new artifacts.
-        staging = durable.stage_dir(self.root)
-        cents.write.parquet(os.path.join(staging, "centroids"))
-        if pq:
-            books = pq_fit(corpus, m, k_sub, id_col=id_col, vec_col=vec_col)
-            codes = pq_encode(
-                corpus, books, m, id_col=id_col, vec_col=vec_col
-            ).join(assign.select("vid", "cid"), "vid")
-            books.write.parquet(os.path.join(staging, "codebooks"))
+        from vcf_pg_loader_spark.operators.similarity import (
+            _ivf_fit_prepped,
+            _prep_vectors,
+        )
+        from vcf_pg_loader_spark.streaming.sink import _held, _released
+
+        with _released() as held:
+            vecs = _held(
+                _prep_vectors(
+                    ensure_min_parallelism(corpus), id_col, vec_col, kernel
+                ),
+                held,
+            )
+            cents, assign = _ivf_fit_prepped(
+                vecs, k_centroids, n_iter, kernel
+            )
+            if n_iter > 1:
+                held.append(lambda: release_checkpoint(cents))
+            # Stage every artifact beside the root and swap it in
+            # atomically (durable.py, the protocol of every maintained
+            # structure): a crash mid-rebuild must never leave meta/ —
+            # the "index is complete" witness — beside a mix of old and
+            # new artifacts.
+            staging = durable.stage_dir(self.root)
+            cents.write.parquet(os.path.join(staging, "centroids"))
+            if pq:
+                books = pq_fit(
+                    corpus, m, k_sub, id_col=id_col, vec_col=vec_col
+                )
+                held.append(lambda: release_checkpoint(books))
+                codes = pq_encode(
+                    corpus, books, m, id_col=id_col, vec_col=vec_col
+                ).join(assign.select("vid", "cid"), "vid")
+                books.write.parquet(os.path.join(staging, "codebooks"))
+                (
+                    codes.repartition("cid")
+                    .sortWithinPartitions("vid")
+                    .write.partitionBy("cid")
+                    .parquet(os.path.join(staging, "codes"))
+                )
             (
-                codes.repartition("cid")
+                assign.repartition("cid")
                 .sortWithinPartitions("vid")
                 .write.partitionBy("cid")
-                .parquet(os.path.join(staging, "codes"))
+                .parquet(os.path.join(staging, "vectors"))
             )
-        (
-            assign.repartition("cid")
-            .sortWithinPartitions("vid")
-            .write.partitionBy("cid")
-            .parquet(os.path.join(staging, "vectors"))
-        )
-        # record the geometry the index was built with
-        meta = self.spark.createDataFrame(
-            [(k_centroids, m, k_sub, kernel)],
-            "k_centroids int, m int, k_sub int, kernel string",
-        )
-        meta.write.json(os.path.join(staging, "meta"))
-        durable.swap_dir(staging, self.root)
+            # record the geometry the index was built with
+            meta = self.spark.createDataFrame(
+                [(k_centroids, m, k_sub, kernel)],
+                "k_centroids int, m int, k_sub int, kernel string",
+            )
+            meta.write.json(os.path.join(staging, "meta"))
+            durable.swap_dir(staging, self.root)
 
     # -- maintenance -----------------------------------------------------
     @durable.leased
