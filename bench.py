@@ -259,12 +259,15 @@ def scaling_curve(spark, sf_dir: str, factors=(1, 2)) -> dict:
                 pair_counts: dict[str, int] = {}
                 for f in factors:
                     docs_f = load_table(spark, dirs[f], "documents")
-                    sh_f = D2.shingles(docs_f, "doc_id", "text", QP.NGRAM)
-                    cand = D2.lsh_candidate_pairs(
-                        D2.minhash_signatures(sh_f, QP.MINHASH_K),
+                    sets_f = D2.shingle_sets(
+                        docs_f, "doc_id", "text", QP.NGRAM
+                    )
+                    banded = D2.lsh_band_table(
+                        D2.minhash_signatures(sets_f, QP.MINHASH_K),
                         QP.MINHASH_K,
                         QP.MINHASH_BANDS,
                     )
+                    cand, _ = D2.lsh_bucket_pairs(banded)
                     pair_counts[str(f)] = cand.count()
                 p_lo = pair_counts[str(factors[0])]
                 p_hi = pair_counts[str(factors[-1])]

@@ -59,26 +59,40 @@ class TestShortDocShingles:
         assert (2, 6) in pairs
 
     def test_row_local_sets_and_signatures_match_grouped(self, spark):
-        """shingle_sets / minhash_signatures_of_sets (one array row per
-        doc, no shuffle) equal the grouped forms over shingles() rows;
-        a doc with no shingles gets an empty set and no signature."""
+        """shingle_sets (one sorted array row per doc, no shuffle) holds
+        exactly each doc's DuckDB sql_shingles rows, and
+        minhash_signatures over it equals the DuckDB twin's grouped MIN
+        of sql_mh_expr over those rows; a doc with no shingles gets an
+        empty set and no signature."""
+        from vcf_pg_loader_spark.functions.hashing import sql_h60
         from vcf_pg_loader_spark.operators import dedup as D
 
-        docs = _docs(spark, self.ROWS + [(6, "a b c d a b c"), (7, None)])
-        sh = shingles(docs, "doc_id", "text", n=3)
-        sets = D.shingle_sets(docs, "doc_id", "text", n=3)
+        rows = self.ROWS + [(6, "a b c d a b c"), (7, None)]
+        sets = D.shingle_sets(_docs(spark, rows), "doc_id", "text", n=3)
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        sh_sql = sql_shingles(3)
         grouped = {
-            r.doc_id: (sorted(r.s), r.n)
-            for r in sh.groupBy("doc_id")
-            .agg(F.collect_list("shingle").alias("s"), F.count("*").alias("n"))
-            .collect()
+            i: (sorted(s), len(s))
+            for i, s in con.execute(
+                f"SELECT doc_id, list(shingle) FROM ({sh_sql}) GROUP BY 1"
+            ).fetchall()
         }
         got = {r.doc_id: (list(r._set), r.n_sh) for r in sets.collect()}
         assert {i: v for i, v in got.items() if v[1]} == grouped
         assert {i for i, v in got.items() if not v[1]} == {1, 3, 4, 7}
-        assert sorted(D.minhash_signatures_of_sets(sets, 16).collect()) == (
-            sorted(D.minhash_signatures(sh, 16).collect())
+        mins = ", ".join(
+            f"MIN({D.sql_mh_expr('_h', i)}) AS mh{i}" for i in range(16)
         )
+        want = con.execute(
+            f"SELECT doc_id, {mins} FROM (SELECT doc_id, "
+            f"{sql_h60('shingle', salt='mh:')} AS _h FROM ({sh_sql})) "
+            "GROUP BY doc_id"
+        ).fetchall()
+        assert sorted(
+            tuple(r) for r in D.minhash_signatures(sets, 16).collect()
+        ) == sorted(want)
 
     def test_simhash_tolerates_single_token(self, spark):
         out = simhash(_docs(spark, [(1, "one"), (2, "a b")]), "doc_id", "text")
@@ -131,6 +145,7 @@ class TestPrefixFilteredJaccard:
         from vcf_pg_loader_spark.operators.dedup import (
             jaccard_pairs,
             prefix_filtered_jaccard_pairs,
+            shingle_sets,
         )
 
         hot = "the quick brown"
@@ -143,11 +158,481 @@ class TestPrefixFilteredJaccard:
             (6, f"{hot} fox jumps over the lazy dog"),  # exact dup of 1
         ]
         sh = shingles(_docs(spark, rows), "doc_id", "text", n=3).persist()
+        sets = shingle_sets(_docs(spark, rows), "doc_id", "text", n=3).persist()
         for t in (0.5, 0.8):
             naive = {tuple(r) for r in jaccard_pairs(sh, t).collect()}
-            fast = {tuple(r) for r in prefix_filtered_jaccard_pairs(sh, t).collect()}
+            fast = {
+                tuple(r) for r in prefix_filtered_jaccard_pairs(sets, t).collect()
+            }
             assert fast == naive and (t > 0.5 or len(naive) > 0)
         sh.unpersist()
+        sets.unpersist()
+
+
+# --------------------------------------------------------------------------
+# the MinHash-LSH pipeline: shingle_sets -> minhash_signatures ->
+# lsh_band_table -> lsh_bucket_pairs -> verify_candidate_jaccard
+# --------------------------------------------------------------------------
+NGRAM_T = 3
+K_T = 8
+BANDS_T = 4
+THRESH_T = 0.8
+
+
+def _hyperdup_rows(n_dup=40):
+    """One hyper-duplicated key (the adversarial shape the bucket-size
+    valve is for: boilerplate crawled n times) plus a handful of
+    distinct docs."""
+    spam = "click here to accept all cookies and continue to the site"
+    rows = [(i, spam) for i in range(n_dup)]
+    rows += [
+        (100, "the quick brown fox jumps over the lazy dog today"),
+        (101, "pack my box with five dozen liquor jugs tonight"),
+        (102, "sphinx of black quartz judge my vow carefully now"),
+        (103, "how vexingly quick daft zebras jump around here"),
+        (104, "bright vixens jump dozy fowl quack together loudly"),
+    ]
+    return rows
+
+
+def _components(pairs_df):
+    """Set-of-frozensets component partition from a verified pair frame."""
+    from vcf_pg_loader_spark.operators import dedup as D
+
+    cc = D.connected_components(pairs_df, "d1", "d2")
+    comps = {}
+    for r in cc.collect():
+        comps.setdefault(r["comp"], set()).add(r["node"])
+    return {frozenset(v) for v in comps.values()}
+
+
+def _bands(docs, k=8, bands=4, n=3):
+    """The band table of `docs` through the one pipeline."""
+    from vcf_pg_loader_spark.operators import dedup as D
+
+    sets = D.shingle_sets(docs, "doc_id", "text", n)
+    return D.lsh_band_table(D.minhash_signatures(sets, k), k, bands)
+
+
+class TestVerifyJaccardRestructure:
+    """verify_candidate_jaccard: per-doc sorted shingle sets + row-local
+    array_intersect must equal the row-expanded formulation (pair×shingle
+    join + per-pair count + twice-joined sizes aggregation).  Sets hold
+    distinct grams, so the intersection size and hence the rounded
+    jaccard are bit-identical; zero-overlap candidates drop in both
+    shapes."""
+
+    def _reference_verify(self, cands, sh, threshold):
+        # the row-expanded formulation over shingles() rows
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        a = sh.alias("a")
+        b = sh.alias("b")
+        inter = (
+            cands.join(a, cands["d1"] == F.col("a.doc_id"))
+            .join(
+                b,
+                (cands["d2"] == F.col("b.doc_id"))
+                & (F.col("a.shingle") == F.col("b.shingle")),
+            )
+            .groupBy("d1", "d2")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+        )
+        sa = sizes.alias("sa")
+        sb = sizes.alias("sb")
+        return (
+            inter.join(sa, F.col("d1") == F.col("sa.doc_id"))
+            .join(sb, F.col("d2") == F.col("sb.doc_id"))
+            .withColumn(
+                "jaccard",
+                F.round(
+                    F.col("n_inter")
+                    / (
+                        F.col("sa.n_sh")
+                        + F.col("sb.n_sh")
+                        - F.col("n_inter")
+                    ),
+                    6,
+                ),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("d1", "d2", "n_inter", "jaccard")
+        )
+
+    def test_matches_reference_incl_zero_overlap_and_threshold_zero(
+        self, spark
+    ):
+        from vcf_pg_loader_spark.operators.dedup import (
+            shingle_sets,
+            verify_candidate_jaccard,
+        )
+
+        docs = spark.createDataFrame(
+            [
+                (1, "a b c d e f g"),
+                (2, "a b c d e f h"),
+                (3, "a b c d e f g"),
+                (4, "x y z w v u t"),
+                (5, "p q r s"),
+            ],
+            "doc_id bigint, text string",
+        )
+        sh = shingles(docs, "doc_id", "text", 3)
+        sets = shingle_sets(docs, "doc_id", "text", 3)
+        cands = spark.createDataFrame(
+            [(1, 2), (1, 3), (1, 4), (2, 3), (4, 5)],
+            "d1 bigint, d2 bigint",
+        )
+        for t in (0.0, 0.5, 0.8):
+            got = {
+                tuple(r)
+                for r in verify_candidate_jaccard(cands, sets, t).collect()
+            }
+            want = {
+                tuple(r)
+                for r in self._reference_verify(cands, sh, t).collect()
+            }
+            assert got == want, f"threshold {t}"
+        # sanity: the zero-overlap pair (1,4) is absent even at t=0.0
+        got0 = {
+            (r.d1, r.d2)
+            for r in verify_candidate_jaccard(cands, sets, 0.0).collect()
+        }
+        assert (1, 4) not in got0
+
+
+class TestVerifyCandidateDocPrefilter:
+    """verify_candidate_jaccard invariant: docs outside the candidate
+    list can never affect the output (the two inner joins restrict to
+    candidate ids), pinned on a corpus where most docs are NOT
+    candidates, plus the empty-candidates edge.  This is the equivalence
+    a semi-join prefilter of the sets would rely on — measured and
+    rejected (see the kernel docstring) — kept as a pin so the invariant
+    survives whatever shape the kernel takes next."""
+
+    def test_non_candidate_docs_do_not_change_output(self, spark):
+        from vcf_pg_loader_spark.operators.dedup import (
+            shingle_sets,
+            verify_candidate_jaccard,
+        )
+
+        rows = [(i, f"filler document number {i} with its own words {i}")
+                for i in range(10, 40)]
+        rows += [
+            (1, "a b c d e f g"),
+            (2, "a b c d e f h"),
+            (3, "a b c d e f g"),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+        sets = shingle_sets(docs, "doc_id", "text", 3)
+        cands = spark.createDataFrame(
+            [(1, 2), (1, 3), (2, 3)], "d1 bigint, d2 bigint"
+        )
+        got = {
+            tuple(r)
+            for r in verify_candidate_jaccard(cands, sets, 0.5).collect()
+        }
+        # reference: the same kernel fed ONLY the candidate docs' sets
+        # (what the semi-join reduces it to) must equal the full-corpus
+        # call — and both must contain the known duplicate pair
+        sets_c = sets.filter(F.col("doc_id").isin(1, 2, 3))
+        want = {
+            tuple(r)
+            for r in verify_candidate_jaccard(cands, sets_c, 0.5).collect()
+        }
+        assert got == want
+        assert {(d1, d2) for (d1, d2, *_rest) in got} == {
+            (1, 2), (1, 3), (2, 3)
+        }
+
+    def test_empty_candidates(self, spark):
+        from vcf_pg_loader_spark.operators.dedup import (
+            shingle_sets,
+            verify_candidate_jaccard,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "a b c d e"), (2, "a b c d e")], "doc_id bigint, text string"
+        )
+        sets = shingle_sets(docs, "doc_id", "text", 3)
+        cands = spark.createDataFrame([], "d1 bigint, d2 bigint")
+        assert verify_candidate_jaccard(cands, sets, 0.0).count() == 0
+
+
+class TestCappedSmallBucketArrayPairs:
+    """lsh_bucket_pairs under a cap: small-bucket pairs come from a
+    per-bucket sorted member array (bounded by the cap itself) instead
+    of a second window execution feeding a bucket self-join.
+    sort_array + suffix slicing enumerates exactly the d1 < d2 member
+    pairs the self-join's a.doc_id < b.doc_id predicate emits, so the
+    candidate set (and hence everything verified downstream) is
+    identical; the star path for oversized buckets and the routed frame
+    are untouched."""
+
+    def _reference_capped(self, banded, cap):
+        # the self-join formulation: window-sized band table self-joined
+        # on the bucket keys
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("band_id", "band_key")
+        sized = banded.withColumn(
+            "_sz", F.count(F.lit(1)).over(w)
+        ).withColumn("_bmin", F.min("doc_id").over(w))
+        small = sized.filter(F.col("_sz") <= cap).select(
+            "doc_id", "band_id", "band_key"
+        )
+        a = small.alias("a")
+        b = small.alias("b")
+        pairs_small = a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ).select(
+            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
+        )
+        big = sized.filter(F.col("_sz") > cap)
+        pairs_big = big.filter(F.col("doc_id") != F.col("_bmin")).select(
+            F.col("_bmin").alias("d1"), F.col("doc_id").alias("d2")
+        )
+        return pairs_small.unionByName(pairs_big).distinct()
+
+    def _docs(self, spark, as_string_ids=False):
+        rows = [(i, "a b c d e f g h i j") for i in range(1, 13)] + [
+            (100, "x y z w v u t s r q"),
+            (101, "x y z w v u t s r p"),
+            (102, "m n o p q r s t u v"),
+            (103, "entirely different words appear in this document here"),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+        if as_string_ids:
+            docs = docs.select(
+                F.concat(F.lit("id"), F.col("doc_id").cast("string")).alias(
+                    "doc_id"
+                ),
+                "text",
+            )
+        return docs
+
+    def test_matches_reference_binding_and_nonbinding_cap(self, spark):
+        from vcf_pg_loader_spark.operators.dedup import lsh_bucket_pairs
+
+        banded = _bands(self._docs(spark))
+        for cap in (1, 2, 10_000):  # binding hard, binding, non-binding
+            got_pairs, got_routed = lsh_bucket_pairs(banded, bucket_cap=cap)
+            want = {
+                tuple(r)
+                for r in self._reference_capped(banded, cap).collect()
+            }
+            got = {tuple(r) for r in got_pairs.collect()}
+            assert got == want, f"cap {cap}"
+            if cap == 10_000:
+                assert got_routed.count() == 0
+
+    def test_string_ids_same_order_as_join_predicate(self, spark):
+        """sort_array on string ids must agree with the self-join
+        predicate's lexicographic a.doc_id < b.doc_id (same total
+        order)."""
+        from vcf_pg_loader_spark.operators.dedup import lsh_bucket_pairs
+
+        banded = _bands(self._docs(spark, as_string_ids=True))
+        got_pairs, _ = lsh_bucket_pairs(banded, bucket_cap=2)
+        want = {
+            tuple(r) for r in self._reference_capped(banded, 2).collect()
+        }
+        assert {tuple(r) for r in got_pairs.collect()} == want
+
+
+class TestCappedArrayBoundFallback:
+    """lsh_bucket_pairs: caps above BUCKET_CAP_ARRAY_MAX must stream
+    small-bucket pairs through the self-join (O(cap²) per-row arrays
+    are unsafe there) with an identical candidate set."""
+
+    def test_join_fallback_identical_pairs(self, spark, monkeypatch):
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        docs = spark.createDataFrame(
+            [(i, "a b c d e f g h i j") for i in range(1, 9)]
+            + [(100, "x y z w v u t s r q"), (101, "x y z w v u t s r p")],
+            "doc_id bigint, text string",
+        )
+        banded = _bands(docs)
+        cap = 4
+        array_pairs, array_routed = D.lsh_bucket_pairs(banded, cap)
+        a_rows = sorted(map(tuple, array_pairs.collect()))
+        a_routed = sorted(map(tuple, array_routed.collect()))
+        # force the join fallback for the same cap
+        monkeypatch.setattr(D, "BUCKET_CAP_ARRAY_MAX", cap - 1)
+        join_pairs, join_routed = D.lsh_bucket_pairs(banded, cap)
+        assert sorted(map(tuple, join_pairs.collect())) == a_rows
+        assert sorted(map(tuple, join_routed.collect())) == a_routed
+
+
+class TestBucketCapOperator:
+    def test_non_binding_cap_identical(self, spark):
+        """With a cap no bucket reaches, the capped path IS the
+        uncapped path — pinned value-exactly, routed frame empty."""
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        df = _docs(spark, _hyperdup_rows(n_dup=3))
+        base = D.minhash_lsh_dedup(
+            df, "doc_id", "text", NGRAM_T, K_T, BANDS_T, THRESH_T
+        )
+        capped = D.minhash_lsh_dedup(
+            df, "doc_id", "text", NGRAM_T, K_T, BANDS_T, THRESH_T,
+            bucket_cap=1_000_000,
+        )
+        assert sorted(map(tuple, base.collect())) == sorted(
+            map(tuple, capped.collect())
+        )
+        _, routed = D.lsh_bucket_pairs(
+            _bands(df, K_T, BANDS_T, NGRAM_T), 1_000_000
+        )
+        assert routed.count() == 0
+
+    def test_hyperdup_star_bounds_candidates_same_clusters(self, spark):
+        """On the adversarial one-key corpus the capped candidate set is
+        O(bucket) instead of O(bucket²), the routing counters are
+        non-zero (never silent), and the CLUSTER partition — the thing
+        dedup actually consumes — is identical: every member of a
+        hyper-dup bucket is near-identical to the bucket minimum, so
+        the verified star connects the same component the full clique
+        would."""
+        from pyspark.storagelevel import StorageLevel
+
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        n_dup = 40
+        df = _docs(spark, _hyperdup_rows(n_dup=n_dup))
+        sets = D.shingle_sets(df, "doc_id", "text", NGRAM_T).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        banded = D.lsh_band_table(
+            D.minhash_signatures(sets, K_T), K_T, BANDS_T
+        )
+        cand_u, routed_u = D.lsh_bucket_pairs(banded, None)
+        cand_c, routed_c = D.lsh_bucket_pairs(banded, 5)
+        n_u, n_c = cand_u.count(), cand_c.count()
+        # clique C(40,2)=780 collapses to the 39-edge star
+        assert n_u >= n_dup * (n_dup - 1) // 2
+        assert n_c < n_u
+        assert n_c <= n_dup + 20  # star + small-bucket pairs, not clique
+        assert routed_u.count() == 0
+        routed_rows = routed_c.agg(F.sum("sz")).collect()[0][0]
+        assert routed_c.count() >= 1 and routed_rows >= n_dup
+        # identical component partition after exact verification
+        pairs_u = D.verify_candidate_jaccard(cand_u, sets, THRESH_T)
+        pairs_c = D.verify_candidate_jaccard(cand_c, sets, THRESH_T)
+        assert _components(pairs_u) == _components(pairs_c)
+        sets.unpersist()
+
+
+class TestBucketCapPlan:
+    def test_capped_candidates_stay_equi_join(self, spark):
+        """The valve must not cost the plan its shape: the capped
+        candidate generation is one window over the bucket key plus a
+        row-local array expansion of the (cap-bounded) small buckets —
+        no cartesian/nested-loop join anywhere, and no bucket self-join
+        either (small-bucket pairs come out of a per-bucket sorted
+        member array, so the only Generate input is bounded by the
+        cap).  Which is the whole point at 100 TB."""
+        import io
+        from contextlib import redirect_stdout
+
+        from vcf_pg_loader_spark.operators import dedup as D
+
+        df = _docs(spark, _hyperdup_rows(10))
+        pairs, _ = D.lsh_bucket_pairs(_bands(df, K_T, BANDS_T, NGRAM_T), 5)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            pairs.explain(mode="formatted")
+        plan = buf.getvalue()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "Window" in plan
+        # small-bucket pairs: bounded collect per bucket + explode —
+        # the second window execution and the self-join are gone
+        assert "collect_list" in plan and "Generate" in plan
+        assert "SortMergeJoin" not in plan
+        assert "ShuffledHashJoin" not in plan
+
+
+class TestRecallSampleRestructure:
+    """lsh_recall_sample: the true-pair and banded-coverage counters
+    come out of one left join + one aggregate over a single execution
+    of the true-pair pipeline, and must match a driver-side reference
+    computed from the constituent operators."""
+
+    ROWS = [
+        (0, "alpha beta gamma delta epsilon zeta eta theta"),
+        (1, "alpha beta gamma delta epsilon zeta eta iota"),
+        (2, "one two three four five six seven eight nine"),
+        (3, "one two three four five six seven eight ten"),
+        (4, "totally unrelated words appear in this document"),
+        (5, "more unrelated text with different content here"),
+        (6, "cats dogs birds fish mice snakes horses cows"),
+        (7, "red green blue yellow purple orange pink brown"),
+    ]
+
+    def test_counters_match_constituent_operators(self, spark):
+        from pyspark.storagelevel import StorageLevel
+
+        from vcf_pg_loader_spark.operators.dedup import (
+            lsh_bucket_pairs,
+            lsh_recall_sample,
+            prefix_filtered_jaccard_pairs,
+            shingle_sets,
+        )
+
+        docs = _docs(spark, self.ROWS)
+        n, k, bands, t = 3, 8, 4, 0.5
+        got = lsh_recall_sample(
+            docs, "doc_id", "text", n=n, k=k, bands=bands,
+            threshold=t, sample_mod=1,
+        ).collect()[0]
+        # reference: true pairs and banded candidates computed by the
+        # constituent operators, coverage counted driver-side
+        sets = shingle_sets(docs, "doc_id", "text", n).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        true_pairs = {
+            (r.d1, r.d2)
+            for r in prefix_filtered_jaccard_pairs(sets, t)
+            .select("d1", "d2")
+            .collect()
+        }
+        cands = {
+            (r.d1, r.d2)
+            for r in lsh_bucket_pairs(_bands(docs, k, bands, n))[0].collect()
+        }
+        assert got.n_sample_docs == len(self.ROWS)
+        assert got.n_true_pairs == len(true_pairs)
+        assert got.n_banded_pairs == len(true_pairs & cands)
+        want_recall = (
+            1.0
+            if not true_pairs
+            else round(len(true_pairs & cands) / len(true_pairs), 6)
+        )
+        assert got.recall == want_recall
+        spark.catalog.clearCache()
+
+
+class TestLshPipelineCost:
+    def test_q_dedup_keep_jobs_and_stages_bound(self, spark, sf_dir):
+        """q_dedup_keep through the runner at sf0.001: the set-form
+        pipeline (row-local sets and signatures, one verify join pair)
+        fires 15 jobs and 28 stages over build and execute.  The
+        row-form pipeline it replaced (a signature groupBy over exploded
+        shingles, a verify groupBy rebuilding each doc's set) fired 18
+        and 40."""
+        from vcf_pg_loader_spark import runner
+        from vcf_pg_loader_spark.queries.pipeline import q_dedup_keep
+
+        rec, n = runner.run(
+            spark, lambda: q_dedup_keep(spark, sf_dir), runner.count
+        )
+        assert n > 0
+        assert rec["build_jobs"] + rec["exec_jobs"] <= 15, rec
+        assert rec["build_stages"] + rec["exec_stages"] <= 28, rec
 
 
 class TestMultiProbeANN:

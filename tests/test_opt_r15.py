@@ -206,71 +206,6 @@ class TestDsirBucketStatsRestructure:
         spark.catalog.clearCache()
 
 
-class TestRecallSampleRestructure:
-    """operators/dedup.py lsh_recall_sample: the three crossJoined
-    aggregates (each re-executing the AllPairs subtree) are now one
-    left-join + one aggregate over a single execution of the true-pair
-    pipeline — guide §1.2 'don't compute things you throw away'.  The
-    counters must match a driver-side reference computed from the
-    constituent operators."""
-
-    ROWS = [
-        (0, "alpha beta gamma delta epsilon zeta eta theta"),
-        (1, "alpha beta gamma delta epsilon zeta eta iota"),
-        (2, "one two three four five six seven eight nine"),
-        (3, "one two three four five six seven eight ten"),
-        (4, "totally unrelated words appear in this document"),
-        (5, "more unrelated text with different content here"),
-        (6, "cats dogs birds fish mice snakes horses cows"),
-        (7, "red green blue yellow purple orange pink brown"),
-    ]
-
-    def test_counters_match_constituent_operators(self, spark):
-        from pyspark.storagelevel import StorageLevel
-
-        from vcf_pg_loader_spark.operators.dedup import (
-            lsh_candidate_pairs,
-            lsh_recall_sample,
-            minhash_signatures,
-            prefix_filtered_jaccard_pairs,
-            shingles,
-        )
-
-        docs = spark.createDataFrame(self.ROWS, "doc_id bigint, text string")
-        n, k, bands, t = 3, 8, 4, 0.5
-        got = lsh_recall_sample(
-            docs, "doc_id", "text", n=n, k=k, bands=bands,
-            threshold=t, sample_mod=1,
-        ).collect()[0]
-        # reference: true pairs and banded candidates computed by the
-        # constituent operators, coverage counted driver-side
-        sh = shingles(docs, "doc_id", "text", n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        true_pairs = {
-            (r.d1, r.d2)
-            for r in prefix_filtered_jaccard_pairs(sh, t)
-            .select("d1", "d2")
-            .collect()
-        }
-        cands = {
-            (r.d1, r.d2)
-            for r in lsh_candidate_pairs(
-                minhash_signatures(sh, k), k, bands
-            ).collect()
-        }
-        assert got.n_sample_docs == len(self.ROWS)
-        assert got.n_true_pairs == len(true_pairs)
-        assert got.n_banded_pairs == len(true_pairs & cands)
-        want_recall = (
-            1.0
-            if not true_pairs
-            else round(len(true_pairs & cands) / len(true_pairs), 6)
-        )
-        assert got.recall == want_recall
-        spark.catalog.clearCache()
-
-
 class TestIvfAssignRestructure:
     """operators/similarity.py _ivf_assign / _ivf_rank_centroids and
     operators/pq.py pq_encode: the crossJoin-against-centroid-rows +
@@ -546,247 +481,3 @@ class TestCmsPreaggRestructure:
             ).collect()
         }
         assert got == want
-
-
-class TestVerifyJaccardRestructure:
-    """operators/dedup.py verify_candidate_jaccard: the row-expanded
-    pair×shingle join + per-pair count + twice-joined sizes aggregation
-    is now per-doc sorted shingle arrays + row-local array_intersect —
-    guide §2.4 (six exchanges → three).  shingles() emits distinct grams
-    per doc, so the intersection size and hence the rounded jaccard are
-    bit-identical; zero-overlap candidates drop in both shapes."""
-
-    def _reference_verify(self, cands, sh, threshold):
-        # the pre-optimization formulation, verbatim
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            cands.join(a, cands["d1"] == F.col("a.doc_id"))
-            .join(
-                b,
-                (cands["d2"] == F.col("b.doc_id"))
-                & (F.col("a.shingle") == F.col("b.shingle")),
-            )
-            .groupBy("d1", "d2")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sa = sizes.alias("sa")
-        sb = sizes.alias("sb")
-        return (
-            inter.join(sa, F.col("d1") == F.col("sa.doc_id"))
-            .join(sb, F.col("d2") == F.col("sb.doc_id"))
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (
-                        F.col("sa.n_sh")
-                        + F.col("sb.n_sh")
-                        - F.col("n_inter")
-                    ),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("d1", "d2", "n_inter", "jaccard")
-        )
-
-    def test_matches_reference_incl_zero_overlap_and_threshold_zero(
-        self, spark
-    ):
-        from vcf_pg_loader_spark.operators.dedup import (
-            shingles,
-            verify_candidate_jaccard,
-        )
-
-        docs = spark.createDataFrame(
-            [
-                (1, "a b c d e f g"),
-                (2, "a b c d e f h"),
-                (3, "a b c d e f g"),
-                (4, "x y z w v u t"),
-                (5, "p q r s"),
-            ],
-            "doc_id bigint, text string",
-        )
-        sh = shingles(docs, "doc_id", "text", 3)
-        cands = spark.createDataFrame(
-            [(1, 2), (1, 3), (1, 4), (2, 3), (4, 5)],
-            "d1 bigint, d2 bigint",
-        )
-        for t in (0.0, 0.5, 0.8):
-            got = {
-                tuple(r)
-                for r in verify_candidate_jaccard(cands, sh, t).collect()
-            }
-            want = {
-                tuple(r)
-                for r in self._reference_verify(cands, sh, t).collect()
-            }
-            assert got == want, f"threshold {t}"
-        # sanity: the zero-overlap pair (1,4) is absent even at t=0.0
-        got0 = {
-            (r.d1, r.d2)
-            for r in verify_candidate_jaccard(cands, sh, 0.0).collect()
-        }
-        assert (1, 4) not in got0
-
-
-class TestCappedSmallBucketArrayPairs:
-    """operators/dedup.py lsh_candidate_pairs_capped: small-bucket pairs
-    are now generated row-locally from a per-bucket sorted member array
-    (bounded by the cap itself) instead of a second window execution
-    feeding a bucket self-join — guide §2.4.  sort_array + suffix
-    slicing enumerates exactly the d1 < d2 member pairs the self-join's
-    a.doc_id < b.doc_id predicate emitted, so the candidate set (and
-    hence everything verified downstream) is identical; the star path
-    for oversized buckets and the routed frame are untouched."""
-
-    def _reference_capped(self, sig, k, bands, cap):
-        # the pre-optimization small-bucket formulation, verbatim:
-        # window-sized band table self-joined on the bucket keys
-        from pyspark.sql import Window
-
-        from vcf_pg_loader_spark.operators.dedup import lsh_band_table
-
-        banded = lsh_band_table(sig, k, bands)
-        w = Window.partitionBy("band_id", "band_key")
-        sized = banded.withColumn(
-            "_sz", F.count(F.lit(1)).over(w)
-        ).withColumn("_bmin", F.min("doc_id").over(w))
-        small = sized.filter(F.col("_sz") <= cap).select(
-            "doc_id", "band_id", "band_key"
-        )
-        a = small.alias("a")
-        b = small.alias("b")
-        pairs_small = a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
-        big = sized.filter(F.col("_sz") > cap)
-        pairs_big = big.filter(F.col("doc_id") != F.col("_bmin")).select(
-            F.col("_bmin").alias("d1"), F.col("doc_id").alias("d2")
-        )
-        return pairs_small.unionByName(pairs_big).distinct()
-
-    def _docs(self, spark, as_string_ids=False):
-        rows = [(i, "a b c d e f g h i j") for i in range(1, 13)] + [
-            (100, "x y z w v u t s r q"),
-            (101, "x y z w v u t s r p"),
-            (102, "m n o p q r s t u v"),
-            (103, "entirely different words appear in this document here"),
-        ]
-        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-        if as_string_ids:
-            docs = docs.select(
-                F.concat(F.lit("id"), F.col("doc_id").cast("string")).alias(
-                    "doc_id"
-                ),
-                "text",
-            )
-        return docs
-
-    def test_matches_reference_binding_and_nonbinding_cap(self, spark):
-        from vcf_pg_loader_spark.operators.dedup import (
-            lsh_candidate_pairs_capped,
-            minhash_signatures,
-            shingles,
-        )
-
-        docs = self._docs(spark)
-        sh = shingles(docs, "doc_id", "text", 3)
-        sig = minhash_signatures(sh, 8)
-        for cap in (1, 2, 10_000):  # binding hard, binding, non-binding
-            got_pairs, got_routed = lsh_candidate_pairs_capped(
-                sig, 8, 4, bucket_cap=cap
-            )
-            want = {
-                tuple(r)
-                for r in self._reference_capped(sig, 8, 4, cap).collect()
-            }
-            got = {tuple(r) for r in got_pairs.collect()}
-            assert got == want, f"cap {cap}"
-            if cap == 10_000:
-                assert got_routed.count() == 0
-
-    def test_string_ids_same_order_as_join_predicate(self, spark):
-        """sort_array on string ids must agree with the old predicate's
-        lexicographic a.doc_id < b.doc_id (same total order)."""
-        from vcf_pg_loader_spark.operators.dedup import (
-            lsh_candidate_pairs_capped,
-            minhash_signatures,
-            shingles,
-        )
-
-        docs = self._docs(spark, as_string_ids=True)
-        sig = minhash_signatures(shingles(docs, "doc_id", "text", 3), 8)
-        got_pairs, _ = lsh_candidate_pairs_capped(sig, 8, 4, bucket_cap=2)
-        want = {
-            tuple(r) for r in self._reference_capped(sig, 8, 4, 2).collect()
-        }
-        assert {tuple(r) for r in got_pairs.collect()} == want
-
-
-class TestVerifyCandidateDocPrefilter:
-    """operators/dedup.py verify_candidate_jaccard invariant: docs
-    outside the candidate list can never affect the output (the two
-    inner joins restrict to candidate ids), pinned on a corpus where
-    most docs are NOT candidates, plus the empty-candidates edge.  This
-    is the equivalence a semi-join prefilter of the set aggregation
-    would rely on — measured and REJECTED in optimization round 15
-    (every prefilter variant lost its interleaved A/B; see the kernel
-    docstring) — kept as a pin so the invariant survives whatever shape
-    the kernel takes next."""
-
-    def test_non_candidate_docs_do_not_change_output(self, spark):
-        from vcf_pg_loader_spark.operators.dedup import (
-            shingles,
-            verify_candidate_jaccard,
-        )
-
-        rows = [(i, f"filler document number {i} with its own words {i}")
-                for i in range(10, 40)]
-        rows += [
-            (1, "a b c d e f g"),
-            (2, "a b c d e f h"),
-            (3, "a b c d e f g"),
-        ]
-        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-        sh = shingles(docs, "doc_id", "text", 3)
-        cands = spark.createDataFrame(
-            [(1, 2), (1, 3), (2, 3)], "d1 bigint, d2 bigint"
-        )
-        got = {
-            tuple(r)
-            for r in verify_candidate_jaccard(cands, sh, 0.5).collect()
-        }
-        # reference: the same kernel fed ONLY the candidate docs' shingles
-        # (what the semi-join reduces it to) must equal the full-corpus
-        # call — and both must contain the known duplicate pair
-        sh_c = sh.filter(F.col("doc_id").isin(1, 2, 3))
-        want = {
-            tuple(r)
-            for r in verify_candidate_jaccard(cands, sh_c, 0.5).collect()
-        }
-        assert got == want
-        assert {(d1, d2) for (d1, d2, *_rest) in got} == {
-            (1, 2), (1, 3), (2, 3)
-        }
-
-    def test_empty_candidates(self, spark):
-        from vcf_pg_loader_spark.operators.dedup import (
-            shingles,
-            verify_candidate_jaccard,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "a b c d e"), (2, "a b c d e")], "doc_id bigint, text string"
-        )
-        sh = shingles(docs, "doc_id", "text", 3)
-        cands = spark.createDataFrame([], "d1 bigint, d2 bigint")
-        assert verify_candidate_jaccard(cands, sh, 0.0).count() == 0

@@ -123,37 +123,6 @@ class TestKmvSingleScanPartials:
         assert _rows(old_b) == _rows(new_b)
 
 
-class TestCappedArrayBoundFallback:
-    """lsh_candidate_pairs_capped: caps above BUCKET_CAP_ARRAY_MAX must
-    stream small-bucket pairs through the self-join (O(cap²) per-row
-    arrays are unsafe there) with an identical candidate set."""
-
-    def test_join_fallback_identical_pairs(self, spark, monkeypatch):
-        from vcf_pg_loader_spark.operators import dedup as D
-
-        docs = spark.createDataFrame(
-            [(i, "a b c d e f g h i j") for i in range(1, 9)]
-            + [(100, "x y z w v u t s r q"), (101, "x y z w v u t s r p")],
-            "doc_id bigint, text string",
-        )
-        sig = D.minhash_signatures(
-            D.shingles(docs, "doc_id", "text", 3), 8
-        )
-        cap = 4
-        array_pairs, array_routed = D.lsh_candidate_pairs_capped(
-            sig, 8, 4, cap
-        )
-        a_rows = _rows(array_pairs)
-        a_routed = _rows(array_routed)
-        # force the join fallback for the same cap
-        monkeypatch.setattr(D, "BUCKET_CAP_ARRAY_MAX", cap - 1)
-        join_pairs, join_routed = D.lsh_candidate_pairs_capped(
-            sig, 8, 4, cap
-        )
-        assert _rows(join_pairs) == a_rows
-        assert _rows(join_routed) == a_routed
-
-
 class TestDropReasonsSurvRestructure:
     """q_drop_reasons / q_pipeline_funnel: the survivor frame joined
     from the raw docs on the canonical-id set must equal the one joined

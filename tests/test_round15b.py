@@ -1,141 +1,21 @@
 """Round-15 additions, part 2: the per-band bucket-size safety valve
-(round-14 verdict item 6 — oversized LSH buckets route through a
-verified star instead of the quadratic pairwise self-join, capped
-behavior fingerprinted and routing counters logged per sync) and the
-session-reuse sync-serve loop (verdict item 5 — N delta feeds applied
-in ONE Spark session, amortizing the measured 36-43 s per-sync
-JVM/session floor)."""
+on the maintained path (capped behavior fingerprinted and routing
+counters logged per sync; the operator's own tests are in
+tests/test_dedup_similarity.py) and the session-reuse sync-serve loop
+(verdict item 5 — N delta feeds applied in ONE Spark session,
+amortizing the measured 36-43 s per-sync JVM/session floor)."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-import vcf_pg_loader_spark.operators.dedup as D
-
-NGRAM_T = 3
-K_T = 8
-BANDS_T = 4
-THRESH_T = 0.8
+from tests.test_dedup_similarity import _hyperdup_rows
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-def _hyperdup_rows(n_dup=40):
-    """One hyper-duplicated key (the adversarial shape the valve is
-    for: boilerplate crawled n times) plus a handful of distinct docs."""
-    spam = "click here to accept all cookies and continue to the site"
-    rows = [(i, spam) for i in range(n_dup)]
-    rows += [
-        (100, "the quick brown fox jumps over the lazy dog today"),
-        (101, "pack my box with five dozen liquor jugs tonight"),
-        (102, "sphinx of black quartz judge my vow carefully now"),
-        (103, "how vexingly quick daft zebras jump around here"),
-        (104, "bright vixens jump dozy fowl quack together loudly"),
-    ]
-    return rows
-
-
-def _components(pairs_df):
-    """Set-of-frozensets component partition from a verified pair frame."""
-    cc = D.connected_components(pairs_df, "d1", "d2")
-    comps = {}
-    for r in cc.collect():
-        comps.setdefault(r["comp"], set()).add(r["node"])
-    return {frozenset(v) for v in comps.values()}
-
-
-class TestBucketCapOperator:
-    def test_non_binding_cap_identical(self, spark):
-        """With a cap no bucket reaches, the capped path IS the
-        uncapped path — pinned value-exactly, routed frame empty."""
-        rows = _hyperdup_rows(n_dup=3)
-        df = _df(spark, rows)
-        base = D.minhash_lsh_dedup(
-            df, "doc_id", "text", NGRAM_T, K_T, BANDS_T, THRESH_T
-        )
-        capped = D.minhash_lsh_dedup(
-            df, "doc_id", "text", NGRAM_T, K_T, BANDS_T, THRESH_T,
-            bucket_cap=1_000_000,
-        )
-        assert sorted(map(tuple, base.collect())) == sorted(
-            map(tuple, capped.collect())
-        )
-        sh = D.shingles(df, "doc_id", "text", NGRAM_T)
-        _, routed = D.lsh_candidate_pairs_capped(
-            D.minhash_signatures(sh, K_T), K_T, BANDS_T, 1_000_000
-        )
-        assert routed.count() == 0
-
-    def test_hyperdup_star_bounds_candidates_same_clusters(self, spark):
-        """On the adversarial one-key corpus the capped candidate set is
-        O(bucket) instead of O(bucket²), the routing counters are
-        non-zero (never silent), and the CLUSTER partition — the thing
-        dedup actually consumes — is identical: every member of a
-        hyper-dup bucket is near-identical to the bucket minimum, so
-        the verified star connects the same component the full clique
-        would."""
-        n_dup = 40
-        df = _df(spark, _hyperdup_rows(n_dup=n_dup))
-        sh = D.shingles(df, "doc_id", "text", NGRAM_T)
-        sig = D.minhash_signatures(sh, K_T)
-        cand_u, routed_u = D.lsh_candidate_pairs_capped(
-            sig, K_T, BANDS_T, None
-        )
-        cand_c, routed_c = D.lsh_candidate_pairs_capped(
-            sig, K_T, BANDS_T, 5
-        )
-        n_u, n_c = cand_u.count(), cand_c.count()
-        # clique C(40,2)=780 collapses to the 39-edge star
-        assert n_u >= n_dup * (n_dup - 1) // 2
-        assert n_c < n_u
-        assert n_c <= n_dup + 20  # star + small-bucket pairs, not clique
-        assert routed_u.count() == 0
-        routed_rows = routed_c.agg(F.sum("sz")).collect()[0][0]
-        assert routed_c.count() >= 1 and routed_rows >= n_dup
-        # identical component partition after exact verification
-        from pyspark.storagelevel import StorageLevel
-
-        shp = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs_u = D.verify_candidate_jaccard(cand_u, shp, THRESH_T)
-        pairs_c = D.verify_candidate_jaccard(cand_c, shp, THRESH_T)
-        assert _components(pairs_u) == _components(pairs_c)
-
-
-class TestBucketCapPlan:
-    def test_capped_candidates_stay_equi_join(self, spark):
-        """The valve must not cost the plan its shape: the capped
-        candidate generation is one window over the bucket key plus a
-        row-local array expansion of the (cap-bounded) small buckets —
-        no cartesian/nested-loop join anywhere, and since optimization
-        round 15 no bucket self-join either (small-bucket pairs come
-        out of a per-bucket sorted member array, so the only Generate
-        input is bounded by the cap).  Which is the whole point at
-        100 TB."""
-        import io
-        from contextlib import redirect_stdout
-
-        df = _df(spark, _hyperdup_rows(10))
-        sh = D.shingles(df, "doc_id", "text", NGRAM_T)
-        pairs, _ = D.lsh_candidate_pairs_capped(
-            D.minhash_signatures(sh, K_T), K_T, BANDS_T, 5
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            pairs.explain(mode="formatted")
-        plan = buf.getvalue()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "Window" in plan
-        # small-bucket pairs: bounded collect per bucket + explode —
-        # the second window execution and the self-join are gone
-        assert "collect_list" in plan and "Generate" in plan
-        assert "SortMergeJoin" not in plan
-        assert "ShuffledHashJoin" not in plan
 
 
 class TestBucketCapSink:

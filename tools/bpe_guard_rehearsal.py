@@ -14,7 +14,8 @@ well below it.  Records:
   - that the merges equal the in-memory path's on the same table
     (identical-model pin at rehearsal scale; that run collects the
     whole type table, after the RSS reading),
-  - wall times for both paths.
+  - wall times, Spark jobs and stages for both paths (one runner run
+    each).
 
 Writes one JSON blob (default SCALE_r16_bpe_guard.json).
 
@@ -28,7 +29,6 @@ import json
 import os
 import resource
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -102,6 +102,19 @@ def main() -> None:
     except ImportError:  # pragma: no cover
         from pyspark.sql import DataFrame
 
+    def train(name: str):
+        # one runner run: the training's jobs are counted and what it
+        # cached is released
+        rec, result = runner.run(
+            spark,
+            lambda: B.bpe_train(B.word_counts(docs), args.n_merges),
+            lambda trained: trained,
+        )
+        report[f"{name}_wall_sec"] = round(runner.seconds(rec), 2)
+        report[f"{name}_jobs"] = rec["build_jobs"] + rec["exec_jobs"]
+        report[f"{name}_stages"] = rec["build_stages"] + rec["exec_stages"]
+        return result
+
     real_collect = DataFrame.collect
     collect_sizes: list[int] = []
 
@@ -113,14 +126,10 @@ def main() -> None:
     B.LOCAL_MAX_TYPES = args.bound
     DataFrame.collect = spy
     rss_before = peak_rss_mb()
-    t0 = time.monotonic()
     try:
-        merges_guarded, path = B.bpe_train(
-            B.word_counts(docs), args.n_merges
-        )
+        merges_guarded, path = train("guarded")
     finally:
         DataFrame.collect = real_collect
-    report["guarded_wall_sec"] = round(time.monotonic() - t0, 2)
     report["fallback_engaged"] = path == "batched"
     report["probe_collect_rows"] = collect_sizes[0] if collect_sizes else None
     report["max_collect_rows"] = max(collect_sizes) if collect_sizes else None
@@ -130,10 +139,8 @@ def main() -> None:
 
     # pin: the in-memory path learns the identical model
     B.LOCAL_MAX_TYPES = n_types
-    t0 = time.monotonic()
-    merges_local, path = B.bpe_train(B.word_counts(docs), args.n_merges)
+    merges_local, path = train("local")
     assert path == "local"
-    report["local_wall_sec"] = round(time.monotonic() - t0, 2)
     report["merges_identical_to_local"] = merges_guarded == merges_local
 
     with open(args.out, "w") as fh:

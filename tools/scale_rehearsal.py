@@ -42,6 +42,7 @@ count (the skew the hash assignment must bound).  Run on an idle box:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import random
@@ -53,6 +54,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from vcf_pg_loader_spark import runner  # noqa: E402
 
 
 def gen_corpus(spark, n_docs: int, seed: int, start_id: int = 0,
@@ -96,121 +99,126 @@ def lsh_profile(spark, snap: str, ngram: int, k: int, bands: int,
                 bucket_cap: int | None = None) -> dict:
     """Per-stage attribution of the bootstrap sync's near-dup gate
     (round-13 verdict item 1): the SAME operator pipeline the
-    DedupClusterMaintSink bootstrap runs (shingle -> MinHash -> band ->
-    candidate pairs -> exact-Jaccard verify -> connected components),
-    instrumented with row counts and per-stage wall so superlinear
-    growth can be localized rather than suspected.  Counts:
+    DedupClusterMaintSink bootstrap runs (shingle sets -> MinHash ->
+    band -> candidate pairs -> exact-Jaccard verify -> connected
+    components), instrumented with row counts and, per stage, the wall
+    seconds, Spark jobs and stages of a `runner.phase` (`<stage>_sec`,
+    `<stage>_jobs`, `<stage>_stages`), so superlinear growth can be
+    localized rather than suspected.  Counts:
 
       band_bucket_max / candidate_pairs_pre_distinct — bucket-size skew
           and sum C(size,2) over band buckets, the pair volume the
           bucket join MUST emit before distinct (pure aggregate over
           bucket sizes, no join)
       candidate_pairs — |distinct (d1,d2)| entering verification
-      verify_input_rows — exact input row count of the verify join
-          (sum over pairs of both sides' shingle counts, computed from
-          aggregates, not by materializing the join)
+      verify_input_rows — sum over pairs of both sides' shingle counts
+          (the set elements the verify joins bring to the pairs),
+          computed from aggregates, not by materializing the join
       verified_pairs / cc_edges / cc_rounds — true near-dup edges and
           the label-propagation round count
+
+    Every frame the profile persists is released before it returns.
     """
     from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
 
     from vcf_pg_loader_spark.operators import dedup as D
 
     prof: dict = {"ngram": ngram, "k": k, "bands": bands,
                   "threshold": threshold}
     docs = spark.read.parquet(snap).select("doc_id", "text")
+    mem = StorageLevel.MEMORY_AND_DISK
+    held: list = []
 
-    from pyspark.storagelevel import StorageLevel
+    def persist(df):
+        held.append(df.persist(mem))
+        return df
 
-    t0 = time.monotonic()
-    sh = D.shingles(docs, "doc_id", "text", ngram).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    prof["shingle_rows"] = sh.count()
-    prof["shingle_sec"] = round(time.monotonic() - t0, 2)
+    try:
+        with _stage(spark, prof, "shingle"):
+            sets = persist(D.shingle_sets(docs, "doc_id", "text", ngram))
+            prof["shingle_rows"] = int(
+                sets.agg(F.sum("n_sh")).collect()[0][0] or 0
+            )
 
-    t0 = time.monotonic()
-    sig = D.minhash_signatures(sh, k).persist(StorageLevel.MEMORY_AND_DISK)
-    prof["signature_rows"] = sig.count()
-    prof["signature_sec"] = round(time.monotonic() - t0, 2)
+        with _stage(spark, prof, "signature"):
+            sig = persist(D.minhash_signatures(sets, k))
+            prof["signature_rows"] = sig.count()
 
-    t0 = time.monotonic()
-    buckets = (
-        D.lsh_band_table(sig, k, bands)
-        .groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("sz").alias("max_sz"),
-            F.sum(
-                (F.col("sz") * (F.col("sz") - 1) / 2).cast("bigint")
-            ).alias("pairs_pre"),
-        )
-        .collect()[0]
-    )
-    prof["band_buckets"] = int(buckets["n_buckets"])
-    prof["band_bucket_max"] = int(buckets["max_sz"])
-    prof["candidate_pairs_pre_distinct"] = int(buckets["pairs_pre"])
-    prof["bucket_stats_sec"] = round(time.monotonic() - t0, 2)
+        with _stage(spark, prof, "bucket_stats"):
+            banded = persist(D.lsh_band_table(sig, k, bands))
+            buckets = (
+                banded.groupBy("band_id", "band_key")
+                .agg(F.count(F.lit(1)).alias("sz"))
+                .agg(
+                    F.count(F.lit(1)).alias("n_buckets"),
+                    F.max("sz").alias("max_sz"),
+                    F.sum(
+                        (F.col("sz") * (F.col("sz") - 1) / 2).cast("bigint")
+                    ).alias("pairs_pre"),
+                )
+                .collect()[0]
+            )
+        prof["band_buckets"] = int(buckets["n_buckets"])
+        prof["band_bucket_max"] = int(buckets["max_sz"])
+        prof["candidate_pairs_pre_distinct"] = int(buckets["pairs_pre"])
 
-    t0 = time.monotonic()
-    cands, routed = D.lsh_candidate_pairs_capped(sig, k, bands, bucket_cap)
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    prof["candidate_pairs"] = cands.count()
-    prof["candidate_pairs_sec"] = round(time.monotonic() - t0, 2)
-    if bucket_cap is not None:
-        from pyspark.sql import functions as _F
+        with _stage(spark, prof, "candidate_pairs"):
+            cands, routed = D.lsh_bucket_pairs(banded, bucket_cap)
+            cands = persist(cands)
+            prof["candidate_pairs"] = cands.count()
+        if bucket_cap is not None:
+            r = routed.agg(
+                F.count(F.lit(1)).alias("nb"),
+                F.coalesce(F.sum("sz"), F.lit(0)).alias("nr"),
+            ).collect()[0]
+            prof["bucket_cap"] = bucket_cap
+            prof["routed_buckets"] = int(r["nb"])
+            prof["routed_rows"] = int(r["nr"])
 
-        r = routed.agg(
-            _F.count(_F.lit(1)).alias("nb"),
-            _F.coalesce(_F.sum("sz"), _F.lit(0)).alias("nr"),
-        ).collect()[0]
-        prof["bucket_cap"] = bucket_cap
-        prof["routed_buckets"] = int(r["nb"])
-        prof["routed_rows"] = int(r["nr"])
+        with _stage(spark, prof, "verify"):
+            sizes = sets.select("doc_id", "n_sh")
+            vin = 0
+            for side in ("d1", "d2"):
+                vin += (
+                    cands.groupBy(side)
+                    .agg(F.count(F.lit(1)).alias("np"))
+                    .join(sizes, F.col(side) == F.col("doc_id"))
+                    .agg(F.sum(F.col("np") * F.col("n_sh")))
+                    .collect()[0][0]
+                    or 0
+                )
+            prof["verify_input_rows"] = int(vin)
+            verified = persist(
+                D.verify_candidate_jaccard(cands, sets, threshold)
+            )
+            prof["verified_pairs"] = verified.count()
 
-    # exact verify-join input rows from aggregates: sum over pairs of
-    # each side's shingle count (the rows the two verify joins feed the
-    # per-pair intersection groupBy)
-    t0 = time.monotonic()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    vin = 0
-    for side in ("d1", "d2"):
-        vin += (
-            cands.groupBy(side)
-            .agg(F.count(F.lit(1)).alias("np"))
-            .join(sizes, F.col(side) == F.col("doc_id"))
-            .agg(F.sum(F.col("np") * F.col("n_sh")))
-            .collect()[0][0]
-            or 0
-        )
-    prof["verify_input_rows"] = int(vin)
-
-    verified = D.verify_candidate_jaccard(cands, sh, threshold).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    prof["verified_pairs"] = verified.count()
-    prof["verify_sec"] = round(time.monotonic() - t0, 2)
-
-    t0 = time.monotonic()
-    cc_stats: dict = {}
-    D.connected_components(
-        verified.select("d1", "d2"), stats=cc_stats
-    ).count()
-    prof.update(cc_stats)
-    prof["cc_sec"] = round(time.monotonic() - t0, 2)
+        with _stage(spark, prof, "cc"):
+            cc_stats: dict = {}
+            D.connected_components(
+                verified.select("d1", "d2"), stats=cc_stats
+            ).count()
+        prof.update(cc_stats)
+    finally:
+        for df in held:
+            df.unpersist()
 
     if recall_sample_mod:
         # the recall side of the cost/recall trade (round-14 verdict
         # item 2): sampled exact-Jaccard truth vs banded-candidate
         # coverage under THESE (k, bands) — recorded per scale point so
         # an operator raising --minhash-k can read what the tightened
-        # s-curve misses, not just what it saves
-        t0 = time.monotonic()
-        rs = D.lsh_recall_sample(
-            docs, "doc_id", "text", ngram, k, bands, threshold,
-            sample_mod=recall_sample_mod,
-        ).collect()[0]
+        # s-curve misses, not just what it saves.  One runner.run:
+        # it releases the sample's persisted sets and band table.
+        rec, rs = runner.run(
+            spark,
+            lambda: D.lsh_recall_sample(
+                docs, "doc_id", "text", ngram, k, bands, threshold,
+                sample_mod=recall_sample_mod,
+            ),
+            lambda df: df.collect()[0],
+        )
         prof["recall_sample"] = {
             "sample_mod": recall_sample_mod,
             "n_sample_docs": int(rs["n_sample_docs"]),
@@ -218,12 +226,23 @@ def lsh_profile(spark, snap: str, ngram: int, k: int, bands: int,
             "n_banded_pairs": int(rs["n_banded_pairs"]),
             "recall": float(rs["recall"]),
         }
-        prof["recall_sample_sec"] = round(time.monotonic() - t0, 2)
-    verified.unpersist()
-    cands.unpersist()
-    sig.unpersist()
-    sh.unpersist()
+        prof["recall_sample_sec"] = round(runner.seconds(rec), 2)
+        prof["recall_sample_jobs"] = rec["build_jobs"] + rec["exec_jobs"]
+        prof["recall_sample_stages"] = (
+            rec["build_stages"] + rec["exec_stages"]
+        )
     return prof
+
+
+@contextlib.contextmanager
+def _stage(spark, prof: dict, name: str):
+    """A `runner.phase` that records its seconds, jobs and stages into
+    `prof` as `<name>_sec`, `<name>_jobs` and `<name>_stages`."""
+    with runner.phase(spark, name) as rec:
+        yield
+    prof[f"{name}_sec"] = round(rec["sec"], 2)
+    prof[f"{name}_jobs"] = rec["jobs"]
+    prof[f"{name}_stages"] = rec["stages"]
 
 
 def run_cli(*argv) -> tuple[float, str]:
@@ -233,6 +252,8 @@ def run_cli(*argv) -> tuple[float, str]:
     # (heavy parallel Arrow allocation during the cluster-state cache
     # build); the rehearsal box has headroom — use it
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # the child's Spark jobs run in its own JVM, which no phase of this
+    # session can count: its wall is the one figure to record
     t0 = time.monotonic()
     r = subprocess.run(
         [sys.executable, "-m", "vcf_pg_loader_spark.cli", *argv],
@@ -335,22 +356,21 @@ def main() -> int:
     }
     try:
         snap = os.path.join(work, "snap.parquet")
-        t0 = time.monotonic()
-        if args.corpus:
-            from pyspark.sql import functions as F
+        with _stage(spark, report, "gen"):
+            if args.corpus:
+                from pyspark.sql import functions as F
 
-            ext = spark.read.parquet(args.corpus)
-            if "source" not in ext.columns:
-                ext = ext.withColumn("source", F.lit("external"))
-            ext = ext.select("doc_id", "text", "source")
-            ext.write.parquet(snap)
-            report["corpus"] = args.corpus
-            report["n_docs"] = ext.count()
-        else:
-            gen_corpus(
-                spark, args.docs, seed=13, mode=args.corpus_mode
-            ).write.parquet(snap)
-        report["gen_sec"] = round(time.monotonic() - t0, 2)
+                ext = spark.read.parquet(args.corpus)
+                if "source" not in ext.columns:
+                    ext = ext.withColumn("source", F.lit("external"))
+                ext = ext.select("doc_id", "text", "source")
+                ext.write.parquet(snap)
+                report["corpus"] = args.corpus
+                report["n_docs"] = ext.count()
+            else:
+                gen_corpus(
+                    spark, args.docs, seed=13, mode=args.corpus_mode
+                ).write.parquet(snap)
 
         report["lsh_profile"] = lsh_profile(
             spark, snap, args.ngram, args.minhash_k, args.bands,

@@ -8,10 +8,11 @@ Scale design (the point of each variant):
                 shingle — the shingle self-join is the quadratic hazard, so
                 it is only for small/filtered corpora or as the LSH
                 verification stage.
-  minhash-lsh   the scale path: per-doc signature (one groupBy over
-                exploded shingles), band-bucket join (equi-join, shuffles
-                only bucket keys), exact Jaccard verification on the tiny
-                candidate set.  Pair cost is O(collisions), not O(n²).
+  minhash-lsh   the scale path: per-doc shingle set and signature, both
+                row-local (no explode, no shuffle), band-bucket join
+                (equi-join, shuffles only bucket keys), exact Jaccard
+                verification of the candidate pairs' sets.  Pair cost is
+                O(collisions), not O(n²).
   simhash       per-doc fingerprint in one pass; near-dups = fingerprints
                 at small Hamming distance (bucket by fingerprint for exact
                 dup classes; rotate-and-sort for distance>0 at scale).
@@ -77,11 +78,12 @@ def shingle_sets(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """(doc_id, _set, n_sh): each doc's distinct shingles as ONE sorted
-    array row with its size — the per-doc set that
-    :func:`verify_candidate_jaccard` aggregates out of :func:`shingles`
-    rows, built row-locally instead (no explode, no shuffle).  `df` must
-    hold one row per id; a doc with fewer than n tokens gets an empty
-    set (n_sh 0), where :func:`shingles` gives it no rows."""
+    array row with its size, built row-locally (no explode, no
+    shuffle) — the input of :func:`minhash_signatures`,
+    :func:`verify_candidate_jaccard` and
+    :func:`prefix_filtered_jaccard_pairs`.  `df` must hold one row per
+    id; a doc with fewer than n tokens gets an empty set (n_sh 0), where
+    :func:`shingles` gives it no rows."""
     return _distinct_grams(df, id_col, text_col, n).select(
         "doc_id",
         F.sort_array("_grams").alias("_set"),
@@ -161,7 +163,7 @@ def jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def prefix_filtered_jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
+def prefix_filtered_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard-similar pairs via prefix filtering (AllPairs/PPJoin).
 
     Same output as :func:`jaccard_pairs`, scale-safe plan: if
@@ -178,27 +180,28 @@ def prefix_filtered_jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     t*|S|; one extra shingle makes any double-rounding wobble at integer
     boundaries harmless on both engines.
 
-    sh: output of :func:`shingles` — persist it first (feeds the df
-    counts, the prefixes, and verification).
+    sets: output of :func:`shingle_sets` — persist it first: its
+    exploded rows feed the df counts and the prefixes, and
+    :func:`verify_candidate_jaccard` reads the sets themselves.  Each
+    exploded row carries its doc's set size, so no size window runs.
 
     The prefix frame feeds BOTH self-join sides; persist it (a bounded
-    fraction of sh, spills safely) or the double-window pass — two
-    sorts + two exchanges over the full shingle table — executes twice
-    (optimization round 15, guide §2.4/§5; caller owns the lifetime).
+    fraction of the shingle rows, spills safely) or the double-window
+    pass — two sorts + two exchanges over the full shingle table —
+    executes twice (caller owns the lifetime).
     """
     from pyspark.sql.window import Window
     from pyspark.storagelevel import StorageLevel
 
+    sh = sets.select("doc_id", "n_sh", F.explode("_set").alias("shingle"))
     # Document frequency via a window over the shingle partition: ONE
-    # exchange of sh (the old groupBy+join shuffled sh twice).  Rank and
-    # size then share ONE doc_id exchange.
+    # exchange of the shingle rows (a groupBy+join shuffles them twice),
+    # then ONE doc_id exchange for the rank.
     w_df = Window.partitionBy("shingle")
     w_rank = Window.partitionBy("doc_id").orderBy(F.asc("_df"), F.asc("shingle"))
-    w_doc = Window.partitionBy("doc_id")
     prefix = (
         sh.withColumn("_df", F.count(F.lit(1)).over(w_df))
         .withColumn("rn", F.row_number().over(w_rank))
-        .withColumn("n_sh", F.count(F.lit(1)).over(w_doc))
         .filter(
             F.col("rn")
             <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 2
@@ -236,7 +239,7 @@ def prefix_filtered_jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("_n_prefix_shared"))
         .select("d1", "d2")
     )
-    return verify_candidate_jaccard(cands, sh, threshold)
+    return verify_candidate_jaccard(cands, sets, threshold)
 
 
 def sql_prefix_filtered_jaccard(sh_sql: str, threshold: float) -> str:
@@ -378,19 +381,14 @@ def sql_mh_expr(h: str, i: int) -> str:
     return f"(({a} * ({h} >> 30) + {b} * ({h} & {_MASK30}) + {c}) % {_MH_P})"
 
 
-def minhash_signatures(sh: DataFrame, k: int = 8) -> DataFrame:
-    """K-permutation MinHash signature per doc: one md5-derived base hash
-    per shingle, K arithmetic permutations, one groupBy with K min-aggs."""
-    hashed = sh.withColumn("_h", h60(F.col("shingle"), salt="mh:"))
-    aggs = [F.min(_mh_expr(F.col("_h"), i)).alias(f"mh{i}") for i in range(k)]
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures_of_sets(sets: DataFrame, k: int = 8) -> DataFrame:
-    """:func:`minhash_signatures` over :func:`shingle_sets` rows: the
-    same (doc_id, mh0..mh{k-1}) values — the min of each permutation
-    over the same distinct shingles — computed row-locally with no
-    groupBy.  Docs with no shingles get no row, as in the grouped form."""
+def minhash_signatures(sets: DataFrame, k: int = 8) -> DataFrame:
+    """K-permutation MinHash signature (doc_id, mh0..mh{k-1}) per
+    :func:`shingle_sets` row: one md5-derived base hash per shingle, K
+    arithmetic permutations, each reduced with array_min — row-local,
+    no explode and no groupBy.  Docs with no shingles get no row.  The
+    DuckDB twin is the grouped MIN of :func:`sql_mh_expr` over
+    :func:`sql_shingles` rows: the same min over the same distinct
+    shingles."""
     hashed = sets.filter(F.col("n_sh") > 0).select(
         "doc_id",
         F.transform("_set", lambda s: h60(s, salt="mh:")).alias("_hs"),
@@ -417,8 +415,7 @@ def lsh_band_table(sig: DataFrame, k: int = 8, bands: int = 4) -> DataFrame:
     this table incrementally (streaming/dedup_ingest.py) turns dedup
     into an equi-join against the index instead of a corpus re-scan.
     All band keys come out of ONE pass over the signature via posexplode
-    (a per-band union would recompute the signature aggregate `bands`
-    times)."""
+    (a per-band union would rebuild the signature `bands` times)."""
     rows_per_band = k // bands
     keys = []
     for b in range(bands):
@@ -429,93 +426,46 @@ def lsh_band_table(sig: DataFrame, k: int = 8, bands: int = 4) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sig: DataFrame, k: int = 8, bands: int = 4) -> DataFrame:
-    """Band the signature, bucket-join docs sharing any band value.
-
-    Equi-join on (band_id, band_key): this is the scale path — shuffle is
-    proportional to docs×bands, and only colliding buckets produce pairs.
-
-    The band table feeds BOTH self-join sides; persist it (docs×bands
-    narrow rows, spills safely) or the signature aggregate — a full
-    groupBy over the exploded shingles — executes twice (optimization
-    round 15, guide §2.4/§5; caller/bench owns the cache lifetime, as
-    with the LSH shingle tables).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    banded = lsh_band_table(sig, k, bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    return lsh_bucket_pairs(banded)[0]
-
-
-def lsh_candidate_pairs_capped(
-    sig: DataFrame,
-    k: int = 8,
-    bands: int = 4,
-    bucket_cap: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Band-bucket candidate pairs with a per-band bucket-size safety
-    valve (round-14 verdict item 6).
-
-    The uncapped bucket self-join emits ΣC(size, 2) candidate rows per
-    band — a single hyper-duplicated key (boilerplate, empty docs, a
-    template page crawled a million times) makes one bucket quadratic
-    and the verify join unbounded no matter how the s-curve is tuned.
-    Buckets larger than ``bucket_cap`` are ROUTED instead of pairwise-
-    joined: every member pairs with the bucket's minimum doc_id (a
-    star), so an oversized bucket costs O(size) candidates instead of
-    O(size²).  Star candidates still pass exact Jaccard verification
-    downstream, so no false duplicate can enter the pair table; docs
-    in a hyper-dup bucket are near-identical by construction, so the
-    star's verified edges connect the same component the full clique
-    would (pinned equal on the standard fixtures and on a planted
-    one-key corpus by tests/test_round15b.py).  Routing is never
-    silent: the second return value is one row per routed
-    (band_id, band_key) bucket with its size, and callers
-    (DedupClusterMaintSink, sync-corpus) log the aggregate per sync.
-
-    One extra shuffle vs the uncapped path: the size/min window over
-    (band_id, band_key) — the same key the self-join shuffles on, so
-    the exchange is reused.  With ``bucket_cap=None`` this is exactly
-    :func:`lsh_candidate_pairs` plus an empty routed frame.
-
-    Returns ``(pairs, routed)``: pairs is (d1, d2) distinct with
-    d1 < d2; routed is (band_id, band_key, sz) for buckets > cap.
-
-    The band table feeds multiple plan branches, so it is persisted
-    here — otherwise the signature aggregate (a full groupBy over the
-    exploded shingles) re-executes per branch (optimization round 15,
-    guide §2.4/§5).  The persist stays cached after the pairs are used;
-    a caller that must release it (a maintenance sink applying batch
-    after batch) builds and persists the band table itself, passes it
-    to :func:`lsh_bucket_pairs` and unpersists it when done.
-
-    Memory shape of the row-local pair generation (round-15 advice):
-    each small bucket's C(size, 2) pair structs flatten into ONE array
-    before the explode, so per-row memory is O(bucket_cap²) — safe for
-    the few-dozen-to-few-hundred caps the valve exists for, but a very
-    large cap (tens of thousands) would push single rows toward
-    Spark's ~2³¹ array-element / 2 GB limits.  Caps above
-    ``BUCKET_CAP_ARRAY_MAX`` therefore fall back to the streaming
-    self-join formulation for small buckets (identical pairs — the
-    array form is pinned against it in tests/test_opt_r15.py), which
-    streams any bucket size.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    banded = lsh_band_table(sig, k, bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    return lsh_bucket_pairs(banded, bucket_cap)
-
-
 def lsh_bucket_pairs(
     banded: DataFrame, bucket_cap: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, routed) of :func:`lsh_candidate_pairs_capped` from a band
-    table the caller built with :func:`lsh_band_table`.  Nothing is
-    persisted here: the caller owns the band table's cache lifetime."""
+    """Candidate pairs of docs that share a band bucket of a
+    :func:`lsh_band_table`, with a per-band bucket-size safety valve.
+
+    The band table feeds several plan branches (both self-join sides,
+    or the sized window's three consumers), so the caller persists it
+    (docs×bands narrow rows, spills safely) and owns its cache
+    lifetime; nothing is persisted here.
+
+    Uncapped (``bucket_cap=None``), docs equi-join on (band_id,
+    band_key): shuffle is proportional to docs×bands and only colliding
+    buckets produce pairs — ΣC(size, 2) rows per band.  That is
+    quadratic in one hyper-duplicated key (boilerplate, empty docs, a
+    template page crawled a million times), which no s-curve tuning
+    bounds.  With a cap, buckets larger than ``bucket_cap`` are ROUTED
+    instead of pairwise-joined: every member pairs with the bucket's
+    minimum doc_id (a star), so an oversized bucket costs O(size)
+    candidates instead of O(size²).  Star candidates still pass exact
+    Jaccard verification downstream, so no false duplicate can enter
+    the pair table; docs in a hyper-dup bucket are near-identical by
+    construction, so the star's verified edges connect the same
+    component the full clique would (pinned on the standard fixtures
+    and on a planted one-key corpus in tests/test_dedup_similarity.py).
+    Routing is never silent: callers (DedupClusterMaintSink,
+    sync-corpus) log the routed frame's aggregate per sync.  The size/
+    min window shuffles on (band_id, band_key), the key the pairing
+    shuffles on, so the exchange is reused.
+
+    Small buckets' pairs come out of ONE sorted member array per bucket,
+    so per-row memory is O(bucket_cap²) pair structs.  That is safe for
+    the few-dozen-to-few-hundred caps the valve exists for; caps above
+    ``BUCKET_CAP_ARRAY_MAX`` stream small-bucket pairs through the
+    self-join instead (identical pairs), which handles any bucket size.
+
+    Returns ``(pairs, routed)``: pairs is (d1, d2) distinct with
+    d1 < d2; routed is (band_id, band_key, sz) for buckets > cap, empty
+    when uncapped.
+    """
     from pyspark.sql import Window
 
     if bucket_cap is None:
@@ -599,51 +549,29 @@ def lsh_bucket_pairs(
 
 
 def verify_candidate_jaccard(
-    cands: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for CANDIDATE pairs only.  Cost is proportional to
-    |candidates| × shingles-per-doc — never all-pairs.
-
-    Plan shape (optimization round 15, guide §2.4): each doc's distinct
-    shingles fold into ONE sorted array row (per-doc size rides the same
-    aggregation), the pair list joins both sides' arrays by id, and the
-    intersection is a row-local `array_intersect` — three exchanges
-    where the row-expanded formulation (pair×shingle join + per-pair
-    count + a separate sizes aggregation joined twice) paid six.
-    shingles() emits DISTINCT grams per doc, so |array_intersect| IS the
-    set-intersection count the old per-row match count computed —
-    integers, hence the rounded jaccard doubles, are bit-identical
-    (pinned in tests/test_opt_r15.py::TestVerifyJaccardRestructure).
-    Zero-overlap candidates drop exactly as the old inner shingle join
-    dropped them (the n_inter > 0 filter keeps that contract even at
-    threshold 0.0).
-
-    A candidate-doc semi-join prefilter of the set aggregation (guide
-    §3: only docs appearing in a candidate pair can survive the verify
-    joins) was measured and REJECTED in optimization round 15: a
-    four-arm interleaved A/B (plain / semi-join / persisted-cands /
-    broadcast-hinted semi-join) put every prefilter variant +0.5-1.4 s
-    per query at sf0.1 — the extra id-distinct aggregation and the
-    semi-join stage cost more than the full-corpus set aggregation they
-    save at bench scale, and the persisted-cands variant alone was
-    neutral (pure cost, single consumer).  At 100 TB dup rates the
-    candidate-doc set approaches the corpus anyway (most docs collide
-    in some band), so the prefilter is not even a clear scale win —
-    unlike the band/prefix persists above, which remove whole corpus
-    passes."""
-    sets = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("shingle")).alias("_set"),
-        F.count(F.lit(1)).alias("n_sh"),
-    )
-    return verify_candidate_jaccard_sets(cands, sets, threshold)
-
-
-def verify_candidate_jaccard_sets(
     cands: DataFrame, sets: DataFrame, threshold: float
 ) -> DataFrame:
-    """:func:`verify_candidate_jaccard` over per-doc shingle sets
-    (doc_id, _set, n_sh) — the :func:`shingle_sets` shape — instead of
-    shingle rows."""
+    """Exact Jaccard for CANDIDATE pairs only, over per-doc shingle sets
+    (doc_id, _set, n_sh) — the :func:`shingle_sets` shape.  Cost is
+    proportional to |candidates| × shingles-per-doc — never all-pairs.
+
+    Plan shape: the pair list joins both sides' sorted set arrays by id
+    and the intersection is a row-local `array_intersect` — no
+    aggregation at all, where the row-expanded formulation (pair×shingle
+    join + per-pair count + a sizes aggregation joined twice) paid six
+    exchanges.  A set holds DISTINCT grams, so |array_intersect| IS the
+    set-intersection count (pinned against the row-expanded formulation
+    in tests/test_dedup_similarity.py).  Zero-overlap candidates drop as
+    an inner shingle join would drop them (the n_inter > 0 filter keeps
+    that contract even at threshold 0.0).
+
+    A candidate-doc semi-join prefilter of the sets (only docs in a
+    candidate pair can survive the verify joins) was measured and
+    REJECTED: in a four-arm interleaved A/B at sf0.1 every prefilter
+    variant cost +0.5-1.4 s per query, the extra id-distinct
+    aggregation and semi-join stage outweighing what they save, and at
+    100 TB dup rates the candidate-doc set approaches the corpus anyway
+    (most docs collide in some band)."""
     return (
         cands.join(
             sets.select(
@@ -687,24 +615,28 @@ def minhash_lsh_dedup(
     threshold: float = 0.8,
     bucket_cap: int | None = None,
 ) -> DataFrame:
-    """Full near-dup pipeline: shingle → MinHash → LSH buckets → exact
-    Jaccard verification restricted to the candidate pairs.
+    """Full near-dup pipeline: :func:`shingle_sets` →
+    :func:`minhash_signatures` → :func:`lsh_band_table` →
+    :func:`lsh_bucket_pairs` → :func:`verify_candidate_jaccard`, exact
+    Jaccard restricted to the candidate pairs.  `df` must hold one row
+    per id.
 
-    The shingle table feeds the signature build AND the verification
-    joins; persist it (memory-and-disk, spills safely at scale) so the
-    explode+hash work runs once.  Verification touches only candidate
-    pairs — the property that makes LSH sub-quadratic.  ``bucket_cap``
-    routes oversized band buckets through the star path
-    (:func:`lsh_candidate_pairs_capped`) so one hyper-dup key cannot
-    make the verify join quadratic.
+    The shingle sets feed the signatures AND the verification joins,
+    and the band table feeds the bucket pairing's branches; both are
+    persisted (memory-and-disk, spills safely at scale) so shingling
+    and MinHash run once.  Verification touches only candidate pairs —
+    the property that makes LSH sub-quadratic.  ``bucket_cap`` routes
+    oversized band buckets through the star path of
+    :func:`lsh_bucket_pairs` so one hyper-dup key cannot make the
+    verify join quadratic.
     """
     from pyspark.storagelevel import StorageLevel
 
-    sh = shingles(df, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    cands, _routed = lsh_candidate_pairs_capped(
-        minhash_signatures(sh, k), k, bands, bucket_cap
-    )
-    return verify_candidate_jaccard(cands, sh, threshold)
+    mem = StorageLevel.MEMORY_AND_DISK
+    sets = shingle_sets(df, id_col, text_col, n).persist(mem)
+    banded = lsh_band_table(minhash_signatures(sets, k), k, bands).persist(mem)
+    cands, _routed = lsh_bucket_pairs(banded, bucket_cap)
+    return verify_candidate_jaccard(cands, sets, threshold)
 
 
 def lsh_recall_sample(
@@ -754,13 +686,13 @@ def lsh_recall_sample(
     sample = df.filter(
         h60(F.col(id_col).cast("string"), salt) % F.lit(sample_mod) == 0
     ).select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    sh = shingles(sample, "doc_id", "text", n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    true_pairs = prefix_filtered_jaccard_pairs(sh, threshold).select(
+    mem = StorageLevel.MEMORY_AND_DISK
+    sets = shingle_sets(sample, "doc_id", "text", n).persist(mem)
+    true_pairs = prefix_filtered_jaccard_pairs(sets, threshold).select(
         "d1", "d2"
     )
-    cands = lsh_candidate_pairs(minhash_signatures(sh, k), k, bands)
+    banded = lsh_band_table(minhash_signatures(sets, k), k, bands).persist(mem)
+    cands = lsh_bucket_pairs(banded)[0]
     pair_counts = (
         true_pairs.join(
             cands.withColumn("_b", F.lit(1)), ["d1", "d2"], "left"

@@ -125,8 +125,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = D.shingles(docs, "doc_id", "text", NGRAM).persist(StorageLevel.MEMORY_AND_DISK)
-    return D.prefix_filtered_jaccard_pairs(sh, JACCARD_T)
+    sets = D.shingle_sets(docs, "doc_id", "text", NGRAM).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return D.prefix_filtered_jaccard_pairs(sets, JACCARD_T)
 
 
 _SH = D.sql_shingles(NGRAM)
@@ -204,7 +206,7 @@ def q_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixtures so the DuckDB twin pins the ROUTING arithmetic
     value-exactly, star pairs included.  Capped output with a
     non-binding cap is pinned equal to q_minhash_lsh by
-    tests/test_round15b.py."""
+    tests/test_dedup_similarity.py."""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_dedup(
         docs, "doc_id", "text", NGRAM, MINHASH_K, MINHASH_BANDS, JACCARD_T,
@@ -283,9 +285,9 @@ def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen against.  Pure integer arithmetic (DIV 2 both engines), so
     the twin is value-exact."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = D.shingles(docs, "doc_id", "text", NGRAM)
+    sets = D.shingle_sets(docs, "doc_id", "text", NGRAM)
     banded = D.lsh_band_table(
-        D.minhash_signatures(sh, MINHASH_K), MINHASH_K, MINHASH_BANDS
+        D.minhash_signatures(sets, MINHASH_K), MINHASH_K, MINHASH_BANDS
     )
     per = banded.groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("sz")
@@ -1236,9 +1238,7 @@ def q_semdedup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iter=IVF_ITER,
         tau=SEMDEDUP_TAU,
     )
-    if not sink.applied(len(batches) - 1):
-        for i, b in enumerate(batches):
-            sink.apply_batch(b, i)
+    _replay(sink, batches)
     return sink.keep(spark).withColumnRenamed(sink.id_col, "vec_id")
 
 
@@ -1293,7 +1293,7 @@ def q_winnow_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     root = _served_root(sf_dir, "zdel_winnow", "documents.parquet")
     sink = WinnowIndexSink(f"{root}/state")
-    _run_zdel_batches(sink, docs.select("doc_id", "text"))
+    _replay(sink, _zdel_batches(docs.select("doc_id", "text")))
     return sink.overlap_pairs(spark, WINNOW_MAX_DF, WINNOW_MIN_SHARED)
 
 
@@ -3209,12 +3209,24 @@ def _zdel_batches(docs: DataFrame) -> list[DataFrame]:
     ]
 
 
-def _run_zdel_batches(sink, docs: DataFrame) -> None:
-    batches = _zdel_batches(docs)
+def _replay(sink, batches: list[DataFrame]) -> None:
+    """Apply `batches` to `sink` as batch ids 0, 1, ... exactly once: a
+    state already maintained through the last id is served as it is."""
     if sink.applied(len(batches) - 1):
-        return  # state already maintained through the full sequence
+        return
     for i, b in enumerate(batches):
         sink.apply_batch(b, i)
+
+
+def _cdc_batches(old: DataFrame, new: DataFrame, key: str) -> list[DataFrame]:
+    """A snapshot sync as two batches: the OLD snapshot inserted whole,
+    then ONE zset_snapshot_delta batch that moves it to the NEW one."""
+    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
+
+    return [
+        old.withColumn(MULT, F.lit(1).cast("bigint")),
+        zset_snapshot_delta(old, new, key),
+    ]
 
 
 def _over_retained(sql: str, pred: str = None) -> str:
@@ -3243,7 +3255,7 @@ def q_dedup_keep_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = DedupClusterMaintSink(
         f"{root}/state", NGRAM, MINHASH_K, MINHASH_BANDS, JACCARD_T
     )
-    _run_zdel_batches(sink, docs.select("doc_id", "text"))
+    _replay(sink, _zdel_batches(docs.select("doc_id", "text")))
     return sink.keep(spark)
 
 
@@ -3262,7 +3274,7 @@ def q_bm25_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     root = _served_root(sf_dir, "zdel_bm25", "documents.parquet")
     sink = BM25IndexSink(f"{root}/state")
-    _run_zdel_batches(sink, docs.select("doc_id", "text"))
+    _replay(sink, _zdel_batches(docs.select("doc_id", "text")))
     return BM25Index(spark, sink.target).search(BM25_TERMS, BM25_K)
 
 
@@ -3285,7 +3297,7 @@ def q_drop_reasons_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = FunnelReportSink(
         f"{root}/state", NLL_MAX, NGRAM, MINHASH_K, MINHASH_BANDS, JACCARD_T
     )
-    _run_zdel_batches(sink, docs.select("doc_id", "text"))
+    _replay(sink, _zdel_batches(docs.select("doc_id", "text")))
     return sink.report(spark)
 
 
@@ -3394,7 +3406,6 @@ def q_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed docs rebuild from their arriving text, unchanged docs are
     untouched.  Oracle: the batch LSH+CC keep recomputed over exactly
     the new snapshot."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import DedupClusterMaintSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3403,9 +3414,7 @@ def q_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = DedupClusterMaintSink(
         f"{root}/state", NGRAM, MINHASH_K, MINHASH_BANDS, JACCARD_T
     )
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.keep(spark)
 
 
@@ -3430,7 +3439,6 @@ def q_cdc_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta's docs re-run the per-doc stages.  Oracle: the whole
     funnel recomputed over the new snapshot with the nll CTE trained on
     the old one."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import FunnelReportSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3439,9 +3447,7 @@ def q_cdc_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = FunnelReportSink(
         f"{root}/state", NLL_MAX, NGRAM, MINHASH_K, MINHASH_BANDS, JACCARD_T
     )
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.report(spark)
 
 
@@ -3455,7 +3461,6 @@ def q_cdc_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs', and re-tokenizes CHANGED docs only — idf decrements through
     the consolidated doclens.  Oracle: BM25 over exactly the new
     snapshot."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.sources.bm25_index import BM25Index
     from vcf_pg_loader_spark.streaming.dedup_ingest import BM25IndexSink
 
@@ -3463,9 +3468,7 @@ def q_cdc_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = _cdc_snapshots(docs)
     root = _served_root(sf_dir, "cdc_bm25", "documents.parquet")
     sink = BM25IndexSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return BM25Index(spark, sink.target).search(BM25_TERMS, BM25_K)
 
 
@@ -3477,16 +3480,13 @@ def q_cdc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting table drops removed/changed docs' fingerprints by keyed
     anti-join and re-hashes only the delta's arriving texts.  Oracle:
     the full winnowing pipeline over exactly the new snapshot."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import WinnowIndexSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old, new = _cdc_snapshots(docs)
     root = _served_root(sf_dir, "cdc_winnow", "documents.parquet")
     sink = WinnowIndexSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.overlap_pairs(spark, WINNOW_MAX_DF, WINNOW_MIN_SHARED)
 
 
@@ -3759,7 +3759,6 @@ def q_cdc_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (changed) ones; incident semantic-dup edges drop and CC re-runs
     over the pair table only.  Oracle: frozen-centroid SemDeDup over
     exactly the new snapshot (centroids trained on the old one)."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.dedup_ingest import SemDeDupIngestSink
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -3773,9 +3772,7 @@ def q_cdc_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iter=IVF_ITER,
         tau=SEMDEDUP_TAU,
     )
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "vec_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "vec_id"))
     return sink.keep(spark).withColumnRenamed(sink.id_col, "vec_id")
 
 
@@ -3832,7 +3829,7 @@ def q_decontam_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     root = _served_root(sf_dir, "zdel_decontam", "documents.parquet")
     sink = DecontamIndexSink(f"{root}/state")
-    _run_zdel_batches(sink, docs.select("doc_id", "text"))
+    _replay(sink, _zdel_batches(docs.select("doc_id", "text")))
     return sink.contamination(spark)
 
 
@@ -3848,16 +3845,13 @@ def q_cdc_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly their own pairs (the split assignment is a pure doc_id
     hash, so it is snapshot-stable).  Oracle: the full overlap join
     over exactly the new snapshot."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import DecontamIndexSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old, new = _cdc_snapshots(docs)
     root = _served_root(sf_dir, "cdc_decontam", "documents.parquet")
     sink = DecontamIndexSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.contamination(spark)
 
 
@@ -3877,7 +3871,6 @@ def q_cdc_decontam_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shingling.  Oracle: the full overlap join over exactly the new
     snapshot."""
     from vcf_pg_loader_spark.operators import sampling as SP
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import DecontamIndexSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3891,9 +3884,7 @@ def q_cdc_decontam_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _served_root(sf_dir, "cdc_decontam_eval", "documents.parquet")
     sink = DecontamIndexSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.contamination(spark)
 
 
@@ -4030,7 +4021,7 @@ def q_dataset_card_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     root = _served_root(sf_dir, "zdel_card", "documents.parquet")
     sink = DatasetCardSink(f"{root}/state")
-    _run_zdel_batches(sink, docs.select("doc_id", "text", "source"))
+    _replay(sink, _zdel_batches(docs.select("doc_id", "text", "source")))
     return sink.card(spark)
 
 
@@ -4056,7 +4047,6 @@ def q_cdc_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc stages (quality, tokens, frozen-LM nll, fingerprint).
     Oracle: the whole card recomputed over exactly the new snapshot
     with the nll CTE trained on the old one."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import DatasetCardSink
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -4065,9 +4055,7 @@ def q_cdc_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = _cdc_snapshots(docs)
     root = _served_root(sf_dir, "cdc_card", "documents.parquet")
     sink = DatasetCardSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.card(spark)
 
 
@@ -4098,7 +4086,6 @@ def q_cdc_card_source_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     one — if the delta dropped source from the comparison, the stale
     'legacy-*' rows would survive in the Spark card and hash-mismatch.
     Texts change per _cdc_snapshots too, so both mover kinds coexist."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import DatasetCardSink
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -4114,14 +4101,8 @@ def q_cdc_card_source_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _served_root(sf_dir, "cdc_card_srcmove", "documents.parquet")
     sink = DatasetCardSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(
-            zset_snapshot_delta(
-                old, new, "doc_id", cmp_cols=["text", "source"]
-            ),
-            1,
-        )
+    # the delta compares every non-id column: text AND source
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.card(spark)
 
 
@@ -4999,8 +4980,7 @@ def q_training_shards_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     root = _served_root(sf_dir, "shards_store", "documents.parquet")
     sink = TrainingShardSink(f"{root}/state")
-    if not sink.applied(0):
-        sink.apply_batch(docs.withColumn(MULT, F.lit(1).cast("bigint")), 0)
+    _replay(sink, [docs.withColumn(MULT, F.lit(1).cast("bigint"))])
     return sink.manifest(spark)
 
 
@@ -5114,16 +5094,13 @@ def q_cdc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite; untouched shards hard-link through the swap.  Oracle: the
     manifest recomputed over exactly the new snapshot — packing offsets
     ride the fingerprint, so a stale or mis-packed shard hash-fails."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.shards import TrainingShardSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old, new = _cdc_snapshots(docs)
     root = _served_root(sf_dir, "cdc_shards", "documents.parquet")
     sink = TrainingShardSink(f"{root}/state")
-    if not sink.applied(1):
-        sink.apply_batch(old.withColumn(MULT, F.lit(1).cast("bigint")), 0)
-        sink.apply_batch(zset_snapshot_delta(old, new, "doc_id"), 1)
+    _replay(sink, _cdc_batches(old, new, "doc_id"))
     return sink.manifest(spark)
 
 
@@ -6400,15 +6377,12 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _vocab_sink(spark, sf_dir: str, name: str, batches) -> "VocabSink":
     """Bootstrap a VocabSink state under the served-root registry and
-    apply the given (batch_id, frame) list exactly once."""
+    replay the given frames exactly once (:func:`_replay`)."""
     from vcf_pg_loader_spark.streaming.vocab import VocabSink
 
     root = _served_root(sf_dir, name, "documents.parquet")
     sink = VocabSink(f"{root}/state")
-    last = batches[-1][0]
-    if not sink.applied(last):
-        for bid, frame in batches:
-            sink.apply_batch(frame, bid)
+    _replay(sink, batches)
     return sink
 
 
@@ -6428,7 +6402,7 @@ def q_vocab_coverage_served(
         spark,
         sf_dir,
         "vocab_store",
-        [(0, docs.withColumn(MULT, F.lit(1).cast("bigint")))],
+        [docs.withColumn(MULT, F.lit(1).cast("bigint"))],
     )
     return _coverage_from_wc(sink.counts(spark))
 
@@ -6440,18 +6414,10 @@ def q_cdc_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     as -1 and its new text as +1, so per-word counts stay exact while
     only the touched word-hash buckets rewrite.  Oracle: the coverage
     curve recomputed over exactly the new snapshot."""
-    from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old, new = _cdc_snapshots(docs)
     sink = _vocab_sink(
-        spark,
-        sf_dir,
-        "cdc_vocab",
-        [
-            (0, old.withColumn(MULT, F.lit(1).cast("bigint"))),
-            (1, zset_snapshot_delta(old, new, "doc_id")),
-        ],
+        spark, sf_dir, "cdc_vocab", _cdc_batches(old, new, "doc_id")
     )
     return _coverage_from_wc(sink.counts(spark))
 
@@ -6537,7 +6503,7 @@ def q_vocab_oov_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "vocab_train_store",
-        [(0, train.withColumn(MULT, F.lit(1).cast("bigint")))],
+        [train.withColumn(MULT, F.lit(1).cast("bigint"))],
     )
     vocab = (
         sink.counts(spark)

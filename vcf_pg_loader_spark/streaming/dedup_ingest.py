@@ -107,7 +107,7 @@ class NearDupIngestSink(ParquetUpsertSink):
         three gates against the admitted `corpus_old` and its band index
         `bands_old`, with its doc_fp column attached, and the band rows
         of every doc that reached the near-dup gates.  Each such doc
-        shingles and bands once: its shingles and band rows are held
+        shingles and bands once: its shingle set and band rows are held
         for the whole apply, and the admitted docs' band rows are a
         semi-join of `bands_new`, never a re-banding."""
         fp = fingerprint(batch.dropDuplicates(["doc_id"]))
@@ -121,10 +121,12 @@ class NearDupIngestSink(ParquetUpsertSink):
                 corpus_old.select("doc_fp").distinct(), "doc_fp", "left_anti"
             )
 
-        sh_new = _held(D.shingles(fp, "doc_id", "text", self.ngram), held)
+        sets_new = _held(
+            D.shingle_sets(fp, "doc_id", "text", self.ngram), held
+        )
         bands_new = _held(
             D.lsh_band_table(
-                D.minhash_signatures(sh_new, self.k), self.k, self.bands
+                D.minhash_signatures(sets_new, self.k), self.k, self.bands
             ),
             held,
         )
@@ -144,15 +146,15 @@ class NearDupIngestSink(ParquetUpsertSink):
                 )
                 .distinct()
             )
-            # shingles for the colliding OLD docs only
+            # shingle sets for the colliding OLD docs only
             old_hit = corpus_old.join(
                 cand.select(F.col("d1").alias("doc_id")).distinct(),
                 "doc_id",
                 "left_semi",
             )
-            sh_old = D.shingles(old_hit, "doc_id", "text", self.ngram)
+            sets_old = D.shingle_sets(old_hit, "doc_id", "text", self.ngram)
             dup = D.verify_candidate_jaccard(
-                cand, sh_old.unionByName(sh_new), self.threshold
+                cand, sets_old.unionByName(sets_new), self.threshold
             )
             fp = fp.join(
                 dup.select(F.col("d2").alias("doc_id")).distinct(),
@@ -162,7 +164,7 @@ class NearDupIngestSink(ParquetUpsertSink):
 
         # near-dup within the batch: LSH + CC, keep min-id per cluster
         pairs = D.verify_candidate_jaccard(
-            D.lsh_bucket_pairs(bands_new)[0], sh_new, self.threshold
+            D.lsh_bucket_pairs(bands_new)[0], sets_new, self.threshold
         )
         # restrict to pairs still alive after the gates above
         alive = fp.select("doc_id")

@@ -158,7 +158,7 @@ class DedupClusterMaintSink(ParquetUpsertSink):
         self.threshold = JACCARD_T if threshold is None else threshold
         # per-band bucket-size safety valve (round-14 verdict item 6):
         # intra-batch buckets above this route through the star path
-        # (operators/dedup.py lsh_candidate_pairs_capped) so one
+        # (operators/dedup.py lsh_bucket_pairs) so one
         # hyper-dup key cannot make a bootstrap/sync verify join
         # quadratic.  None = unchanged uncapped behavior.
         self.bucket_cap = bucket_cap
@@ -225,7 +225,7 @@ class DedupClusterMaintSink(ParquetUpsertSink):
         )
         bands_new = _held(
             D.lsh_band_table(
-                D.minhash_signatures_of_sets(sets_new, self.k),
+                D.minhash_signatures(sets_new, self.k),
                 self.k,
                 self.bands,
             ),
@@ -269,7 +269,7 @@ class DedupClusterMaintSink(ParquetUpsertSink):
                 D.shingle_sets(old_hit, "doc_id", "text", self.ngram)
             )
             cand = cand.unionByName(cross)
-        verified = D.verify_candidate_jaccard_sets(
+        verified = D.verify_candidate_jaccard(
             cand, sets, self.threshold
         ).select(
             F.least("d1", "d2").alias("d1"),
