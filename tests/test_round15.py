@@ -142,6 +142,54 @@ class TestCrashWindowStampHeal:
             main(["sync-corpus", "--state", state, "--snapshot", snap2,
                   "--batch-id", "1"])
 
+    def test_seq_index_rerun_heals_stale_stamp(self, spark, tmp_path, capsys):
+        """The sequence index stamps after its own swap too: a crash
+        between them leaves its stamp one batch behind the shard layout
+        it was built from.  A rerun of the same snapshot and batch id
+        heals it (the layout already carries this batch's stamp), and
+        the healed index serves."""
+        from vcf_pg_loader_spark.cli import main
+        from vcf_pg_loader_spark.streaming.seqdecontam import (
+            SeqShingleIndexSink,
+        )
+
+        state = str(tmp_path / "state")
+        shards = str(tmp_path / "shards")
+        seqidx = str(tmp_path / "seqidx")
+        kept = str(tmp_path / "kept")
+        lockstep = ["--state", state, "--shards-state", shards,
+                    "--seq-index-state", seqidx]
+        snap0 = str(tmp_path / "snap0")
+        _corpus(spark, ROWS0).write.parquet(snap0)
+        _sync(main, capsys, *lockstep, "--snapshot", snap0, "--batch-id", "0")
+        idx = SeqShingleIndexSink(seqidx)
+        e0 = idx.read_epoch()
+
+        snap1 = str(tmp_path / "snap1")
+        _corpus(
+            spark, ROWS0 + [(9, "fresh document nine arrives today", "c")]
+        ).write.parquet(snap1)
+        rep1 = _sync(main, capsys, *lockstep, "--snapshot", snap1,
+                     "--batch-id", "1")
+        idx.stamp_epoch(e0)  # the crash window
+
+        _sync(main, capsys, *lockstep, "--snapshot", snap1, "--batch-id",
+              "1", "--out", kept)
+        healed = idx.read_epoch()
+        assert healed["batch_id"] == 1
+        assert healed["epoch_fp"] == rep1["epoch_fp"]
+
+        evals = str(tmp_path / "evals")
+        _corpus(spark, ROWS0[2:4]).write.parquet(evals)
+        assert main(
+            ["seq-decontam", "--state", shards, "--corpus", kept,
+             "--eval", evals, "--out", str(tmp_path / "rep"), "--ngram", "3",
+             "--index-state", seqidx]
+        ) == 0
+        assert json.loads(
+            capsys.readouterr().out.strip().splitlines()[-1]
+        )["hits"] > 0
+
 
 class TestRecoveryFullSelfDiff:
     """Round-14 advice item 2: when the batch is already in the cluster

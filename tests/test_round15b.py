@@ -123,6 +123,48 @@ class TestSyncServe:
         assert rep2["n_ok"] == 3
         assert DedupClusterMaintSink(state).read_epoch() == e1
 
+    def test_syncs_release_every_checkpoint(
+        self, spark, tmp_path, capsys, monkeypatch
+    ):
+        """A snapshot sync, then a sync-serve loop of delta syncs, with
+        the shard layout and the card state in lockstep: none of them
+        leaves a persisted frame or a cached plan behind, so a
+        long-running serve loop holds no blocks across syncs.  Each
+        sync's report entry carries its jobs and stages."""
+        from tests.test_dedup_maint import _cache_state, _pin_cached_frames
+        from vcf_pg_loader_spark.cli import main
+
+        snap = str(tmp_path / "snap")
+        _df(spark, [
+            (0, "alpha beta gamma delta epsilon zeta eta"),
+            (1, "alpha beta gamma delta epsilon zeta eta"),
+            (2, "red orange yellow green blue indigo violet"),
+        ]).write.parquet(snap)
+        feeds = self._feeds(spark, tmp_path, {
+            1: [(10, "ten fresh documents arriving now today", 1)],
+            2: [(2, "red orange yellow green blue indigo violet", -1),
+                (11, "eleven more words arriving in this batch", 1)],
+        })
+        lockstep = ["--state", str(tmp_path / "state"),
+                    "--shards-state", str(tmp_path / "shards"),
+                    "--card-state", str(tmp_path / "card")]
+        spark.catalog.clearCache()
+        _empty, rdds = _cache_state(spark)
+        _pin_cached_frames(spark, monkeypatch)
+
+        assert main(["sync-corpus", *lockstep, "--snapshot", snap,
+                     "--batch-id", "0"]) == 0
+        empty, after = _cache_state(spark)
+        assert empty and after <= rdds, after - rdds
+
+        assert main(["sync-serve", "--feeds", feeds, "--", *lockstep]) == 0
+        rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert [s["rc"] for s in rep["syncs"]] == [0, 0]
+        assert all(s["jobs"] > 0 and s["stages"] >= s["jobs"]
+                   for s in rep["syncs"])
+        empty, after = _cache_state(spark)
+        assert empty and after <= rdds, after - rdds
+
     def test_serve_refuses_banned_flags_and_bad_dirs(
         self, spark, tmp_path, capsys
     ):

@@ -569,6 +569,112 @@ def cmd_retract_corpus(args) -> int:
     return 0
 
 
+def _epoch_fingerprint(has_source: bool):
+    """(aggregate `fp`, fp_cols label) of the corpus-epoch fingerprint,
+    an order-independent XOR of per-row h60 hashes: verify-consistency
+    proves N lockstep states views of the SAME corpus without reading
+    them, and --delta folds a feed forward over the prior stamp (bit_xor
+    is self-inverse).  source rides in when the input carries it — a
+    source-only move is a delta (round-11 advice item 2) — while
+    sourceless inputs keep the two-part formula, so their stamps stay
+    comparable across engine versions; the label lets --delta refuse a
+    feed that would fold a DIFFERENT formula forward."""
+    from pyspark.sql import functions as F
+
+    from vcf_pg_loader_spark.functions.hashing import h60
+
+    cols = [F.col("doc_id").cast("string"), F.md5("text")]
+    if has_source:
+        cols.append(F.coalesce(F.col("source").cast("string"), F.lit("")))
+    fp = F.coalesce(
+        F.bit_xor(h60(F.concat_ws(":", *cols), "epoch:")), F.lit(0)
+    )
+    return fp.alias("fp"), "id:md5:source" if has_source else "id:md5"
+
+
+def _source_col(df):
+    """A frame's per-doc source, "unknown" where it carries none."""
+    from pyspark.sql import functions as F
+
+    if "source" not in df.columns:
+        return F.lit("unknown")
+    return F.coalesce(F.col("source"), F.lit("unknown"))
+
+
+def _mult_tally(delta) -> dict:
+    """Rows of a Z-set batch per _mult (the report's retracted and
+    upserted counts)."""
+    from pyspark.sql import functions as F
+
+    from vcf_pg_loader_spark.operators.ivm import MULT
+
+    return {
+        r[MULT]: r["n"]
+        for r in delta.groupBy(MULT).agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+
+
+def _in_lockstep(stamp: dict | None, prior_epoch: dict | None) -> bool:
+    """Whether a sibling state's stamp describes the corpus the cluster
+    state held before this sync."""
+    return (
+        stamp is not None
+        and prior_epoch is not None
+        and stamp.get("epoch_fp") == prior_epoch.get("epoch_fp")
+    )
+
+
+def _with_component_mates(ids, clusters):
+    """`ids` (doc_id) plus every member of a (node, comp) `clusters`
+    component that holds one: the keep-decision is a GLOBAL function of
+    the cluster state, but moves only inside such components.  The
+    table holds only CLUSTERED docs, so this is small by construction."""
+    from pyspark.sql import functions as F
+
+    if clusters is None:
+        return ids
+    comps = (
+        clusters.join(
+            ids.select(F.col("doc_id").alias("node")), "node", "left_semi"
+        )
+        .select("comp")
+        .distinct()
+    )
+    return ids.unionByName(
+        clusters.join(comps, "comp", "left_semi").select(
+            F.col("node").alias("doc_id")
+        )
+    )
+
+
+def _fingerprint_self_diff(old, new, fp: str, held: list):
+    """A state's Z-set batch: its OWN persisted (doc_id, compared
+    columns) `old` — None before bootstrap — diffed against `new`
+    (doc_id, text, compared columns), so a state that fell behind its
+    lockstep siblings heals instead of drifting.  Deleted docs' -1
+    tuples need only doc_id downstream: the old side's text is a typed
+    null, never a state read.  The fingerprint `fp` is dropped and the
+    batch checkpointed, since the sink's swap replaces the very files
+    the lazy diff plan reads."""
+    from pyspark.sql import functions as F
+
+    from vcf_pg_loader_spark.operators.ivm import zset_snapshot_delta
+    from vcf_pg_loader_spark.streaming.sink import _checkpointed
+
+    cmp_cols = [c for c in new.columns if c not in ("doc_id", "text")]
+    if old is None:
+        old = new.limit(0)
+    else:
+        old = old.withColumn("text", F.lit(None).cast("string")).select(
+            *new.columns
+        )
+    return _checkpointed(
+        zset_snapshot_delta(old, new, "doc_id", cmp_cols=cmp_cols).drop(fp),
+        held,
+    )
+
+
 def cmd_sync_corpus(args) -> int:
     """Synchronize the retraction-maintained cluster state with new
     corpus content — the CDC bridge, with two input shapes:
@@ -593,14 +699,25 @@ def cmd_sync_corpus(args) -> int:
     as ±1 pairs.  End-to-end cost is O(|delta| + touched buckets) —
     at 100 TB the difference between minutes and hours per sync.
 
-    Exactly-once per --batch-id, like retract-corpus.  Reference
+    Exactly-once per --batch-id, like retract-corpus; every sibling
+    state applies and stamps through one `apply_and_stamp`.  Every
+    frame the sync checkpoints is released when it returns or raises,
+    so a sync-serve loop holds no blocks across syncs.  Reference
     analogue: idempotent delete-then-reload (loader.py:230-252),
     generalized to diff-then-apply."""
+    from vcf_pg_loader_spark.streaming.sink import _released
+
+    with _released() as held:
+        return _sync_step(args, held)
+
+
+def _sync_step(args, held: list) -> int:
+    """The body of cmd_sync_corpus; `held` is its release scope."""
     from pyspark.sql import functions as F
 
-    from vcf_pg_loader_spark.functions.hashing import h60
     from vcf_pg_loader_spark.operators.ivm import MULT, zset_snapshot_delta
     from vcf_pg_loader_spark.streaming.retract import DedupClusterMaintSink
+    from vcf_pg_loader_spark.streaming.sink import _checkpointed
 
     use_delta = bool(getattr(args, "delta", None))
     if bool(args.snapshot) == use_delta:
@@ -690,10 +807,12 @@ def cmd_sync_corpus(args) -> int:
                 file=sys.stderr,
             )
             return 2
+        fp_agg = _epoch_fingerprint(has_source)[0]
         cols = ["doc_id", "text"] + (["source"] if has_source else [])
-        feed = feed_raw.select(
-            *cols, F.col(MULT).cast("bigint").alias(MULT)
-        ).localCheckpoint(eager=True)
+        feed = _checkpointed(
+            feed_raw.select(*cols, F.col(MULT).cast("bigint").alias(MULT)),
+            held,
+        )
         # structural validation — all aggregates over the (small) feed
         n_rows = feed.count()
         if feed.select("doc_id", MULT).distinct().count() != n_rows:
@@ -725,6 +844,15 @@ def cmd_sync_corpus(args) -> int:
         )
         delta = feed.select("doc_id", "text", MULT)
 
+        def vs_state(rows):
+            return rows.join(corpus_slice, "doc_id", "left")
+
+        # a feed row's text is missing from or differs from the
+        # maintained corpus
+        differs = F.col("_state_text").isNull() | (
+            F.md5("text") != F.md5("_state_text")
+        )
+
         def fold_epoch() -> dict:
             """XOR-fold this feed forward over the persisted stamp —
             the delta path's epoch arithmetic, also used to HEAL a
@@ -734,17 +862,8 @@ def cmd_sync_corpus(args) -> int:
             written after — the stale stamp would otherwise propagate
             the pre-batch fingerprint to every sibling sink and every
             later fold, permanently and undetectably)."""
-            fcols = [F.col("doc_id").cast("string"), F.md5("text")]
-            if has_source:
-                fcols.append(
-                    F.coalesce(F.col("source").cast("string"), F.lit(""))
-                )
             fold = feed.agg(
-                F.coalesce(
-                    F.bit_xor(h60(F.concat_ws(":", *fcols), "epoch:")),
-                    F.lit(0),
-                ).alias("fp"),
-                F.coalesce(F.sum(MULT), F.lit(0)).alias("dn"),
+                fp_agg, F.coalesce(F.sum(MULT), F.lit(0)).alias("dn")
             ).collect()[0]
             return {
                 "epoch_fp": int(prior_epoch["epoch_fp"]) ^ int(fold.fp),
@@ -762,19 +881,8 @@ def cmd_sync_corpus(args) -> int:
             # below still consume the delta — each no-ops or catches
             # up via its own ledger (the partial-failure recovery).
             drift = (
-                ins_feed.join(corpus_slice, "doc_id", "left")
-                .filter(
-                    F.col("_state_text").isNull()
-                    | (F.md5("text") != F.md5("_state_text"))
-                )
-                .count()
-            ) + (
-                dels_feed.join(corpus_slice, "doc_id", "left")
-                .filter(
-                    F.col("_state_text").isNotNull()
-                    & (F.md5("text") == F.md5("_state_text"))
-                )
-                .count()
+                vs_state(ins_feed).filter(differs).count()
+                + vs_state(dels_feed).filter(~differs).count()
             )
             if drift:
                 raise ValueError(
@@ -808,14 +916,7 @@ def cmd_sync_corpus(args) -> int:
         else:
             # -1 rows must carry the doc's CURRENT text (the XOR fold
             # and the vocab decrement both depend on it)
-            bad = (
-                dels_feed.join(corpus_slice, "doc_id", "left")
-                .filter(
-                    F.col("_state_text").isNull()
-                    | (F.md5("text") != F.md5("_state_text"))
-                )
-                .count()
-            )
+            bad = vs_state(dels_feed).filter(differs).count()
             if bad:
                 print(
                     f"{bad} retraction row(s) are missing from or "
@@ -866,10 +967,7 @@ def cmd_sync_corpus(args) -> int:
                         )
                     wrong_src = (
                         dels_feed.select(
-                            "doc_id",
-                            F.coalesce(
-                                F.col("source"), F.lit("unknown")
-                            ).alias("_feed_src"),
+                            "doc_id", _source_col(dels_feed).alias("_feed_src")
                         )
                         .join(
                             card_stats.select(
@@ -892,15 +990,10 @@ def cmd_sync_corpus(args) -> int:
                             file=sys.stderr,
                         )
                         return 2
-            stats = {
-                (r[MULT]): r["n"]
-                for r in delta.groupBy(MULT)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            stats = _mult_tally(delta)
             epoch = fold_epoch()
     else:
-        new = spark.read.parquet(args.snapshot).select("doc_id", "text")
+        snap = spark.read.parquet(args.snapshot)
         old = sink._table(spark, "corpus")
         if old is None:
             # no state yet: the whole snapshot is the delta (bootstrap)
@@ -910,87 +1003,51 @@ def cmd_sync_corpus(args) -> int:
         # reads, so a second consumer (the funnel sink) re-executing
         # the plan would hit deleted files.  localCheckpoint is
         # distributed — the delta never lands on the driver.
-        delta = zset_snapshot_delta(old, new, "doc_id").localCheckpoint(
-            eager=True
+        delta = _checkpointed(
+            zset_snapshot_delta(old, snap.select("doc_id", "text"), "doc_id"),
+            held,
         )
-        stats = {
-            (r[MULT]): r["n"]
-            for r in delta.groupBy(MULT)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        # corpus-epoch identity: an order-independent content
-        # fingerprint of the snapshot every lockstep sink is about to
-        # be synced to — stamped beside each state after its apply, so
-        # verify-consistency can prove (or refute) that N states are
-        # views of the SAME corpus without re-reading any of them.
-        # One narrow agg over the already-loaded snapshot.
-        #
-        # source rides into the fingerprint when the snapshot carries
-        # it: source is a recognized delta class (the card sink
-        # re-syncs on source-only moves, --mix-budget quotas depend on
-        # it), so two snapshots differing only in source must NOT
-        # share an epoch_fp — verify-consistency would otherwise vouch
-        # for states synced to different snapshots (round-11 advice
-        # item 2).  Sourceless snapshots keep the original two-part
-        # formula, so their stamps stay comparable across engine
-        # versions.  fp_cols records which formula stamped this epoch,
-        # so --delta can refuse a feed that would fold a DIFFERENT
-        # formula forward.
-        snap_raw = spark.read.parquet(args.snapshot)
-        fp_cols = [F.col("doc_id").cast("string"), F.md5("text")]
-        if "source" in snap_raw.columns:
-            fp_cols.append(
-                F.coalesce(F.col("source").cast("string"), F.lit(""))
-            )
-        ep = snap_raw.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(
-                F.bit_xor(h60(F.concat_ws(":", *fp_cols), "epoch:")),
-                F.lit(0),
-            ).alias("fp"),
-        ).collect()[0]
+        stats = _mult_tally(delta)
+        # the epoch every lockstep sink is about to be synced to,
+        # stamped beside each state after its apply: one narrow agg
+        # over the already-loaded snapshot
+        fp_agg, fp_label = _epoch_fingerprint("source" in snap.columns)
+        ep = snap.agg(F.count(F.lit(1)).alias("n_docs"), fp_agg).collect()[0]
         epoch = {
             "epoch_fp": int(ep.fp),
             "n_docs": int(ep.n_docs),
             "batch_id": args.batch_id,
-            "fp_cols": (
-                "id:md5:source"
-                if "source" in snap_raw.columns
-                else "id:md5"
-            ),
+            "fp_cols": fp_label,
         }
 
-    def apply_and_stamp(s, batch_delta, stamp, heal_verified=False):
-        """Stamp the epoch ONLY when the batch actually applies this
-        run.  apply_batch is a silent no-op on a replayed batch id;
-        stamping unconditionally would re-stamp the state with a NEW
-        snapshot's epoch_fp while its data stays at the old snapshot —
-        after which verify-consistency (whose whole purpose is catching
-        divergence) vouches for genuinely diverged states (round-11
-        advice item 1).  A replay under the SAME snapshot is a clean
-        no-op; a reused batch id under a DIFFERENT snapshot refuses.
+    def apply_and_stamp(s, stamp, apply, proof):
+        """Run `apply` (this batch into state `s`) and stamp the epoch
+        ONLY when the batch actually applies this run.  apply_batch is
+        a silent no-op on a replayed batch id; stamping unconditionally
+        would re-stamp the state with a NEW snapshot's epoch_fp while
+        its data stays at the old snapshot — after which
+        verify-consistency (whose whole purpose is catching divergence)
+        vouches for genuinely diverged states (round-11 advice item 1).
+        A replay under the SAME snapshot is a clean no-op; a reused
+        batch id under a DIFFERENT snapshot refuses.
 
         One exception (round-14 advice item 1): stamp_epoch writes a
         separate file AFTER apply_batch's swap, so a crash in that
         window leaves the ledger one batch ahead of the stamp.  The
         stamp records its batch_id, which makes the window detectable:
         on replay, a stamp whose batch_id is NOT args.batch_id is
-        stale — heal it forward, but only when this run has PROVEN the
-        stamp target matches the data (``heal_verified``: the --delta
-        path's feed-vs-post-state drift check), or when the recomputed
-        delta is empty (the state already equals the snapshot, so the
-        stamp describes exactly what's on disk).  A non-empty
-        unverified delta under a replayed id means a reused batch id
-        over different data — refuse, never vouch."""
+        stale — heal it forward, but only when `proof()` shows that the
+        stamp target matches the state's data.  Otherwise the replayed
+        id is a reused batch id over different data — refuse, never
+        vouch."""
         replay = s.applied(args.batch_id)
-        s.apply_batch(batch_delta, args.batch_id)
+        apply()
         if not replay:
             s.stamp_epoch(stamp)
             return
         prior = s.read_epoch()
         if prior is None or prior.get("batch_id") != args.batch_id:
-            if heal_verified or batch_delta.limit(1).count() == 0:
+            if proof():
                 s.stamp_epoch(stamp)
                 return
             raise ValueError(
@@ -1012,6 +1069,18 @@ def cmd_sync_corpus(args) -> int:
                 f"— use a fresh batch id for the new snapshot"
             )
 
+    def apply_delta(s, batch_delta, verified: bool, stamp=None):
+        """apply_and_stamp of a Z-set batch.  Its stale stamp heals when
+        this run verified the feed against the post-state (`verified`:
+        the --delta drift check) or the recomputed delta is empty (the
+        state already equals the snapshot, so the stamp describes
+        exactly what's on disk)."""
+        apply_and_stamp(
+            s, stamp or epoch,
+            lambda: s.apply_batch(batch_delta, args.batch_id),
+            lambda: verified or batch_delta.limit(1).count() == 0,
+        )
+
     affected_pre = None
     if use_delta and args.shards_state and not sink.applied(args.batch_id):
         # (The replay/recovery guard: when the batch is ALREADY in the
@@ -1023,30 +1092,18 @@ def cmd_sync_corpus(args) -> int:
         # advice item 2).  Leave affected_pre None so the shard sync
         # below runs the FULL self-diff — the healing pass.)
         #
-        # the keep-decision is a GLOBAL function of the cluster state,
-        # but it can only move inside components that contain a touched
-        # doc: capture those components' members from the PRE-apply
-        # cluster table (the swap below replaces its files — eager
-        # checkpoint), so the shard self-diff can restrict itself to
-        # touched ∪ component-mates instead of re-diffing the whole
-        # kept corpus.  The cluster table holds only CLUSTERED docs, so
-        # this is small by construction.
-        cc_pre = sink._table(spark, "clusters")
-        affected_pre = delta.select("doc_id")
-        if cc_pre is not None:
-            t_nodes = delta.select(F.col("doc_id").alias("node"))
-            comps = (
-                cc_pre.join(t_nodes, "node", "left_semi")
-                .select("comp")
-                .distinct()
-            )
-            affected_pre = affected_pre.unionByName(
-                cc_pre.join(comps, "comp", "left_semi").select(
-                    F.col("node").alias("doc_id")
-                )
-            )
-        affected_pre = affected_pre.distinct().localCheckpoint(eager=True)
-    apply_and_stamp(sink, delta, epoch, heal_verified=use_delta)
+        # capture the touched docs' component members from the
+        # PRE-apply cluster table (the swap below replaces its files —
+        # eager checkpoint), so the shard self-diff can restrict
+        # itself to touched ∪ component-mates instead of re-diffing
+        # the whole kept corpus
+        affected_pre = _checkpointed(
+            _with_component_mates(
+                delta.select("doc_id"), sink._table(spark, "clusters")
+            ).distinct(),
+            held,
+        )
+    apply_delta(sink, delta, use_delta)
     if args.funnel_state:
         # the funnel's own corpus/ holds quality+LM SURVIVORS only, so
         # it cannot self-diff — it consumes the delta computed against
@@ -1060,8 +1117,7 @@ def cmd_sync_corpus(args) -> int:
             args.bands, args.threshold,
             getattr(args, "bucket_cap", None),
         )
-        apply_and_stamp(funnel_sink, delta, epoch,
-                        heal_verified=use_delta)
+        apply_delta(funnel_sink, delta, use_delta)
     if args.decontam_state:
         # same lockstep rule as --funnel-state: the decontamination
         # index consumes the delta computed against the cluster state's
@@ -1069,8 +1125,7 @@ def cmd_sync_corpus(args) -> int:
         from vcf_pg_loader_spark.streaming.retract import DecontamIndexSink
 
         dec_sink = DecontamIndexSink(args.decontam_state, args.ngram)
-        apply_and_stamp(dec_sink, delta, epoch,
-                        heal_verified=use_delta)
+        apply_delta(dec_sink, delta, use_delta)
     if getattr(args, "vocab_state", None):
         # maintained (word, n) table: same lockstep delta, counts merge
         # additively inside the touched word-hash buckets — after which
@@ -1081,8 +1136,7 @@ def cmd_sync_corpus(args) -> int:
         if getattr(args, "vocab_max_chars", None) is not None:
             vkw["max_chars"] = args.vocab_max_chars
         vocab_sink = VocabSink(args.vocab_state, **vkw)
-        apply_and_stamp(vocab_sink, delta, epoch,
-                        heal_verified=use_delta)
+        apply_delta(vocab_sink, delta, use_delta)
     if args.card_state:
         # The release card diffs ITS OWN state against the snapshot, on
         # (content-fingerprint, source) — NOT the text-keyed delta the
@@ -1094,9 +1148,7 @@ def cmd_sync_corpus(args) -> int:
         # cluster/funnel/decontam states correctly see no delta for
         # it.  Self-contained on the card's stats/fp tables (doc_fp is
         # a pure function of the text, so no text payload is re-read
-        # from state): a card that fell behind its lockstep siblings
-        # (partial failure, or --card-state added to an existing
-        # pipeline) heals on the next sync instead of drifting.
+        # from state).
         from vcf_pg_loader_spark.operators.text import fingerprint
         from vcf_pg_loader_spark.streaming.retract import DatasetCardSink
 
@@ -1108,25 +1160,14 @@ def cmd_sync_corpus(args) -> int:
             # needs a full snapshot and is deliberately not available
             # here — a card that fell behind heals on the next
             # --snapshot sync.
-            src_col = (
-                F.coalesce(F.col("source"), F.lit("unknown"))
-                if has_source
-                else F.lit("unknown")
-            )
             card_delta = feed.select(
-                "doc_id", "text", src_col.alias("source"), F.col(MULT)
-            ).localCheckpoint(eager=True)
-            apply_and_stamp(card_sink, card_delta, epoch,
-                            heal_verified=True)
-        else:
-            snap = spark.read.parquet(args.snapshot)
-            src_col = (
-                F.coalesce(F.col("source"), F.lit("unknown"))
-                if "source" in snap.columns
-                else F.lit("unknown")
+                "doc_id", "text", _source_col(feed).alias("source"),
+                F.col(MULT),
             )
-            new_card = snap.withColumn("source", src_col).select(
-                "doc_id", "text", "source"
+            apply_delta(card_sink, card_delta, True)
+        else:
+            new_card = snap.select(
+                "doc_id", "text", _source_col(snap).alias("source")
             )
             new_card = new_card.join(
                 fingerprint(new_card.select("doc_id", "text")).select(
@@ -1136,30 +1177,15 @@ def cmd_sync_corpus(args) -> int:
             ).select("doc_id", "text", "source", "doc_fp")
             stats_old = card_sink._table(spark, "stats")
             fp_old = card_sink._table(spark, "fp")
-            if stats_old is None or fp_old is None:
-                old_card = new_card.limit(0)  # bootstrap: all inserts
-            else:
-                # deleted docs' -1 tuples need only doc_id downstream,
-                # so the old side's text is a typed null, never a
-                # state read
-                old_card = (
-                    stats_old.select("doc_id", "source")
-                    .join(fp_old.select("doc_id", "doc_fp"), "doc_id")
-                    .withColumn("text", F.lit(None).cast("string"))
-                    .select("doc_id", "text", "source", "doc_fp")
+            old_card = None
+            if stats_old is not None and fp_old is not None:
+                old_card = stats_old.select("doc_id", "source").join(
+                    fp_old.select("doc_id", "doc_fp"), "doc_id"
                 )
-            # eager: the card sink's swap replaces the very stats/fp
-            # files the lazy diff plan reads (same rule as the main
-            # delta)
-            card_delta = (
-                zset_snapshot_delta(
-                    old_card, new_card, "doc_id",
-                    cmp_cols=["doc_fp", "source"],
-                )
-                .drop("doc_fp")
-                .localCheckpoint(eager=True)
+            card_delta = _fingerprint_self_diff(
+                old_card, new_card, "doc_fp", held
             )
-            apply_and_stamp(card_sink, card_delta, epoch)
+            apply_delta(card_sink, card_delta, False)
     kept = sink.keep(spark)
     if args.shards_state:
         # The training-shard layout packs the CURATED corpus — the
@@ -1170,8 +1196,7 @@ def cmd_sync_corpus(args) -> int:
         # row), so the shard sink cannot consume the text-keyed
         # snapshot delta; instead it self-diffs its own layout against
         # the fresh kept corpus on (doc_id, content-fingerprint) — the
-        # DatasetCardSink pattern — which also heals a shards state
-        # that fell behind its lockstep siblings.  Per-sync cost stays
+        # DatasetCardSink pattern.  Per-sync cost stays
         # O(|kept-set delta|): the fingerprints come from the persisted
         # layout, no text is stored or re-read from shard state.
         from vcf_pg_loader_spark.operators.shards import doc_fp
@@ -1225,14 +1250,8 @@ def cmd_sync_corpus(args) -> int:
 
             from vcf_pg_loader_spark.functions.hashing import h60
 
-            snap_src = spark.read.parquet(args.snapshot)
-            src_col = (
-                F.coalesce(F.col("source"), F.lit("unknown"))
-                if "source" in snap_src.columns
-                else F.lit("unknown")
-            )
             kd = kept_docs.join(
-                snap_src.select("doc_id", src_col.alias("source")),
+                snap.select("doc_id", _source_col(snap).alias("source")),
                 "doc_id",
             )
             counts = kd.groupBy("source").agg(
@@ -1273,12 +1292,8 @@ def cmd_sync_corpus(args) -> int:
         # carries verbatim; md5 runs only for arriving/changed/new
         # docs.  A layout that fell behind (stamps differ) falls back
         # to the full recompute, which is exactly the healing pass.
-        sh_stamp = shard_sink.read_epoch()
-        in_lockstep = (
-            old_layout is not None
-            and sh_stamp is not None
-            and prior_epoch is not None
-            and sh_stamp.get("epoch_fp") == prior_epoch.get("epoch_fp")
+        in_lockstep = old_layout is not None and _in_lockstep(
+            shard_sink.read_epoch(), prior_epoch
         )
         touched_ids = delta.select("doc_id").distinct()
         restrict = None
@@ -1296,21 +1311,11 @@ def cmd_sync_corpus(args) -> int:
             # components) — the end-to-end O(|delta|) sync.  The
             # snapshot path keeps the full self-diff: it doubles as
             # the healing pass for a layout that fell behind.
-            aff = affected_pre
-            cc_post = sink._table(spark, "clusters")
-            if cc_post is not None:
-                t_nodes = touched_ids.withColumnRenamed("doc_id", "node")
-                comps = (
-                    cc_post.join(t_nodes, "node", "left_semi")
-                    .select("comp")
-                    .distinct()
+            restrict = affected_pre.unionByName(
+                _with_component_mates(
+                    touched_ids, sink._table(spark, "clusters")
                 )
-                aff = aff.unionByName(
-                    cc_post.join(comps, "comp", "left_semi").select(
-                        F.col("node").alias("doc_id")
-                    )
-                ).distinct()
-            restrict = aff
+            ).distinct()
             sel_docs = sel_docs.join(restrict, "doc_id", "left_semi")
         if in_lockstep:
             carried = sel_docs.join(
@@ -1337,26 +1342,20 @@ def cmd_sync_corpus(args) -> int:
             )
         else:
             new_sh = sel_docs.withColumn("dfp", doc_fp(F.col("text")))
-        if old_layout is None:
-            old_sh = new_sh.limit(0)  # bootstrap: everything inserts
-        else:
-            old_sh = old_layout.select("doc_id", "dfp").withColumn(
-                "text", F.lit(None).cast("string")
-            ).select("doc_id", "text", "dfp")
+        old_sh = None
+        if old_layout is not None:
+            old_sh = old_layout.select("doc_id", "dfp")
             if restrict is not None:
                 # restricted diff: rows outside the affected set are
                 # identical on both sides by the lockstep argument —
                 # exclude them from the old side too or the diff would
                 # retract every unchanged doc
                 old_sh = old_sh.join(restrict, "doc_id", "left_semi")
-        shard_delta = (
-            zset_snapshot_delta(old_sh, new_sh, "doc_id", cmp_cols=["dfp"])
-            .drop("dfp")
-            .localCheckpoint(eager=True)
-        )
-        apply_and_stamp(
+        shard_delta = _fingerprint_self_diff(old_sh, new_sh, "dfp", held)
+        apply_delta(
             shard_sink,
             shard_delta,
+            False,
             {**epoch, "mix_budget": args.mix_budget}
             if args.mix_budget
             else epoch,
@@ -1379,15 +1378,8 @@ def cmd_sync_corpus(args) -> int:
                 ngram=getattr(args, "seq_index_ngram", None) or args.ngram,
                 sep="\x1f" if tok_kw.get("merges") else " ",
             )
-            idx_stamp = idx_sink.read_epoch()
-            idx_lockstep = (
-                idx_stamp is not None
-                and prior_epoch is not None
-                and idx_stamp.get("epoch_fp")
-                == prior_epoch.get("epoch_fp")
-            )
             touched_shards = None
-            if idx_lockstep:
+            if _in_lockstep(idx_sink.read_epoch(), prior_epoch):
                 touched_shards = {
                     r[0]
                     for r in shard_delta.select(
@@ -1396,23 +1388,19 @@ def cmd_sync_corpus(args) -> int:
                         ).alias("s")
                     ).distinct().collect()
                 }
-            replay = idx_sink.applied(args.batch_id)
-            idx_sink.sync(
-                spark, shard_sink, kept_docs, args.batch_id,
-                touched_shards,
+            apply_and_stamp(
+                idx_sink, epoch,
+                lambda: idx_sink.sync(
+                    spark, shard_sink, kept_docs, args.batch_id,
+                    touched_shards,
+                ),
+                # its stale-stamp proof: the layout the index was built
+                # from already carries this run's stamp
+                lambda: all(
+                    (shard_sink.read_epoch() or {}).get(k) == epoch[k]
+                    for k in ("batch_id", "epoch_fp")
+                ),
             )
-            if not replay:
-                idx_sink.stamp_epoch(epoch)
-            else:
-                prior_idx = idx_sink.read_epoch()
-                if prior_idx is not None and prior_idx.get(
-                    "epoch_fp"
-                ) != epoch["epoch_fp"]:
-                    raise ValueError(
-                        f"batch {args.batch_id} was already applied at "
-                        f"{idx_sink.target} under a different epoch — "
-                        f"use a fresh batch id for the new snapshot"
-                    )
     if args.out:
         corpus = sink._table(spark, "corpus")
         corpus.join(kept, "doc_id", "left_semi").write.mode(
@@ -1485,11 +1473,13 @@ def cmd_sync_serve(args) -> int:
     flags is the EXACT sync-corpus flag surface, forwarded verbatim
     per batch with --delta/--batch-id filled in — refusal, replay,
     crash-window healing, and lockstep semantics are inherited from
-    cmd_sync_corpus, not re-implemented.  A non-zero child exit (a
-    refusal) or an exception stops the loop and is recorded in the
-    report; already-applied batch ids replay as no-ops, so the loop
-    is resumable from the top after any crash."""
-    import time as _time
+    cmd_sync_corpus, not re-implemented.  Each sync runs in a
+    `runner.phase` of its own, so its report entry carries its jobs
+    and stages beside its wall, and releases what it checkpointed.  A
+    non-zero child exit (a refusal) or an exception stops the loop and
+    is recorded in the report; already-applied batch ids replay as
+    no-ops, so the loop is resumable from the top after any crash."""
+    from vcf_pg_loader_spark import runner
 
     entries = []
     for name in sorted(os.listdir(args.feeds)):
@@ -1522,9 +1512,11 @@ def cmd_sync_serve(args) -> int:
                 file=sys.stderr,
             )
             return 2
-    t0 = _time.monotonic()
-    _spark()  # pay the JVM/session floor once, before the loop
-    session_init = _time.monotonic() - t0
+    # pay the JVM/session floor once, before the loop; no Spark context
+    # exists to count jobs in until it returns, so this is wall only
+    t0 = time.perf_counter()
+    spark = _spark()
+    session_init = time.perf_counter() - t0
     parser = build_parser()
     syncs = []
     rc_final = 0
@@ -1532,22 +1524,19 @@ def cmd_sync_serve(args) -> int:
         argv = ["sync-corpus", *args.rest,
                 "--delta", path, "--batch-id", str(bid)]
         child = parser.parse_args(argv)
-        t = _time.monotonic()
-        try:
-            rc = child.fn(child)
-        except Exception as e:  # refusals raise too (reused batch ids)
-            syncs.append({
-                "batch_id": bid,
-                "wall_sec": round(_time.monotonic() - t, 3),
-                "rc": 1,
-                "error": str(e)[:500],
-            })
-            rc_final = 1
-            break
+        err = {}
+        with runner.phase(spark, f"sync-{bid}") as rec:
+            try:
+                rc = child.fn(child)
+            except Exception as e:  # refusals raise too (reused batch ids)
+                rc, err = 1, {"error": str(e)[:500]}
         syncs.append({
             "batch_id": bid,
-            "wall_sec": round(_time.monotonic() - t, 3),
+            "wall_sec": round(rec["sec"], 3),
+            "jobs": rec["jobs"],
+            "stages": rec["stages"],
             "rc": rc,
+            **err,
         })
         if rc != 0:
             rc_final = rc
@@ -1681,7 +1670,8 @@ def cmd_train_vocab(args) -> int:
                 ).alias("fp"),
             ),
             **seg_kw,
-        ).localCheckpoint(eager=True)
+        )
+        counts_df = counts_df.localCheckpoint(eager=True)
         fp_val, n_docs = int(fp.get["fp"]), int(fp.get["n_docs"])
     try:
         # alphabet from the UNFILTERED counts: min_count bounds the
