@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from vcf_pg_loader_spark.functions.normalize import (
     classify_variant_expr,
     is_normalized_py,
-    normalize_struct,
+    normalize_frame,
     normalize_variant_py,
 )
 
@@ -35,16 +35,9 @@ VECTORS = [
 
 
 def _spark_norm(spark, pos, ref, alt):
-    row = (
-        spark.range(1)
-        .select(
-            normalize_struct(F.lit(pos).cast("bigint"), F.lit(ref), F.lit(alt)).alias(
-                "n"
-            )
-        )
-        .collect()[0]["n"]
-    )
-    return row["pos"], row["ref"], row["alt"]
+    df = spark.createDataFrame([(pos, ref, alt)], "pos bigint, ref string, alt string")
+    row = normalize_frame(df, "pos", "ref", "alt").collect()[0]
+    return row.norm_pos, row.norm_ref, row.norm_alt
 
 
 @pytest.mark.parametrize("pos,ref,alt,epos,eref,ealt", VECTORS)
@@ -67,7 +60,7 @@ def test_property_python_twin_matches_reference_loop(pos, ref, alt):
     """The closed form must equal the reference's iterative algorithm for
     every biallelic input (no reference genome)."""
     rpos, rref, ralts = normalize_variant_py(pos, ref, [alt])
-    # closed-form recomputation (mirrors normalize_struct's math)
+    # closed-form recomputation (mirrors normalize_frame's math)
     r, a = ref.upper(), alt.upper()
     lcs = 0
     while lcs < min(len(r), len(a)) and r[-1 - lcs] == a[-1 - lcs]:
@@ -106,17 +99,12 @@ def test_spark_expression_matches_python_twin_batch(spark):
         )
         for _ in range(300)
     ]
-    df = spark.createDataFrame(cases, ["pos", "ref", "alt"]).select(
-        "pos",
-        "ref",
-        "alt",
-        normalize_struct(
-            F.col("pos").cast("bigint"), F.col("ref"), F.col("alt")
-        ).alias("n"),
+    df = normalize_frame(
+        spark.createDataFrame(cases, ["pos", "ref", "alt"]), "pos", "ref", "alt"
     )
     for row in df.collect():
         epos, eref, ealts = normalize_variant_py(row.pos, row.ref, [row.alt])
-        got = (row.n["pos"], row.n["ref"], row.n["alt"])
+        got = (row.norm_pos, row.norm_ref, row.norm_alt)
         assert got == (epos, eref, ealts[0]), (row.pos, row.ref, row.alt)
 
 
@@ -175,39 +163,27 @@ class TestLeftExtension:
             assert (np_, nr, nalts[0]) == (ep, er, ea), (p, r, a)
 
     def test_flag_expression_marks_extension_cases(self, spark):
-        from vcf_pg_loader_spark.functions.normalize import (
-            needs_left_extension_expr,
-        )
-
         rows = [(i, p, r, a) for i, ((p, r, a), _, _) in enumerate(VT_CASES)]
         df = spark.createDataFrame(rows, "id int, pos bigint, ref string, alt string")
         got = {
-            r.id: r.flag
-            for r in df.select(
-                "id",
-                needs_left_extension_expr(
-                    F.col("pos"), F.col("ref"), F.col("alt")
-                ).alias("flag"),
-            ).collect()
+            r.id: r.needs_left_extension
+            for r in normalize_frame(df, "pos", "ref", "alt").collect()
         }
         for i, (_, _, want) in enumerate(VT_CASES):
             assert got[i] is want, VT_CASES[i]
 
     def test_apply_left_extension_operator(self, spark):
-        from vcf_pg_loader_spark.functions.normalize import (
-            apply_left_extension,
-            needs_left_extension_expr,
-        )
+        from vcf_pg_loader_spark.functions.normalize import apply_left_extension
 
         rows = [
             ("20", p, r, a) for (p, r, a), _, _ in VT_CASES
         ] + [("7", 5900670, "C", "CC")]  # chrom absent from the genome
-        df = spark.createDataFrame(
-            rows, "chrom string, pos bigint, ref string, alt string"
-        ).withColumn(
-            "needs_left_extension",
-            needs_left_extension_expr(F.col("pos"), F.col("ref"), F.col("alt")),
-        )
+        df = normalize_frame(
+            spark.createDataFrame(
+                rows, "chrom string, pos bigint, ref string, alt string"
+            ),
+            "pos", "ref", "alt",
+        ).select("chrom", "pos", "ref", "alt", "needs_left_extension")
         out = {
             (r.chrom, r.pos, r.ref, r.alt, r.was_left_extended, r.needs_left_extension)
             for r in apply_left_extension(df, self._genome()).collect()
@@ -261,3 +237,92 @@ class TestLeftExtension:
         assert g.base("chr2", 1) == "G"
         assert g.base("chr1", 9) is None
         assert g.base("chrX", 1) is None
+
+
+# ---------------------------------------------------------------------------
+# read_vcf(normalize=True) against the Python twin: generated records go
+# through the whole scan (decomposition included), and every output row
+# must equal the iterative reference loop on its (pos, REF, ALT).
+# ---------------------------------------------------------------------------
+_SEQ = st.text(alphabet="ACGTNacgtn", max_size=20)
+
+
+@st.composite
+def _record(draw):
+    """(pos, ref, alts): up to ~60-base alleles sharing a prefix and a
+    suffix, so trims of every length occur; REF may be empty."""
+    pre, suf = draw(_SEQ), draw(_SEQ)
+    ref = pre + draw(_SEQ) + suf
+    alts = [
+        pre + draw(_SEQ) + suf or "A"
+        for _ in range(draw(st.integers(min_value=1, max_value=2)))
+    ]
+    pos = draw(st.sampled_from([1, 1, 2, 3, 17, 1000]))
+    return pos, ref, alts
+
+
+def _asks_genome(pos, ref, alt) -> bool:
+    """Whether the reference loop asks a genome for a left-extension
+    base (identical alleles aside: the scan leaves them unflagged)."""
+
+    def fetch(_q):
+        raise LookupError
+
+    try:
+        normalize_variant_py(pos, ref, [alt], fetch_base=fetch)
+    except LookupError:
+        return ref.upper() != alt.upper()
+    return False
+
+
+_FIXED_RECORDS = [
+    (1, "A", ["AG"]),
+    (1, "ATG", ["ACG"]),
+    (5, "", ["A"]),  # empty REF
+    (2, "cAGt", ["CaTT", "n"]),
+    (900, "A" + "".join("ACGT"[i * 7 % 4] for i in range(10_000)), ["A"]),
+    *[(p, r, [a]) for (p, r, a), _, _ in VT_CASES],
+]
+
+
+@settings(max_examples=5, deadline=None)
+@given(records=st.lists(_record(), min_size=1, max_size=60))
+def test_read_vcf_rows_match_python_twin(spark, records):
+    import os
+    import tempfile
+
+    from tests.vcf_fixtures import write_vcf
+    from vcf_pg_loader_spark.sources.vcf import read_vcf
+
+    records = _FIXED_RECORDS + records
+    with tempfile.TemporaryDirectory() as d:
+        path = write_vcf(
+            os.path.join(d, "n.vcf"),
+            [
+                f"chr1\t{p}\tv{i}\t{r}\t{','.join(alts)}\t50\tPASS\tDP=1"
+                for i, (p, r, alts) in enumerate(records)
+            ],
+        )
+        got = {
+            (row.rs_id, row.alt_idx): row
+            for row in read_vcf(spark, path, normalize=True).collect()
+        }
+    assert len(got) == sum(len(alts) for _, _, alts in records)
+    for i, (p, r, alts) in enumerate(records):
+        for k, a in enumerate(alts):
+            row = got[(f"v{i}", k)]
+            epos, eref, ealts = normalize_variant_py(p, r, [a])
+            # the twin returns an empty-REF record untouched; the scan
+            # upper-cases every allele
+            want = (epos, eref.upper(), ealts[0].upper())
+            assert (row.pos, row.ref, row.alt) == want, (p, r, a)
+            changed = want != (p, r.upper(), a.upper())
+            assert row.normalized is changed, (p, r, a)
+            assert (row.original_pos, row.original_ref, row.original_alt) == (
+                (p, r, a) if changed else (None, None, None)
+            )
+            if r:
+                assert row.needs_left_extension is _asks_genome(p, r, a), (p, r, a)
+    for (p, r, a), _, needs in VT_CASES:
+        i = _FIXED_RECORDS.index((p, r, [a]))
+        assert got[(f"v{i}", 0)].needs_left_extension is needs, (p, r, a)

@@ -97,6 +97,27 @@ def test_vcf_scan_has_no_python_udf(spark, tmp_path):
     assert "Found 0 WholeStageCodegen" not in plan
 
 
+def test_vcf_normalization_is_compiled_once_per_row(spark, tmp_path):
+    """Normalization runs no interpreted higher-order function (Spark
+    evaluates `aggregate` without code generation), and the optimizer
+    does not copy the affix-length expressions into every consumer:
+    one common-suffix and one common-prefix match per row."""
+    from vcf_pg_loader_spark.sources.vcf import read_vcf
+
+    p = tmp_path / "n.vcf"
+    p.write_text(
+        "##fileformat=VCFv4.2\n"
+        '##INFO=<ID=DP,Number=1,Type=Integer,Description="d">\n'
+        '##INFO=<ID=AF,Number=A,Type=Float,Description="a">\n'
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+        "chr1\t100\trs1\tAT\tA,ATT\t50.0\tPASS\tDP=30;AF=0.1,0.2\n"
+    )
+    df = read_vcf(spark, str(p), normalize=True)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "aggregate(" not in plan
+    assert plan.count("regexp_extract(") <= 2
+
+
 def test_store_partition_pruning(spark, tmp_path):
     """chrom filter prunes partitions of the variant store — the Spark
     analogue of the reference's verify_partition_pruning."""

@@ -54,6 +54,58 @@ class TestVariantStore:
         # partition layout
         assert data.select("chrom").distinct().count() == 2
 
+    def test_load_counts_rows_from_its_write(self, spark, tmp_path):
+        """The load counts its batch as the write runs: no job re-reads
+        the store to count it."""
+        from vcf_pg_loader_spark import runner
+
+        rows = [
+            f"chr{1 + i % 3}\t{100 + i}\trs{i}\tA\tG,T\t50.0\tPASS\tDP=30"
+            for i in range(30)
+        ]
+        vcf = write_vcf(str(tmp_path / "c.vcf"), rows)
+        store = VariantStore(spark, str(tmp_path / "cstore"))
+        df = read_vcf(spark, vcf)
+        with runner.phase(spark, "load") as load:
+            res = store.load(df, vcf)
+        audit = store.audit_frame().collect()
+        assert [r.n_variants for r in audit] == [res.variants_loaded] == [
+            store.read().count()
+        ] == [60]
+        assert load["jobs"] <= 3
+
+    def test_reads_infer_schema_once(self, spark, tmp_path, vcf_file):
+        """Later reads of a path reuse the schema its first read
+        inferred, and still list the files another writer swapped in."""
+        from vcf_pg_loader_spark import runner
+
+        root = str(tmp_path / "mstore")
+        store = VariantStore(spark, root)
+        store.load(read_vcf(spark, vcf_file), vcf_file)
+
+        def rows(df):
+            return sorted((r.chrom, r.pos, r.ref, r.alt, r.rs_id) for r in df.collect())
+
+        first = store.read()
+        second = store.read()
+        assert second.schema == first.schema
+        assert rows(second) == rows(first)
+        v2 = write_vcf(
+            str(tmp_path / "m2.vcf"), ["chr3\t300\trs3\tG\tA\t50.0\tPASS\tDP=9"]
+        )
+        VariantStore(spark, root).load(read_vcf(spark, v2), v2)
+        assert rows(store.read()) == sorted(
+            rows(first) + [("chr3", 300, "G", "A", "rs3")]
+        )
+
+        store.build_rsid_index(files=2)
+        assert store.lookup_rsid("rs1").count() == 1
+        with runner.phase(spark, "memo") as memo:
+            store.lookup_rsid("rs1").collect()
+        with runner.phase(spark, "fresh") as fresh:
+            VariantStore(spark, root).lookup_rsid("rs1").collect()
+        assert memo["jobs"] == fresh["jobs"] - 1
+
     def test_file_hash_stable(self, vcf_file):
         assert compute_file_hash(vcf_file) == compute_file_hash(vcf_file)
 

@@ -33,6 +33,10 @@ records) are written whole with `write_json_atomic` (temp file plus
 `os.replace`), so a reader sees the old or the new file, never a
 truncated one.
 
+A write into a staging directory counts its rows as it runs
+(`counted`, `observed_rows`), so no job re-reads the files to count
+them.
+
 Every filesystem mutation of the protocol goes through one of the step
 functions named in `STEPS`; tests/test_durable_sweep.py wraps them to
 crash an update before step N, for every N.  Plain parquet writes into
@@ -50,6 +54,9 @@ import shutil
 import socket
 import tempfile
 import time
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 # A writer lease held by another process is considered abandoned after
 # this many seconds without its pid being verifiable (cross-host case:
@@ -203,6 +210,23 @@ def write_json_atomic(path: str, obj) -> None:
     tmp = os.path.join(parent, f".{name}.tmp")
     _write_text(tmp, json.dumps(obj, sort_keys=True))
     _replace(tmp, path)
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with a row-count observation attached: the write that runs
+    the returned frame also reports how many rows it wrote
+    (`observed_rows`), so no job re-reads the files to count them."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def observed_rows(obs: Observation) -> int | None:
+    """The row count `counted` observed once its write finished, or
+    None when the write reported no metrics row (an input the optimizer
+    folds to an empty local relation executes no observing operator);
+    the caller then counts the written files instead."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else None
 
 
 def read_json(path: str):

@@ -15,10 +15,15 @@ makes the whole algorithm closed-form:
   phase 2 (left trim): remove the longest common PREFIX bounded by
     min(len)-1 (stop when any allele reaches length 1), advancing pos.
 
-Both common-affix lengths are computed with higher-order `aggregate` over
-`sequence` — prefix equality is monotone, so "last i where the prefixes
-match" is the longest common prefix.  Everything stays in whole-stage
-codegen; no Python UDF in the scan path.
+`normalize_frame` adds the result as columns, in staged projections: the
+upper-cased alleles, then the common-suffix length, then the trimmed
+alleles, then the common-prefix length, then the output.  Each stage's
+columns are plain attributes to the next, so every row computes each
+affix length once (the needs-left-extension flag reads the same suffix
+length), and every stage compiles in whole-stage codegen: a common
+prefix is one `regexp_extract` (`_common_prefix_len`), a suffix the same
+over the reversed alleles.  No Python UDF and no interpreted
+higher-order function runs in the scan path.
 
 A pure-Python twin (`normalize_variant_py`) mirrors the reference
 algorithm exactly and serves as the property-test oracle.
@@ -27,77 +32,86 @@ algorithm exactly and serves as the property-test oracle.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Group 1 takes the longest prefix of the first string that the second
+# repeats right after the tab: the greedy group backs off one character
+# at a time, and the possessive run re-takes the rest of the first
+# string without backtracking into it.  Alleles never hold a tab (VCF
+# splits its columns on tabs).  Each back-off costs up to the first
+# string's length, so the shorter string goes first: the match is
+# O(min(len)²), and a 10 kb deletion against a 1-base allele is one step.
+_LCP_RE = "^([^\t]*)[^\t]*+\t\\1"
 
-def _common_prefix_len(a: Column, b: Column) -> Column:
-    """Length of the longest common prefix of two strings (JVM-side)."""
-    bound = F.least(F.length(a), F.length(b))
-    return F.aggregate(
-        F.when(bound > 0, F.sequence(F.lit(1), bound)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        F.lit(0),
-        lambda acc, i: F.when(
-            a.substr(F.lit(1), i) == b.substr(F.lit(1), i), i
-        ).otherwise(acc),
+def _shorter_first(a: Column, b: Column) -> tuple[Column, Column]:
+    a_first = F.length(a) <= F.length(b)
+    return F.when(a_first, a).otherwise(b), F.when(a_first, b).otherwise(a)
+
+
+def _common_prefix_len(short: Column, long: Column) -> Column:
+    """Length of the longest common prefix of two strings, the shorter
+    first (JVM-side, compiled)."""
+    return F.length(
+        F.regexp_extract(F.concat(short, F.lit("\t"), long), _LCP_RE, 1)
     )
 
 
-def _common_suffix_len(a: Column, b: Column) -> Column:
-    return _common_prefix_len(F.reverse(a), F.reverse(b))
+def normalize_frame(df: DataFrame, pos: str, ref: str, alt: str) -> DataFrame:
+    """`df` plus the vt normalization of its biallelic (pos, ref, alt)
+    columns, without a reference genome:
 
+      norm_pos bigint, norm_ref string, norm_alt string — the normalized
+        variant;
+      was_normalized boolean — it differs from the upper-cased input;
+      needs_left_extension boolean — finishing it needs a genome.
 
-def normalize_struct(pos: Column, ref: Column, alt: Column) -> Column:
-    """Normalize a biallelic (pos, ref, alt) without a reference genome.
-
-    Returns struct<pos bigint, ref string, alt string, was_normalized
-    boolean>.  Matches normalize_variant(reference_genome=None) from the
-    reference (normalizer.py:88-128) including its empty-allele edge case
-    at pos>1.
+    Matches normalize_variant(reference_genome=None) from the reference
+    (normalizer.py:88-128) including its empty-allele edge case at
+    pos>1.  The flag mirrors the reference loop's left-extend trigger
+    (normalizer.py:32-62): right-trimming empties an allele exactly when
+    the common suffix spans the whole shorter allele — possible only at
+    pos > 1 (at pos == 1 the trim is bounded and the reference breaks
+    too).  Identical alleles are excluded: the reference loop would walk
+    them back to pos 1, which is degenerate VCF, not a left-alignment.
     """
-    r = F.upper(ref)
-    a = F.upper(alt)
+    p = F.col(pos)
+    r, a = F.col("_vt_r"), F.col("_vt_a")
     minlen = F.least(F.length(r), F.length(a))
-
-    lcs = _common_suffix_len(r, a)
-    rt = F.when(pos == 1, F.least(lcs, minlen - 1)).otherwise(F.least(lcs, minlen))
+    lcs = F.col("_vt_lcs")
+    rt = F.when(p == 1, F.least(lcs, minlen - 1)).otherwise(F.least(lcs, minlen))
     rt = F.greatest(rt, F.lit(0))
-    r1 = r.substr(F.lit(1), F.length(r) - rt)
-    a1 = a.substr(F.lit(1), F.length(a) - rt)
-
+    r1, a1 = F.col("_vt_r1"), F.col("_vt_a1")
+    short, long = _shorter_first(r, a)
+    short1, long1 = _shorter_first(r1, a1)
     minlen1 = F.least(F.length(r1), F.length(a1))
-    lcp = _common_prefix_len(r1, a1)
-    lt = F.greatest(F.least(lcp, minlen1 - 1), F.lit(0))
+    lt = F.greatest(F.least(F.col("_vt_lcp"), minlen1 - 1), F.lit(0))
+    new_pos = (p + lt).cast("bigint")
     r2 = r1.substr(lt + 1, F.length(r1))
     a2 = a1.substr(lt + 1, F.length(a1))
-    new_pos = (pos + lt).cast("bigint")
-
-    changed = (new_pos != pos) | (r2 != r) | (a2 != a)
-    return F.struct(
-        new_pos.alias("pos"),
-        r2.alias("ref"),
-        a2.alias("alt"),
-        changed.alias("was_normalized"),
+    return (
+        df.withColumns({"_vt_r": F.upper(F.col(ref)), "_vt_a": F.upper(F.col(alt))})
+        .withColumns(
+            {"_vt_lcs": _common_prefix_len(F.reverse(short), F.reverse(long))}
+        )
+        .withColumns(
+            {
+                "_vt_r1": r.substr(F.lit(1), F.length(r) - rt),
+                "_vt_a1": a.substr(F.lit(1), F.length(a) - rt),
+                "needs_left_extension": (p > 1) & (lcs >= minlen) & (r != a),
+            }
+        )
+        .withColumns({"_vt_lcp": _common_prefix_len(short1, long1)})
+        .withColumns(
+            {
+                "norm_pos": new_pos,
+                "norm_ref": r2,
+                "norm_alt": a2,
+                "was_normalized": (new_pos != p) | (r2 != r) | (a2 != a),
+            }
+        )
+        .drop("_vt_r", "_vt_a", "_vt_lcs", "_vt_r1", "_vt_a1", "_vt_lcp")
     )
-
-
-def needs_left_extension_expr(pos: Column, ref: Column, alt: Column) -> Column:
-    """True when finishing vt normalization requires a reference genome.
-
-    Mirrors the reference loop's left-extend trigger (normalizer.py:32-62):
-    right-trimming empties an allele exactly when the common suffix spans
-    the whole shorter allele — possible only at pos > 1 (at pos == 1 the
-    trim is bounded and the reference breaks too).  Identical alleles are
-    excluded: the reference loop would walk them back to pos 1, which is
-    degenerate VCF, not a left-alignment.
-    """
-    r = F.upper(ref)
-    a = F.upper(alt)
-    minlen = F.least(F.length(r), F.length(a))
-    lcs = _common_suffix_len(r, a)
-    return (pos > 1) & (lcs >= minlen) & (r != a)
 
 
 def classify_variant_expr(ref: Column, alt: Column) -> Column:
@@ -171,7 +185,7 @@ def is_normalized_py(ref: str, alts: list[str]) -> bool:
 # reference-genome-backed left extension (normalizer.py:32-62) — the one
 # normalization step that cannot be closed-form: each extension reads a
 # genome base at a position only known after the previous trim.  Rows are
-# pre-filtered by needs_left_extension_expr (a tiny indel subset), so the
+# pre-filtered by the needs_left_extension flag (a tiny indel subset), so the
 # Arrow-batched kernel never touches the scan hot path.
 # ---------------------------------------------------------------------------
 class ReferenceBases:

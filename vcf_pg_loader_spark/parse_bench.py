@@ -6,11 +6,16 @@ is the distributed text-scan parse rate: synthetic VCF in the shape of
 the reference's generator (reference benchmark.py:147-180 — sprinkled
 multiallelics and indels), written as multiple shards so the scan
 parallelizes the way any real multi-file load does, then
-read_vcf(normalize=True) with a count() to force full parsing.
+read_vcf(normalize=True) with a count().  The count forces the scan,
+split and multi-allelic decomposition, but its plan prunes every column
+the count does not need: normalization and the INFO rewrite never run
+in it.  `parse_throughput` and `parse_throughput_giab` therefore also
+time a full-column pass (`runner.noop`, every output column computed),
+reported as `full_column_sec` and `full_column_variants_per_sec`.
 
 Shared by `cli.py benchmark` and the per-round `bench.py` line.  Every
 timed pass is one query-runner run (vcf_pg_loader_spark/runner.py):
-its seconds are the read_vcf build plus the count.
+its seconds are the read_vcf build plus the count or the noop write.
 """
 
 from __future__ import annotations
@@ -107,6 +112,18 @@ def _steady_parse(spark, path: str, warm: str) -> tuple[float, int, float]:
     first, _ = runner.run(spark, build, runner.count)
     sec, rows = runner.best_of_two(spark, build, runner.count)
     return sec, rows, runner.seconds(first)
+
+
+def _full_column_sec(spark, path: str) -> float:
+    """Best-of-two seconds of a full-column pass of
+    read_vcf(normalize=True) over `path` (run after `_steady_parse`,
+    which warms the scan)."""
+    from vcf_pg_loader_spark.sources.vcf import read_vcf
+
+    sec, _ = runner.best_of_two(
+        spark, lambda: read_vcf(spark, path, normalize=True), runner.noop
+    )
+    return sec
 
 
 def parse_throughput_bgzf(spark, n_variants: int = 2_000_000) -> dict:
@@ -230,16 +247,19 @@ def write_synthetic_vcf_giab(
 
 def parse_throughput_giab(spark, n_variants: int = 1_000_000) -> dict:
     """Parse rate on the GIAB-shaped corpus (the `_steady_parse`
-    protocol, like parse_throughput)."""
+    protocol, like parse_throughput), plus its full-column rate."""
     with tempfile.TemporaryDirectory() as d:
         path = write_synthetic_vcf_giab(d, n_variants)
         warm = write_synthetic_vcf_giab(os.path.join(d, "warm"), 10_000, 2)
         dt, rows, _first = _steady_parse(spark, path, warm)
+        dt_cols = _full_column_sec(spark, path)
     return {
         "variants": n_variants,
         "rows_after_decomposition": rows,
         "sec": round(dt, 3),
         "variants_per_sec": round(n_variants / dt, 1),
+        "full_column_sec": round(dt_cols, 3),
+        "full_column_variants_per_sec": round(n_variants / dt_cols, 1),
         "snp_pct": 83.0,
         "indel_pct": 16.0,
         "multiallelic_pct": 1.0,
@@ -249,11 +269,14 @@ def parse_throughput_giab(spark, n_variants: int = 1_000_000) -> dict:
 def parse_throughput(
     spark, n_variants: int = 2_000_000, shards: int = 16
 ) -> dict:
-    """Measure read_vcf parse rate; returns {variants, sec, variants_per_sec}.
+    """Measure read_vcf parse rate; returns {variants, sec,
+    variants_per_sec, ...}.
 
-    Timing covers scan+parse+decompose+normalize only — file generation
-    is outside the window (the reference number times parsing, not I/O
-    of its generator either).
+    `sec` times a count: scan, split and decompose, with normalization
+    and the INFO rewrite pruned from its plan.  `full_column_sec` times
+    a noop write of every column, normalization included.  File
+    generation is outside both windows (the reference number times
+    parsing, not I/O of its generator either).
     """
     from vcf_pg_loader_spark.sources.vcf import read_vcf
 
@@ -277,6 +300,7 @@ def parse_throughput(
             runner.count,
         )
         dt_full = runner.seconds(full)
+        dt_cols = _full_column_sec(spark, path)
     # rate is per INPUT variant (the reference's unit); decomposition
     # makes output rows a superset, reported separately.
     return {
@@ -286,4 +310,6 @@ def parse_throughput(
         "variants_per_sec": round(n_variants / dt, 1),
         "full_features_sec": round(dt_full, 3),
         "full_features_variants_per_sec": round(n_variants / dt_full, 1),
+        "full_column_sec": round(dt_cols, 3),
+        "full_column_variants_per_sec": round(n_variants / dt_cols, 1),
     }

@@ -53,6 +53,21 @@ class VariantStore:
         self.root = root.rstrip("/")
         self.variants_path = f"{self.root}/variants"
         self.audit_path = f"{self.root}/audit"
+        # path -> the schema its first read inferred.  A load or an index
+        # rebuild by this instance drops it: new chrom partitions can
+        # widen the inferred partition type (all-numeric names infer int)
+        self._schemas: dict = {}
+
+    def _read_parquet(self, path: str) -> DataFrame:
+        """`path` as a frame.  Only the first read of a path infers its
+        schema (a footer-reading job); later reads pass it on.  Files
+        are listed on every read, so another writer's swap is seen (a
+        partition type it widens is not)."""
+        schema = self._schemas.get(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(path)
+        self._schemas[path] = df.schema
+        return df
 
     # -- audit ----------------------------------------------------------
     def _read_audit(self) -> list[dict]:
@@ -136,7 +151,10 @@ class VariantStore:
             "completed_at": time.time(),
         }
         self._write_audit(rec)
-        df = variants.withColumn("load_batch_id", F.lit(batch_id))
+        self._schemas.pop(self.variants_path, None)
+        df, obs = durable.counted(
+            variants.withColumn("load_batch_id", F.lit(batch_id))
+        )
         # sortWithinPartitions(pos): parquet row-group min/max stats then
         # prune range scans — the GiST analogue (SURVEY §4 index strategy)
         (
@@ -146,7 +164,9 @@ class VariantStore:
             .partitionBy("chrom")
             .parquet(self.variants_path)
         )
-        n = self.read().filter(F.col("load_batch_id") == batch_id).count()
+        n = durable.observed_rows(obs)
+        if n is None:
+            n = self.read().filter(F.col("load_batch_id") == batch_id).count()
         self._write_audit(
             {
                 **rec,
@@ -200,7 +220,7 @@ class VariantStore:
 
     def read(self) -> DataFrame:
         durable.heal_dir(self.variants_path)
-        return self.spark.read.parquet(self.variants_path)
+        return self._read_parquet(self.variants_path)
 
     # -- bucketed layout (co-located joins) ------------------------------
     def write_bucketed(
@@ -310,7 +330,7 @@ class VariantStore:
         reference's HASH-index analogue, schema.py:272), else a full
         column scan of the primary."""
         if os.path.isdir(self.rsid_index_path):
-            return self.spark.read.parquet(self.rsid_index_path).filter(
+            return self._read_parquet(self.rsid_index_path).filter(
                 F.col("rs_id") == rs_id
             )
         return self.read().filter(F.col("rs_id") == rs_id)
@@ -337,6 +357,7 @@ class VariantStore:
             .write.mode("overwrite")
             .parquet(staging)
         )
+        self._schemas.pop(self.rsid_index_path, None)
         durable.swap_dir(staging, self.rsid_index_path)
 
     def partition_stats(self) -> DataFrame:

@@ -37,8 +37,7 @@ from vcf_pg_loader_spark.functions.genomics import normalize_clinvar_sig
 from vcf_pg_loader_spark.sources.bgzf import read_text_auto
 from vcf_pg_loader_spark.functions.normalize import (
     classify_variant_expr,
-    needs_left_extension_expr,
-    normalize_struct,
+    normalize_frame,
 )
 
 IMPACT_RANKS = {"HIGH": 0, "MODERATE": 1, "LOW": 2, "MODIFIER": 3}
@@ -444,23 +443,18 @@ def read_vcf(
 
     # normalization (normalizer.py via closed-form expressions)
     if normalize:
-        norm = normalize_struct(
-            F.col("pos_raw"), F.col("ref_raw"), F.col("alt_raw")
-        )
-        df = df.withColumn("_norm", norm)
-        pos = F.col("_norm.pos")
-        ref = F.col("_norm.ref")
-        alt = F.col("_norm.alt")
-        was_norm = F.col("_norm.was_normalized")
+        df = normalize_frame(df, "pos_raw", "ref_raw", "alt_raw")
+        pos = F.col("norm_pos")
+        ref = F.col("norm_ref")
+        alt = F.col("norm_alt")
+        was_norm = F.col("was_normalized")
         original_pos = F.when(was_norm, F.col("pos_raw"))
         original_ref = F.when(was_norm, F.col("ref_raw"))
         original_alt = F.when(was_norm, F.col("alt_raw"))
         # closed-form normalization cannot left-extend (no genome in the
         # scan); flag the rows a ReferenceBases-backed pass must finish
         # (functions/normalize.py apply_left_extension)
-        needs_ext = needs_left_extension_expr(
-            F.col("pos_raw"), F.col("ref_raw"), F.col("alt_raw")
-        )
+        needs_ext = F.col("needs_left_extension")
     else:
         pos = F.col("pos_raw")
         ref = F.col("ref_raw")

@@ -38,7 +38,7 @@ from __future__ import annotations
 import contextlib
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vcf_pg_loader_spark import durable
@@ -173,23 +173,6 @@ def drop_layout(df: DataFrame | None) -> DataFrame | None:
     if df is not None and "ib" in df.columns:
         df = df.drop("ib")
     return df
-
-
-def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """`df` with a row-count observation attached: the write that runs
-    the returned frame also reports how many rows it wrote
-    (`_observed_rows`), so no job re-reads the files to count them."""
-    obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
-
-
-def _observed_rows(obs: Observation) -> int | None:
-    """The row count `_counted` observed once its write finished, or
-    None when the write reported no metrics row (an input the optimizer
-    folds to an empty local relation executes no observing operator);
-    the caller then counts the staged files instead."""
-    row = obs._jo.getRow()
-    return row.getLong(0) if row.length() else None
 
 
 # The engine's hash-bucket layouts, keyed by their parameter-fingerprint
@@ -596,9 +579,9 @@ class ParquetUpsertSink:
         staged files costs a schema and a count job), then commit;
         returns the staged row count."""
         staging = durable.stage_dir(self.target)
-        df, obs = _counted(df)
+        df, obs = durable.counted(df)
         df.write.mode("overwrite").parquet(staging)
-        n = _observed_rows(obs)
+        n = durable.observed_rows(obs)
         if n is None:
             n = df.sparkSession.read.parquet(staging).count()
         self._commit(staging, batch_id, n)
@@ -651,7 +634,7 @@ class ParquetUpsertSink:
             and os.path.isdir(os.path.join(self.target, count_table))
         ):
             frames = dict(frames)
-            frames[count_table], obs = _counted(frames[count_table])
+            frames[count_table], obs = durable.counted(frames[count_table])
         spark = None
         for name, df in frames.items():
             spark = df.sparkSession
@@ -668,7 +651,7 @@ class ParquetUpsertSink:
                 durable.link_partitions(
                     src_tbl, os.path.join(staging, name), touched
                 )
-        n = None if obs is None else _observed_rows(obs)
+        n = None if obs is None else durable.observed_rows(obs)
         if n is None:
             n = spark.read.parquet(os.path.join(staging, count_table)).count()
         self._commit(staging, batch_id, n)
